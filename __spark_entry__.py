@@ -174,27 +174,19 @@ def _q_containment_ranges(spark, sf_dir):
     predicate-pushdown substitution through the encode projections.
     """
     from s2spark.kernel.coverer import RegionCoverer
-    from s2spark.plans.covercache import cached_rows
+    from s2spark.operators.spatial_join import (cell_rows, covering_probe_join,
+                                                polygon_key)
+    from s2spark.plans import covercache
     cov_rows = []
     for pid, poly in _JOIN_POLYGONS.items():
-        def compute(poly=poly):
-            out = []
-            for cid in RegionCoverer(max_cells=8).get_covering(poly):
-                arr = np.array([cid], dtype=np.uint64)
-                out.append((int(ci.to_signed(arr)[0]),
-                            int(ci.level_of(arr)[0])))
-            return out
-        key = ("plain-cover",
-               tuple(lp.vertices.tobytes().hex() for lp in poly.loops), 8)
-        cov_rows.extend((pid, cell, lvl)
-                        for cell, lvl in cached_rows(key, compute))
+        cells = covercache.cached_rows(
+            ("plain-cover", *polygon_key(poly), 8),
+            lambda: cell_rows(RegionCoverer(max_cells=8).get_covering(poly)))
+        cov_rows.extend((pid, cell, lvl) for cell, lvl in cells)
     cov = spark.createDataFrame(cov_rows, "polygon_id int, cov_cell long, cov_level int")
-    levels = sorted({r[2] for r in cov_rows})
     pts = C.with_cell_id(_docs_geo(spark, sf_dir), "lat", "lng")
-    probe = pts.withColumn(
-        "probe_cell",
-        F.explode(F.array(*[C.parent_for_level(F.col("cell_id"), lv) for lv in levels])))
-    return (probe.join(F.broadcast(cov), probe.probe_cell == cov.cov_cell)
+    return (covering_probe_join(pts, cov, (r[2] for r in cov_rows),
+                                cov_cell="cov_cell")
             .groupBy("polygon_id").agg(F.count(F.lit(1)).alias("n_candidates")))
 
 

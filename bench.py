@@ -18,7 +18,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0)))))
 # 4M pages (12M -> 8M -> 4M across rounds 3-5): each timed 2-core run is
 # still ~140 s calm — fixed driver-side planning (~3 s) stays ~2% of the
 # measurement, so the efficiency ratio moves < 0.02 — and THREE full

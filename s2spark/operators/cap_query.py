@@ -11,46 +11,35 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import columns as C
-from ..kernel import cellid as ci
 from ..kernel.cap import Cap
 from ..kernel.coverer import RegionCoverer
+from ..plans import covercache
+from .spatial_join import cell_rows, covering_probe_join
 
 
 def cap_coverings(caps: dict[int, tuple[float, float, float]],
                   max_cells: int = 32) -> pd.DataFrame:
     """caps: id -> (lat_deg, lng_deg, radius_rad).
 
-    Cached per cap (memo + disk, plans.covercache): pure function of
-    (cap, max_cells) — don't repay the coverer on every construction."""
-    from ..plans.covercache import cached_rows
-    rows = []
+    Cached per cap in plans.covercache: a pure function of (cap,
+    max_cells) — don't repay the coverer on every construction."""
     cov = RegionCoverer(max_cells=max_cells)
 
-    def one(spec):
-        lat, lng, radius = spec
+    def compute(lat, lng, radius):
+        phi, theta = math.radians(lat), math.radians(lng)
+        axis = (math.cos(phi) * math.cos(theta),
+                math.cos(phi) * math.sin(theta), math.sin(phi))
+        return cell_rows(cov.get_covering(Cap.from_axis_angle(axis, radius)))
 
-        def compute():
-            phi, theta = math.radians(lat), math.radians(lng)
-            axis = (math.cos(phi) * math.cos(theta),
-                    math.cos(phi) * math.sin(theta), math.sin(phi))
-            cap = Cap.from_axis_angle(axis, radius)
-            out = []
-            for cell in cov.get_covering(cap):
-                arr = np.array([cell], dtype=np.uint64)
-                out.append((int(ci.to_signed(arr)[0]),
-                            int(ci.level_of(arr)[0])))
-            return out
-        return cached_rows(("cap", tuple(map(float, spec)), max_cells),
-                           compute)
-
+    rows = []
     for cid, spec in caps.items():
-        rows.extend((cid, cell, lvl) for cell, lvl in one(spec))
+        cells = covercache.cached_rows(("cap", tuple(map(float, spec)), max_cells),
+                                       lambda: compute(*spec))
+        rows.extend((cid, cell, lvl) for cell, lvl in cells)
     return pd.DataFrame(rows, columns=["cap_id", "cov_cell_id", "cov_level"])
 
 
@@ -61,18 +50,12 @@ def cap_query(spark: SparkSession, points: DataFrame,
     """points (leaf cell ids + lat/lng degrees) -> rows x cap_id for each
     containing cap, with distance_rad attached."""
     cov_pdf = cap_coverings(caps)
-    cov_df = spark.createDataFrame(cov_pdf)
-    levels = sorted(cov_pdf["cov_level"].unique().tolist())
     centers = spark.createDataFrame(
         [(cid, float(b[0]), float(b[1]), float(b[2])) for cid, b in caps.items()],
         "cap_id int, c_lat double, c_lng double, radius double")
-
-    probe_keys = F.array(*[C.parent_for_level(F.col(cell_col), int(lv)) for lv in levels])
-    probed = points.withColumn("probe_cell", F.explode(probe_keys))
-    joined = (probed.join(F.broadcast(cov_df),
-                          probed["probe_cell"] == cov_df["cov_cell_id"])
-              .join(F.broadcast(centers), "cap_id")
-              .drop("probe_cell", "cov_cell_id", "cov_level"))
+    joined = (covering_probe_join(points, spark.createDataFrame(cov_pdf),
+                                  cov_pdf["cov_level"], cell_col)
+              .join(F.broadcast(centers), "cap_id"))
 
     lat1 = F.radians(F.col(lat_col).cast("double"))
     lng1 = F.radians(F.col(lng_col).cast("double"))

@@ -243,44 +243,43 @@ def buffered_polygon_join(spark, pts: DataFrame, polys: dict,
     keys (the buffered union is normalized/disjoint, so each point matches
     at most one cell -> no dedupe) -> exact codegen distance residual.
     At 100 TB: one map-side broadcast join + arithmetic, no shuffle."""
-    import numpy as np
+    from ..plans import covercache
+    from .spatial_join import covering_probe_join, polygon_key
 
-    from ..functions import columns as C
-    from ..kernel import cellid as cik
-    from ..kernel import cellunion as cuk
-    from ..kernel.coverer import RegionCoverer
-
-    from ..plans.covercache import cached_rows
     rows = []
     residual = None
     for pid, poly in polys.items():
-        def compute(poly=poly):
-            cover = RegionCoverer(max_cells=coverer_max_cells).get_covering(poly)
-            buf = cuk.expand_radius(np.asarray(cover, dtype=np.uint64),
-                                    radius_rad, max_level_diff)
-            levels = cik.level_of(buf)
-            return [(int(c), int(lv)) for c, lv in
-                    zip(cik.to_signed(buf).tolist(), levels.tolist())]
-        key = ("buffered",
-               tuple(lp.vertices.tobytes().hex() for lp in poly.loops),
-               float(radius_rad), coverer_max_cells, max_level_diff)
-        rows.extend((pid, cell, lvl)
-                    for cell, lvl in cached_rows(key, compute))
+        key = ("buffered", *polygon_key(poly), float(radius_rad),
+               coverer_max_cells, max_level_diff)
+        cells = covercache.cached_rows(key, lambda: _expanded_covering(
+            poly, radius_rad, coverer_max_cells, max_level_diff))
+        rows.extend((pid, cell, lvl) for cell, lvl in cells)
         dist = F.expr(convex_polygon_distance_sql(poly))
         residual = (F.when(F.col("polygon_id") == pid, dist)
                     if residual is None
                     else residual.when(F.col("polygon_id") == pid, dist))
     cov = spark.createDataFrame(
         rows, "polygon_id int, cov_cell long, cov_level int")
-    join_levels = sorted({r[2] for r in rows})
-    probe = with_xyz(pts).withColumn(
-        "probe_cell",
-        F.explode(F.array(*[C.parent_for_level(F.col("cell_id"), lv)
-                            for lv in join_levels])))
-    cand = probe.join(F.broadcast(cov), probe.probe_cell == cov.cov_cell)
+    cand = covering_probe_join(with_xyz(pts), cov, (r[2] for r in rows),
+                               cov_cell="cov_cell")
     return (cand.withColumn("distance_rad", residual)
             .where(F.col("distance_rad") <= radius_rad)
-            .drop("px", "py", "pz", "probe_cell", "cov_cell", "cov_level"))
+            .drop("px", "py", "pz"))
+
+
+def _expanded_covering(region, radius_rad: float, max_cells: int,
+                       max_level_diff: int) -> list[tuple[int, int]]:
+    """(signed cell id, level) rows of the region's covering expanded by
+    radius_rad (CellUnion.Expand, S2CellUnion.cs:618-650)."""
+    import numpy as np
+
+    from ..kernel import cellunion as cuk
+    from ..kernel.coverer import RegionCoverer
+    from .spatial_join import cell_rows
+
+    cover = RegionCoverer(max_cells=max_cells).get_covering(region)
+    return cell_rows(cuk.expand_radius(np.asarray(cover, dtype=np.uint64),
+                                       radius_rad, max_level_diff))
 
 
 def polyline_project_oracle_sql(src_sql: str,
@@ -330,45 +329,33 @@ def corridor_join(spark, pts: DataFrame,
     arithmetic, no shuffle of the points."""
     import numpy as np
 
-    from ..functions import columns as C
-    from ..kernel import cellid as cik
-    from ..kernel import cellunion as cuk
-    from ..kernel.coverer import RegionCoverer
     from ..kernel.polyline import Polyline
+    from ..plans import covercache
+    from .spatial_join import covering_probe_join
 
-    from ..plans.covercache import cached_rows
     rows = []
     residual = None
     for tid, latlngs in tracks.items():
         def compute(latlngs=latlngs):
             verts = np.array([_xyz(math.radians(la), math.radians(ln))
                               for la, ln in latlngs], dtype=np.float64)
-            cover = RegionCoverer(max_cells=coverer_max_cells).get_covering(
-                Polyline(verts))
-            buf = cuk.expand_radius(np.asarray(cover, dtype=np.uint64),
-                                    radius_rad, max_level_diff)
-            levels = cik.level_of(buf)
-            return [(int(c), int(lv)) for c, lv in
-                    zip(cik.to_signed(buf).tolist(), levels.tolist())]
+            return _expanded_covering(Polyline(verts), radius_rad,
+                                      coverer_max_cells, max_level_diff)
         key = ("corridor", tuple((float(la), float(ln)) for la, ln in latlngs),
                float(radius_rad), coverer_max_cells, max_level_diff)
         rows.extend((tid, cell, lvl)
-                    for cell, lvl in cached_rows(key, compute))
+                    for cell, lvl in covercache.cached_rows(key, compute))
         dist = F.expr(polyline_distance_sql(latlngs))
         residual = (F.when(F.col("track_id") == tid, dist)
                     if residual is None
                     else residual.when(F.col("track_id") == tid, dist))
     cov = spark.createDataFrame(
         rows, "track_id int, cov_cell long, cov_level int")
-    join_levels = sorted({r[2] for r in rows})
-    probe = with_xyz(pts).withColumn(
-        "probe_cell",
-        F.explode(F.array(*[C.parent_for_level(F.col("cell_id"), lv)
-                            for lv in join_levels])))
-    cand = probe.join(F.broadcast(cov), probe.probe_cell == cov.cov_cell)
+    cand = covering_probe_join(with_xyz(pts), cov, (r[2] for r in rows),
+                               cov_cell="cov_cell")
     return (cand.withColumn("distance_rad", residual)
             .where(F.col("distance_rad") <= radius_rad)
-            .drop("px", "py", "pz", "probe_cell", "cov_cell", "cov_level"))
+            .drop("px", "py", "pz"))
 
 
 def nearest_track_join(spark, pts: DataFrame,

@@ -11,43 +11,30 @@ kernel/rect_region.py), so the coarse phase prunes like the polygon join.
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import columns as C
-from ..kernel import cellid as ci
 from ..kernel.coverer import RegionCoverer
 from ..kernel.rect_region import RectRegion
+from ..plans import covercache
+from .spatial_join import cell_rows, covering_probe_join
 
 
 def rect_coverings(rects: dict[int, tuple[float, float, float, float]],
                    max_cells: int = 32) -> pd.DataFrame:
     """rects: id -> (lat_lo, lng_lo, lat_hi, lng_hi) degrees.
 
-    Cached per rect (memo + disk): a covering is a pure function of
+    Cached per rect in plans.covercache: a covering is a pure function of
     (rect, max_cells) — serial driver work the query shouldn't repay on
-    every construction (see plans.covercache)."""
-    from ..plans.covercache import cached_rows
-    rows = []
+    every construction."""
     cov = RegionCoverer(max_cells=max_cells)
-
-    def one(rect):
-        def compute():
-            region = RectRegion.from_degrees(*rect)
-            out = []
-            for cid in cov.get_covering(region):
-                arr = np.array([cid], dtype=np.uint64)
-                out.append((int(ci.to_signed(arr)[0]), int(ci.level_of(arr)[0])))
-            return out
-        return cached_rows(("rect", tuple(map(float, rect)), max_cells),
-                           compute)
-
+    rows = []
     for rid, rect in rects.items():
-        rows.extend((rid, cell, lvl) for cell, lvl in one(rect))
+        cells = covercache.cached_rows(
+            ("rect", tuple(map(float, rect)), max_cells),
+            lambda: cell_rows(cov.get_covering(RectRegion.from_degrees(*rect))))
+        rows.extend((rid, cell, lvl) for cell, lvl in cells)
     return pd.DataFrame(rows, columns=["rect_id", "cov_cell_id", "cov_level"])
 
 
@@ -58,21 +45,14 @@ def rect_query(spark: SparkSession, points: DataFrame,
     """points (with leaf cell ids + lat/lng degrees) -> rows x rect_id for
     every containing rectangle.  Coarse covering join + exact JVM residual."""
     cov_pdf = rect_coverings(rects)
-    cov_df = spark.createDataFrame(cov_pdf)
-    levels = sorted(cov_pdf["cov_level"].unique().tolist())
-
     bounds = spark.createDataFrame(
         [(rid, *map(float, b)) for rid, b in rects.items()],
         "rect_id int, lat_lo double, lng_lo double, lat_hi double, lng_hi double")
-
-    probe_keys = F.array(*[C.parent_for_level(F.col(cell_col), int(lv)) for lv in levels])
-    probed = points.withColumn("probe_cell", F.explode(probe_keys))
     # coverings are normalized (disjoint) per rect -> at most one match per
     # (point, rect): no dedup shuffle needed
-    joined = (probed.join(F.broadcast(cov_df),
-                          probed["probe_cell"] == cov_df["cov_cell_id"])
-              .join(F.broadcast(bounds), "rect_id")
-              .drop("probe_cell", "cov_cell_id", "cov_level"))
+    joined = (covering_probe_join(points, spark.createDataFrame(cov_pdf),
+                                  cov_pdf["cov_level"], cell_col)
+              .join(F.broadcast(bounds), "rect_id"))
 
     lat = F.col(lat_col).cast("double")
     lng = F.col(lng_col).cast("double")

@@ -27,10 +27,6 @@ covering cells; AQE skew-join handles residual imbalance.
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -39,101 +35,91 @@ from pyspark.sql.types import BooleanType
 
 from ..functions import columns as C
 from ..kernel import cellid as ci
+from ..kernel.cellunion import normalize
 from ..kernel.coverer import RegionCoverer
 from ..kernel.loops import Loop, Polygon
+from ..plans import covercache
+
+# Skin refinement depth: straddling cells are split this many levels below
+# the coverer's output before the remainder becomes exact-test skin.
+SKIN_REFINE_LEVELS = 3
+
+# perfbench/workloads.py:cold_coverings clears this to force cold coverings.
+_COVERING_CACHE = covercache._MEMO
 
 
-def build_coverings(polygons: dict[int, Polygon], max_cells: int = 64,
-                    interior_max_cells: int | None = None) -> pd.DataFrame:
-    """Disjoint per-polygon candidate cells: interior covering I (accept
-    fast, mirroring the coverer's interior fast-accept,
-    S2RegionCoverer.cs:312-329) plus the skin E \\ I (exact-test cells),
-    where E is the exterior covering and the set difference is cell-union
-    range recursion.
+def cell_rows(cells) -> list[tuple[int, int]]:
+    """(signed cell id, level) rows for an array of raw uint64 cell ids."""
+    cells = np.asarray(cells, dtype=np.uint64)
+    return list(zip(ci.to_signed(cells).tolist(), ci.level_of(cells).tolist()))
+
+
+def polygon_key(poly: Polygon) -> tuple:
+    """A polygon's part of a covering cache key: vertex bytes per loop and
+    loop depths, kept per loop so different loop splits stay distinct."""
+    return (tuple(lp.vertices.tobytes() for lp in poly.loops),
+            tuple(lp.depth for lp in poly.loops))
+
+
+def skin_covering(poly: Polygon, max_cells: int = 64) -> list:
+    """Disjoint [signed cell id, level, is_interior] rows for one polygon:
+    the interior covering I (accept fast, mirroring the coverer's interior
+    fast-accept, S2RegionCoverer.cs:312-329) plus the skin E \\ I
+    (exact-test cells), where E is the exterior covering.  Cached in
+    plans.covercache."""
+    def compute():
+        # Level-synchronous refinement: classify the whole frontier with
+        # ONE batched relate call per level (numpy amortizes), then split
+        # only the straddlers.  The final straddler set is the skin.
+        frontier = normalize(RegionCoverer(max_cells=max_cells).get_covering(poly))
+        interior, skin = frontier[:0], frontier[:0]
+        for depth in range(SKIN_REFINE_LEVELS + 1):
+            if len(frontier) == 0:
+                break
+            may, cont = poly.relate_cells(frontier)
+            interior = np.concatenate([interior, frontier[cont]])
+            straddle = frontier[may & ~cont]
+            leaf = ci.level_of(straddle) >= 30
+            skin = np.concatenate([skin, straddle[leaf]])
+            if depth == SKIN_REFINE_LEVELS:
+                skin = np.concatenate([skin, straddle[~leaf]])
+                break
+            frontier = ci.children(straddle[~leaf]).reshape(-1)
+        return ([(s, lv, True) for s, lv in cell_rows(interior)]
+                + [(s, lv, False) for s, lv in cell_rows(skin)])
+    return covercache.cached_rows(("skin", *polygon_key(poly), max_cells),
+                                  compute)
+
+
+def build_coverings(polygons: dict[int, Polygon],
+                    max_cells: int = 64) -> pd.DataFrame:
+    """Per-polygon skin coverings as one table (polygon_id, cov_cell_id,
+    cov_level, is_interior).
 
     Disjointness means a point matches AT MOST ONE covering cell per
     polygon -> the probe join needs no dedup shuffle, and only skin matches
     pay the exact parity kernel.  max_cells defaults higher than the
     reference's 8: covering size only costs broadcast bytes here, while a
     finer covering shrinks the skin."""
-    from ..kernel.cellunion import normalize
-    rows = []
-    cov = RegionCoverer(max_cells=max_cells)
-    refine_levels = 3 if interior_max_cells is None else interior_max_cells
-    for pid, poly in polygons.items():
-        key = (tuple(lp.vertices.tobytes() for lp in poly.loops),
-               tuple(lp.depth for lp in poly.loops),
-               max_cells, refine_levels)
-        cached = _COVERING_CACHE.get(key)
-        if cached is None:
-            cached = _load_disk_covering(key)
-        if cached is None:
-            # Level-synchronous skin refinement: classify the whole frontier
-            # with ONE batched relate call per level (numpy amortizes), then
-            # split only the straddlers.  Interior cells accept fast; the
-            # final straddler set is the exact-test skin.
-            frontier = normalize(cov.get_covering(poly))
-            interior_cells: list[int] = []
-            skin_cells: list[int] = []
-            for depth in range(refine_levels + 1):
-                if len(frontier) == 0:
-                    break
-                may, cont = poly.relate_cells(frontier)
-                interior_cells.extend(int(c) for c in frontier[cont])
-                straddle = frontier[may & ~cont & (ci.level_of(frontier) < 30)]
-                leaf_straddle = frontier[may & ~cont & (ci.level_of(frontier) >= 30)]
-                skin_cells.extend(int(c) for c in leaf_straddle)
-                if depth == refine_levels:
-                    skin_cells.extend(int(c) for c in straddle)
-                    break
-                frontier = ci.children(straddle).reshape(-1)
-            cached = [(int(ci.to_signed(np.array([c], dtype=np.uint64))[0]),
-                       int(ci.level_of(np.array([c], dtype=np.uint64))[0]), flag)
-                      for c, flag in
-                      [(c, True) for c in interior_cells] + [(c, False) for c in skin_cells]]
-            _store_disk_covering(key, cached)
-        _COVERING_CACHE[key] = cached
-        rows.extend((pid, cell, level, flag) for cell, level, flag in cached)
+    rows = [(pid, *row) for pid, poly in polygons.items()
+            for row in skin_covering(poly, max_cells)]
     return pd.DataFrame(rows, columns=["polygon_id", "cov_cell_id", "cov_level", "is_interior"])
 
 
-# coverings are pure functions of (loops, params); memoize driver-side so
-# repeated joins against the same polygons skip the coverer entirely.
-# A small on-disk cache (like a persisted spatial index) makes the skip
-# work across processes — semantically an index build artifact, exactly
-# like the reference's lazily-built S2EdgeIndex (S2EdgeIndex.cs:173-220).
-_COVERING_CACHE: dict = {}
-_DISK_CACHE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), ".cache", "coverings")
-
-
-def _key_digest(key) -> str:
-    h = hashlib.sha256()
-    for part in key[0]:
-        h.update(part)
-    h.update(repr(key[1:]).encode())
-    return h.hexdigest()[:32]
-
-
-def _load_disk_covering(key):
-    path = os.path.join(_DISK_CACHE_DIR, _key_digest(key) + ".json")
-    try:
-        with open(path) as f:
-            return [tuple(row) for row in json.load(f)]
-    except (OSError, ValueError):
-        return None
-
-
-def _store_disk_covering(key, rows) -> None:
-    try:
-        os.makedirs(_DISK_CACHE_DIR, exist_ok=True)
-        path = os.path.join(_DISK_CACHE_DIR, _key_digest(key) + ".json")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump([list(r) for r in rows], f)
-        os.replace(tmp, path)
-    except OSError:
-        pass
+def covering_probe_join(points: DataFrame, cov: DataFrame, levels,
+                        cell_col: str = "cell_id",
+                        cov_cell: str = "cov_cell_id") -> DataFrame:
+    """Broadcast equi-join of `points` with covering table `cov`: each
+    point explodes to its ancestor at every distinct covering level in
+    `levels` (pure bit ops, <= ~10 keys), and ancestor == `cov_cell`
+    matches (range containment by a level-L cell is ancestor equality, so
+    no nested-loop range join).  The probe key, `cov_cell` and cov_level
+    are dropped; the caller applies its own residual."""
+    keys = F.array(*[C.parent_for_level(F.col(cell_col), int(lv))
+                     for lv in sorted(set(levels))])
+    probed = points.withColumn("probe_cell", F.explode(keys))
+    return (probed.join(F.broadcast(cov), probed["probe_cell"] == cov[cov_cell])
+            .drop("probe_cell", cov_cell, "cov_level"))
 
 
 def _make_contains_udf(spark: SparkSession, polygons: dict[int, Polygon]):
@@ -188,15 +174,8 @@ def spatial_join(spark: SparkSession, points: DataFrame,
     kernel runs ONLY on exterior-cell matches (a filter on the match, not
     an OR the optimizer might evaluate eagerly)."""
     cov_pdf = build_coverings(polygons, max_cells=max_cells)
-    cov_df = spark.createDataFrame(cov_pdf)
-    levels = sorted(cov_pdf["cov_level"].unique().tolist())
-
-    probe_keys = F.array(*[C.parent_for_level(F.col(cell_col), int(lv)) for lv in levels])
-    probed = points.withColumn("probe_cell", F.explode(probe_keys))
-
-    joined = (probed.join(F.broadcast(cov_df),
-                          probed["probe_cell"] == cov_df["cov_cell_id"], "inner")
-              .drop("probe_cell", "cov_cell_id", "cov_level"))
+    joined = covering_probe_join(points, spark.createDataFrame(cov_pdf),
+                                 cov_pdf["cov_level"], cell_col)
 
     contains_udf = _make_contains_udf(spark, polygons)
     # single pass: interior rows feed the UDF nulls (skipped for free),

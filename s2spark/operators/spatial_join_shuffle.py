@@ -10,7 +10,7 @@ rides with the rows).
 
 Pipeline:
 1. build_coverings_distributed: one applyInPandas group per polygon runs
-   the same coverer + level-synchronous skin refinement used driver-side
+   the same skin refinement (spatial_join.skin_covering) used driver-side
    (SURVEY.md §3.2: parallelism is across polygons, never inside one
    covering).
 2. hot-cell detection: a cheap pre-aggregation counts probe hits per
@@ -32,9 +32,6 @@ from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
                                IntegerType, LongType, StructField, StructType)
 
 from ..functions import columns as C
-from ..kernel import cellid as ci
-from ..kernel.cellunion import normalize
-from ..kernel.coverer import RegionCoverer
 from ..kernel.loops import Loop, Polygon
 
 POLYGON_SCHEMA = StructType([
@@ -69,59 +66,23 @@ def _polygon_from_group(pdf: pd.DataFrame) -> Polygon:
     return Polygon(loops)
 
 
-def build_coverings_distributed(polygons_df: DataFrame, max_cells: int = 64,
-                                refine_levels: int = 3) -> DataFrame:
+def build_coverings_distributed(polygons_df: DataFrame,
+                                max_cells: int = 64) -> DataFrame:
     """coverings(polygon_id, cov_cell_id, cov_level, is_interior) — one
     coverer run per polygon group, parallel across polygons."""
 
     def cover_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Same memo + disk cache as the broadcast path: a covering is a pure
-        # function of (loops, params) — an index-build artifact, computed
-        # once per polygon ever (per node; use shared storage in prod), not
-        # once per job run.  Identical params share entries across both join
-        # strategies.
-        from .spatial_join import (_COVERING_CACHE, _load_disk_covering,
-                                   _store_disk_covering)
+        # The same skin refinement and covering memo as the broadcast
+        # path.  The memo lives in this Python worker, so it serves only
+        # repeats that land on the same worker while it is alive.
+        from .spatial_join import skin_covering
 
-        poly = _polygon_from_group(pdf)
-        pid = int(pdf["polygon_id"].iloc[0])
-        key = (tuple(lp.vertices.tobytes() for lp in poly.loops),
-               tuple(lp.depth for lp in poly.loops),
-               max_cells, refine_levels)
-        cached = _COVERING_CACHE.get(key)
-        if cached is None:
-            cached = _load_disk_covering(key)
-        if cached is None:
-            cov = RegionCoverer(max_cells=max_cells)
-            frontier = normalize(cov.get_covering(poly))
-            interior: list[int] = []
-            skin: list[int] = []
-            for depth in range(refine_levels + 1):
-                if len(frontier) == 0:
-                    break
-                may, cont = poly.relate_cells(frontier)
-                interior.extend(int(c) for c in frontier[cont])
-                lv = ci.level_of(frontier)
-                straddle = frontier[may & ~cont & (lv < 30)]
-                skin.extend(int(c) for c in frontier[may & ~cont & (lv >= 30)])
-                if depth == refine_levels:
-                    skin.extend(int(c) for c in straddle)
-                    break
-                frontier = ci.children(straddle).reshape(-1)
-            cells = ([(c, True) for c in interior]
-                     + [(c, False) for c in skin])
-            arr = np.array([c for c, _ in cells], dtype=np.uint64)
-            signed = ci.to_signed(arr) if len(cells) else []
-            levels = ci.level_of(arr) if len(cells) else []
-            cached = [(int(s), int(lv), flag)
-                      for s, lv, (_, flag) in zip(signed, levels, cells)]
-            _store_disk_covering(key, cached)
-        _COVERING_CACHE[key] = cached
+        rows = skin_covering(_polygon_from_group(pdf), max_cells)
         return pd.DataFrame(
-            {"polygon_id": pid,
-             "cov_cell_id": np.array([c for c, _, _ in cached], dtype=np.int64),
-             "cov_level": np.array([lv for _, lv, _ in cached], dtype=np.int32),
-             "is_interior": [bool(f) for _, _, f in cached]})
+            {"polygon_id": int(pdf["polygon_id"].iloc[0]),
+             "cov_cell_id": np.array([c for c, _, _ in rows], dtype=np.int64),
+             "cov_level": np.array([lv for _, lv, _ in rows], dtype=np.int32),
+             "is_interior": [bool(f) for _, _, f in rows]})
 
     return polygons_df.groupBy("polygon_id").applyInPandas(
         cover_group, schema=COVERING_SCHEMA)
@@ -170,7 +131,7 @@ def spatial_join_shuffle(spark: SparkSession, points: DataFrame,
     # it decides BOTH the refine strategy (below) and, new in r6, the
     # covering build strategy.  A polygon side small enough to broadcast
     # its vertices is also small enough to cover on the DRIVER through the
-    # same memo/disk cache as the broadcast join — skipping the
+    # same covering memo as the broadcast join — skipping the
     # applyInPandas covering job + its Python-worker spin-up + the
     # persist/collect round-trip (measured r6: ~4-5 s of this operator's
     # construction at sf0.1).  The distributed covering path is unchanged

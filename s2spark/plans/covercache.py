@@ -1,55 +1,45 @@
-"""Driver-side memo + disk cache for covering computations.
+"""The covering cache: a bounded, in-process memo for covering computations.
 
 A covering is a pure function of (region geometry, coverer parameters) —
 an index-build artifact, not data — so recomputing it on every query
 construction is wasted serial driver time (an Amdahl term: it never
-parallelizes).  This generalizes the cache spatial_join.py has carried
-since round 3 for polygon coverings to any region kind (rects, caps,
-polylines, radius-expanded unions): callers provide a stable key and a
-compute thunk returning a JSON-serializable list of rows.
+parallelizes).  Every covering operator goes through `cached_rows`:
+polygon skin coverings, rects, caps, polylines and radius-expanded
+unions.
 
-The disk tier lives under <repo>/.cache/coverings (gitignored), the same
-location and lifecycle as the polygon covering cache; in production this
-would be shared storage next to the other index artifacts.
+The memo key IS the caller's key tuple, and that tuple holds every coverer
+input (vertex bytes per loop, loop depths, max_cells, radius,
+max_level_diff, the cap/rect spec, the track).  Tuples compare element by
+element, so two different regions can never share an entry the way two
+byte strings joined into one digest can.
+
+There is no disk tier.  A persisted covering outlives the code that
+computed it and is shared with other processes, so it would need a
+code-version key to never serve a stale answer; and no measured workload
+reads one (the benchmark clears every covering cache before a run, and
+only repeats within a run hit).
+
+The memo holds at most MAX_ENTRIES coverings; a new entry past the cap
+evicts the oldest one.
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
+MAX_ENTRIES = 1024
 
-_MEMO: dict[str, list] = {}
-_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), ".cache", "coverings")
-
-
-def _digest(key) -> str:
-    return hashlib.sha256(repr(key).encode()).hexdigest()[:32]
+# Mutated in place, never rebound: spatial_join aliases it and callers
+# clear it to force cold coverings.
+_MEMO: dict = {}
 
 
 def cached_rows(key, compute):
-    """Rows for `key`, from memo, disk, or `compute()` (list of lists/tuples).
-    Returned rows are lists (JSON round-trip normalizes tuples)."""
-    dig = _digest(key)
-    rows = _MEMO.get(dig)
-    if rows is not None:
-        return rows
-    path = os.path.join(_DIR, "r_" + dig + ".json")
-    try:
-        with open(path) as f:
-            rows = json.load(f)
-    except (OSError, ValueError):
-        rows = None
+    """Rows for `key` (a hashable tuple of every coverer input), from the
+    memo or from `compute()` (an iterable of rows).  Rows come back as
+    lists."""
+    rows = _MEMO.get(key)
     if rows is None:
         rows = [list(r) for r in compute()]
-        try:
-            os.makedirs(_DIR, exist_ok=True)
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(rows, f)
-            os.replace(tmp, path)
-        except OSError:
-            pass
-    _MEMO[dig] = rows
+        if len(_MEMO) >= MAX_ENTRIES:
+            del _MEMO[next(iter(_MEMO))]
+        _MEMO[key] = rows
     return rows

@@ -150,12 +150,11 @@ def test_chunk_dedup_totals_from_exploded_relation(spark):
     assert dict(chunk_dedup(docs).dtypes)["n_chunks_total"] == "int"
 
 
-def test_covercache_roundtrip(tmp_path, monkeypatch):
-    """cached_rows: compute-once, then memo and disk hits (normalized to
-    lists); distinct keys stay distinct."""
+def test_covercache_roundtrip():
+    """cached_rows: compute-once, then memo hits (normalized to lists);
+    recomputes after a memo clear; distinct keys stay distinct."""
     from s2spark.plans import covercache
 
-    monkeypatch.setattr(covercache, "_DIR", str(tmp_path))
     covercache._MEMO.clear()
     calls = []
 
@@ -168,8 +167,117 @@ def test_covercache_roundtrip(tmp_path, monkeypatch):
     assert len(calls) == 1                     # memo hit
     covercache._MEMO.clear()
     assert covercache.cached_rows(("k", 1), compute) == [[1, 2], [3, 4]]
-    assert len(calls) == 1                     # disk hit
+    assert len(calls) == 2                     # no disk tier: recomputed
     assert covercache.cached_rows(("k", 2), lambda: [(9, 9)]) == [[9, 9]]
+
+
+def test_covercache_evicts_oldest_at_cap(monkeypatch):
+    """The memo is bounded: past MAX_ENTRIES the oldest entry goes, in
+    place (the dict object others alias is never rebound)."""
+    from s2spark.operators import spatial_join as sj
+    from s2spark.plans import covercache
+
+    monkeypatch.setattr(covercache, "MAX_ENTRIES", 3)
+    memo = covercache._MEMO
+    memo.clear()
+    for k in range(5):
+        covercache.cached_rows(("k", k), lambda: [(k,)])
+    assert list(memo) == [("k", 2), ("k", 3), ("k", 4)]
+    assert covercache._MEMO is memo and sj._COVERING_CACHE is memo
+    memo.clear()
+
+
+# one vertex sequence, split into loops two ways: (triangle, quad) and
+# (square, triangle) — different regions, identical concatenated bytes
+_SPLIT_VERTS = "0:0, 0:1, 1:1, 1:0, 2:8, 8:10, 9:4"
+
+
+def _split_polygon(first: int, depths=(0, 0)):
+    from s2spark.kernel.loops import Loop, Polygon
+    from s2spark.sources.fixtures import parse_vertices
+
+    v = parse_vertices(_SPLIT_VERTS)
+    return Polygon([Loop(v[:first], depth=depths[0]),
+                    Loop(v[first:], depth=depths[1])])
+
+
+def test_skin_covering_distinguishes_loop_splits():
+    """Polygons whose loops split one vertex sequence differently get their
+    own coverings, also after a memo clear (a digest over the joined loop
+    bytes once served one the other's covering)."""
+    import numpy as np
+    from s2spark.kernel import cellid as ci
+    from s2spark.operators.spatial_join import build_coverings
+    from s2spark.plans import covercache
+
+    a, b = _split_polygon(3), _split_polygon(4)
+    covercache._MEMO.clear()
+    cov_a = build_coverings({1: a})
+    covercache._MEMO.clear()
+    cov_b = build_coverings({1: b})
+    assert not cov_a.equals(cov_b)
+    for poly, cov in ((a, cov_a), (b, cov_b)):
+        cells = ci.to_unsigned(cov["cov_cell_id"].to_numpy(np.int64))
+        may, cont = poly.relate_cells(cells)
+        assert may.all()
+        assert cont[cov["is_interior"].to_numpy()].all()
+    covercache._MEMO.clear()
+
+
+def test_covering_cache_key_covers_every_input(spark):
+    """Changing any coverer input misses the covering cache; repeating an
+    input hits it."""
+    from s2spark.kernel.loops import Loop, Polygon
+    from s2spark.operators import distance_ops
+    from s2spark.operators.cap_query import cap_coverings
+    from s2spark.operators.rect_query import rect_coverings
+    from s2spark.operators.spatial_join import build_coverings
+    from s2spark.plans import covercache
+    from s2spark.sources.fixtures import parse_vertices
+
+    pts = spark.createDataFrame([(0.5, 0.5, 0)],
+                                "lat double, lng double, cell_id long")
+    square = Polygon([Loop(parse_vertices("0:0, 0:1, 1:1, 1:0"))])
+    wider = Polygon([Loop(parse_vertices("0:0, 0:2, 1:2, 1:0"))])
+    track = [(0.0, 0.0), (1.0, 1.0)]
+    variants = [
+        lambda: build_coverings({1: square}),
+        lambda: build_coverings({1: wider}),                       # vertices
+        lambda: build_coverings({1: _split_polygon(3)}),
+        lambda: build_coverings({1: _split_polygon(4)}),           # loop split
+        lambda: build_coverings({1: _split_polygon(3, (0, 1))}),   # depth
+        lambda: build_coverings({1: square}, max_cells=8),         # max_cells
+        lambda: cap_coverings({1: (0.0, 0.0, 0.01)}),
+        lambda: cap_coverings({1: (0.0, 1.0, 0.01)}),              # cap centre
+        lambda: cap_coverings({1: (0.0, 0.0, 0.02)}),              # cap radius
+        lambda: cap_coverings({1: (0.0, 0.0, 0.01)}, max_cells=8),
+        lambda: rect_coverings({1: (0.0, 0.0, 1.0, 1.0)}),
+        lambda: rect_coverings({1: (0.0, 0.0, 1.0, 2.0)}),         # rect
+        lambda: rect_coverings({1: (0.0, 0.0, 1.0, 1.0)}, max_cells=8),
+        lambda: distance_ops.buffered_polygon_join(spark, pts, {1: square}, 0.001),
+        lambda: distance_ops.buffered_polygon_join(spark, pts, {1: wider}, 0.001),
+        lambda: distance_ops.buffered_polygon_join(spark, pts, {1: square}, 0.002),
+        lambda: distance_ops.buffered_polygon_join(
+            spark, pts, {1: square}, 0.001, coverer_max_cells=8),
+        lambda: distance_ops.buffered_polygon_join(
+            spark, pts, {1: square}, 0.001, max_level_diff=3),
+        lambda: distance_ops.corridor_join(spark, pts, {1: track}, 0.001),
+        lambda: distance_ops.corridor_join(
+            spark, pts, {1: [(0.0, 0.0), (1.0, 2.0)]}, 0.001),     # track
+        lambda: distance_ops.corridor_join(spark, pts, {1: track}, 0.002),
+        lambda: distance_ops.corridor_join(
+            spark, pts, {1: track}, 0.001, coverer_max_cells=8),
+        lambda: distance_ops.corridor_join(
+            spark, pts, {1: track}, 0.001, max_level_diff=3),
+    ]
+    covercache._MEMO.clear()
+    for i, build in enumerate(variants):
+        build()
+        assert len(covercache._MEMO) == i + 1, i      # miss: one new entry
+    for build in variants:
+        build()
+    assert len(covercache._MEMO) == len(variants)     # repeats: all hits
+    covercache._MEMO.clear()
 
 
 def test_snapshot_version_gate(spark, tmp_path):
@@ -262,6 +370,12 @@ def test_dedup_resolve_matches_python_oracle(spark):
         elif r < 0.8:                      # near-dup: one word edited
             ws = text.split(); ws[rnd.randrange(len(ws))] = rnd.choice(vocab)
             rows.append((did, " ".join(ws))); did += 1
+    # whitespace variants, where trim() (spaces only) and the ASCII \s
+    # class decide the shingles: tab borders, CRLF breaks, multi-space runs
+    for k, (_, text) in enumerate(rows[:12]):
+        variant = ("\t" + text + "\t", text.replace(" ", "\r\n"),
+                   text.replace(" ", "   "))[k % 3]
+        rows.append((did, variant)); did += 1
 
     from s2spark.operators.dedup import dedup_resolve
     df = spark.createDataFrame(rows, "doc_id long, text string")

@@ -22,29 +22,31 @@ def round6(x: float) -> float:
     return math.floor(x * 1e6 + 0.5) / 1e6
 
 
-def py_resolve(rows):
+def py_resolve(rows, n=5, num_hashes=16, bands=4, threshold=0.8):
     """rows: list of (doc_id, text). Returns sorted [(doc_id, cluster_id,
-    kept_doc_id, is_kept)]."""
+    kept_doc_id, is_kept)].  Parameters and the estimate gate
+    (threshold - 0.3) mirror dedup_resolve."""
     grams_of, hset_of, raw_len, sig_of = {}, {}, {}, {}
     for doc_id, text in rows:
         raw_len[doc_id] = len(text)
-        t = re.sub(r"\s+", " ", text.strip().lower())
-        n = len(t)
-        if n >= 5:
-            gs = {t[i:i + 5] for i in range(n - 4)}
+        # Spark/DuckDB trim() strips spaces only, and their \s is ASCII
+        t = re.sub(r"[ \t\n\x0b\f\r]+", " ", text.strip(" ").lower())
+        if len(t) >= n:
+            gs = {t[i:i + n] for i in range(len(t) - n + 1)}
         else:
             gs = {t}
         grams_of[doc_id] = gs
         hset_of[doc_id] = {md5_15(g) for g in gs}
         sig_of[doc_id] = [min(md5_15(f"mh{i}_" + g) for g in gs)
-                          for i in range(16)]
+                          for i in range(num_hashes)]
     # band buckets
+    rows_per_band = num_hashes // bands
     buckets = {}
     for doc_id, sig in sig_of.items():
-        for b in range(4):
+        for b in range(bands):
+            band = sig[b * rows_per_band:(b + 1) * rows_per_band]
             key = (b, hashlib.md5(
-                "_".join(str(v) for v in sig[b * 4:b * 4 + 4]).encode()
-            ).hexdigest())
+                "_".join(str(v) for v in band).encode()).hexdigest())
             buckets.setdefault(key, []).append(doc_id)
     cand = set()
     for members in buckets.values():
@@ -52,16 +54,17 @@ def py_resolve(rows):
         for i in range(len(members)):
             for j in range(i + 1, len(members)):
                 cand.add((members[i], members[j]))
-    # signature-estimate gate (>= 0.5 of 16)
+    # signature-estimate gate
+    gate = max(0.0, threshold - 0.3)
     gated = [(a, b) for a, b in cand
-             if sum(1 for i in range(16) if sig_of[a][i] == sig_of[b][i])
-             / 16.0 >= 0.5]
+             if sum(1 for i in range(num_hashes) if sig_of[a][i] == sig_of[b][i])
+             / num_hashes >= gate]
     # exact verify
     pairs = []
     for a, b in gated:
         n_inter = len(hset_of[a] & hset_of[b])
         sz_a, sz_b = len(grams_of[a]), len(grams_of[b])
-        if round6(n_inter / (sz_a + sz_b - n_inter)) >= 0.8:
+        if round6(n_inter / (sz_a + sz_b - n_inter)) >= threshold:
             pairs.append((a, b))
     # connected components, min-id representative
     parent = {}
