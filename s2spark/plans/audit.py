@@ -2,8 +2,10 @@
 
 Every pipeline stage can append one row per (stage, partition) with row
 counts and per-tile histograms — the operational surface the north_star
-requires.  Implemented with `spark_partition_id()` aggregation (one extra
-narrow aggregate per audited stage, no extra shuffle of the data itself).
+requires.  Implemented with `spark_partition_id()` aggregation over the
+stage's own evaluation: `partition_metrics` persists the stage, so the audit
+job computes it once and the snapshot write reads the cached blocks, and
+the audit counts exactly the rows written.
 """
 
 from __future__ import annotations
@@ -20,8 +22,12 @@ from ..functions import columns as C
 def partition_metrics(df: DataFrame, stage: str, cell_col: str | None = None,
                       tile_level: int = 6) -> DataFrame:
     """One row per partition: row count (+ distinct-tile count and hottest
-    tile when a cell column exists) — the skew fingerprint of the stage."""
-    base = df.withColumn("__pid", F.spark_partition_id())
+    tile when a cell column exists) — the skew fingerprint of the stage.
+
+    Persists `df`, so the action that writes these metrics also fills the
+    cache that the stage's own write then reads.  Whoever writes `df`
+    unpersists it; `SnapshotStore.resume_or_compute` does."""
+    base = df.persist().withColumn("__pid", F.spark_partition_id())
     if cell_col is not None:
         base = base.withColumn("__tile", C.parent_for_level(F.col(cell_col), tile_level))
         agg = base.groupBy("__pid").agg(

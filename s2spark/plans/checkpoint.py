@@ -10,6 +10,23 @@ snapshot back without rewriting history.  A stage's output is visible iff
 its manifest row is committed, and `resume_or_compute` replays completed
 stages from their current snapshots.  Swapping the io layer for Iceberg
 (`df.writeTo(...).createOrReplace()` + snapshot ids) changes only this file.
+
+Job budget per stage.  A committed stage costs one write job: the row
+count comes from an `Observation` on that write, so nothing reads the
+snapshot back to count it.  An audited stage is evaluated once, by its
+audit job (`audit.partition_metrics` persists the frame), and the write
+reads the cached blocks.  A snapshot read costs no job: the commit
+records the schema as JSON and every read (resume, post-commit return,
+`read_snapshot`) hands it to the parquet reader instead of inferring it.
+A manifest row committed before the JSON schema was recorded is read with
+inference.
+
+Failure posture.  Cached blocks of a stage that are lost before its write
+(evicted, or on a lost executor) are recomputed from lineage: results stay
+correct and the run is only slower, although a nondeterministic stage may
+then write rows that differ from what its audit counted.  A crash between
+the audit append and the commit leaves audit rows for a stage that has no
+snapshot; the resume recomputes the stage and appends its audit rows again.
 """
 
 from __future__ import annotations
@@ -19,7 +36,9 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class SnapshotStore:
@@ -67,6 +86,17 @@ class SnapshotStore:
         return [r for r in self._log()
                 if r.get("stage") == stage and "rollback_to" not in r]
 
+    @staticmethod
+    def _read(spark: SparkSession, row: dict) -> DataFrame:
+        """Read one committed snapshot.  With the schema the commit recorded
+        the read launches no job; a row without it falls back to parquet
+        schema inference.  A missing snapshot directory raises either way."""
+        reader = spark.read
+        if "schema_json" in row:
+            reader = reader.schema(
+                StructType.fromJson(json.loads(row["schema_json"])))
+        return reader.parquet(row["path"])
+
     def read_snapshot(self, spark: SparkSession, stage: str,
                       snapshot_id: int | None = None,
                       as_of_ts: float | None = None) -> DataFrame:
@@ -76,17 +106,17 @@ class SnapshotStore:
         if snapshot_id is not None:
             for r in self.snapshots(stage):
                 if r.get("snapshot_id") == snapshot_id:
-                    return spark.read.parquet(r["path"])
+                    return self._read(spark, r)
             raise KeyError(f"stage {stage!r} has no snapshot {snapshot_id}")
         if as_of_ts is not None:
             eligible = [r for r in self.snapshots(stage) if r["ts"] <= as_of_ts]
             if not eligible:
                 raise KeyError(f"stage {stage!r} has no snapshot <= {as_of_ts}")
-            return spark.read.parquet(eligible[-1]["path"])
+            return self._read(spark, eligible[-1])
         cur = self._current().get(stage)
         if cur is None:
             raise KeyError(f"stage {stage!r} has no committed snapshot")
-        return spark.read.parquet(cur["path"])
+        return self._read(spark, cur)
 
     def rollback(self, stage: str, snapshot_id: int) -> None:
         """Append a rollback marker: the stage's current snapshot becomes
@@ -101,7 +131,11 @@ class SnapshotStore:
 
     def commit(self, stage: str, path: str, n_rows: int,
                schema: str | None = None,
-               version: str | None = None) -> None:
+               version: str | None = None,
+               schema_json: str | None = None) -> dict:
+        """Append the stage's manifest row and return it.  `schema` is the
+        simpleString kept for readers of the log; `schema_json`
+        (`StructType.json()`) is what snapshot reads use."""
         # If a prior append was torn mid-line (crash), start on a fresh line
         # so the new record isn't glued onto the torn fragment and lost.
         needs_nl = (os.path.exists(self.manifest_path)
@@ -120,14 +154,23 @@ class SnapshotStore:
                    "schema": schema, "ts": time.time()}
             if version is not None:
                 row["version"] = version
+            if schema_json is not None:
+                row["schema_json"] = schema_json
             f.write(json.dumps(row) + "\n")
+        return row
 
     def resume_or_compute(self, spark: SparkSession, stage: str,
                           compute: Callable[[], DataFrame],
                           version: str | None = None) -> DataFrame:
         """Return the stage's snapshot if committed, else compute -> write ->
-        commit -> read back (so downstream always reads the snapshot, making
-        the stage boundary a true barrier for restarts).
+        commit -> read the snapshot (so downstream always reads the snapshot,
+        making the stage boundary a true barrier for restarts).
+
+        A commit is one write job and no read-back job: the row count is
+        observed during the write, and the returned read uses the recorded
+        schema.  The frame `compute()` returns belongs to this method: it
+        is unpersisted once written, whether or not the write succeeded,
+        which releases the cache `audit.partition_metrics` put on it.
 
         `version` is a STAGE-DEFINITION fingerprint (pipeline version
         string, hash of the stage's semantics — anything that changes when
@@ -141,11 +184,17 @@ class SnapshotStore:
         cur = self._current().get(stage)
         if cur is not None and (version is None
                                 or cur.get("version") == version):
-            return spark.read.parquet(cur["path"])
+            return self._read(spark, cur)
         path = os.path.join(self.root, f"{stage}-{int(time.time() * 1000)}")
         df = compute()
-        df.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
-        self.commit(stage, path, n, schema=df.schema.simpleString(),
-                    version=version)
-        return spark.read.parquet(path)
+        written = Observation()
+        try:
+            (df.observe(written, F.count(F.lit(1)).alias("n_rows"))
+             .write.mode("overwrite").parquet(path))
+        finally:
+            df.unpersist()
+        schema = df.schema
+        row = self.commit(stage, path, written.get["n_rows"],
+                          schema=schema.simpleString(), version=version,
+                          schema_json=schema.json())
+        return self._read(spark, row)

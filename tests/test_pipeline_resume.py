@@ -2,6 +2,8 @@
 
 import json
 import os
+import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,8 +31,26 @@ def test_pipeline_runs_and_resumes(spark, tmp_path):
     # resume: manifest says all stages complete -> same results, and no new
     # audit rows are appended (stages are not recomputed)
     manifest = os.path.join(work, "snapshots", "MANIFEST.jsonl")
-    stages = [json.loads(l)["stage"] for l in open(manifest)]
+    rows = [json.loads(l) for l in open(manifest)]
+    stages = [r["stage"] for r in rows]
     assert stages == ["mine", "encode", "join", "tiles"]
+
+    # the count observed during the write is the snapshot's row count, the
+    # recorded schema is the one inference gives, and each audited stage's
+    # audit counted exactly the rows its snapshot holds
+    from s2spark.plans.checkpoint import SnapshotStore
+    store = SnapshotStore(os.path.join(work, "snapshots"))
+    audit = {r["stage"]: r["n"] for r in
+             spark.read.parquet(os.path.join(work, "audit"))
+             .groupBy("stage").agg(F.sum("n_rows").alias("n")).collect()}
+    assert sorted(audit) == ["encode", "join", "mine"]
+    for r in rows:
+        inferred = spark.read.parquet(r["path"])
+        assert r["n_rows"] == inferred.count()
+        assert store.read_snapshot(spark, r["stage"]).schema == inferred.schema
+        if r["stage"] in audit:
+            assert audit[r["stage"]] == r["n_rows"]
+
     stats2 = run(spark, 5000, work)
     assert stats2["mined"] == stats1["mined"]
     assert stats2["joined"] == stats1["joined"]
@@ -166,9 +186,13 @@ def test_snapshot_time_travel_and_rollback(spark, tmp_path):
     append-only rollback changing what resume replays."""
     from s2spark.plans.checkpoint import SnapshotStore
 
+    def ids(df):
+        return sorted(r["id"] for r in df.collect())
+
     store = SnapshotStore(str(tmp_path / "snaps"))
     store.resume_or_compute(spark, "stage", lambda: spark.range(3))
-    # force a second snapshot of the same stage (re-run after a change)
+    # force a second snapshot of the same stage (re-run after a change);
+    # committed by hand with no JSON schema, so it is read by inference
     v1 = store.snapshots("stage")[0]
     p2 = str(tmp_path / "v2")
     spark.range(10).write.parquet(p2)
@@ -179,17 +203,128 @@ def test_snapshot_time_travel_and_rollback(spark, tmp_path):
     assert snaps[1]["schema"] == "struct<id:bigint>"
 
     # current = latest; time travel by id and by timestamp
-    assert store.read_snapshot(spark, "stage").count() == 10
-    assert store.read_snapshot(spark, "stage", snapshot_id=1).count() == 3
-    assert store.read_snapshot(spark, "stage",
-                               as_of_ts=v1["ts"]).count() == 3
+    assert ids(store.read_snapshot(spark, "stage")) == list(range(10))
+    assert ids(store.read_snapshot(spark, "stage",
+                                   snapshot_id=1)) == list(range(3))
+    assert ids(store.read_snapshot(spark, "stage",
+                                   as_of_ts=v1["ts"])) == list(range(3))
 
     # rollback: resume now replays snapshot 1; history is preserved
     store.rollback("stage", 1)
     resumed = store.resume_or_compute(
         spark, "stage", lambda: (_ for _ in ()).throw(AssertionError))
-    assert resumed.count() == 3
+    assert ids(resumed) == list(range(3))
+    assert ids(store.read_snapshot(spark, "stage")) == list(range(3))
     assert [s["snapshot_id"] for s in store.snapshots("stage")] == [1, 2]
+
+
+def _jobs_during(spark, fn):
+    """Run fn() under a fresh job group; return its result and the number
+    of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_commit_and_read_job_budget(spark, tmp_path):
+    """A commit is one write job (no read-back count, no schema inference)
+    and a snapshot read launches no job."""
+    from s2spark.plans.checkpoint import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    out, jobs = _jobs_during(spark, lambda: store.resume_or_compute(
+        spark, "s", lambda: spark.range(100).withColumn("sq", F.col("id") ** 2)))
+    assert jobs == 1
+    assert store.snapshots("s")[0]["n_rows"] == 100
+    for read in (lambda: store.read_snapshot(spark, "s"),
+                 lambda: store.read_snapshot(spark, "s", snapshot_id=1),
+                 lambda: store.resume_or_compute(spark, "s", None)):
+        schema, jobs = _jobs_during(spark, lambda: read().schema)
+        assert jobs == 0
+        assert schema == out.schema
+
+
+def test_legacy_manifest_row_resumes_through_inference(spark, tmp_path):
+    """A manifest row with no recorded JSON schema (committed before the
+    field existed) still resumes and time-travels, by schema inference."""
+    from s2spark.plans.checkpoint import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    first = store.resume_or_compute(
+        spark, "s", lambda: spark.range(7).withColumn("tag", F.lit("x")))
+    rows = [json.loads(l) for l in open(store.manifest_path)]
+    assert "schema_json" in rows[0]
+    del rows[0]["schema_json"]
+    with open(store.manifest_path, "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in rows)
+
+    resumed = store.resume_or_compute(
+        spark, "s", lambda: (_ for _ in ()).throw(AssertionError))
+    assert resumed.schema == first.schema
+    assert sorted(resumed.collect()) == sorted(first.collect())
+    assert store.read_snapshot(spark, "s", snapshot_id=1).count() == 7
+
+
+def test_deleted_snapshot_dir_raises(spark, tmp_path):
+    """A snapshot whose directory is gone is an error, never an empty
+    frame, with or without a recorded schema."""
+    from pyspark.errors import AnalysisException
+
+    from s2spark.plans.checkpoint import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    store.resume_or_compute(spark, "s", lambda: spark.range(4))
+    p2 = str(tmp_path / "v2")
+    spark.range(5).write.parquet(p2)
+    store.commit("s", p2, 5, schema="struct<id:bigint>")
+    for snap in store.snapshots("s"):
+        shutil.rmtree(snap["path"])
+        with pytest.raises(AnalysisException):
+            store.read_snapshot(spark, "s", snapshot_id=snap["snapshot_id"])
+    with pytest.raises(AnalysisException):
+        store.resume_or_compute(spark, "s", lambda: spark.range(1))
+
+
+def test_audited_stage_is_evaluated_once(spark, tmp_path):
+    """The audit and the snapshot write share one evaluation of the stage:
+    a Python UDF in the stage runs once per row, not once per action, and
+    the commit releases the cache the audit put on the stage.  The UDF
+    filters rows, as the join's refine does, so column pruning cannot drop
+    it from the audit's plan."""
+    from pyspark.sql.types import LongType
+
+    from s2spark.plans.audit import append_audit, partition_metrics
+    from s2spark.plans.checkpoint import SnapshotStore
+
+    n = 400
+    calls = spark.sparkContext.accumulator(0)
+
+    def bump(v):
+        calls.add(1)
+        return v
+
+    bump_udf = F.udf(bump, LongType())
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    audit_dir = str(tmp_path / "audit")
+    jsc = spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keySet())
+
+    def compute():
+        df = spark.range(n).where(bump_udf(F.col("id")) >= 0)
+        append_audit(partition_metrics(df, "udf"), audit_dir)
+        return df
+
+    out = store.resume_or_compute(spark, "udf", compute)
+    assert calls.value == n
+    assert set(jsc.getPersistentRDDs().keySet()) <= cached_before
+    assert out.count() == n and calls.value == n   # reads the snapshot
+    assert spark.read.parquet(audit_dir).agg(
+        F.sum("n_rows")).first()[0] == n
 
 
 def test_streaming_tile_topk_matches_batch(spark, tmp_path):
