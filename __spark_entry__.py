@@ -177,13 +177,14 @@ def _q_containment_ranges(spark, sf_dir):
     from s2spark.operators.spatial_join import (cell_rows, covering_probe_join,
                                                 polygon_key)
     from s2spark.plans import covercache
+    from s2spark.plans.frames import local_frame
     cov_rows = []
     for pid, poly in _JOIN_POLYGONS.items():
         cells = covercache.cached_rows(
             ("plain-cover", *polygon_key(poly), 8),
             lambda: cell_rows(RegionCoverer(max_cells=8).get_covering(poly)))
         cov_rows.extend((pid, cell, lvl) for cell, lvl in cells)
-    cov = spark.createDataFrame(cov_rows, "polygon_id int, cov_cell long, cov_level int")
+    cov = local_frame(spark, cov_rows, "polygon_id int, cov_cell long, cov_level int")
     pts = C.with_cell_id(_docs_geo(spark, sf_dir), "lat", "lng")
     return (covering_probe_join(pts, cov, (r[2] for r in cov_rows),
                                 cov_cell="cov_cell")

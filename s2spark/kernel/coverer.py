@@ -32,10 +32,13 @@ _FACE_CELL_IDS = [int(ci.from_face_pos_level(np.array([f]), np.array([0]), 0)[0]
 
 
 class _Candidate:
-    __slots__ = ("cell", "is_terminal", "children")
+    """A queued cell: its id and level only.  A Cell (face/ij decode plus
+    uv bounds) is built only where a region lacks relate_cells."""
+    __slots__ = ("id", "level", "is_terminal", "children")
 
-    def __init__(self, cell: Cell, is_terminal: bool):
-        self.cell = cell
+    def __init__(self, cid: int, level: int, is_terminal: bool):
+        self.id = cid
+        self.level = level
         self.is_terminal = is_terminal
         self.children: list["_Candidate"] = []
 
@@ -106,41 +109,43 @@ class RegionCoverer:
             cont[t] = may[t] and region.contains_cell(cell)
         return may, cont
 
-    def _new_candidate(self, region, cell: Cell, interior: bool,
+    def _new_candidate(self, region, cid: int, level: int, interior: bool,
                        may: bool | None = None, cont: bool | None = None):
         """Admission: MayIntersect filter; terminal if Contains or level cap
         (S2RegionCoverer.cs:302-340).  (may, cont) can arrive precomputed
         from a batched relate call."""
         if may is None:
-            m, c = self._relate(region, np.array([cell.id], dtype=np.uint64))
+            m, c = self._relate(region, np.array([cid], dtype=np.uint64))
             may, cont = bool(m[0]), bool(c[0])
         if not may:
             return None
         is_terminal = False
-        if cell.level >= self.min_level:
+        if level >= self.min_level:
             if interior:
                 if cont:
                     is_terminal = True
-                elif cell.level + self.level_mod > self.max_level:
+                elif level + self.level_mod > self.max_level:
                     return None
             else:
-                if cell.level + self.level_mod > self.max_level or cont:
+                if level + self.level_mod > self.max_level or cont:
                     is_terminal = True
-        return _Candidate(cell, is_terminal)
+        return _Candidate(cid, level, is_terminal)
 
-    def _expand_children(self, region, candidate: _Candidate, cell: Cell,
-                         num_levels: int, interior: bool) -> int:
+    def _expand_children(self, region, candidate: _Candidate, cid: int,
+                         level: int, num_levels: int, interior: bool) -> int:
         num_levels -= 1
-        child_ids = ci.children(np.array([cell.id], dtype=np.uint64))[0]
+        level += 1
+        child_ids = ci.children(np.array([cid], dtype=np.uint64))[0]
         may, cont = self._relate(region, child_ids)
         num_terminals = 0
-        for t, cid in enumerate(child_ids):
+        for t, child_id in enumerate(child_ids.tolist()):
             if num_levels > 0:
                 if may[t]:
                     num_terminals += self._expand_children(
-                        region, candidate, Cell(int(cid)), num_levels, interior)
+                        region, candidate, child_id, level, num_levels,
+                        interior)
                 continue
-            child = self._new_candidate(region, Cell(int(cid)), interior,
+            child = self._new_candidate(region, child_id, level, interior,
                                         bool(may[t]), bool(cont[t]))
             if child is not None:
                 candidate.children.append(child)
@@ -153,17 +158,18 @@ class RegionCoverer:
         if candidate is None:
             return
         if candidate.is_terminal:
-            result.append(candidate.cell.id)
+            result.append(candidate.id)
             return
-        num_levels = 1 if candidate.cell.level < self.min_level else self.level_mod
-        num_terminals = self._expand_children(region, candidate, candidate.cell,
-                                              num_levels, interior)
+        num_levels = 1 if candidate.level < self.min_level else self.level_mod
+        num_terminals = self._expand_children(region, candidate, candidate.id,
+                                              candidate.level, num_levels,
+                                              interior)
         n_children = len(candidate.children)
         shift = self._max_children_shift
         if n_children == 0:
             return
         if (not interior and num_terminals == (1 << shift)
-                and candidate.cell.level >= self.min_level):
+                and candidate.level >= self.min_level):
             # absorb-parent: all children terminal -> add the parent instead
             candidate.is_terminal = True
             self._add_candidate(region, candidate, result, pq, counter, interior)
@@ -172,7 +178,7 @@ class RegionCoverer:
         # into a MAX-heap so the largest, least-intersecting cells refine
         # first (S2RegionCoverer.cs:385-397).  heapq is a MIN-heap, so we
         # push the positive key to get the same order.
-        priority = (((candidate.cell.level << shift) + n_children) << shift) + num_terminals
+        priority = (((candidate.level << shift) + n_children) << shift) + num_terminals
         heapq.heappush(pq, (priority, next(counter), candidate))
 
     def _initial_candidates(self, region, result, pq, counter, interior: bool):
@@ -189,12 +195,12 @@ class RegionCoverer:
                                      np.float64(cap.axis[2]))
                 nbrs, valid = ci.get_vertex_neighbors(
                     np.atleast_1d(leaf), np.array([level], dtype=np.int64))
-                for cid in nbrs[0][valid[0]]:
-                    self._add_candidate(region, self._new_candidate(region, Cell(int(cid)), interior),
+                for cid in nbrs[0][valid[0]].tolist():
+                    self._add_candidate(region, self._new_candidate(region, cid, level, interior),
                                         result, pq, counter, interior)
                 return
         for fid in _FACE_CELL_IDS:
-            self._add_candidate(region, self._new_candidate(region, Cell(fid), interior),
+            self._add_candidate(region, self._new_candidate(region, fid, 0, interior),
                                 result, pq, counter, interior)
 
     def _covering_internal(self, region, interior: bool) -> np.ndarray:
@@ -209,7 +215,7 @@ class RegionCoverer:
                           and pops < self.interior_pop_budget)):
             _, _, candidate = heapq.heappop(pq)
             pops += 1
-            if (candidate.cell.level < self.min_level
+            if (candidate.level < self.min_level
                     or len(candidate.children) == 1
                     or len(result) + (0 if interior else len(pq)) + len(candidate.children)
                     <= self.max_cells):

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..kernel.cap import Cap
 from ..kernel.coverer import RegionCoverer
 from ..plans import covercache
+from ..plans.frames import local_frame
 from .spatial_join import cell_rows, covering_probe_join
 
 
@@ -50,11 +51,13 @@ def cap_query(spark: SparkSession, points: DataFrame,
     """points (leaf cell ids + lat/lng degrees) -> rows x cap_id for each
     containing cap, with distance_rad attached."""
     cov_pdf = cap_coverings(caps)
-    centers = spark.createDataFrame(
+    centers = local_frame(
+        spark,
         [(cid, float(b[0]), float(b[1]), float(b[2])) for cid, b in caps.items()],
         "cap_id int, c_lat double, c_lng double, radius double")
-    joined = (covering_probe_join(points, spark.createDataFrame(cov_pdf),
-                                  cov_pdf["cov_level"], cell_col)
+    cov = local_frame(spark, cov_pdf.itertuples(index=False, name=None),
+                      "cap_id long, cov_cell_id long, cov_level long")
+    joined = (covering_probe_join(points, cov, cov_pdf["cov_level"], cell_col)
               .join(F.broadcast(centers), "cap_id"))
 
     lat1 = F.radians(F.col(lat_col).cast("double"))

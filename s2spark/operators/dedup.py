@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.frames import local_frame
+
+
 def shingle_hash(col: Column) -> Column:
     """Portable 32-bit hash of a shingle: first 8 md5 hex digits."""
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
@@ -110,6 +113,19 @@ def minhash_signatures(documents: DataFrame, text_col: str = "text",
         text_col, num_hashes, n).drop(text_col)
 
 
+def band_buckets(num_hashes: int, bands: int) -> Column:
+    """array<struct<band, bucket>> over the mh0.. signature columns: band b's
+    bucket is md5 of its rows' values joined by "_".  Every index and every
+    probe derives buckets here, so they always agree."""
+    rows_per_band = num_hashes // bands
+    return F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.md5(F.concat_ws("_", *[
+                     F.col(f"mh{b * rows_per_band + r}").cast("string")
+                     for r in range(rows_per_band)])).alias("bucket"))
+        for b in range(bands)])
+
+
 def minhash_lsh_buckets(documents: DataFrame, text_col: str = "text",
                         key_col: str = "doc_id", n: int = 5,
                         num_hashes: int = 16, bands: int = 4,
@@ -120,17 +136,10 @@ def minhash_lsh_buckets(documents: DataFrame, text_col: str = "text",
     index artifact, computed once per corpus snapshot)."""
     sig = signatures if signatures is not None else \
         minhash_signatures(documents, text_col, key_col, n, num_hashes)
-    rows_per_band = num_hashes // bands
     # single explode pass, NOT a per-band union: with map-only signatures
     # there is no exchange for Spark to reuse, so a 4-way union would
     # re-evaluate every signature md5 once per band
-    probes = []
-    for b in range(bands):
-        cols = [F.col(f"mh{b * rows_per_band + r}").cast("string")
-                for r in range(rows_per_band)]
-        probes.append(F.struct(F.lit(b).alias("band"),
-                               F.md5(F.concat_ws("_", *cols)).alias("bucket")))
-    return (sig.withColumn("p", F.explode(F.array(*probes)))
+    return (sig.withColumn("p", F.explode(band_buckets(num_hashes, bands)))
             .select(F.col(key_col), F.col("p.band").alias("band"),
                     F.col("p.bucket").alias("bucket")))
 
@@ -310,17 +319,10 @@ def build_corpus_index(corpus: DataFrame, text_col: str = "text",
     # bucket explode, once under sig_arr — plus a join that exists only to
     # reunite two projections of the same row).  Bit-identical output.
     sig = minhash_signatures(corpus, text_col, key_col, n, num_hashes)
-    rows_per_band = num_hashes // bands
-    probes = []
-    for b in range(bands):
-        cols = [F.col(f"mh{b * rows_per_band + r}").cast("string")
-                for r in range(rows_per_band)]
-        probes.append(F.struct(F.lit(b).alias("band"),
-                               F.md5(F.concat_ws("_", *cols)).alias("bucket")))
     return (sig
             .withColumn("corpus_sig",
                         F.array(*[F.col(f"mh{i}") for i in range(num_hashes)]))
-            .withColumn("p", F.explode(F.array(*probes)))
+            .withColumn("p", F.explode(band_buckets(num_hashes, bands)))
             .select(F.col("p.band").alias("band"),
                     F.col("p.bucket").alias("bucket"),
                     F.col(key_col).alias("corpus_id"), "corpus_sig"))
@@ -340,19 +342,12 @@ def filter_near_dups_of_corpus(new_docs: DataFrame, corpus_index: DataFrame,
     the probe is an equi-join on (band, bucket) — broadcastable when the
     new batch is small, shuffle-free against a bucketBy(band,bucket) corpus
     index otherwise — and survivors come from one left_anti join.  No
-    all-pairs comparison anywhere.  Band-bucket derivation mirrors
-    minhash_lsh_buckets bit-for-bit, so index and probe always agree."""
-    rows_per_band = num_hashes // bands
+    all-pairs comparison anywhere.  Index and probe both derive buckets
+    with band_buckets, so they always agree."""
     d = with_minhash_signatures(new_docs, text_col, num_hashes, n)
-    probes = []
-    for b in range(bands):
-        cols = [F.col(f"mh{b * rows_per_band + r}").cast("string")
-                for r in range(rows_per_band)]
-        probes.append(F.struct(F.lit(b).alias("band"),
-                               F.md5(F.concat_ws("_", *cols)).alias("bucket")))
     pr = (d.withColumn(
               "sig", F.array(*[F.col(f"mh{i}") for i in range(num_hashes)]))
-          .withColumn("p", F.explode(F.array(*probes)))
+          .withColumn("p", F.explode(band_buckets(num_hashes, bands)))
           .select(F.col(key_col), F.col("p.band").alias("band"),
                   F.col("p.bucket").alias("bucket"), "sig"))
     est = F.aggregate(
@@ -459,8 +454,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                 lo, hi = (ru, rv) if ru < rv else (rv, ru)
                 parent[hi] = lo
         comp = [(n, find(n)) for n in list(parent)]
-        spark = pairs.sparkSession
-        return spark.createDataFrame(comp, "node long, component long")
+        return local_frame(pairs.sparkSession, comp,
+                           "node long, component long")
 
     edges = (pairs.select(F.col(id_a).cast("long").alias("u"),
                           F.col(id_b).cast("long").alias("v"))

@@ -244,6 +244,7 @@ def buffered_polygon_join(spark, pts: DataFrame, polys: dict,
     at most one cell -> no dedupe) -> exact codegen distance residual.
     At 100 TB: one map-side broadcast join + arithmetic, no shuffle."""
     from ..plans import covercache
+    from ..plans.frames import local_frame
     from .spatial_join import covering_probe_join, polygon_key
 
     rows = []
@@ -258,8 +259,8 @@ def buffered_polygon_join(spark, pts: DataFrame, polys: dict,
         residual = (F.when(F.col("polygon_id") == pid, dist)
                     if residual is None
                     else residual.when(F.col("polygon_id") == pid, dist))
-    cov = spark.createDataFrame(
-        rows, "polygon_id int, cov_cell long, cov_level int")
+    cov = local_frame(spark, rows,
+                      "polygon_id int, cov_cell long, cov_level int")
     cand = covering_probe_join(with_xyz(pts), cov, (r[2] for r in rows),
                                cov_cell="cov_cell")
     return (cand.withColumn("distance_rad", residual)
@@ -331,6 +332,7 @@ def corridor_join(spark, pts: DataFrame,
 
     from ..kernel.polyline import Polyline
     from ..plans import covercache
+    from ..plans.frames import local_frame
     from .spatial_join import covering_probe_join
 
     rows = []
@@ -349,8 +351,8 @@ def corridor_join(spark, pts: DataFrame,
         residual = (F.when(F.col("track_id") == tid, dist)
                     if residual is None
                     else residual.when(F.col("track_id") == tid, dist))
-    cov = spark.createDataFrame(
-        rows, "track_id int, cov_cell long, cov_level int")
+    cov = local_frame(spark, rows,
+                      "track_id int, cov_cell long, cov_level int")
     cand = covering_probe_join(with_xyz(pts), cov, (r[2] for r in rows),
                                cov_cell="cov_cell")
     return (cand.withColumn("distance_rad", residual)

@@ -13,8 +13,10 @@ S2PolygonBuilder.cs:593-675) as relational joins:
 
 kNN runs radius search with ring widening: if a query has < k matches at
 radius r, double r (ring expansion via get_all_neighbors) and retry — here
-expressed as a small driver loop over remaining queries (each round is one
-broadcast join; typically 1-2 rounds with a sane initial radius).
+expressed as a small driver loop over remaining queries.  Each round is one
+broadcast join plus its eager jobs (two localCheckpoints and an isEmpty
+probe), and those jobs set the cost; perfbench's traced geo_queries kNN
+(seed 1) takes 2 rounds per query.
 """
 
 from __future__ import annotations

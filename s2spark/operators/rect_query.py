@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..kernel.coverer import RegionCoverer
 from ..kernel.rect_region import RectRegion
 from ..plans import covercache
+from ..plans.frames import local_frame
 from .spatial_join import cell_rows, covering_probe_join
 
 
@@ -45,13 +46,14 @@ def rect_query(spark: SparkSession, points: DataFrame,
     """points (with leaf cell ids + lat/lng degrees) -> rows x rect_id for
     every containing rectangle.  Coarse covering join + exact JVM residual."""
     cov_pdf = rect_coverings(rects)
-    bounds = spark.createDataFrame(
-        [(rid, *map(float, b)) for rid, b in rects.items()],
+    bounds = local_frame(
+        spark, [(rid, *map(float, b)) for rid, b in rects.items()],
         "rect_id int, lat_lo double, lng_lo double, lat_hi double, lng_hi double")
     # coverings are normalized (disjoint) per rect -> at most one match per
     # (point, rect): no dedup shuffle needed
-    joined = (covering_probe_join(points, spark.createDataFrame(cov_pdf),
-                                  cov_pdf["cov_level"], cell_col)
+    cov = local_frame(spark, cov_pdf.itertuples(index=False, name=None),
+                      "rect_id long, cov_cell_id long, cov_level long")
+    joined = (covering_probe_join(points, cov, cov_pdf["cov_level"], cell_col)
               .join(F.broadcast(bounds), "rect_id"))
 
     lat = F.col(lat_col).cast("double")

@@ -39,6 +39,7 @@ from ..kernel.cellunion import normalize
 from ..kernel.coverer import RegionCoverer
 from ..kernel.loops import Loop, Polygon
 from ..plans import covercache
+from ..plans.frames import local_frame
 
 # Skin refinement depth: straddling cells are split this many levels below
 # the coverer's output before the remainder becomes exact-test skin.
@@ -104,6 +105,13 @@ def build_coverings(polygons: dict[int, Polygon],
     rows = [(pid, *row) for pid, poly in polygons.items()
             for row in skin_covering(poly, max_cells)]
     return pd.DataFrame(rows, columns=["polygon_id", "cov_cell_id", "cov_level", "is_interior"])
+
+
+def coverings_frame(spark: SparkSession, cov_pdf: pd.DataFrame) -> DataFrame:
+    """The build_coverings table as a broadcastable LocalRelation."""
+    return local_frame(
+        spark, cov_pdf.itertuples(index=False, name=None),
+        "polygon_id long, cov_cell_id long, cov_level long, is_interior boolean")
 
 
 def covering_probe_join(points: DataFrame, cov: DataFrame, levels,
@@ -174,7 +182,7 @@ def spatial_join(spark: SparkSession, points: DataFrame,
     kernel runs ONLY on exterior-cell matches (a filter on the match, not
     an OR the optimizer might evaluate eagerly)."""
     cov_pdf = build_coverings(polygons, max_cells=max_cells)
-    joined = covering_probe_join(points, spark.createDataFrame(cov_pdf),
+    joined = covering_probe_join(points, coverings_frame(spark, cov_pdf),
                                  cov_pdf["cov_level"], cell_col)
 
     contains_udf = _make_contains_udf(spark, polygons)

@@ -33,6 +33,7 @@ from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
 
 from ..functions import columns as C
 from ..kernel.loops import Loop, Polygon
+from ..plans.frames import local_frame
 
 POLYGON_SCHEMA = StructType([
     StructField("polygon_id", LongType()),
@@ -55,7 +56,7 @@ def polygons_to_df(spark: SparkSession, polygons: dict[int, Polygon]) -> DataFra
         for li, lp in enumerate(poly.loops):
             rows.append((pid, li, lp.depth,
                          [[float(v) for v in row] for row in lp.vertices]))
-    return spark.createDataFrame(rows, POLYGON_SCHEMA)
+    return local_frame(spark, rows, POLYGON_SCHEMA)
 
 
 def _polygon_from_group(pdf: pd.DataFrame) -> Polygon:
@@ -158,9 +159,9 @@ def spatial_join_shuffle(spark: SparkSession, points: DataFrame,
             for pid, rows in by_pid.items()}
     if coverings is None:
         if small_side:
-            from .spatial_join import build_coverings
+            from .spatial_join import build_coverings, coverings_frame
             cov_pdf = build_coverings(polygons, max_cells=64)
-            coverings = spark.createDataFrame(cov_pdf)
+            coverings = coverings_frame(spark, cov_pdf)
             levels = sorted(int(lv) for lv in cov_pdf["cov_level"].unique())
         else:
             coverings = build_coverings_distributed(polygons_df).persist()

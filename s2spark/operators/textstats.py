@@ -12,6 +12,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.frames import local_frame
+
 # tiny per-language stopword marker sets for the n-gram/stopword language
 # heuristic; chosen to be disjoint-ish and ASCII-stable
 LANG_MARKERS = {
@@ -321,8 +323,7 @@ def pack_sequences(documents: DataFrame, budget_tokens: int = 2048,
     for r in sorted(offsets_rows, key=lambda r: r["__pid"]):
         offs.append((int(r["__pid"]), running))
         running += int(r["tot"])
-    spark = documents.sparkSession
-    off_df = spark.createDataFrame(offs, "__pid int, __off long")
+    off_df = local_frame(documents.sparkSession, offs, "__pid int, __off long")
 
     from pyspark.sql.window import Window
     w = (Window.partitionBy("__pid").orderBy(key_col)

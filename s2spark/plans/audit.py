@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import columns as C
+from .frames import local_frame
 
 
 def partition_metrics(df: DataFrame, stage: str, cell_col: str | None = None,
@@ -71,7 +72,8 @@ def interior_covering_metrics(spark, coverer, stage: str) -> DataFrame:
         raise ValueError(
             "coverer has no interior stats: call get_interior_covering "
             "before auditing it")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(stage, stats["interior_cells"], stats["max_cells"],
           stats["pops"], stats["pop_budget"], stats["budget_exhausted"],
           int(time.time() * 1000))],

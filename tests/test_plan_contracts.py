@@ -6,6 +6,9 @@ map-only operator) fails CI — not just the per-round plan audit tool.
 These assert plan SHAPE, not results (results are covered by the oracle
 gate and fixture tests)."""
 
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -63,6 +66,34 @@ def test_corridor_join_broadcast_no_python(spark):
     assert "BroadcastHashJoin" in plan          # buffered covering broadcast
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan        # residual is codegen
+
+
+@pytest.mark.parametrize("query,n_tables", [
+    ("s2_cap_query", 2),        # cap coverings + cap centres
+    ("s2_rect_query", 2),       # rect coverings + rect bounds
+    ("s2_buffered_join", 1),    # buffered covering
+    ("s2_corridor_join", 1),    # corridor covering
+])
+def test_driver_tables_are_local_table_scans(spark, query, n_tables):
+    """Driver-built tables are LocalRelations (plans/frames.local_frame).
+    A list-built frame is a `Scan ExistingRDD` whose every evaluation runs
+    a Python-worker stage; that stage is an RDD, not an SQL node, so the
+    no-Python asserts above cannot see it."""
+    import __spark_entry__ as entry
+    plan = plan_of(entry.queries()[query](spark, SF))
+    assert plan.count("LocalTableScan") >= n_tables
+    assert "ExistingRDD" not in plan
+
+
+def test_create_data_frame_only_in_local_frame():
+    """Spark-free source scan: driver rows become DataFrames in one place."""
+    root = Path(__file__).resolve().parents[1]
+    helper = root / "s2spark" / "plans" / "frames.py"
+    sources = [root / "__spark_entry__.py", *sorted((root / "s2spark").rglob("*.py"))]
+    offenders = [str(p.relative_to(root)) for p in sources
+                 if p != helper and re.search(r"createDataFrame\(", p.read_text())]
+    assert offenders == []
+    assert "spark.createDataFrame(table, schema)" in helper.read_text()
 
 
 def test_encode_whole_stage_codegen_no_python(spark):

@@ -2,11 +2,16 @@
 
 Usage: python tools/dump_plans.py <tag> [query ...]
 (tag = 'before' or 'after'; no queries = all of them)
+
+Expression ids (`#123`) and exchange plan ids (`plan_id=45`) differ from
+run to run, so they are written as `#N` and `plan_id=N`: the dumps of two
+commits compare with one `diff`.  The session is local[<usable cores>].
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, ".")
@@ -24,7 +29,7 @@ def main() -> int:
     import __spark_entry__ as entry
     from s2spark.plans.session import build_session, release_session_state
 
-    spark = build_session(master="local[8]")
+    spark = build_session(master=f"local[{len(os.sched_getaffinity(0))}]")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
     for name, fn in qs.items():
@@ -37,6 +42,8 @@ def main() -> int:
                 plan = df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution
                     .ExplainMode.fromString("formatted"))
+            plan = re.sub(r"plan_id=\d+", "plan_id=N",
+                          re.sub(r"#\d+", "#N", plan))
             path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
             with open(path, "w") as f:
                 f.write(plan)
