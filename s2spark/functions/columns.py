@@ -32,20 +32,6 @@ MAX_SIZE = 1 << 30
 _LUT = [int(v) for v in LOOKUP_POS]
 
 
-def _uv_to_st(u: Column) -> Column:
-    """Inverse quadratic projection (S2Projections.cs:257-265)."""
-    return F.when(u >= 0, F.sqrt(1 + 3 * u) - 1).otherwise(1 - F.sqrt(1 - 3 * u))
-
-
-def _st_to_ij(s: Column) -> Column:
-    """Banker's rounding via bround == reference Math.Round (S2CellId.cs:1033-1042)."""
-    m = MAX_SIZE // 2
-    return F.least(
-        F.lit(2 * m - 1).cast("long"),
-        F.greatest(F.lit(0).cast("long"),
-                   F.bround(F.lit(float(m)) * s + (m - 0.5)).cast("long")))
-
-
 # The 1024-entry LUT rides in the SQL as ONE string literal split+cast to
 # an array (2 analyzer nodes), not `array(v0,...,v1023)` (1025 nodes).  The
 # optimizer constant-folds the cast(split(...)) to the identical array

@@ -1,87 +1,21 @@
-"""Arrow-batched pandas UDFs over the numpy kernel.
+"""The one Arrow-batched pandas UDF over the numpy kernel.
 
-These are the *slow path* relative to the pure Column expressions in
-``columns.py`` (one Arrow round-trip per batch) — used where the math
-genuinely can't be expressed relationally: decode (cell -> point),
-neighbor-ring expansion, exact point-in-polygon refinement.  The kernel
-LUTs are module-level numpy arrays, initialized once per executor on
-import — zero per-row Python (BASELINE.json input_hint).
+``vertex_neighbors_udf`` computes the kNN join's probe keys
+(``operators/knn.py``): the cells around the nearest vertex at a coarser
+level, which no Column expression here yet computes.  It is the slow path
+relative to the pure Column expressions in ``columns.py`` (one Arrow
+round-trip per batch).  The kernel LUTs are module-level numpy arrays,
+initialized once per executor on import — zero per-row Python.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import ArrayType, LongType
 
 from ..kernel import cellid as ci
-
-
-@F.pandas_udf(LongType())
-def s2_cell_id_udf(lat_deg: pd.Series, lng_deg: pd.Series) -> pd.Series:
-    """lat/lng degrees -> biased leaf cell id (kernel encode; cross-check
-    implementation for the Column-expression encode)."""
-    ids = ci.from_latlng_deg(lat_deg.to_numpy(np.float64), lng_deg.to_numpy(np.float64))
-    return pd.Series(ci.to_signed(ids))
-
-
-_POINT_SCHEMA = StructType([
-    StructField("x", DoubleType()), StructField("y", DoubleType()),
-    StructField("z", DoubleType())])
-
-
-@F.pandas_udf(_POINT_SCHEMA)
-def cell_center_udf(cell_id: pd.Series) -> pd.DataFrame:
-    """Biased cell id -> normalized center (x,y,z). S2CellId.cs:429-477."""
-    x, y, z = ci.to_point(ci.to_unsigned(cell_id.to_numpy(np.int64)))
-    return pd.DataFrame({"x": x, "y": y, "z": z})
-
-
-_LATLNG_SCHEMA = StructType([
-    StructField("lat", DoubleType()), StructField("lng", DoubleType())])
-
-
-@F.pandas_udf(_LATLNG_SCHEMA)
-def cell_latlng_udf(cell_id: pd.Series) -> pd.DataFrame:
-    """Biased cell id -> center (lat, lng) degrees."""
-    lat, lng = ci.to_latlng_deg(ci.to_unsigned(cell_id.to_numpy(np.int64)))
-    return pd.DataFrame({"lat": lat, "lng": lng})
-
-
-@F.pandas_udf(_POINT_SCHEMA)
-def latlng_xyz_udf(lat_deg: pd.Series, lng_deg: pd.Series) -> pd.DataFrame:
-    """(lat,lng) degrees -> unit vector columns (for exact geometry kernels)."""
-    x, y, z = ci.xyz_from_latlng_deg(lat_deg.to_numpy(np.float64),
-                                     lng_deg.to_numpy(np.float64))
-    return pd.DataFrame({"x": x, "y": y, "z": z})
-
-
-@F.pandas_udf(StringType())
-def cell_token_udf(cell_id: pd.Series) -> pd.Series:
-    """Biased id -> hex token (S2CellId.cs:656-679)."""
-    return pd.Series(ci.to_token(ci.to_unsigned(cell_id.to_numpy(np.int64))))
-
-
-@F.pandas_udf(LongType())
-def from_token_udf(token: pd.Series) -> pd.Series:
-    return pd.Series(ci.to_signed(ci.from_token(token.to_numpy(object))))
-
-
-@F.pandas_udf(ArrayType(LongType()))
-def all_neighbors_udf(cell_id: pd.Series) -> pd.Series:
-    """Same-level Moore ring (8 neighbors, deduped) — the kNN ring-expansion
-    primitive (S2CellId.cs:815-865)."""
-    ids = ci.to_unsigned(cell_id.to_numpy(np.int64))
-    if len(ids) == 0:
-        return pd.Series([], dtype=object)
-    nbrs, valid = ci.get_all_neighbors(ids)
-    signed = ci.to_signed(nbrs.reshape(-1)).reshape(nbrs.shape)
-    out = [list(dict.fromkeys(int(v) for v in row[m]))
-           for row, m in zip(signed, valid)]
-    return pd.Series(out)
 
 
 @F.pandas_udf(ArrayType(LongType()))
@@ -97,23 +31,3 @@ def vertex_neighbors_udf(cell_id: pd.Series, level: pd.Series) -> pd.Series:
     out = [list(dict.fromkeys(int(v) for v in row[m]))
            for row, m in zip(signed, valid)]
     return pd.Series(out)
-
-
-def make_polygon_contains_udf(loops_spec: list[tuple[np.ndarray, int]]):
-    """Build a pandas UDF testing exact polygon containment for a FIXED
-    polygon (vertices broadcast in the closure).
-
-    loops_spec: list of ((n,3) vertex arrays, depth).  Used as the residual
-    predicate of the spatial join (SURVEY.md §3.3): rows matching exterior
-    covering cells are refined here; interior matches skip it.
-    """
-    from ..kernel.loops import Loop, Polygon
-
-    poly = Polygon([Loop(v, depth=d) for v, d in loops_spec])
-
-    @F.pandas_udf(BooleanType())
-    def polygon_contains(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.Series:
-        return pd.Series(poly.contains_points(
-            x.to_numpy(np.float64), y.to_numpy(np.float64), z.to_numpy(np.float64)))
-
-    return polygon_contains

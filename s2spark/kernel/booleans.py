@@ -101,23 +101,6 @@ class PolygonBuilder:
         self.merge_distance = merge_distance
         self.edges: dict[Point, Counter] = defaultdict(Counter)
 
-    # the four reference presets (S2PolygonBuilderOptions.cs fields)
-    @classmethod
-    def directed_xor(cls, **kw) -> "PolygonBuilder":
-        return cls(xor_edges=True, undirected_edges=False, **kw)
-
-    @classmethod
-    def undirected_xor(cls, **kw) -> "PolygonBuilder":
-        return cls(xor_edges=True, undirected_edges=True, **kw)
-
-    @classmethod
-    def directed_union(cls, **kw) -> "PolygonBuilder":
-        return cls(xor_edges=False, undirected_edges=False, **kw)
-
-    @classmethod
-    def undirected_union(cls, **kw) -> "PolygonBuilder":
-        return cls(xor_edges=False, undirected_edges=True, **kw)
-
     def add_edge(self, v0: Point, v1: Point) -> None:
         if v0 == v1:
             return
@@ -127,12 +110,6 @@ class PolygonBuilder:
         self.edges[v0][v1] += 1
         if self.undirected_edges:
             self.edges[v1][v0] += 1
-
-    def add_loop(self, vertices: list[Point], sign: int = 1) -> None:
-        """Add a closed vertex chain; sign=-1 adds reversed edges (holes)."""
-        n = len(vertices)
-        for i in range(n, 0, -1):
-            self.add_edge(vertices[i % n], vertices[(i + sign) % n])
 
     def _erase_edge(self, v0: Point, v1: Point) -> None:
         c = self.edges[v0]

@@ -206,11 +206,6 @@ def to_point(ids):
     return x / n, y / n, z / n
 
 
-def to_latlng_deg(ids):
-    x, y, z = to_point_raw(ids)
-    return latlng_deg_from_xyz(x, y, z)
-
-
 # ---------------------------------------------------------------------------
 # cell topology (pure uint64 bit arithmetic)
 

@@ -81,21 +81,6 @@ def union(a, b) -> np.ndarray:
                                      np.asarray(b, dtype=np.uint64)]))
 
 
-def intersection_with_cell(ids, cell: int) -> np.ndarray:
-    """Clip a normalized union to one cell's range (S2CellUnion.cs:448-472)."""
-    ids = np.asarray(ids, dtype=np.uint64)
-    arr = np.array([cell], dtype=np.uint64)
-    lo = ci.range_min(arr)[0]
-    hi = ci.range_max(arr)[0]
-    inside = (ids >= lo) & (ids <= hi)
-    out = list(ids[inside])
-    # cells of the union that contain `cell` entirely
-    containing = (ci.range_min(ids) <= np.uint64(cell)) & (ci.range_max(ids) >= np.uint64(cell))
-    if np.any(containing & ~inside):
-        out.append(np.uint64(cell))
-    return np.array(sorted(int(v) for v in out), dtype=np.uint64)
-
-
 def intersection(a, b) -> np.ndarray:
     """Intersection of two normalized unions via two-pointer range merge
     (S2CellUnion.cs:479-546)."""

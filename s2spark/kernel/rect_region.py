@@ -12,8 +12,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-
 from .cap import Cap
 from .cell import Cell
 from .intervals import PI, LatLngRect, S1Interval, _robust_cross_scalar

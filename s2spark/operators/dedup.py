@@ -21,11 +21,6 @@ from pyspark.sql import functions as F
 from ..plans.frames import local_frame
 
 
-def shingle_hash(col: Column) -> Column:
-    """Portable 32-bit hash of a shingle: first 8 md5 hex digits."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 def exact_dedup(documents: DataFrame, text_col: str = "text",
                 key_col: str = "doc_id") -> DataFrame:
     """Keep the lowest key per identical text (digest groupBy)."""

@@ -30,7 +30,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel.intervals import PI, LatLngRect, R1Interval, S1Interval
+from ..kernel.intervals import LatLngRect, R1Interval, S1Interval
 
 
 def _xyz(lat: float, lng: float) -> tuple[float, float, float]:

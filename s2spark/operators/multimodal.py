@@ -1,9 +1,9 @@
 """Multimodal (image/audio/video) column plumbing.
 
-Media ride as opaque `binary` columns with typed metadata structs; decode /
-feature-extract / resize / frame-sample run as Arrow-batched ``mapInPandas``
-over the binary payloads.  The decode step itself is STUBBED (the image and
-audio codec libraries are not available in this container): `_decode_image`
+Media ride as opaque `binary` columns with typed metadata structs; decode
+and per-media pixel stats (`media_stats`) run as an Arrow-batched
+``mapInPandas`` over the binary payloads.  The decode step itself is
+STUBBED (no image or audio codec library is a dependency): `_decode_image`
 raises NotImplementedError unless `deterministic_fake=True`, in which case
 a seeded, content-derived fake decode keeps the whole distributed pipeline
 (schema, batching, partitioning, UDF signatures) real and testable.
@@ -23,26 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, FloatType,
-                               IntegerType, LongType, StringType, StructField,
-                               StructType)
-
-MEDIA_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("url", StringType()),
-    StructField("kind", StringType()),          # image | audio | video
-    StructField("payload", BinaryType()),
-    StructField("width", IntegerType()),
-    StructField("height", IntegerType()),
-    StructField("duration_ms", IntegerType()),
-])
-
-FEATURE_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("kind", StringType()),
-    StructField("feat", ArrayType(FloatType())),
-    StructField("feat_dim", IntegerType()),
-])
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
 def synthesize_media(spark, n_rows: int) -> DataFrame:
@@ -76,34 +57,6 @@ def _decode_image(payload: bytes, deterministic_fake: bool) -> np.ndarray:
     raw = b"".join(hashlib.md5(payload + b"_" + str(i).encode()).digest()
                    for i in range(12))
     return np.frombuffer(raw, dtype=np.uint8).reshape(8, 8, 3).copy()
-
-
-def extract_features(media: DataFrame, deterministic_fake: bool = True,
-                     batch_hint: int = 256) -> DataFrame:
-    """mapInPandas feature extraction: decode -> 12-dim color/entropy stats.
-
-    Only (media_id, kind, payload) are read — let Catalyst prune the rest.
-    """
-    src = media.select("media_id", "kind", "payload")
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["payload"]:
-                img = _decode_image(bytes(payload), deterministic_fake)
-                px = img.reshape(-1, 3).astype(np.float64) / 255.0
-                mean = px.mean(axis=0)
-                std = px.std(axis=0)
-                hist, _ = np.histogram(px.mean(axis=1), bins=6, range=(0, 1))
-                feats.append(np.concatenate([mean, std, hist / len(px)]).astype(np.float32))
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "feat": [list(map(float, f)) for f in feats],
-                "feat_dim": [len(f) for f in feats],
-            })
-
-    return src.mapInPandas(extract, schema=FEATURE_SCHEMA)
 
 
 MEDIA_STATS_SCHEMA = StructType(
@@ -172,14 +125,3 @@ chan_p AS (SELECT {key_col}, {mean_cols}, {std_cols} FROM chan GROUP BY 1),
 hist_p AS (SELECT {key_col}, {hist_cols} FROM hist GROUP BY 1)
 SELECT * FROM chan_p JOIN hist_p USING ({key_col})
 """
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (media_id, frame_ts_ms).
-
-    The timestamp grid is pure JVM sequence/explode; the actual frame decode
-    plugs into extract_features' stub point."""
-    return (media.where(F.col("kind") == "video")
-            .select("media_id",
-                    F.explode(F.sequence(F.lit(0), F.col("duration_ms") - 1,
-                                         F.lit(every_ms))).alias("frame_ts_ms")))

@@ -36,8 +36,8 @@ def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     64 element_at references re-evaluate a transform-produced input per
     element — a 2-3x regression.  The driver bench runs every query
     once at sf0.1, where compile time dominates, so the DEFAULT here is
-    the HOF form; pass `dim` only for long-running production jobs
-    whose scoring joins amortize the compile.
+    the HOF form; only `lsh_topk` and `cosine_near_dup_pairs`, which
+    take the width for their sketches anyway, pass `dim`.
     """
     if dim is None:
         return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -45,15 +45,6 @@ def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     acc = F.lit(0.0)
     for i in range(1, dim + 1):
         acc = acc + F.element_at(a, i) * F.element_at(b, i)
-    return acc
-
-
-def _dot_lit(a: Column, w: list[float]) -> Column:
-    """Dot of an array column with a CONSTANT vector, unrolled to codegen
-    arithmetic with the same FP fold order as the aggregate form."""
-    acc = F.lit(0.0)
-    for i, wi in enumerate(w):
-        acc = acc + F.element_at(a, i + 1) * F.lit(wi)
     return acc
 
 
@@ -94,23 +85,19 @@ def _cosine_pre(a: Column, b: Column, na: Column, nb: Column,
 
 def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int,
                      vec_col: str = "embedding", key_col: str = "vec_id",
-                     query_key: str = "query_id",
-                     dim: int | None = None) -> DataFrame:
+                     query_key: str = "query_id") -> DataFrame:
     """Exact cosine top-k per query (queries broadcast; data side streamed).
-
-    Pass `dim` when the embedding width is known so the per-pair dot
-    unrolls to codegen arithmetic (see _dot).
 
     Output: (query_id, vec_id, cos_sim, rank)."""
     d = (embeddings.select(F.col(key_col),
                            as_double_array(F.col(vec_col)).alias("v"))
-         .withColumn("nv", _norm(F.col("v"), dim)))
+         .withColumn("nv", _norm(F.col("v"))))
     q = (queries.select(F.col(query_key),
                         as_double_array(F.col(vec_col)).alias("qv"))
-         .withColumn("nq", _norm(F.col("qv"), dim)))
+         .withColumn("nq", _norm(F.col("qv"))))
     scored = (d.crossJoin(F.broadcast(q))
               .withColumn("cos_sim", F.round(_cosine_pre(
-                  F.col("qv"), F.col("v"), F.col("nq"), F.col("nv"), dim), 4)))
+                  F.col("qv"), F.col("v"), F.col("nq"), F.col("nv")), 4)))
     w = Window.partitionBy(query_key).orderBy(F.desc("cos_sim"), F.col(key_col))
     return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
@@ -214,8 +201,7 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
              centroid_stride: int = 31, nprobe: int = 4,
              vec_col: str = "embedding", key_col: str = "vec_id",
-             query_key: str = "query_id",
-             dim: int | None = None) -> DataFrame:
+             query_key: str = "query_id") -> DataFrame:
     """IVF-flat approximate top-k: the partition-pruned ANN scale path.
 
     Coarse quantizer: every `centroid_stride`-th vector (by key) is a
@@ -245,7 +231,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     """
     d = (embeddings.select(F.col(key_col),
                            as_double_array(F.col(vec_col)).alias("v"))
-         .withColumn("nv", _norm(F.col("v"), dim)))
+         .withColumn("nv", _norm(F.col("v"))))
     cent = (d.where(F.col(key_col) % centroid_stride == 0)
             .select(F.col(key_col).alias("centroid_id"),
                     F.col("v").alias("cv"), F.col("nv").alias("ncv")))
@@ -261,7 +247,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     # Norms are hoisted per side (_cosine_pre): each of the N*C map-side
     # candidates costs ONE array aggregate (the dot), not three.
     sim = F.round(_cosine_pre(F.col("v"), F.col("cv"),
-                              F.col("nv"), F.col("ncv"), dim), 4)
+                              F.col("nv"), F.col("ncv")), 4)
     assigned = (d.crossJoin(F.broadcast(cent))
                 .withColumn("sim", sim)
                 .groupBy(key_col)
@@ -276,9 +262,9 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     # query side: nprobe nearest centroids each (same broadcast, tiny)
     q = (queries.select(F.col(query_key),
                         as_double_array(F.col(vec_col)).alias("qv"))
-         .withColumn("nq", _norm(F.col("qv"), dim)))
+         .withColumn("nq", _norm(F.col("qv"))))
     qsim = F.round(_cosine_pre(F.col("qv"), F.col("cv"),
-                               F.col("nq"), F.col("ncv"), dim), 4)
+                               F.col("nq"), F.col("ncv")), 4)
     qw = Window.partitionBy(query_key).orderBy(F.desc("qsim"), F.col("centroid_id"))
     probes = (q.crossJoin(F.broadcast(cent))
               .withColumn("qsim", qsim)
@@ -290,7 +276,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     cand = assigned.join(F.broadcast(probes), "centroid_id")
     scored = cand.withColumn(
         "cos_sim", F.round(_cosine_pre(F.col("qv"), F.col("v"),
-                                       F.col("nq"), F.col("nv"), dim), 4))
+                                       F.col("nq"), F.col("nv")), 4))
     w = Window.partitionBy(query_key).orderBy(F.desc("cos_sim"), F.col(key_col))
     return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
@@ -299,8 +285,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
 
 def semdedup(embeddings: DataFrame, threshold: float = 0.95,
              centroid_stride: int = 31,
-             vec_col: str = "embedding", key_col: str = "vec_id",
-             dim: int | None = None) -> DataFrame:
+             vec_col: str = "embedding", key_col: str = "vec_id") -> DataFrame:
     """SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication", 2023): remove documents
     whose EMBEDDINGS are near-duplicates, catching paraphrases and
@@ -337,7 +322,7 @@ def semdedup(embeddings: DataFrame, threshold: float = 0.95,
 
     d = (embeddings.select(F.col(key_col),
                            as_double_array(F.col(vec_col)).alias("v"))
-         .withColumn("nv", _norm(F.col("v"), dim)))
+         .withColumn("nv", _norm(F.col("v"))))
     cent = (d.where(F.col(key_col) % centroid_stride == 0)
             .select(F.col(key_col).alias("centroid_id"),
                     F.col("v").alias("cv"), F.col("nv").alias("ncv")))
@@ -348,7 +333,7 @@ def semdedup(embeddings: DataFrame, threshold: float = 0.95,
     # side (_cosine_pre) so each N*C candidate costs one dot, not
     # dot + both norms
     sim = F.round(_cosine_pre(F.col("v"), F.col("cv"),
-                              F.col("nv"), F.col("ncv"), dim), 4)
+                              F.col("nv"), F.col("ncv")), 4)
     assigned = (d.crossJoin(F.broadcast(cent))
                 .withColumn("sim", sim)
                 .groupBy(key_col)
@@ -369,7 +354,7 @@ def semdedup(embeddings: DataFrame, threshold: float = 0.95,
     pairs = (lhs.join(rhs, "centroid_id")
              .where(F.col("id_a") < F.col("id_b"))
              .withColumn("cos_sim", F.round(_cosine_pre(
-                 F.col("va"), F.col("vb"), F.col("na"), F.col("nb"), dim), 4))
+                 F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 4))
              .where(F.col("cos_sim") >= threshold)
              .select("id_a", "id_b", "cos_sim")
              # the pair set seeds both sides of the CC loop; materialize

@@ -41,11 +41,6 @@ def token_count(col: Column) -> Column:
 BPE_TOKEN_PATTERN = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s']+|\s+"
 
 
-def bpe_tokens(col: Column) -> Column:
-    """BPE-ish pre-tokenization (JVM regex, one pass, no Python)."""
-    return F.regexp_extract_all(col, F.lit(BPE_TOKEN_PATTERN), 0)
-
-
 def bpe_token_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(BPE_TOKEN_PATTERN))
 

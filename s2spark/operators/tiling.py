@@ -31,12 +31,6 @@ def tile_counts(geo: DataFrame, level: int, cell_col: str = "cell_id") -> DataFr
             .agg(F.count(F.lit(1)).alias("n_pages")))
 
 
-def top_tiles(geo: DataFrame, level: int, k: int, cell_col: str = "cell_id") -> DataFrame:
-    """Top-k densest tiles — global sort is a k-row TakeOrdered, not a full
-    sort, because Spark rewrites ORDER BY + LIMIT."""
-    return tile_counts(geo, level, cell_col).orderBy(F.desc("n_pages"), "tile_id").limit(k)
-
-
 def vector_to_raster(coverings: DataFrame, level: int) -> DataFrame:
     """Rasterize polygon coverings to a fixed-level tile grid.
 

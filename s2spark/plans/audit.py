@@ -47,16 +47,6 @@ def partition_metrics(df: DataFrame, stage: str, cell_col: str | None = None,
         F.lit(int(time.time() * 1000)).alias("audit_ts_ms"))
 
 
-def skew_report(df: DataFrame, cell_col: str, tile_level: int = 8) -> DataFrame:
-    """Top-heavy tile histogram: rows per tile + share of total — the input
-    to the salting decision in the spatial join."""
-    tiles = df.groupBy(C.parent_for_level(F.col(cell_col), tile_level).alias("tile_id")) \
-              .agg(F.count(F.lit(1)).alias("n_rows"))
-    total = tiles.agg(F.sum("n_rows")).collect()[0][0] or 1
-    return (tiles.withColumn("share", F.round(F.col("n_rows") / F.lit(float(total)), 6))
-            .orderBy(F.desc("n_rows")))
-
-
 def interior_covering_metrics(spark, coverer, stage: str) -> DataFrame:
     """One audit row per interior-covering construction: cells found vs
     max_cells, pops spent vs the pop budget, and whether the budget cut

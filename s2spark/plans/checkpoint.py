@@ -77,9 +77,6 @@ class SnapshotStore:
             cur[row["stage"]] = row
         return cur
 
-    def _committed(self) -> dict[str, str]:
-        return {stage: row["path"] for stage, row in self._current().items()}
-
     def snapshots(self, stage: str) -> list[dict]:
         """Snapshot lineage for a stage (oldest first): every commit ever
         made, with snapshot_id / path / n_rows / schema / ts."""

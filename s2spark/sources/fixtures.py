@@ -1,10 +1,10 @@
-"""Reference geometry fixtures ("lat:lng, ..." strings) and their loader.
+"""Parser for the reference's "lat:lng, ..." geometry strings.
 
-Strings are copied verbatim from the reference test suite
-(/root/reference/S2Geometry.Tests/S2LoopTest.cs:13-56 and
-S2PolygonTest.cs:15-61); the parser mirrors GeometryTestCase.makeLoop /
-makePolygon (GeometryTestCase.cs:187-235): loops are ';'-separated and
-each polygon loop is normalized on load.
+The parser mirrors GeometryTestCase.makePolygon (GeometryTestCase.cs:
+187-235): loops are ';'-separated and each polygon loop is normalized on
+load.  The strings themselves live with their callers (the driver queries,
+the jobs and the tests), copied from the reference test suite
+(S2LoopTest.cs:13-56, S2PolygonTest.cs:15-61).
 """
 
 from __future__ import annotations
@@ -14,39 +14,6 @@ import numpy as np
 from ..kernel import cellid as ci
 from ..kernel.loops import Loop, Polygon
 
-LOOP_FIXTURES = {
-    "candyCane": "-20:150, -20:-70, 0:70, 10:-150, 10:70, -10:-70",
-    "smallNeCw": "35:20, 45:20, 40:25",
-    "arctic80": "80:-150, 80:-30, 80:90",
-    "antarctic80": "-80:120, -80:0, -80:-120",
-    "northHemi": "0:-180, 0:-90, 0:0, 0:90",
-    "northHemi3": "0:-180, 0:-60, 0:60",
-    "westHemi": "0:-180, -90:0, 0:0, 90:0",
-    "nearHemi": "0:-90, -90:0, 0:90, 90:0",
-    "loopA": "0:178, -1:180, 0:-179, 1:-180",
-    "loopB": "0:179, -1:180, 0:-178, 1:-180",
-    "aIntersectB": "0:179, -1:180, 0:-179, 1:-180",
-    "aUnionB": "0:178, -1:180, 0:-178, 1:-180",
-}
-
-POLYGON_FIXTURES = {
-    "NEAR0": "-1:0, 0:1, 1:0, 0:-1;",
-    "NEAR1": "-1:-1, -1:0, -1:1, 0:1, 1:1, 1:0, 1:-1, 0:-1;",
-    "NEAR2": "5:-2, -2:5, -1:-2;",
-    "NEAR3": "6:-3, -3:6, -2:-2;",
-    "NEAR_HEMI": "0:-90, -90:0, 0:90, 90:0;",
-    "FAR0": "0:179, 1:180, 0:-179, 2:-180;",
-    "FAR2": "-1:-179, -1:179, 3:178, 3:-178;",
-    "FAR3": "-3:-178, -2:179, -3:178, 4:177, 4:-177;",
-    "SOUTH0a": "-90:0, -89.99:0, -89.99:0.01;",
-    "SOUTH1": "-90:0, -89.9:-0.1, -89.9:0.1;",
-    "SOUTH2": "-90:0, -89.8:-0.2, -89.8:0.2;",
-    "RECTANGLE1": "-1:-1, -1:1, 1:1, 1:-1;",
-    "RECTANGLE2": "0:0, 0:2, 2:2, 2:0;",
-    "TRIANGLE": "15:0, 17:0, 16:2;",
-    "NEAR0_HOLE_IN_NEAR3": "6:-3, -3:6, -2:-2;-1:0, 0:1, 1:0, 0:-1;",
-}
-
 
 def parse_vertices(s: str) -> np.ndarray:
     pts = []
@@ -55,11 +22,6 @@ def parse_vertices(s: str) -> np.ndarray:
         x, y, z = ci.xyz_from_latlng_deg(np.array([lat]), np.array([lng]))
         pts.append([x[0], y[0], z[0]])
     return np.array(pts)
-
-
-def make_loop(s: str) -> Loop:
-    """makeLoop: NOT normalized (GeometryTestCase.cs:201-209)."""
-    return Loop(parse_vertices(s))
 
 
 def make_polygon(s: str) -> Polygon:
@@ -78,7 +40,3 @@ def make_polygon(s: str) -> Polygon:
                     if i != j and other.contains_loop(lp))
         loops.append(Loop(lp.vertices, depth=depth))
     return Polygon(loops)
-
-
-def fixture_polygons() -> dict[str, Polygon]:
-    return {name: make_polygon(s) for name, s in POLYGON_FIXTURES.items()}

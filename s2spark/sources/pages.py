@@ -14,7 +14,8 @@ Coordinate pools (FIXTURES.md §1):
   (c) ~10% a hot city cell (Paris) to exercise salting/skew,
   (d) ~20% no coordinates at all (the miner must drop them).
 
-The miner is `regexp_extract` — JVM-side, no Python.
+`mine_coordinates` is the one coordinate miner, for batch tables and
+streams alike — JVM-side, no Python.
 """
 
 from __future__ import annotations
@@ -76,8 +77,10 @@ def synthesize_pages(spark: SparkSession, n_rows: int, parts: int | None = None)
 
 
 def mine_coordinates(pages: DataFrame) -> DataFrame:
-    """Extract (lat, lng) from text via JVM regexp; rows without a match are
-    dropped.  `text` is carried through untouched (byte-identity invariant).
+    """Extract (lat, lng) from text via JVM regexp; rows without a match, or
+    whose pair is off the globe (|lat| > 90 or |lng| > 180), are dropped.
+    `text` is carried through untouched (byte-identity invariant).  Only
+    stateless Column expressions, so it runs unchanged on a stream.
 
     One regex pass per row (regexp_substr), then a cheap split — measured
     ~2x faster than two regexp_extract group pulls."""

@@ -21,13 +21,11 @@ batch — no per-row Python.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (IntegerType, LongType, StructField, StructType,
-                               TimestampType)
+from pyspark.sql.types import LongType, StructField, StructType
 
 SESSION_GAP_US = 1800 * 1_000_000  # 30 min, microseconds
 

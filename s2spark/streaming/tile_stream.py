@@ -3,40 +3,21 @@
 The reference has no streaming semantics (SURVEY.md §2.9), so this is
 engine-added capability: a continuously-updating pages stream -> mined
 coordinates -> JVM cell encode -> event-time-windowed per-tile counts with
-a watermark for late data.  Every transformation is the SAME Column
-expression stack used in batch (encode, tile assignment), demonstrating
-the batch/streaming unification Spark gives us for free.
+a watermark for late data.  Every transformation is the SAME batch code
+(`sources.pages.mine_coordinates`, the Column encode, tile assignment); the
+only streaming decisions are the watermark, the window and the output mode.
 
-At production scale the source is Kafka/files; tests drive it with the
-rate source + foreachBatch/memory sink.
+At production scale the source is Kafka/files; tests drive it with a
+file-source stream + memory/foreachBatch sink.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import columns as C
-from ..sources.pages import COORD_REGEX, LANGS
-
-
-def synthetic_page_stream(spark: SparkSession, rows_per_second: int = 10_000) -> DataFrame:
-    """Rate-source stream shaped like the pages table (deterministic
-    content per row id, mirroring sources.pages.synthesize_pages)."""
-    df = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
-    i = F.col("value")
-    h1 = F.pmod(i * 2654435761 + 1013904223, F.lit(2 ** 31)).cast("double") / 2 ** 31
-    h2 = F.pmod(i * 1597334677 + 7, F.lit(2 ** 31)).cast("double") / 2 ** 31
-    lat = F.degrees(F.asin(h1 * 2 - 1))
-    lng = h2 * 360.0 - 180.0
-    text = F.concat(F.lit("page "), i.cast("string"), F.lit(" located at "),
-                    F.format_number(lat, 4), F.lit(", "), F.format_number(lng, 4))
-    return df.select(
-        F.col("timestamp").alias("warc_ts"),
-        F.concat(F.lit("https://host"), F.pmod(i, F.lit(1000)).cast("string"),
-                 F.lit(".example/page/"), i.cast("string")).alias("url"),
-        text.alias("text"),
-        F.element_at(F.lit(list(LANGS)), (F.pmod(i, F.lit(len(LANGS))) + 1).cast("int")).alias("lang"))
+from ..sources.pages import mine_coordinates
 
 
 def streaming_tile_counts(pages_stream: DataFrame, level: int = 6,
@@ -47,14 +28,7 @@ def streaming_tile_counts(pages_stream: DataFrame, level: int = 6,
     Stateful aggregation keys on (window, tile): state size is bounded by
     (#active windows x #active tiles); the watermark evicts closed windows.
     """
-    m = F.regexp_substr(F.col("text"), F.lit(COORD_REGEX))
-    geo = (pages_stream
-           .withColumn("__m", m)
-           .where(F.col("__m").isNotNull())
-           .withColumn("lat", F.split(F.col("__m"), ", ").getItem(0).cast("double"))
-           .withColumn("lng", F.split(F.col("__m"), ", ").getItem(1).cast("double"))
-           .drop("__m"))
-    geo = C.with_cell_id(geo, "lat", "lng")
+    geo = C.with_cell_id(mine_coordinates(pages_stream), "lat", "lng")
     return (geo
             .withWatermark("warc_ts", watermark)
             .groupBy(F.window("warc_ts", window).alias("win"),

@@ -1,0 +1,45 @@
+"""Every declared driver query against its independent DuckDB oracle.
+
+One test case per name in ``__spark_entry__.queries()``, graded by
+``tools.check_correctness.compare`` (row count, sorted column names, value
+hash) — the same grade the command-line tool prints — on the sf0.001
+tables.  A failure names the query.
+"""
+
+import os
+
+import pytest
+
+import __spark_entry__ as entry
+from test_corpus_pipeline import SF as SF_DIR   # the sf0.001 tables (TESTDATA.md)
+from tools.check_correctness import compare, open_oracle
+
+QUERIES = entry.queries()
+ORACLES = entry.oracle_sql()
+
+
+@pytest.fixture(scope="module")
+def spark():
+    from s2spark.plans.session import build_session
+    s = build_session(master=f"local[{len(os.sched_getaffinity(0))}]")
+    s.sparkContext.setLogLevel("ERROR")
+    yield s
+    s.stop()
+
+
+@pytest.fixture(scope="module")
+def oracle():
+    con = open_oracle(SF_DIR)
+    yield con
+    con.close()
+
+
+def test_every_query_has_an_oracle():
+    assert sorted(QUERIES) == sorted(ORACLES)
+
+
+@pytest.mark.parametrize("name", list(QUERIES))
+def test_query_matches_oracle(spark, oracle, name):
+    got = QUERIES[name](spark, SF_DIR).toPandas()
+    exp = oracle.execute(ORACLES[name]).fetchdf()
+    assert compare(got, exp) == []

@@ -151,7 +151,8 @@ def _batch_sessions(pdf):
 
 def test_streaming_tile_counts(spark, tmp_path):
     """Drive the streaming tile aggregation on a bounded micro-batch and
-    check it matches the batch tile counts for the same rows."""
+    check it matches the batch tile counts for the same rows, including
+    pages whose mined pair is off the globe (both sides drop them)."""
     from s2spark.streaming.tile_stream import streaming_tile_counts
     from s2spark.functions import columns as C
     from s2spark.sources.pages import mine_coordinates, synthesize_pages
@@ -161,6 +162,13 @@ def test_streaming_tile_counts(spark, tmp_path):
     src_dir = str(tmp_path / "stream_src")
     pages = synthesize_pages(spark, 2000).select(
         "url", "text", "lang", F.col("warc_ts"))
+    out_of_range = [("https://oor.example/lat", "at 95.1234, 10.0000"),
+                    ("https://oor.example/lng", "at 45.0000, 200.0000"),
+                    ("https://oor.example/wrap", "at 1.0000, 361.0000")]
+    pages = pages.unionByName(spark.createDataFrame(
+        [(u, t, "en") for u, t in out_of_range], "url string, text string, "
+        "lang string").withColumn("warc_ts", F.timestamp_seconds(
+            F.lit(1700000000))))
     pages.coalesce(1).write.mode("overwrite").parquet(src_dir)
     stream = (spark.readStream.schema(spark.read.parquet(src_dir).schema)
               .parquet(src_dir))
@@ -179,6 +187,11 @@ def test_streaming_tile_counts(spark, tmp_path):
     b = batch.sort_values("tile_id").reset_index(drop=True)
     assert g["tile_id"].tolist() == b["tile_id"].tolist()
     assert g["n_pages"].tolist() == b["n_pages"].tolist()
+    # the off-globe pages are mined by neither side: the stream counts
+    # exactly the batch miner's rows, and those hold none of them
+    mined_urls = {r["url"] for r in geo.select("url").collect()}
+    assert not {u for u, _ in out_of_range} & mined_urls
+    assert int(g["n_pages"].sum()) == len(mined_urls)
 
 
 def test_snapshot_time_travel_and_rollback(spark, tmp_path):

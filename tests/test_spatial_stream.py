@@ -1,11 +1,31 @@
-"""Streaming point-in-polygon == batch spatial join on the same rows."""
+"""The batch spatial joins applied to a pages stream == the same joins on
+the batch rows.
+
+No streaming wrapper: `mine_coordinates` -> `points_with_cells` ->
+`spatial_join` / `corridor_join` are stateless plans, so they run on a
+stream unchanged, once per micro-batch.
+"""
 
 import pytest
-from pyspark.sql import functions as F
 
 from s2spark.operators.spatial_join import points_with_cells, spatial_join
 from s2spark.sources.fixtures import make_polygon
 from s2spark.sources.pages import mine_coordinates, synthesize_pages
+
+# Pages whose mined pair is off the globe.  The miner drops them; encoded
+# as-is, the last two would land at (1, 1), inside polygon 1 below.
+OUT_OF_RANGE_PAGES = [
+    ("https://oor.example/lat", "at 95.1234, 10.0000"),
+    ("https://oor.example/lng", "at 45.0000, 200.0000"),
+    ("https://oor.example/wrap", "at 1.0000, 361.0000"),
+    ("https://oor.example/pole", "at 179.0000, 181.0000"),
+]
+
+
+def stream_pip(spark, stream, polygons):
+    """The batch point-in-polygon plan, applied to a pages stream."""
+    pts = points_with_cells(mine_coordinates(stream))
+    return spatial_join(spark, pts, polygons).select("url", "polygon_id")
 
 
 @pytest.fixture(scope="module")
@@ -19,16 +39,16 @@ def spark():
 
 
 def test_streaming_pip_matches_batch(spark, tmp_path):
-    from s2spark.streaming.spatial_stream import streaming_point_in_polygon
-
     polygons = {1: make_polygon("-4:-4, -4:4, 4:4, 4:-4;"),
                 2: make_polygon("48.5:2.0, 48.5:2.7, 49.2:2.7, 49.2:2.0;")}
     pages = synthesize_pages(spark, 5000).select("url", "text")
+    pages = pages.unionByName(
+        spark.createDataFrame(OUT_OF_RANGE_PAGES, pages.schema))
     src_dir = str(tmp_path / "pages_src")
     pages.coalesce(2).write.mode("overwrite").parquet(src_dir)
 
     stream = spark.readStream.schema(pages.schema).parquet(src_dir)
-    out = streaming_point_in_polygon(spark, stream, polygons)
+    out = stream_pip(spark, stream, polygons)
     q = (out.writeStream.format("memory").queryName("pip_out")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(180)
@@ -41,16 +61,14 @@ def test_streaming_pip_matches_batch(spark, tmp_path):
               for r in batch.select("url", "polygon_id").collect()}
     assert got == expect
     assert len(expect) > 0
+    bad = {url for url, _ in OUT_OF_RANGE_PAGES}
+    assert not bad & {url for url, _ in got}
+    assert not bad & {url for url, _ in expect}
 
 
 def test_streaming_corridor_matches_batch(spark, tmp_path):
     """Stream-static corridor join == batch corridor join on the same rows."""
-    from pyspark.sql import functions as F
-
     from s2spark.operators.distance_ops import corridor_join
-    from s2spark.operators.spatial_join import points_with_cells
-    from s2spark.sources.pages import mine_coordinates, synthesize_pages
-    from s2spark.streaming.spatial_stream import streaming_corridor_join
 
     tracks = {1: [(0.0, -4.0), (0.0, 0.0), (0.0, 4.0)],
               2: [(48.0, 2.0), (49.5, 2.4)]}
@@ -60,7 +78,8 @@ def test_streaming_corridor_matches_batch(spark, tmp_path):
     pages.coalesce(2).write.mode("overwrite").parquet(src_dir)
 
     stream = spark.readStream.schema(pages.schema).parquet(src_dir)
-    out = streaming_corridor_join(spark, stream, tracks, radius)
+    out = corridor_join(spark, points_with_cells(mine_coordinates(stream)),
+                        tracks, radius).select("url", "track_id")
     q = (out.writeStream.format("memory").queryName("corridor_out")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -83,10 +102,6 @@ def test_streaming_pip_random_polygons_matches_batch(spark, tmp_path):
     import numpy as np
     from test_operator_fuzz import _random_convex_vertex_string
 
-    from s2spark.operators.spatial_join import points_with_cells, spatial_join
-    from s2spark.sources.pages import mine_coordinates, synthesize_pages
-    from s2spark.streaming.spatial_stream import streaming_point_in_polygon
-
     rng = np.random.default_rng(60606)
     polygons = {}
     for pid in range(1, 6):
@@ -98,7 +113,7 @@ def test_streaming_pip_random_polygons_matches_batch(spark, tmp_path):
     pages.coalesce(3).write.mode("overwrite").parquet(src_dir)
 
     stream = spark.readStream.schema(pages.schema).parquet(src_dir)
-    out = streaming_point_in_polygon(spark, stream, polygons)
+    out = stream_pip(spark, stream, polygons)
     q = (out.writeStream.format("memory").queryName("pip_rand_out")
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(180)
