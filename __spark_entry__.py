@@ -177,17 +177,13 @@ def _q_containment_ranges(spark, sf_dir):
     from s2spark.operators.spatial_join import (cell_rows, covering_probe_join,
                                                 polygon_key)
     from s2spark.plans import covercache
-    from s2spark.plans.frames import local_frame
-    cov_rows = []
-    for pid, poly in _JOIN_POLYGONS.items():
-        cells = covercache.cached_rows(
-            ("plain-cover", *polygon_key(poly), 8),
-            lambda: cell_rows(RegionCoverer(max_cells=8).get_covering(poly)))
-        cov_rows.extend((pid, cell, lvl) for cell, lvl in cells)
-    cov = local_frame(spark, cov_rows, "polygon_id int, cov_cell long, cov_level int")
+    cov_rows = [(pid, cell, lvl) for pid, poly in _JOIN_POLYGONS.items()
+                for cell, lvl in covercache.cached_rows(
+                    ("plain-cover", *polygon_key(poly), 8),
+                    lambda: cell_rows(RegionCoverer(max_cells=8).get_covering(poly)))]
     pts = C.with_cell_id(_docs_geo(spark, sf_dir), "lat", "lng")
-    return (covering_probe_join(pts, cov, (r[2] for r in cov_rows),
-                                cov_cell="cov_cell")
+    return (covering_probe_join(spark, pts, cov_rows,
+                                "polygon_id int, cov_cell_id long, cov_level int")
             .groupBy("polygon_id").agg(F.count(F.lit(1)).alias("n_candidates")))
 
 

@@ -195,3 +195,28 @@ def cell_token(cell_id: Column) -> Column:
     raw_hex = F.lpad(F.hex(cell_id.bitwiseXOR(F.lit(-(1 << 63)).cast("long"))), 16, "0")
     stripped = F.regexp_replace(F.lower(raw_hex), "0+$", "")
     return F.when(stripped == "", F.lit("X")).otherwise(stripped)
+
+
+def haversine(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Column:
+    """Great-circle angle (radians) between two points in radians — the
+    engine's one haversine.  Explicit products (not pow), in this operand
+    order, so the SQL oracles match it bit for bit."""
+    sdlat = F.sin((lat2 - lat1) / 2)
+    sdlng = F.sin((lng2 - lng1) / 2)
+    h = sdlat * sdlat + F.cos(lat1) * F.cos(lat2) * (sdlng * sdlng)
+    return 2 * F.asin(F.sqrt(F.least(F.lit(1.0), h)))
+
+
+def case_by(key: str, values: dict) -> Column:
+    """One CASE chain over a region key column: values[k] on rows whose
+    `key` equals k, null elsewhere.  A covering operator's per-region
+    constants ride in it as literals, so its residual needs no side table.
+    With no regions it is an untyped null: callers cast it to their type
+    (a no-op once there is a region, which the optimizer drops)."""
+    items = list(values.items())
+    if not items:
+        return F.lit(None)
+    out = F.when(F.col(key) == items[0][0], items[0][1])
+    for k, v in items[1:]:
+        out = out.when(F.col(key) == k, v)
+    return out

@@ -21,16 +21,29 @@ p.(b x n) > 0 with constant vectors.
 For polylines with many edges the per-edge expression unrolling stops
 paying; Polyline.project_points (kernel/polyline.py) is the Arrow-batched
 alternative for that regime.
+
+The buffered and corridor joins have the shape of every covering operator
+(spatial_join.covering_probe_join, then a one-CASE-chain residual).
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import columns as C
+from ..kernel import cellunion as cuk
+from ..kernel.coverer import RegionCoverer
 from ..kernel.intervals import LatLngRect, R1Interval, S1Interval
+from ..kernel.polyline import Polyline
+from ..plans import covercache
+from .spatial_join import cell_rows, covering_probe_join, polygon_key
+
+COVERER_MAX_CELLS = 16   # region covering before CellUnion.Expand
+MAX_LEVEL_DIFF = 4       # Expand's maxLevelDiff (S2CellUnion.cs:618-650)
 
 
 def _xyz(lat: float, lng: float) -> tuple[float, float, float]:
@@ -233,8 +246,7 @@ def convex_polygon_distance_sql(poly) -> str:
 
 
 def buffered_polygon_join(spark, pts: DataFrame, polys: dict,
-                          radius_rad: float, coverer_max_cells: int = 16,
-                          max_level_diff: int = 4) -> DataFrame:
+                          radius_rad: float) -> DataFrame:
     """Points within radius_rad of each (convex) polygon: "pages within
     5 km of any park".
 
@@ -243,44 +255,36 @@ def buffered_polygon_join(spark, pts: DataFrame, polys: dict,
     keys (the buffered union is normalized/disjoint, so each point matches
     at most one cell -> no dedupe) -> exact codegen distance residual.
     At 100 TB: one map-side broadcast join + arithmetic, no shuffle."""
-    from ..plans import covercache
-    from ..plans.frames import local_frame
-    from .spatial_join import covering_probe_join, polygon_key
-
-    rows = []
-    residual = None
-    for pid, poly in polys.items():
-        key = ("buffered", *polygon_key(poly), float(radius_rad),
-               coverer_max_cells, max_level_diff)
-        cells = covercache.cached_rows(key, lambda: _expanded_covering(
-            poly, radius_rad, coverer_max_cells, max_level_diff))
-        rows.extend((pid, cell, lvl) for cell, lvl in cells)
-        dist = F.expr(convex_polygon_distance_sql(poly))
-        residual = (F.when(F.col("polygon_id") == pid, dist)
-                    if residual is None
-                    else residual.when(F.col("polygon_id") == pid, dist))
-    cov = local_frame(spark, rows,
-                      "polygon_id int, cov_cell long, cov_level int")
-    cand = covering_probe_join(with_xyz(pts), cov, (r[2] for r in rows),
-                               cov_cell="cov_cell")
-    return (cand.withColumn("distance_rad", residual)
-            .where(F.col("distance_rad") <= radius_rad)
-            .drop("px", "py", "pz"))
+    rows = [(pid, cell, lvl) for pid, poly in polys.items()
+            for cell, lvl in covercache.cached_rows(
+                ("buffered", *polygon_key(poly), float(radius_rad)),
+                lambda: _expanded_covering(poly, radius_rad))]
+    return _within(spark, pts, rows, "polygon_id", radius_rad,
+                   {pid: convex_polygon_distance_sql(poly)
+                    for pid, poly in polys.items()})
 
 
-def _expanded_covering(region, radius_rad: float, max_cells: int,
-                       max_level_diff: int) -> list[tuple[int, int]]:
+def _expanded_covering(region, radius_rad: float) -> list[tuple[int, int]]:
     """(signed cell id, level) rows of the region's covering expanded by
     radius_rad (CellUnion.Expand, S2CellUnion.cs:618-650)."""
-    import numpy as np
-
-    from ..kernel import cellunion as cuk
-    from ..kernel.coverer import RegionCoverer
-    from .spatial_join import cell_rows
-
-    cover = RegionCoverer(max_cells=max_cells).get_covering(region)
+    cover = RegionCoverer(max_cells=COVERER_MAX_CELLS).get_covering(region)
     return cell_rows(cuk.expand_radius(np.asarray(cover, dtype=np.uint64),
-                                       radius_rad, max_level_diff))
+                                       radius_rad, MAX_LEVEL_DIFF))
+
+
+def _within(spark, pts: DataFrame, rows: list, key: str, radius_rad: float,
+            dist_sql: dict) -> DataFrame:
+    """Points within radius_rad of a region: the probe join over the
+    expanded covering `rows` ((key, cell, level) tuples), then the exact
+    distance residual, dist_sql[k] for region k, in one CASE chain."""
+    cand = covering_probe_join(
+        spark, with_xyz(pts), rows,
+        f"{key} int, cov_cell_id long, cov_level int")
+    dist = C.case_by(key, {k: F.expr(sql)
+                           for k, sql in dist_sql.items()}).cast("double")
+    return (cand.withColumn("distance_rad", dist)
+            .where(F.col("distance_rad") <= radius_rad)
+            .drop("px", "py", "pz"))
 
 
 def polyline_project_oracle_sql(src_sql: str,
@@ -318,8 +322,7 @@ def polyline_distance_sql(latlngs_deg: list[tuple[float, float]]) -> str:
 
 def corridor_join(spark, pts: DataFrame,
                   tracks: dict[int, list[tuple[float, float]]],
-                  radius_rad: float, coverer_max_cells: int = 16,
-                  max_level_diff: int = 4) -> DataFrame:
+                  radius_rad: float) -> DataFrame:
     """Points within radius_rad of each polyline track: "pages within 5 km
     of the route" — the corridor/map-matching prefilter.
 
@@ -328,42 +331,24 @@ def corridor_join(spark, pts: DataFrame,
     maxLevelDiff) -> broadcast equi-join on ancestor keys -> exact codegen
     min-edge-distance residual.  At 100 TB: one map-side broadcast join +
     arithmetic, no shuffle of the points."""
-    import numpy as np
+    def compute(latlngs):
+        verts = np.array([_xyz(math.radians(la), math.radians(ln))
+                          for la, ln in latlngs], dtype=np.float64)
+        return _expanded_covering(Polyline(verts), radius_rad)
 
-    from ..kernel.polyline import Polyline
-    from ..plans import covercache
-    from ..plans.frames import local_frame
-    from .spatial_join import covering_probe_join
-
-    rows = []
-    residual = None
-    for tid, latlngs in tracks.items():
-        def compute(latlngs=latlngs):
-            verts = np.array([_xyz(math.radians(la), math.radians(ln))
-                              for la, ln in latlngs], dtype=np.float64)
-            return _expanded_covering(Polyline(verts), radius_rad,
-                                      coverer_max_cells, max_level_diff)
-        key = ("corridor", tuple((float(la), float(ln)) for la, ln in latlngs),
-               float(radius_rad), coverer_max_cells, max_level_diff)
-        rows.extend((tid, cell, lvl)
-                    for cell, lvl in covercache.cached_rows(key, compute))
-        dist = F.expr(polyline_distance_sql(latlngs))
-        residual = (F.when(F.col("track_id") == tid, dist)
-                    if residual is None
-                    else residual.when(F.col("track_id") == tid, dist))
-    cov = local_frame(spark, rows,
-                      "track_id int, cov_cell long, cov_level int")
-    cand = covering_probe_join(with_xyz(pts), cov, (r[2] for r in rows),
-                               cov_cell="cov_cell")
-    return (cand.withColumn("distance_rad", residual)
-            .where(F.col("distance_rad") <= radius_rad)
-            .drop("px", "py", "pz"))
+    rows = [(tid, cell, lvl) for tid, latlngs in tracks.items()
+            for cell, lvl in covercache.cached_rows(
+                ("corridor", tuple((float(la), float(ln)) for la, ln in latlngs),
+                 float(radius_rad)),
+                lambda: compute(latlngs))]
+    return _within(spark, pts, rows, "track_id", radius_rad,
+                   {tid: polyline_distance_sql(latlngs)
+                    for tid, latlngs in tracks.items()})
 
 
 def nearest_track_join(spark, pts: DataFrame,
                        tracks: dict[int, list[tuple[float, float]]],
-                       radius_rad: float, coverer_max_cells: int = 16,
-                       max_level_diff: int = 4,
+                       radius_rad: float,
                        point_key: str = "doc_id") -> DataFrame:
     """Map-matching assignment: each point within radius_rad of at least
     one track is assigned its NEAREST track (the distributed form of
@@ -377,8 +362,7 @@ def nearest_track_join(spark, pts: DataFrame,
     FP summation orders (and reproducible in the SQL oracle)."""
     from pyspark.sql.window import Window
 
-    cand = corridor_join(spark, pts, tracks, radius_rad,
-                         coverer_max_cells, max_level_diff)
+    cand = corridor_join(spark, pts, tracks, radius_rad)
     w = Window.partitionBy(point_key).orderBy(
         F.round(F.col("distance_rad"), 9).asc(), F.col("track_id").asc())
     return (cand.withColumn("__rn", F.row_number().over(w))

@@ -8,7 +8,7 @@ asymmetric index/probe hash join:
 
   * LEVEL SET — the per-edge ideal level (MIN_WIDTH.get_max_level of the
     edge's arc length, S2EdgeIndex.cs:327-366) is quantized onto a
-    BOUNDED set S of at most `max_levels` levels spanning
+    BOUNDED set S of at most MAX_LEVELS levels spanning
     [fit(longest edge), fit(shortest edge)], so the ancestor fan-out per
     edge stays O(|S|) regardless of length spread.  Each edge snaps DOWN
     to the finest S-level no finer than its own fit (the coarsest S level
@@ -65,6 +65,8 @@ from ..kernel import metrics
 from ..kernel.loops import robust_crossing_batch
 
 EDGE_COLS = ("ax", "ay", "az", "bx", "by", "bz")
+# Size of the level set S (module docstring): the per-edge ancestor fan-out.
+MAX_LEVELS = 4
 
 def _edge_angle():
     # built lazily: Column construction needs a live SparkContext, and
@@ -86,8 +88,7 @@ def _fit_levels(ax, ay, az, bx, by, bz) -> np.ndarray:
     return np.clip(lv, 0, ci.MAX_LEVEL).astype(np.int64)
 
 
-def _level_set(edges_a: DataFrame, edges_b: DataFrame,
-               max_levels: int) -> tuple[int, ...]:
+def _level_set(edges_a: DataFrame, edges_b: DataFrame) -> tuple[int, ...]:
     """Bounded ascending level set S chosen from the FIT-LEVEL HISTOGRAM.
 
     Snapping an edge k levels below its fit covers it with cells 2^k
@@ -97,7 +98,7 @@ def _level_set(edges_a: DataFrame, edges_b: DataFrame,
     from the bulk).  The histogram is one tiny agg per side (<= 31 rows,
     independent of row count); the coarsest fit level is always included
     (every edge needs a snap level <= its fit), and the remaining
-    max_levels-1 levels minimize the count-weighted total coarsening
+    MAX_LEVELS-1 levels minimize the count-weighted total coarsening
     sum(cnt[l] * (l - snap(l))) by exhaustive search over present levels
     (<= C(30, 3) combos, driver-side)."""
     # fit level as a Column: get_max_level == IEEE_exponent(val) - 1 ==
@@ -137,7 +138,7 @@ def _level_set(edges_a: DataFrame, edges_b: DataFrame,
     counts.setdefault(lo_exact, 0)
     present = sorted(counts)
     lo = min(present)
-    if len(present) <= max_levels:
+    if len(present) <= MAX_LEVELS:
         return tuple(present)
 
     def cost(chosen: tuple[int, ...]) -> int:
@@ -150,7 +151,7 @@ def _level_set(edges_a: DataFrame, edges_b: DataFrame,
     from itertools import combinations
     best, best_cost = (lo,), cost((lo,))
     for extra in combinations([p for p in present if p != lo],
-                              max_levels - 1):
+                              MAX_LEVELS - 1):
         ch = (lo,) + extra
         c = cost(ch)
         if c < best_cost:
@@ -276,10 +277,9 @@ def _edge_cells_udf(levels: tuple[int, ...]):
         # and real corpora have vanishingly few >=54-degree edges, so
         # the extra candidates are noise.
         # only sound when level 0 is in S, so the other side's probe
-        # ancestors reach the faces; in auto mode a too-long edge forces
-        # the exact coarsest-level anchor to 0, so this always holds —
-        # the gate only exempts the legacy forced-level path, which
-        # keeps its documented single-level semantics
+        # ancestors reach the faces; a too-long edge in the histogram
+        # forces the exact coarsest-level anchor to 0, so this holds, and
+        # the gate keeps the ring path should S ever lack level 0
         dot_se = np.clip(x * xe + y * ye + z * ze, -1.0, 1.0)
         too_long = (lv_arr[0] == 0) & (
             np.arccos(dot_se) > 2.0 * metrics.MIN_WIDTH.deriv)
@@ -324,44 +324,16 @@ def _edge_cells_udf(levels: tuple[int, ...]):
     return edge_cells
 
 
-def edge_crossing_join(edges_a: DataFrame, edges_b: DataFrame,
-                       key_a: str = "edge_a", key_b: str = "edge_b",
-                       level: int | None = None,
-                       max_levels: int = 4) -> DataFrame:
-    """All (edge_a, edge_b) pairs whose geodesic edges properly cross
-    (RobustCrossing > 0; S2EdgeUtil.cs:85-123).
+def _candidates(edges_a: DataFrame, edges_b: DataFrame,
+                key_a: str, key_b: str) -> DataFrame:
+    """Distinct candidate (key_a, key_b) pairs with both edges' endpoint
+    columns (a_ax..a_bz, b_ax..b_bz), BEFORE the exact refine.
 
-    Inputs carry unit-vector endpoint columns ax..bz plus a key column.
-    `level` forces a single dataset-global level (legacy behavior);
-    by default each edge indexes at its own quantized fitting level
-    (at most `max_levels` distinct levels — see module docstring).
-
-    FORCED-LEVEL CAVEAT: with `level` set, an edge LONGER than the min
-    cell width at that level (metrics.MIN_WIDTH.get_value(level); ~54
-    degrees at level 0, halving per level) can extend past its start
-    cell's Moore ring, so crossings against such an edge may be MISSED —
-    the single-level semantics have no coarser probe tier to catch them.
-    Auto mode (level=None) is complete for every edge length: edges
-    longer than the level-0 min width index all six faces outright.
-    Force a level only when a domain bound guarantees every edge fits it.
-
-    SELF-JOIN FAST PATH: passing the SAME DataFrame object as both
-    `edges_a` and `edges_b` (it must then carry BOTH key columns) runs
-    the fit-level histogram, the cell UDF, and the explode ONCE and
-    shares the checkpoint between the two sides — at sf0.1 this halves
-    the flagship self-join's heavy phase.
-
-    Construction cost note: unless `level` is forced, CONSTRUCTING this
-    DataFrame runs one small Spark job (the <=31-row-per-side fit-level
-    histogram in _level_set, both sides unioned into a single job) — the
-    level set parameterizes the cell UDF, so it cannot be deferred into
-    the plan.  The heavy work (cell explode) is a LAZY localCheckpoint:
-    nothing beyond the histogram runs until the caller's first action,
-    so explain()/plan audits on the result stay cheap.
-    """
-    levels = (level,) if level is not None \
-        else _level_set(edges_a, edges_b, max_levels)
-    cells_udf = _edge_cells_udf(levels)
+    Constructing this runs one small Spark job (the fit-level histogram
+    in _level_set, both sides in one job): the level set parameterizes
+    the cell UDF.  The cell explode is a LAZY localCheckpoint, so
+    explain()/plan audits on the result run nothing more."""
+    cells_udf = _edge_cells_udf(_level_set(edges_a, edges_b))
 
     def keyed(df: DataFrame, keys: list[str]) -> DataFrame:
         cells = cells_udf(*[F.col(c) for c in EDGE_COLS])
@@ -404,13 +376,34 @@ def edge_crossing_join(edges_a: DataFrame, edges_b: DataFrame,
     # carries no systematic duplicates into the dedup.
     cols = [key_a, key_b] + ["a_" + c for c in EDGE_COLS] \
         + ["b_" + c for c in EDGE_COLS]
-    cand = (a.drop("own").join(b.where(F.col("own")).drop("own"), "cell")
+    return (a.drop("own").join(b.where(F.col("own")).drop("own"), "cell")
             .select(*cols)
             .unionByName(
                 a.where(F.col("own")).drop("own")
                 .join(b.where(~F.col("own")).drop("own"), "cell")
                 .select(*cols))
             .dropDuplicates([key_a, key_b]))
+
+
+def edge_crossing_join(edges_a: DataFrame, edges_b: DataFrame,
+                       key_a: str = "edge_a", key_b: str = "edge_b") -> DataFrame:
+    """All (edge_a, edge_b) pairs whose geodesic edges properly cross
+    (RobustCrossing > 0; S2EdgeUtil.cs:85-123).
+
+    Inputs carry unit-vector endpoint columns ax..bz plus a key column.
+    Each edge indexes at its own quantized fitting level (at most
+    MAX_LEVELS distinct levels — see module docstring); the candidates
+    are complete for every edge length, since edges longer than the
+    level-0 min width index all six faces outright.
+
+    SELF-JOIN FAST PATH: passing the SAME DataFrame object as both
+    `edges_a` and `edges_b` (it must then carry BOTH key columns) runs
+    the fit-level histogram, the cell UDF, and the explode ONCE and
+    shares the checkpoint between the two sides — at sf0.1 this halves
+    the flagship self-join's heavy phase.  Construction runs one small
+    histogram job (see _candidates).
+    """
+    cand = _candidates(edges_a, edges_b, key_a, key_b)
 
     @F.pandas_udf(BooleanType())
     def crosses(aax: pd.Series, aay: pd.Series, aaz: pd.Series,
@@ -432,27 +425,8 @@ def edge_crossing_join(edges_a: DataFrame, edges_b: DataFrame,
 
 
 def candidate_pairs(edges_a: DataFrame, edges_b: DataFrame,
-                    key_a: str = "edge_a", key_b: str = "edge_b",
-                    level: int | None = None,
-                    max_levels: int = 4) -> DataFrame:
-    """Distinct candidate (key_a, key_b) pairs BEFORE the exact refine —
-    exposed so tests can assert candidate-count bounds for mixed-length
-    edge sets (the per-edge-level guarantee)."""
-    levels = (level,) if level is not None \
-        else _level_set(edges_a, edges_b, max_levels)
-    cells_udf = _edge_cells_udf(levels)
-
-    def keyed(df: DataFrame, key: str) -> DataFrame:
-        cells = cells_udf(*[F.col(c) for c in EDGE_COLS])
-        return df.select(F.col(key), F.explode(cells).alias("c")).select(
-            key, F.col("c.cell").alias("cell"), F.col("c.own").alias("own"))
-
-    a = keyed(edges_a, key_a)
-    b = keyed(edges_b, key_b)
-    return (a.drop("own").join(b.where(F.col("own")).drop("own"), "cell")
-            .select(key_a, key_b)
-            .unionByName(
-                a.where(F.col("own")).drop("own")
-                .join(b.where(~F.col("own")).drop("own"), "cell")
-                .select(key_a, key_b))
-            .dropDuplicates([key_a, key_b]))
+                    key_a: str = "edge_a", key_b: str = "edge_b") -> DataFrame:
+    """The operator's distinct candidate (key_a, key_b) pairs BEFORE the
+    exact refine — exposed so tests can assert candidate-count bounds for
+    mixed-length edge sets (the per-edge-level guarantee)."""
+    return _candidates(edges_a, edges_b, key_a, key_b).select(key_a, key_b)

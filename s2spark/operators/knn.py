@@ -32,14 +32,6 @@ from ..functions.udfs import vertex_neighbors_udf
 from ..kernel import metrics
 
 
-def _haversine_rad(lat1, lng1, lat2, lng2):
-    # explicit products (not pow) so SQL oracles can match bit-for-bit
-    dlat = F.sin((lat2 - lat1) / 2)
-    dlng = F.sin((lng2 - lng1) / 2)
-    h = dlat * dlat + F.cos(lat1) * F.cos(lat2) * (dlng * dlng)
-    return 2 * F.asin(F.sqrt(F.least(F.lit(1.0), h)))
-
-
 def radius_join(queries: DataFrame, data: DataFrame, radius_rad: float,
                 query_key: str = "query_id", data_key: str = "data_id") -> DataFrame:
     """All (query, data) pairs within radius_rad (great-circle).
@@ -79,8 +71,8 @@ def radius_join(queries: DataFrame, data: DataFrame, radius_rad: float,
         q = queries.select(
             F.col(query_key), F.col("lat").alias("q_lat"), F.col("lng").alias("q_lng"),
             F.explode(vertex_neighbors_udf(F.col("cell_id"), F.lit(level))).alias("bucket"))
-    dist = _haversine_rad(F.radians(F.col("q_lat")), F.radians(F.col("q_lng")),
-                          F.radians(F.col("d_lat")), F.radians(F.col("d_lng")))
+    dist = C.haversine(F.radians(F.col("q_lat")), F.radians(F.col("q_lng")),
+                       F.radians(F.col("d_lat")), F.radians(F.col("d_lng")))
     return (q.join(d, "bucket")
             .withColumn("distance_rad", dist)
             .where(F.col("distance_rad") <= radius_rad)

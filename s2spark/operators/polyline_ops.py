@@ -10,12 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _haversine(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Column:
-    sdlat = F.sin((lat2 - lat1) / 2)
-    sdlng = F.sin((lng2 - lng1) / 2)
-    h = sdlat * sdlat + F.cos(lat1) * F.cos(lat2) * (sdlng * sdlng)
-    return 2 * F.asin(F.sqrt(F.least(F.lit(1.0), h)))
+from ..functions import columns as C
 
 
 def polyline_arc_length(track: Column) -> Column:
@@ -23,8 +18,8 @@ def polyline_arc_length(track: Column) -> Column:
     edges = F.zip_with(
         F.slice(track, 1, F.size(track) - 1),
         F.slice(track, 2, F.size(track) - 1),
-        lambda a, b: _haversine(F.radians(a["lat"]), F.radians(a["lng"]),
-                                F.radians(b["lat"]), F.radians(b["lng"])))
+        lambda a, b: C.haversine(F.radians(a["lat"]), F.radians(a["lng"]),
+                                 F.radians(b["lat"]), F.radians(b["lng"])))
     return F.aggregate(edges, F.lit(0.0), lambda acc, d: acc + d)
 
 

@@ -5,9 +5,10 @@ S2EdgeIndex.cs:327-603, as relational operators):
 
 1. BUILD (driver-side, tiny): for each query polygon run the region coverer
    twice -> exterior covering (candidate generation) + interior covering
-   (exact-test bypass, mirroring S2RegionCoverer.cs:312-329).  Emit a
-   coverings table: (polygon_id, cell_id, level, is_interior).  Coverings
-   are <= max_cells per polygon -> always broadcastable.
+   (exact-test bypass, mirroring S2RegionCoverer.cs:312-329).  Emit
+   covering rows: (polygon_id, cov_cell_id, cov_level, is_interior).
+   Coverings are small (a MAX_CELLS coverer budget, refined
+   SKIN_REFINE_LEVELS deep) -> always broadcastable.
 
 2. PROBE (distributed, one pass): points carry a leaf cell_id.  For the
    small set of distinct covering levels L1..Lk, generate each point's
@@ -19,10 +20,12 @@ S2EdgeIndex.cs:327-603, as relational operators):
 3. REFINE: matches on interior cells are accepted outright; matches on
    exterior cells run the exact crossing-parity kernel (Arrow-batched,
    polygon vertices broadcast).  The refine fraction is the covering's
-   skin, a few % of candidates for max_cells=8.
+   skin, a few % of candidates.
 
-Skew: a pre-aggregated per-cell match count drives optional salting of hot
-covering cells; AQE skew-join handles residual imbalance.
+Every covering operator (cap, rect, buffered, corridor, the containment
+query) has this shape: cached covering rows go into `covering_probe_join`,
+then an exact residual.  The salted shuffle variant for polygon sets too
+large to broadcast is spatial_join_shuffle.py.
 """
 
 from __future__ import annotations
@@ -41,9 +44,17 @@ from ..kernel.loops import Loop, Polygon
 from ..plans import covercache
 from ..plans.frames import local_frame
 
+# Coverer budget for a polygon's exterior covering.  Higher than the
+# reference's 8: covering size only costs broadcast bytes here, while a
+# finer covering shrinks the skin.
+MAX_CELLS = 64
 # Skin refinement depth: straddling cells are split this many levels below
 # the coverer's output before the remainder becomes exact-test skin.
 SKIN_REFINE_LEVELS = 3
+
+# The polygon covering table: build_coverings and the distributed build.
+COVERING_SCHEMA = ("polygon_id long, cov_cell_id long, cov_level long, "
+                   "is_interior boolean")
 
 # perfbench/workloads.py:cold_coverings clears this to force cold coverings.
 _COVERING_CACHE = covercache._MEMO
@@ -62,7 +73,7 @@ def polygon_key(poly: Polygon) -> tuple:
             tuple(lp.depth for lp in poly.loops))
 
 
-def skin_covering(poly: Polygon, max_cells: int = 64) -> list:
+def skin_covering(poly: Polygon) -> list:
     """Disjoint [signed cell id, level, is_interior] rows for one polygon:
     the interior covering I (accept fast, mirroring the coverer's interior
     fast-accept, S2RegionCoverer.cs:312-329) plus the skin E \\ I
@@ -72,7 +83,7 @@ def skin_covering(poly: Polygon, max_cells: int = 64) -> list:
         # Level-synchronous refinement: classify the whole frontier with
         # ONE batched relate call per level (numpy amortizes), then split
         # only the straddlers.  The final straddler set is the skin.
-        frontier = normalize(RegionCoverer(max_cells=max_cells).get_covering(poly))
+        frontier = normalize(RegionCoverer(max_cells=MAX_CELLS).get_covering(poly))
         interior, skin = frontier[:0], frontier[:0]
         for depth in range(SKIN_REFINE_LEVELS + 1):
             if len(frontier) == 0:
@@ -88,54 +99,51 @@ def skin_covering(poly: Polygon, max_cells: int = 64) -> list:
             frontier = ci.children(straddle[~leaf]).reshape(-1)
         return ([(s, lv, True) for s, lv in cell_rows(interior)]
                 + [(s, lv, False) for s, lv in cell_rows(skin)])
-    return covercache.cached_rows(("skin", *polygon_key(poly), max_cells),
-                                  compute)
+    return covercache.cached_rows(("skin", *polygon_key(poly)), compute)
 
 
-def build_coverings(polygons: dict[int, Polygon],
-                    max_cells: int = 64) -> pd.DataFrame:
+def build_coverings(polygons: dict[int, Polygon]) -> pd.DataFrame:
     """Per-polygon skin coverings as one table (polygon_id, cov_cell_id,
     cov_level, is_interior).
 
     Disjointness means a point matches AT MOST ONE covering cell per
     polygon -> the probe join needs no dedup shuffle, and only skin matches
-    pay the exact parity kernel.  max_cells defaults higher than the
-    reference's 8: covering size only costs broadcast bytes here, while a
-    finer covering shrinks the skin."""
+    pay the exact parity kernel."""
     rows = [(pid, *row) for pid, poly in polygons.items()
-            for row in skin_covering(poly, max_cells)]
+            for row in skin_covering(poly)]
     return pd.DataFrame(rows, columns=["polygon_id", "cov_cell_id", "cov_level", "is_interior"])
 
 
-def coverings_frame(spark: SparkSession, cov_pdf: pd.DataFrame) -> DataFrame:
-    """The build_coverings table as a broadcastable LocalRelation."""
-    return local_frame(
-        spark, cov_pdf.itertuples(index=False, name=None),
-        "polygon_id long, cov_cell_id long, cov_level long, is_interior boolean")
-
-
-def covering_probe_join(points: DataFrame, cov: DataFrame, levels,
-                        cell_col: str = "cell_id",
-                        cov_cell: str = "cov_cell_id") -> DataFrame:
-    """Broadcast equi-join of `points` with covering table `cov`: each
-    point explodes to its ancestor at every distinct covering level in
-    `levels` (pure bit ops, <= ~10 keys), and ancestor == `cov_cell`
-    matches (range containment by a level-L cell is ancestor equality, so
-    no nested-loop range join).  The probe key, `cov_cell` and cov_level
-    are dropped; the caller applies its own residual."""
-    keys = F.array(*[C.parent_for_level(F.col(cell_col), int(lv))
-                     for lv in sorted(set(levels))])
+def covering_probe_join(spark: SparkSession, points: DataFrame, rows,
+                        schema: str) -> DataFrame:
+    """Broadcast equi-join of `points` (leaf `cell_id` column) with the
+    covering rows `rows` of `schema`, which names the covering cell
+    `cov_cell_id` and its level `cov_level`.  The rows become a
+    LocalRelation; each point explodes to its ancestor at every distinct
+    covering level (pure bit ops, <= ~10 keys), and ancestor ==
+    cov_cell_id matches (range containment by a level-L cell is ancestor
+    equality, so no nested-loop range join).  The probe key, cov_cell_id
+    and cov_level are dropped; the caller applies its own residual."""
+    rows = [tuple(r) for r in rows]
+    cov = local_frame(spark, rows, schema)
+    at = cov.columns.index("cov_level")
+    keys = F.array(*[C.parent_for_level(F.col("cell_id"), int(lv))
+                     for lv in sorted({r[at] for r in rows})])
     probed = points.withColumn("probe_cell", F.explode(keys))
-    return (probed.join(F.broadcast(cov), probed["probe_cell"] == cov[cov_cell])
-            .drop("probe_cell", cov_cell, "cov_level"))
+    return (probed.join(F.broadcast(cov), probed["probe_cell"] == cov["cov_cell_id"])
+            .drop("probe_cell", "cov_cell_id", "cov_level"))
 
 
-def _make_contains_udf(spark: SparkSession, polygons: dict[int, Polygon]):
-    """Pandas UDF (polygon_id, x, y, z) -> bool, vectorized per polygon
-    group inside each Arrow batch; polygon vertices ride a broadcast.
+def refine_skin(spark: SparkSession, joined: DataFrame,
+                polygons: dict[int, Polygon]) -> DataFrame:
+    """Covering matches (polygon_id, is_interior, x, y, z) -> the matches
+    inside their polygon, is_interior dropped: interior matches pass
+    outright, skin matches run the exact parity kernel, a pandas UDF
+    vectorized per polygon group inside each Arrow batch, with the polygon
+    vertices on a broadcast.
 
     Null x marks a row that must NOT be refined (interior fast-accept) —
-    the UDF skips it for free, which lets the caller run one single pass
+    the UDF skips it for free, so one single pass serves both kinds
     instead of splitting interior/exterior branches (each branch would
     re-evaluate the whole upstream pipeline).
 
@@ -166,13 +174,17 @@ def _make_contains_udf(spark: SparkSession, polygons: dict[int, Polygon]):
             out[m] = state[int(p)].contains_points(xs[m], ys[m], zs[m])
         return pd.Series(out)
 
-    return polygon_contains
+    # single pass: interior rows feed the UDF nulls (skipped for free),
+    # exterior rows get the exact parity kernel; no branch re-evaluation
+    masked = F.when(~F.col("is_interior"), F.col("x"))
+    keep = F.col("is_interior") | polygon_contains(
+        F.col("polygon_id"), masked, F.col("y"), F.col("z"))
+    return joined.where(keep).drop("is_interior")
 
 
 def spatial_join(spark: SparkSession, points: DataFrame,
-                 polygons: dict[int, Polygon], max_cells: int = 64,
-                 cell_col: str = "cell_id") -> DataFrame:
-    """points (with leaf `cell_col` and x,y,z unit-vector columns) ->
+                 polygons: dict[int, Polygon]) -> DataFrame:
+    """points (with leaf cell_id and x,y,z unit-vector columns) ->
     rows augmented with polygon_id for every containing polygon.
 
     Zero-shuffle plan: the covering side is broadcast; the probe explodes
@@ -181,17 +193,11 @@ def spatial_join(spark: SparkSession, points: DataFrame,
     (point, polygon), so no dedup aggregation is needed.  The exact parity
     kernel runs ONLY on exterior-cell matches (a filter on the match, not
     an OR the optimizer might evaluate eagerly)."""
-    cov_pdf = build_coverings(polygons, max_cells=max_cells)
-    joined = covering_probe_join(points, coverings_frame(spark, cov_pdf),
-                                 cov_pdf["cov_level"], cell_col)
-
-    contains_udf = _make_contains_udf(spark, polygons)
-    # single pass: interior rows feed the UDF nulls (skipped for free),
-    # exterior rows get the exact parity kernel; no branch re-evaluation
-    masked = F.when(~F.col("is_interior"), F.col("x"))
-    keep = F.col("is_interior") | contains_udf(
-        F.col("polygon_id"), masked, F.col("y"), F.col("z"))
-    return joined.where(keep).drop("is_interior")
+    joined = covering_probe_join(
+        spark, points,
+        build_coverings(polygons).itertuples(index=False, name=None),
+        COVERING_SCHEMA)
+    return refine_skin(spark, joined, polygons)
 
 
 def points_with_cells(pages_geo: DataFrame, lat_col: str = "lat",

@@ -19,7 +19,9 @@ Pipeline:
    split a single key).
 3. salted equi-join probe: points explode to (ancestor-at-level, salt).
 4. exact refine: exterior-cell matches cogroup with polygon vertices by
-   polygon_id and run the crossing-parity kernel per group.
+   (polygon_id, refine salt) and run the crossing-parity kernel per group.
+A polygon side within the broadcast budget skips steps 1 and 4: it is
+covered and refined as in the broadcast join (spatial_join.py).
 """
 
 from __future__ import annotations
@@ -28,25 +30,23 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
-                               IntegerType, LongType, StructField, StructType)
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
+                               StructField, StructType)
 
 from ..functions import columns as C
 from ..kernel.loops import Loop, Polygon
 from ..plans.frames import local_frame
+from .spatial_join import COVERING_SCHEMA, build_coverings, refine_skin
+
+REFINE_SALT = 16        # cogroup refine: ways one polygon's matches split
+# broadcast-refine vertex budget (~24 B raw per vertex: 1M ~ 25 MB)
+REFINE_BROADCAST_VERTICES = 1_000_000
 
 POLYGON_SCHEMA = StructType([
     StructField("polygon_id", LongType()),
     StructField("loop_idx", IntegerType()),
     StructField("depth", IntegerType()),
     StructField("vertices", ArrayType(ArrayType(DoubleType()))),
-])
-
-COVERING_SCHEMA = StructType([
-    StructField("polygon_id", LongType()),
-    StructField("cov_cell_id", LongType()),
-    StructField("cov_level", IntegerType()),
-    StructField("is_interior", BooleanType()),
 ])
 
 
@@ -59,16 +59,16 @@ def polygons_to_df(spark: SparkSession, polygons: dict[int, Polygon]) -> DataFra
     return local_frame(spark, rows, POLYGON_SCHEMA)
 
 
-def _polygon_from_group(pdf: pd.DataFrame) -> Polygon:
-    loops = []
-    for _, row in pdf.sort_values("loop_idx").iterrows():
-        verts = np.stack([np.asarray(v, dtype=np.float64) for v in row["vertices"]])
-        loops.append(Loop(verts, depth=int(row["depth"])))
-    return Polygon(loops)
+def _polygon_from_group(rows) -> Polygon:
+    """One polygon from its loop rows (POLYGON_SCHEMA mappings: Spark Rows
+    or pandas records), in loop_idx order."""
+    return Polygon([
+        Loop(np.stack([np.asarray(v, dtype=np.float64) for v in r["vertices"]]),
+             depth=int(r["depth"]))
+        for r in sorted(rows, key=lambda r: int(r["loop_idx"]))])
 
 
-def build_coverings_distributed(polygons_df: DataFrame,
-                                max_cells: int = 64) -> DataFrame:
+def build_coverings_distributed(polygons_df: DataFrame) -> DataFrame:
     """coverings(polygon_id, cov_cell_id, cov_level, is_interior) — one
     coverer run per polygon group, parallel across polygons."""
 
@@ -76,14 +76,8 @@ def build_coverings_distributed(polygons_df: DataFrame,
         # The same skin refinement and covering memo as the broadcast
         # path.  The memo lives in this Python worker, so it serves only
         # repeats that land on the same worker while it is alive.
-        from .spatial_join import skin_covering
-
-        rows = skin_covering(_polygon_from_group(pdf), max_cells)
-        return pd.DataFrame(
-            {"polygon_id": int(pdf["polygon_id"].iloc[0]),
-             "cov_cell_id": np.array([c for c, _, _ in rows], dtype=np.int64),
-             "cov_level": np.array([lv for _, lv, _ in rows], dtype=np.int32),
-             "is_interior": [bool(f) for _, _, f in rows]})
+        return build_coverings({int(pdf["polygon_id"].iloc[0]):
+                                _polygon_from_group(pdf.to_dict("records"))})
 
     return polygons_df.groupBy("polygon_id").applyInPandas(
         cover_group, schema=COVERING_SCHEMA)
@@ -91,17 +85,13 @@ def build_coverings_distributed(polygons_df: DataFrame,
 
 def spatial_join_shuffle(spark: SparkSession, points: DataFrame,
                          polygons_df: DataFrame,
-                         coverings: DataFrame | None = None,
-                         cell_col: str = "cell_id",
                          n_salt: int = 8,
                          hot_threshold: int = 2_000_000,
                          point_key: str = "url",
                          hot_sample_fraction: float = 0.001,
-                         refine_salt: int = 16,
                          refine_broadcast_loops: int = 10_000,
-                         refine_broadcast_vertices: int = 1_000_000,
                          return_candidates: bool = False) -> DataFrame:
-    """points (leaf cell_col + x,y,z) x polygons table -> (point rows,
+    """points (leaf cell_id + x,y,z) x polygons table -> (point rows,
     polygon_id) via shuffle hash join on covering cells with hot-cell
     salting, then grouped exact refine.
 
@@ -115,27 +105,26 @@ def spatial_join_shuffle(spark: SparkSession, points: DataFrame,
     reliable, and borderline flips only change load balance, never results.
     Pass 1.0 for the exact full-pass count.
 
-    refine_broadcast_loops / refine_broadcast_vertices: when the polygon
-    side has at most this many loop rows AND at most this many total
-    vertices, the exact refine runs as the broadcast-vertices pandas UDF
+    refine_broadcast_loops: when the polygon side has at most this many
+    loop rows AND at most REFINE_BROADCAST_VERTICES total vertices, the
+    exact refine runs as the broadcast-vertices pandas UDF
     (same masked single-pass kernel as the broadcast join) instead of the
     cogrouped refine — the shuffle plan exists for the non-broadcastable
     COVERING side, but a polygon set whose raw vertices fit in a
     broadcast shouldn't pay the cogroup's two exchanges + group funnel.
-    The VERTEX budget is what actually bounds broadcast bytes (~24 B raw
-    per vertex; 1M vertices ~ 25 MB of arrays): loop count alone would
-    admit 10k detailed admin boundaries whose vertex payload is GBs and
-    OOM the driver.  Both gates come from one cheap aggregate over the
-    loop table.  Set either to 0 to force the cogroup path.
+    The VERTEX budget is what actually bounds broadcast bytes: loop count
+    alone would admit 10k detailed admin boundaries whose vertex payload
+    is GBs and OOM the driver.  Both gates come from one cheap aggregate
+    over the loop table.  Set refine_broadcast_loops=0 to force the
+    distributed covering and the cogroup refine.
     """
     # Broadcast-budget gate FIRST (one tiny aggregate over the loop table):
-    # it decides BOTH the refine strategy (below) and, new in r6, the
-    # covering build strategy.  A polygon side small enough to broadcast
-    # its vertices is also small enough to cover on the DRIVER through the
-    # same covering memo as the broadcast join — skipping the
-    # applyInPandas covering job + its Python-worker spin-up + the
-    # persist/collect round-trip (measured r6: ~4-5 s of this operator's
-    # construction at sf0.1).  The distributed covering path is unchanged
+    # it decides BOTH the refine strategy (below) and the covering build
+    # strategy.  A polygon side small enough to broadcast its vertices is
+    # also small enough to cover on the DRIVER through the same covering
+    # memo as the broadcast join — skipping the applyInPandas covering job
+    # + its Python-worker spin-up + the persist/collect round-trip
+    # (measured r6: ~4-5 s of this operator's construction at sf0.1).  The distributed covering path is unchanged
     # for polygon sets above the budget — the regime this operator exists
     # for.
     stats = polygons_df.agg(
@@ -144,35 +133,23 @@ def spatial_join_shuffle(spark: SparkSession, points: DataFrame,
     ).collect()[0]
     n_loops, n_verts = int(stats["n_loops"]), int(stats["n_verts"])
     small_side = (0 < n_loops <= refine_broadcast_loops
-                  and 0 < n_verts <= refine_broadcast_vertices)
-    polygons: dict[int, Polygon] | None = None
+                  and 0 < n_verts <= REFINE_BROADCAST_VERTICES)
     if small_side:
         by_pid: dict[int, list] = {}
         for row in polygons_df.collect():
             by_pid.setdefault(int(row["polygon_id"]), []).append(row)
-        polygons = {
-            pid: Polygon([
-                Loop(np.stack([np.asarray(v, dtype=np.float64)
-                               for v in r["vertices"]]),
-                     depth=int(r["depth"]))
-                for r in sorted(rows, key=lambda r: int(r["loop_idx"]))])
-            for pid, rows in by_pid.items()}
-    if coverings is None:
-        if small_side:
-            from .spatial_join import build_coverings, coverings_frame
-            cov_pdf = build_coverings(polygons, max_cells=64)
-            coverings = coverings_frame(spark, cov_pdf)
-            levels = sorted(int(lv) for lv in cov_pdf["cov_level"].unique())
-        else:
-            coverings = build_coverings_distributed(polygons_df).persist()
-            levels = [r[0] for r in coverings.select("cov_level").distinct()
-                      .orderBy("cov_level").collect()]
+        polygons = {pid: _polygon_from_group(rows)
+                    for pid, rows in by_pid.items()}
+        cov_pdf = build_coverings(polygons)
+        coverings = local_frame(spark, cov_pdf.itertuples(index=False, name=None),
+                                COVERING_SCHEMA)
+        levels = sorted(int(lv) for lv in cov_pdf["cov_level"].unique())
     else:
-        coverings = coverings.persist()
+        coverings = build_coverings_distributed(polygons_df).persist()
         levels = [r[0] for r in coverings.select("cov_level").distinct()
                   .orderBy("cov_level").collect()]
 
-    probe_keys = F.array(*[C.parent_for_level(F.col(cell_col), int(lv)) for lv in levels])
+    probe_keys = F.array(*[C.parent_for_level(F.col("cell_id"), int(lv)) for lv in levels])
     probed = points.withColumn("probe_cell", F.explode(probe_keys))
 
     # hot-cell detection: probe hits per covering cell (semi-joined so we
@@ -223,12 +200,7 @@ def spatial_join_shuffle(spark: SparkSession, points: DataFrame,
     # cogroup's exchanges.  The gate (and the collected polygon dict) was
     # computed once above, shared with the covering-build decision.
     if small_side:
-        from .spatial_join import _make_contains_udf
-        contains_udf = _make_contains_udf(spark, polygons)
-        masked = F.when(~F.col("is_interior"), F.col("x"))
-        keep = F.col("is_interior") | contains_udf(
-            F.col("polygon_id"), masked, F.col("y"), F.col("z"))
-        return joined.where(keep).drop("is_interior")
+        return refine_skin(spark, joined, polygons)
 
     interior = joined.where(F.col("is_interior")).drop("is_interior")
     exterior = joined.where(~F.col("is_interior")).drop("is_interior")
@@ -237,22 +209,22 @@ def spatial_join_shuffle(spark: SparkSession, points: DataFrame,
     # cogroup key is (polygon_id, salt), not polygon_id alone: a planet-scale
     # probe side can put 10^9 skin-cell matches on ONE polygon (a big city
     # boundary), and a single-key cogroup would funnel them into one pandas
-    # group on one task.  Salting splits the matches refine_salt ways; the
+    # group on one task.  Salting splits the matches REFINE_SALT ways; the
     # (small) vertex side is replicated per salt, and the kernel is a pure
     # per-row filter, so the output is identical.
     out_schema = StructType([f for f in exterior.schema.fields])
     exterior = exterior.withColumn(
-        "__rs", F.pmod(F.xxhash64(F.col(point_key)), F.lit(refine_salt)).cast("int"))
+        "__rs", F.pmod(F.xxhash64(F.col(point_key)), F.lit(REFINE_SALT)).cast("int"))
     polys_salted = (polygons_df
                     .withColumn("__rs", F.explode(
-                        F.sequence(F.lit(0), F.lit(refine_salt - 1))))
+                        F.sequence(F.lit(0), F.lit(REFINE_SALT - 1))))
                     .withColumn("__rs", F.col("__rs").cast("int")))
 
     def refine(key, matches: pd.DataFrame, polys: pd.DataFrame) -> pd.DataFrame:
         matches = matches.drop(columns=["__rs"])
         if len(matches) == 0 or len(polys) == 0:
             return matches.iloc[0:0]
-        poly = _polygon_from_group(polys)
+        poly = _polygon_from_group(polys.to_dict("records"))
         keep = poly.contains_points(matches["x"].to_numpy(np.float64),
                                     matches["y"].to_numpy(np.float64),
                                     matches["z"].to_numpy(np.float64))

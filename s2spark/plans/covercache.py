@@ -8,10 +8,10 @@ polygon skin coverings, rects, caps, polylines and radius-expanded
 unions.
 
 The memo key IS the caller's key tuple, and that tuple holds every coverer
-input (vertex bytes per loop, loop depths, max_cells, radius,
-max_level_diff, the cap/rect spec, the track).  Tuples compare element by
-element, so two different regions can never share an entry the way two
-byte strings joined into one digest can.
+input that varies (vertex bytes per loop, loop depths, radius, the cap/rect
+spec, the track; each operator's coverer settings are module constants).
+Tuples compare element by element, so two different regions can never
+share an entry the way two byte strings joined into one digest can.
 
 There is no disk tier.  A persisted covering outlives the code that
 computed it and is shared with other processes, so it would need a

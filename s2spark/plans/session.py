@@ -14,7 +14,8 @@ from pyspark.sql import SparkSession
 
 def build_session(app_name: str = "s2spark", master: str | None = None,
                   shuffle_partitions: int | None = None, **extra) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # ~2x cores locally; on a cluster AQE coalesces anyway

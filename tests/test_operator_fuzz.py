@@ -339,3 +339,149 @@ def test_corridor_and_nearest_track_random_fuzz(spark):
                 want = sorted(dists)[int(np.argmin(rounded[i]))]
                 assert nt_map.get(i) == want, \
                     f"point {i}: want track {want}, got {nt_map.get(i)}"
+
+
+# points on the antimeridian with both signs of lng (they encode to
+# different leaf cells) and at both poles: point ids 0-7 at lng = 180,
+# 8-15 the same lats at lng = -180, 16 the north pole, 17 the south pole
+_SEAM_LATS = np.array([-75.0, -40.0, -10.0, 0.0, 0.5, 10.0, 40.0, 75.0])
+_SEAM_LAT = np.concatenate([_SEAM_LATS, _SEAM_LATS, [90.0, -90.0]])
+_SEAM_LNG = np.concatenate([np.full(8, 180.0), np.full(8, -180.0), [0.0, 0.0]])
+
+
+def _seam_and_random_points(rng, centers, spread, n_uniform=3000, n_near=150):
+    """The seam points above, then uniform points on the sphere and points
+    around each region centre, as (lat, lng) degree arrays."""
+    lats = [_SEAM_LAT, np.degrees(np.arcsin(rng.uniform(-1, 1, n_uniform)))]
+    lngs = [_SEAM_LNG, rng.uniform(-180, 180, n_uniform)]
+    for (lat0, lng0), s in zip(centers, spread):
+        lats.append(np.clip(lat0 + rng.uniform(-s, s, n_near), -90, 90))
+        lngs.append((lng0 + rng.uniform(-2 * s, 2 * s, n_near) + 180) % 360 - 180)
+    return np.concatenate(lats), np.concatenate(lngs)
+
+
+def test_cap_query_random_and_edge_caps_match_bruteforce(spark):
+    """cap_query (cap covering -> broadcast probe join -> haversine
+    residual) vs numpy brute force: random caps, a cap centred on each
+    pole and one straddling +-180 deg, over uniform points, points around
+    each centre and points at lng = +-180 and the poles.  Points within
+    1e-7 rad of a cap's rim are not graded."""
+    from s2spark.operators.cap_query import cap_query
+
+    rng = np.random.default_rng(8080)
+    caps = {i: (float(np.degrees(np.arcsin(rng.uniform(-1, 1)))),
+                float(rng.uniform(-180, 180)), float(rng.uniform(0.005, 0.6)))
+            for i in range(1, 7)}
+    caps[7] = (90.0, 0.0, 0.2)          # north pole
+    caps[8] = (-90.0, 45.0, 0.05)       # south pole
+    caps[9] = (10.0, 179.5, 0.08)       # straddles the antimeridian
+    lat, lng = _seam_and_random_points(
+        rng, [c[:2] for c in caps.values()],
+        [np.degrees(c[2]) * 1.3 for c in caps.values()])
+    pts = C.with_cell_id(spark.createDataFrame(pd.DataFrame(
+        {"doc_id": np.arange(len(lat)), "lat": lat, "lng": lng})), "lat", "lng")
+    got = cap_query(spark, pts, caps).select(
+        "doc_id", "cap_id", "distance_rad").toPandas()
+    got_dist = {(int(r.doc_id), int(r.cap_id)): r.distance_rad
+                for r in got.itertuples(index=False)}
+
+    p = np.stack(ci.xyz_from_latlng_deg(lat, lng), axis=1)
+    checked = 0
+    for cid, (c_lat, c_lng, radius) in caps.items():
+        c = np.stack(ci.xyz_from_latlng_deg(np.array([c_lat]),
+                                            np.array([c_lng])), axis=1)[0]
+        d = np.arctan2(np.linalg.norm(np.cross(p, c), axis=1), p @ c)
+        grade = np.abs(d - radius) > 1e-7
+        for i in np.nonzero(grade)[0]:
+            assert ((int(i), cid) in got_dist) == bool(d[i] <= radius), \
+                f"cap {cid} point {i} ({lat[i]}, {lng[i]}): d={d[i]:.9f}"
+            if d[i] <= radius:
+                assert abs(got_dist[(int(i), cid)] - d[i]) < 1e-9
+        checked += int(grade.sum())
+        assert (d[grade] <= radius).any(), f"cap {cid} graded no member"
+    assert checked > 25000
+    # the straddling cap holds lat 10 at both signs of lng = 180, and each
+    # polar cap holds its pole
+    assert {(5, 9), (13, 9), (16, 7), (17, 8)} <= set(got_dist)
+
+
+def test_rect_query_random_and_edge_rects_match_bruteforce(spark):
+    """rect_query (RectRegion covering -> broadcast probe join -> lat/lng
+    residual) vs the numpy predicate: random rects (about half wrap the
+    antimeridian), one wrapping rect, one reaching each pole and one
+    polar ring of full longitude, over uniform points, points around each
+    rect and points at lng = +-180 and the poles.  Points within 1e-7 deg
+    of a rect edge are not graded.  A rect of partial longitude that
+    reaches a pole has that pole on its boundary (its meridian edges meet
+    there); in a full-longitude rect the pole is interior and graded."""
+    from s2spark.operators.rect_query import rect_query
+
+    rng = np.random.default_rng(9090)
+    rects = {}
+    for i in range(1, 7):
+        lo, hi = np.sort(rng.uniform(-85, 85, 2))
+        rects[i] = (float(lo), float(rng.uniform(-180, 180)),
+                    float(hi), float(rng.uniform(-180, 180)))
+    rects[7] = (-20.0, 175.0, 20.0, -175.0)    # wraps the antimeridian
+    rects[8] = (60.0, -40.0, 90.0, 40.0)       # lat_hi = 90
+    rects[9] = (-90.0, 100.0, -70.0, 120.0)    # lat_lo = -90
+    rects[10] = (70.0, -180.0, 90.0, 180.0)    # full longitude, lat_hi = 90
+    centers, spread = [], []
+    for lat_lo, lng_lo, lat_hi, lng_hi in rects.values():
+        width = (lng_hi - lng_lo) % 360
+        centers.append(((lat_lo + lat_hi) / 2, lng_lo + width / 2))
+        spread.append(max(lat_hi - lat_lo, width / 2) * 0.7)
+    lat, lng = _seam_and_random_points(rng, centers, spread)
+    pts = C.with_cell_id(spark.createDataFrame(pd.DataFrame(
+        {"doc_id": np.arange(len(lat)), "lat": lat, "lng": lng})), "lat", "lng")
+    got = set(map(tuple, rect_query(spark, pts, rects)
+                  .select("doc_id", "rect_id").toPandas()
+                  .itertuples(index=False)))
+
+    m = 1e-7
+    checked = 0
+    for rid, (lat_lo, lng_lo, lat_hi, lng_hi) in rects.items():
+        lng_in = ((lng >= lng_lo) & (lng <= lng_hi) if lng_lo <= lng_hi
+                  else (lng >= lng_lo) | (lng <= lng_hi))
+        inside = (lat >= lat_lo) & (lat <= lat_hi) & lng_in
+
+        def near_lng(b):
+            return np.abs((lng - b + 180) % 360 - 180) < m
+
+        near = (((np.abs(lat - lat_lo) < m) & (lat_lo > -90))
+                | ((np.abs(lat - lat_hi) < m) & (lat_hi < 90)))
+        if (lng_lo, lng_hi) != (-180.0, 180.0):
+            near |= ((near_lng(lng_lo) | near_lng(lng_hi)) & (np.abs(lat) < 90)
+                     | (lat >= 90 - m) & (lat_hi == 90)
+                     | (lat <= -90 + m) & (lat_lo == -90))
+        for i in np.nonzero(~near)[0]:
+            assert ((int(i), rid) in got) == bool(inside[i]), \
+                f"rect {rid} point {i} ({lat[i]}, {lng[i]})"
+        checked += int((~near).sum())
+        assert inside[~near].any(), f"rect {rid} graded no member"
+    assert checked > 25000
+    # the wrapping rect holds lats -10..10 at both signs of lng = 180, and
+    # the full-longitude polar rect holds lat 75 at both and the north pole
+    assert {(2, 7), (3, 7), (4, 7), (5, 7), (10, 7), (11, 7), (12, 7),
+            (13, 7), (7, 10), (15, 10), (16, 10)} <= got
+
+
+def test_region_operators_accept_no_regions(spark):
+    """An empty region dict gives an empty result with the usual columns
+    and types, for every covering operator with a per-region residual."""
+    from s2spark.operators.cap_query import cap_query
+    from s2spark.operators.distance_ops import (buffered_polygon_join,
+                                                corridor_join)
+    from s2spark.operators.rect_query import rect_query
+
+    pts = C.with_cell_id(spark.createDataFrame(
+        [(1, 10.0, 20.0)], "doc_id long, lat double, lng double"), "lat", "lng")
+    for df, key, dist in [
+            (cap_query(spark, pts, {}), "cap_id", True),
+            (rect_query(spark, pts, {}), "rect_id", False),
+            (buffered_polygon_join(spark, pts, {}, 0.1), "polygon_id", True),
+            (corridor_join(spark, pts, {}, 0.1), "track_id", True)]:
+        assert df.count() == 0, key
+        assert key in df.columns
+        if dist:
+            assert dict(df.dtypes)["distance_rad"] == "double", key

@@ -69,8 +69,8 @@ def test_corridor_join_broadcast_no_python(spark):
 
 
 @pytest.mark.parametrize("query,n_tables", [
-    ("s2_cap_query", 2),        # cap coverings + cap centres
-    ("s2_rect_query", 2),       # rect coverings + rect bounds
+    ("s2_cap_query", 1),        # cap coverings (centres are literals)
+    ("s2_rect_query", 1),       # rect coverings (bounds are literals)
     ("s2_buffered_join", 1),    # buffered covering
     ("s2_corridor_join", 1),    # corridor covering
 ])
@@ -78,10 +78,13 @@ def test_driver_tables_are_local_table_scans(spark, query, n_tables):
     """Driver-built tables are LocalRelations (plans/frames.local_frame).
     A list-built frame is a `Scan ExistingRDD` whose every evaluation runs
     a Python-worker stage; that stage is an RDD, not an SQL node, so the
-    no-Python asserts above cannot see it."""
+    no-Python asserts above cannot see it.  Each covering operator has one
+    shape: one covering table, one broadcast probe join, and the region
+    constants in the residual, never in a second joined table."""
     import __spark_entry__ as entry
     plan = plan_of(entry.queries()[query](spark, SF))
     assert plan.count("LocalTableScan") >= n_tables
+    assert plan.count("BroadcastHashJoin") == 1
     assert "ExistingRDD" not in plan
 
 

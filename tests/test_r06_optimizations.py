@@ -246,29 +246,18 @@ def test_covering_cache_key_covers_every_input(spark):
         lambda: build_coverings({1: _split_polygon(3)}),
         lambda: build_coverings({1: _split_polygon(4)}),           # loop split
         lambda: build_coverings({1: _split_polygon(3, (0, 1))}),   # depth
-        lambda: build_coverings({1: square}, max_cells=8),         # max_cells
         lambda: cap_coverings({1: (0.0, 0.0, 0.01)}),
         lambda: cap_coverings({1: (0.0, 1.0, 0.01)}),              # cap centre
         lambda: cap_coverings({1: (0.0, 0.0, 0.02)}),              # cap radius
-        lambda: cap_coverings({1: (0.0, 0.0, 0.01)}, max_cells=8),
         lambda: rect_coverings({1: (0.0, 0.0, 1.0, 1.0)}),
         lambda: rect_coverings({1: (0.0, 0.0, 1.0, 2.0)}),         # rect
-        lambda: rect_coverings({1: (0.0, 0.0, 1.0, 1.0)}, max_cells=8),
         lambda: distance_ops.buffered_polygon_join(spark, pts, {1: square}, 0.001),
         lambda: distance_ops.buffered_polygon_join(spark, pts, {1: wider}, 0.001),
         lambda: distance_ops.buffered_polygon_join(spark, pts, {1: square}, 0.002),
-        lambda: distance_ops.buffered_polygon_join(
-            spark, pts, {1: square}, 0.001, coverer_max_cells=8),
-        lambda: distance_ops.buffered_polygon_join(
-            spark, pts, {1: square}, 0.001, max_level_diff=3),
         lambda: distance_ops.corridor_join(spark, pts, {1: track}, 0.001),
         lambda: distance_ops.corridor_join(
             spark, pts, {1: [(0.0, 0.0), (1.0, 2.0)]}, 0.001),     # track
         lambda: distance_ops.corridor_join(spark, pts, {1: track}, 0.002),
-        lambda: distance_ops.corridor_join(
-            spark, pts, {1: track}, 0.001, coverer_max_cells=8),
-        lambda: distance_ops.corridor_join(
-            spark, pts, {1: track}, 0.001, max_level_diff=3),
     ]
     covercache._MEMO.clear()
     for i, build in enumerate(variants):

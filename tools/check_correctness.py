@@ -3,8 +3,10 @@
 Runs every __spark_entry__ query in Spark AND its DuckDB oracle on the same
 parquet tables, and grades each with `compare`: row count, column names, and
 an order-insensitive value hash (columns sorted by name, rows sorted, values
-stringified).  A query without an oracle fails.  `tests/test_oracle_grading.py`
-runs the same grade, one test case per query.
+stringified).  A query without an oracle fails.  Session state (cached
+tables, persisted RDDs) is released after every query, so no query reads
+another's cache.  `tests/test_oracle_grading.py` runs the same grade, one
+test case per query.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
@@ -66,7 +68,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry
-    from s2spark.plans.session import build_session
+    from s2spark.plans.session import build_session, release_session_state
 
     spark = build_session(master=f"local[{len(os.sched_getaffinity(0))}]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -89,7 +91,9 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1
             continue
-        dt_spark = time.time() - t0
+        finally:
+            dt_spark = time.time() - t0
+            release_session_state(spark)
         try:
             exp = con.execute(oracles[name]).fetchdf()
         except Exception as e:  # noqa: BLE001

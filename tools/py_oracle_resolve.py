@@ -104,7 +104,7 @@ def main():
 
     import __spark_entry__ as entry
     from s2spark.plans.session import build_session, release_session_state
-    spark = build_session(master="local[32]")
+    spark = build_session()
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
     con = duckdb.connect()

@@ -223,7 +223,7 @@ def refine_group_times(exterior, polygons_df, refine_salt: int,
         t0 = time.thread_time()
         n_kept = 0
         if len(matches) and len(pol):
-            poly = _polygon_from_group(pol)
+            poly = _polygon_from_group(pol.to_dict("records"))
             keep = poly.contains_points(matches["x"].to_numpy(np.float64),
                                         matches["y"].to_numpy(np.float64),
                                         matches["z"].to_numpy(np.float64))
