@@ -12,8 +12,10 @@ of the north_star, implemented over atomic parquet snapshot dirs):
   3. join     x query polygons -> (url, polygon_id)
   4. tiles    level-10 per-polygon tile counts
 
-Each stage appends per-partition lineage rows + tile-skew metrics to the
-audit table under <workdir>/audit.
+Stages 1-3 append per-partition lineage rows (plus the level-6 tile range
+for encode and join) to the audit table under <workdir>/audit; `tiles` is
+not audited.  The rows are taken from the footers of each stage's snapshot
+files and land when the stage commits (see plans/audit.py).
 """
 
 from __future__ import annotations

@@ -131,6 +131,11 @@ class RectRegion:
         r = self.rect
         if r.is_empty:
             return False
+        # A rect reaching a pole holds that pole at every longitude, but its
+        # lat/lng point tests place the pole at lng 0 only: test it directly.
+        for pole_z, reaches in ((1.0, r.lat.hi >= PI / 2), (-1.0, r.lat.lo <= -PI / 2)):
+            if reaches and cell.contains_point(0.0, 0.0, pole_z):
+                return True
         cx, cy, cz = cell.get_center()
         if r.contains_point(cx, cy, cz):
             return True

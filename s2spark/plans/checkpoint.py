@@ -11,22 +11,22 @@ its manifest row is committed, and `resume_or_compute` replays completed
 stages from their current snapshots.  Swapping the io layer for Iceberg
 (`df.writeTo(...).createOrReplace()` + snapshot ids) changes only this file.
 
-Job budget per stage.  A committed stage costs one write job: the row
-count comes from an `Observation` on that write, so nothing reads the
-snapshot back to count it.  An audited stage is evaluated once, by its
-audit job (`audit.partition_metrics` persists the frame), and the write
-reads the cached blocks.  A snapshot read costs no job: the commit
+Job budget per stage.  A committed stage costs one write job, audited or
+not, and caches nothing.  After the write the store reads the parquet
+footers of the part files it wrote, with pyarrow: their `num_rows` sum to
+the row count the manifest records, and they are the statistics an
+audited stage's rows (`audit.partition_metrics`) are taken from, so
+nothing reads the snapshot back.  A snapshot read costs no job: the commit
 records the schema as JSON and every read (resume, post-commit return,
 `read_snapshot`) hands it to the parquet reader instead of inferring it.
 A manifest row committed before the JSON schema was recorded is read with
 inference.
 
-Failure posture.  Cached blocks of a stage that are lost before its write
-(evicted, or on a lost executor) are recomputed from lineage: results stay
-correct and the run is only slower, although a nondeterministic stage may
-then write rows that differ from what its audit counted.  A crash between
-the audit append and the commit leaves audit rows for a stage that has no
-snapshot; the resume recomputes the stage and appends its audit rows again.
+Failure posture.  The audit rows are written after the write job and
+before the manifest commit, so they describe exactly the files that are
+committed.  A crash between the audit append and the commit leaves audit
+rows for a stage that has no snapshot; the resume recomputes the stage and
+appends its audit rows again.
 """
 
 from __future__ import annotations
@@ -36,9 +36,11 @@ import os
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from . import audit
 
 
 class SnapshotStore:
@@ -164,10 +166,11 @@ class SnapshotStore:
         making the stage boundary a true barrier for restarts).
 
         A commit is one write job and no read-back job: the row count is
-        observed during the write, and the returned read uses the recorded
-        schema.  The frame `compute()` returns belongs to this method: it
-        is unpersisted once written, whether or not the write succeeded,
-        which releases the cache `audit.partition_metrics` put on it.
+        the sum of the written footers' `num_rows`, and the returned read
+        uses the recorded schema.  Audits that `compute()` binds with
+        `audit.append_audit(audit.partition_metrics(df, ...), dir)` are
+        written from the same footers before the commit; auditing any
+        frame but the one `compute()` returns raises before the write.
 
         `version` is a STAGE-DEFINITION fingerprint (pipeline version
         string, hash of the stage's semantics — anything that changes when
@@ -183,15 +186,26 @@ class SnapshotStore:
                                 or cur.get("version") == version):
             return self._read(spark, cur)
         path = os.path.join(self.root, f"{stage}-{int(time.time() * 1000)}")
-        df = compute()
-        written = Observation()
-        try:
-            (df.observe(written, F.count(F.lit(1)).alias("n_rows"))
-             .write.mode("overwrite").parquet(path))
-        finally:
-            df.unpersist()
+        with audit.stage_audits() as audits:
+            df = compute()
+        strays = sorted({p.stage for p, _ in audits if p.df is not df})
+        if strays:
+            raise ValueError(
+                f"stage {stage!r}: compute() audited a frame it does not "
+                f"return (audit stages {strays}); audit the returned frame")
+        df.write.mode("overwrite").parquet(path)
+        footers = _part_footers(path)
+        for pending, audit_dir in audits:
+            audit.write_footer_rows(pending, audit_dir, footers)
         schema = df.schema
-        row = self.commit(stage, path, written.get["n_rows"],
+        row = self.commit(stage, path, sum(md.num_rows for _, md in footers),
                           schema=schema.simpleString(), version=version,
                           schema_json=schema.json())
         return self._read(spark, row)
+
+
+def _part_footers(path: str) -> list[tuple[int, pq.FileMetaData]]:
+    """(write task index, parquet footer) of every part file in `path`;
+    Spark names them `part-NNNNN-<job uuid>-cNNN...`."""
+    return [(int(name.split("-")[1]), pq.read_metadata(os.path.join(path, name)))
+            for name in sorted(os.listdir(path)) if name.startswith("part-")]

@@ -411,9 +411,9 @@ def test_rect_query_random_and_edge_rects_match_bruteforce(spark):
     antimeridian), one wrapping rect, one reaching each pole and one
     polar ring of full longitude, over uniform points, points around each
     rect and points at lng = +-180 and the poles.  Points within 1e-7 deg
-    of a rect edge are not graded.  A rect of partial longitude that
-    reaches a pole has that pole on its boundary (its meridian edges meet
-    there); in a full-longitude rect the pole is interior and graded."""
+    of a rect edge are not graded, except at a pole: every pole point
+    encodes to one leaf, which a rect reaching that pole must cover, and
+    the residual then decides by the point's longitude."""
     from s2spark.operators.rect_query import rect_query
 
     rng = np.random.default_rng(9090)
@@ -432,6 +432,10 @@ def test_rect_query_random_and_edge_rects_match_bruteforce(spark):
         centers.append(((lat_lo + lat_hi) / 2, lng_lo + width / 2))
         spread.append(max(lat_hi - lat_lo, width / 2) * 0.7)
     lat, lng = _seam_and_random_points(rng, centers, spread)
+    # the poles at a longitude outside rects 8 and 9, and inside rect 9
+    poles = len(lat)
+    lat = np.append(lat, [90.0, -90.0, -90.0])
+    lng = np.append(lng, [100.0, 110.0, 0.0])
     pts = C.with_cell_id(spark.createDataFrame(pd.DataFrame(
         {"doc_id": np.arange(len(lat)), "lat": lat, "lng": lng})), "lat", "lng")
     got = set(map(tuple, rect_query(spark, pts, rects)
@@ -451,9 +455,7 @@ def test_rect_query_random_and_edge_rects_match_bruteforce(spark):
         near = (((np.abs(lat - lat_lo) < m) & (lat_lo > -90))
                 | ((np.abs(lat - lat_hi) < m) & (lat_hi < 90)))
         if (lng_lo, lng_hi) != (-180.0, 180.0):
-            near |= ((near_lng(lng_lo) | near_lng(lng_hi)) & (np.abs(lat) < 90)
-                     | (lat >= 90 - m) & (lat_hi == 90)
-                     | (lat <= -90 + m) & (lat_lo == -90))
+            near |= (near_lng(lng_lo) | near_lng(lng_hi)) & (np.abs(lat) < 90)
         for i in np.nonzero(~near)[0]:
             assert ((int(i), rid) in got) == bool(inside[i]), \
                 f"rect {rid} point {i} ({lat[i]}, {lng[i]})"
@@ -464,6 +466,11 @@ def test_rect_query_random_and_edge_rects_match_bruteforce(spark):
     # the full-longitude polar rect holds lat 75 at both and the north pole
     assert {(2, 7), (3, 7), (4, 7), (5, 7), (10, 7), (11, 7), (12, 7),
             (13, 7), (7, 10), (15, 10), (16, 10)} <= got
+    # (90, 0) is in the rect (60..90, -40..40) and (90, 100) is not; the
+    # south pole is in (-90..-70, 100..120) at lng 110 and not at lng 0
+    assert (16, 8) in got and (poles, 8) not in got
+    assert (poles + 1, 9) in got and (poles + 2, 9) not in got
+    assert (17, 9) not in got
 
 
 def test_region_operators_accept_no_regions(spark):

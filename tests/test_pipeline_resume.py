@@ -231,6 +231,13 @@ def test_snapshot_time_travel_and_rollback(spark, tmp_path):
     assert [s["snapshot_id"] for s in store.snapshots("stage")] == [1, 2]
 
 
+# Spark jobs of a cold `jobs/spatial_pipeline.run` at 5,000 pages: the mine,
+# encode and join writes take 1, 1 and 2, and the tiles write with the
+# counts and audit read behind the returned stats take 11.  The three stage
+# audits take none.
+COLD_PIPELINE_JOBS = 15
+
+
 def _jobs_during(spark, fn):
     """Run fn() under a fresh job group; return its result and the number
     of Spark jobs it launched."""
@@ -260,6 +267,112 @@ def test_snapshot_commit_and_read_job_budget(spark, tmp_path):
         schema, jobs = _jobs_during(spark, lambda: read().schema)
         assert jobs == 0
         assert schema == out.schema
+
+
+def test_audited_commit_job_budget(spark, tmp_path):
+    """Auditing a stage adds no job to its commit and leaves no persisted
+    RDD: the audit rows come from the written files' footers."""
+    from s2spark.plans.audit import append_audit, partition_metrics
+    from s2spark.plans.checkpoint import SnapshotStore
+
+    jsc = spark.sparkContext._jsc
+    cached_before = set(jsc.getPersistentRDDs().keySet())
+    for name, build, budget in (
+            ("plain", lambda: spark.range(100), 1),
+            ("shuffled", lambda: spark.range(100).repartition(3), 2)):
+        store = SnapshotStore(str(tmp_path / name))
+
+        def audited():
+            df = build()
+            append_audit(partition_metrics(df, name), str(tmp_path / "audit"))
+            return df
+
+        _, bare_jobs = _jobs_during(spark, lambda: store.resume_or_compute(
+            spark, "bare", build))
+        _, audited_jobs = _jobs_during(spark, lambda: store.resume_or_compute(
+            spark, "audited", audited))
+        assert bare_jobs == audited_jobs == budget, name
+        assert set(jsc.getPersistentRDDs().keySet()) <= cached_before
+    audit = spark.read.parquet(str(tmp_path / "audit"))
+    assert {r["stage"]: r["n"] for r in audit.groupBy("stage").agg(
+        F.sum("n_rows").alias("n")).collect()} == {"plain": 100, "shuffled": 100}
+
+
+def test_footer_audit_matches_recount(spark, tmp_path):
+    """A cold pipeline run launches a pinned number of jobs, and each
+    audited stage's rows equal a recount of its snapshot: rows grouped by
+    the part file's task index, with the count and the least and greatest
+    level-6 parent of cell_id per index."""
+    from jobs.spatial_pipeline import run
+    from s2spark.functions import columns as C
+    from s2spark.plans.checkpoint import SnapshotStore
+
+    work = str(tmp_path / "run")
+    _, jobs = _jobs_during(spark, lambda: run(spark, 5000, work))
+    assert jobs == COLD_PIPELINE_JOBS
+    store = SnapshotStore(os.path.join(work, "snapshots"))
+    audit = spark.read.parquet(os.path.join(work, "audit"))
+    assert audit.columns == ["stage", "partition_id", "n_rows", "min_tile",
+                             "max_tile", "audit_ts_ms"]
+    assert dict(audit.dtypes)["partition_id"] == "int"
+    for stage, cell_col in (("mine", None), ("encode", "cell_id"),
+                            ("join", "cell_id")):
+        snap = store.read_snapshot(spark, stage)
+        tile = (C.parent_for_level(F.col(cell_col), 6) if cell_col
+                else F.lit(None).cast("long"))
+        recount = (snap.select(
+            F.regexp_extract(F.input_file_name(), r"part-(\d+)-", 1)
+            .cast("int").alias("partition_id"), tile.alias("tile"))
+            .groupBy("partition_id")
+            .agg(F.count(F.lit(1)).alias("n_rows"),
+                 F.min("tile").alias("min_tile"),
+                 F.max("tile").alias("max_tile")))
+        cols = ["partition_id", "n_rows", "min_tile", "max_tile"]
+        got = sorted(tuple(r) for r in audit.where(F.col("stage") == stage)
+                     .select(cols).collect())
+        assert got == sorted(tuple(r) for r in recount.select(cols).collect())
+        assert len(got) > 1, stage
+
+
+def test_empty_stage_appends_no_audit_rows(spark, tmp_path):
+    """An audited stage with no rows commits and appends no audit row."""
+    from s2spark.plans.audit import append_audit, partition_metrics
+    from s2spark.plans.checkpoint import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    audit_dir = str(tmp_path / "audit")
+
+    def compute():
+        df = spark.range(10).withColumn("cell_id", F.col("id")).where("id < 0")
+        append_audit(partition_metrics(df, "empty", cell_col="cell_id"),
+                     audit_dir)
+        return df
+
+    assert store.resume_or_compute(spark, "empty", compute).count() == 0
+    assert store.snapshots("empty")[0]["n_rows"] == 0
+    assert spark.read.parquet(audit_dir).count() == 0
+
+
+def test_audit_of_another_frame_raises(spark, tmp_path):
+    """Auditing a frame that compute() does not return, or binding a stage
+    audit outside any stage, is an error, never a dropped audit."""
+    from s2spark.plans.audit import append_audit, partition_metrics
+    from s2spark.plans.checkpoint import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "snaps"))
+    audit_dir = str(tmp_path / "audit")
+
+    def compute():
+        df = spark.range(10)
+        append_audit(partition_metrics(df, "s"), audit_dir)
+        return df.select((F.col("id") + 1).alias("id"))
+
+    with pytest.raises(ValueError, match="audited a frame"):
+        store.resume_or_compute(spark, "s", compute)
+    assert store.snapshots("s") == []
+    assert not os.path.exists(audit_dir)
+    with pytest.raises(RuntimeError, match="outside a snapshot stage"):
+        append_audit(partition_metrics(spark.range(1), "s"), audit_dir)
 
 
 def test_legacy_manifest_row_resumes_through_inference(spark, tmp_path):
@@ -304,11 +417,10 @@ def test_deleted_snapshot_dir_raises(spark, tmp_path):
 
 
 def test_audited_stage_is_evaluated_once(spark, tmp_path):
-    """The audit and the snapshot write share one evaluation of the stage:
-    a Python UDF in the stage runs once per row, not once per action, and
-    the commit releases the cache the audit put on the stage.  The UDF
-    filters rows, as the join's refine does, so column pruning cannot drop
-    it from the audit's plan."""
+    """An audited stage is evaluated once, by its snapshot write: a Python
+    UDF in the stage runs once per row, not once per action, and the
+    commit leaves no cache behind.  The UDF filters rows, as the join's
+    refine does, so the row count the audit reports depends on it."""
     from pyspark.sql.types import LongType
 
     from s2spark.plans.audit import append_audit, partition_metrics
