@@ -242,8 +242,8 @@ def _q_edge_crossing_join(spark, sf_dir):
     edges = (_read(spark, sf_dir, "documents").select("doc_id")
              .repartition(spark.sparkContext.defaultParallelism)
              .selectExpr("doc_id AS edge_a", "doc_id AS edge_b", *exprs))
-    # same-object self-join: histogram + cell UDF + explode run ONCE and
-    # the checkpoint is shared between the two join sides (edge_join.py
+    # same-object self-join: the cell UDF + explode run ONCE and the
+    # checkpoint is shared between the two join sides (edge_join.py
     # SELF-JOIN FAST PATH) — passing two renamed copies doubled both
     out = edge_crossing_join(edges, edges)
     return (out.where(F.col("edge_a") < F.col("edge_b"))

@@ -111,10 +111,13 @@ def _encode_sql(lat_col: str, lng_col: str, out: str, keep_xyz: bool) -> str:
             f"{P}lut{idx} & 3 AS {P}bits FROM {P}l{idx})")
         prev = f"{P}r{idx}"
     keep = (f", {P}x AS x, {P}y AS y, {P}z AS z" if keep_xyz else "")
+    # S2LatLng.IsValid: a null, NaN, infinite or off-globe coordinate has
+    # no leaf (NaN compares above every number, so it fails both bounds)
     final = (f"SELECT * EXCEPT({P}x, {P}y, {P}z, {P}face, {P}u, {P}v, "
              f"{P}i, {P}j, {P}n, {P}bits), "
-             f"({P}n - CAST({1 << 62} AS BIGINT)) * 2 + 1 AS `{out}`{keep} "
-             f"FROM {prev}")
+             f"CASE WHEN abs({lat}) <= 90 AND abs({lng}) <= 180 "
+             f"THEN ({P}n - CAST({1 << 62} AS BIGINT)) * 2 + 1 END "
+             f"AS `{out}`{keep} FROM {prev}")
     sql = "WITH " + ",\n".join(ctes) + "\n" + final
     _ENCODE_SQL_CACHE[key] = sql
     return sql

@@ -6,15 +6,12 @@ cross this edge" with ancestor probes + range scans
 (S2EdgeIndex.cs:327-603).  Relationally, per-edge levels map to an
 asymmetric index/probe hash join:
 
-  * LEVEL SET — the per-edge ideal level (MIN_WIDTH.get_max_level of the
-    edge's arc length, S2EdgeIndex.cs:327-366) is quantized onto a
-    BOUNDED set S of at most MAX_LEVELS levels spanning
-    [fit(longest edge), fit(shortest edge)], so the ancestor fan-out per
-    edge stays O(|S|) regardless of length spread.  Each edge snaps DOWN
-    to the finest S-level no finer than its own fit (the coarsest S level
-    is the fit of the longest edge, so a snap level always exists).
+  * FIT LEVEL — each edge's level is its own ideal level,
+    MIN_WIDTH.get_max_level of its arc length (S2EdgeIndex.cs:327-366).
+    It depends on the edge alone, so neither side's cells depend on the
+    other side.
   * INDEX cells — the cells of the 9-cell Moore neighborhood of the
-    edge start's ancestor at the snapped level THAT THE EDGE ACTUALLY
+    edge start's ancestor at the fit level THAT THE EDGE ACTUALLY
     INTERSECTS.  A geodesic no longer than a cell width starting in C
     stays inside C and its ring, so the ring is a superset of the
     intersected cells; each ring cell is then kept only if the edge
@@ -32,8 +29,8 @@ asymmetric index/probe hash join:
     <0.1% of a leaf cell), and cells whose face hemisphere the
     projection cannot safely host fall back to kept.
   * PROBE cells — the index cells plus their ancestors at every coarser
-    S level (deduplicated; coarse ancestors of a 9-ring collapse to 1-4
-    cells).
+    level 0..fit-1 (deduplicated; coarse ancestors of a 9-ring collapse
+    to 1-4 cells), the reference's ancestor probes.
   * JOIN — probe(A) |><| index(B) UNION index(A) |><| ancestors(B) on
     cell equality.  Branch 1 finds every pair with level(b) <= level(a)
     (a's probe set includes ancestors at b's level, and same-level pairs
@@ -65,98 +62,15 @@ from ..kernel import metrics
 from ..kernel.loops import robust_crossing_batch
 
 EDGE_COLS = ("ax", "ay", "az", "bx", "by", "bz")
-# Size of the level set S (module docstring): the per-edge ancestor fan-out.
-MAX_LEVELS = 4
-
-def _edge_angle():
-    # built lazily: Column construction needs a live SparkContext, and
-    # executors import this module to unpickle the cell UDF
-    return F.acos(F.greatest(F.lit(-1.0), F.least(
-        F.lit(1.0),
-        F.col("ax") * F.col("bx") + F.col("ay") * F.col("by")
-        + F.col("az") * F.col("bz"))))
 
 
-def _fit_levels(ax, ay, az, bx, by, bz) -> np.ndarray:
+def _fit_levels(ang: np.ndarray) -> np.ndarray:
     """Vectorized MIN_WIDTH.get_max_level of each edge's arc length
     (the reference's per-edge ideal level, S2EdgeIndex.cs:327-366)."""
-    dot = np.clip(ax * bx + ay * by + az * bz, -1.0, 1.0)
-    ang = np.arccos(dot)
     val = 2.0 * metrics.MIN_WIDTH.deriv / np.maximum(ang, 1e-300)
     exps = np.frexp(val)[1]          # IEEE exponent + 1 == S2.Exp
     lv = np.where(ang <= 0, ci.MAX_LEVEL, exps - 1)
     return np.clip(lv, 0, ci.MAX_LEVEL).astype(np.int64)
-
-
-def _level_set(edges_a: DataFrame, edges_b: DataFrame) -> tuple[int, ...]:
-    """Bounded ascending level set S chosen from the FIT-LEVEL HISTOGRAM.
-
-    Snapping an edge k levels below its fit covers it with cells 2^k
-    wider than needed — collision candidates grow ~4^k — so S must sit
-    where the mass is, not spread evenly over the range (a single
-    near-zero-length edge would otherwise drag a linspace level set away
-    from the bulk).  The histogram is one tiny agg per side (<= 31 rows,
-    independent of row count); the coarsest fit level is always included
-    (every edge needs a snap level <= its fit), and the remaining
-    MAX_LEVELS-1 levels minimize the count-weighted total coarsening
-    sum(cnt[l] * (l - snap(l))) by exhaustive search over present levels
-    (<= C(30, 3) combos, driver-side)."""
-    # fit level as a Column: get_max_level == IEEE_exponent(val) - 1 ==
-    # floor(log2(val)) for dim-1 metrics (metrics.py: Metric.get_max_level)
-    val = 2.0 * metrics.MIN_WIDTH.deriv / F.greatest(_edge_angle(),
-                                                     F.lit(1e-300))
-    lvl = F.greatest(F.lit(0), F.least(F.lit(ci.MAX_LEVEL),
-                                       F.floor(F.log2(val)))).alias("lvl")
-    counts: dict[int, int] = {}
-    max_ang = 0.0
-    # ONE Spark job for both sides (they were two until round 5 — each
-    # re-evaluated its trig-heavy edge subtree and paid job overhead
-    # separately, ~9 s of the flagship query's latency at sf0.1); a
-    # self-join (same DataFrame object both sides) scans once — doubling
-    # its counts would rescale the cost function linearly, leaving the
-    # level-set argmin unchanged
-    per_side = edges_a.select(lvl, _edge_angle().alias("ang"))
-    if edges_b is not edges_a:
-        per_side = per_side.unionByName(
-            edges_b.select(lvl, _edge_angle().alias("ang")))
-    rows = (per_side.groupBy("lvl")
-            .agg(F.count(F.lit(1)).alias("cnt"), F.max("ang").alias("mx"))
-            .collect())
-    for r in rows:
-        counts[int(r["lvl"])] = counts.get(int(r["lvl"]), 0) + int(r["cnt"])
-        max_ang = max(max_ang, float(r["mx"]))
-    if not counts:
-        return (0,)                       # both sides empty
-    # the Column-side floor(log2(...)) above can disagree with the UDF's
-    # exact frexp by one level at power-of-two boundaries; anchor the
-    # coarsest level with the exact computation, inflated one part in
-    # 10^9 so any ULP divergence rounds COARSER (safe: snap level must be
-    # <= every edge's true fit or its 9-ring covering is incomplete)
-    lo_exact = max(0, min(ci.MAX_LEVEL,
-                          metrics.MIN_WIDTH.get_max_level(
-                              max(max_ang, 1e-300) * (1 + 1e-9))))
-    counts.setdefault(lo_exact, 0)
-    present = sorted(counts)
-    lo = min(present)
-    if len(present) <= MAX_LEVELS:
-        return tuple(present)
-
-    def cost(chosen: tuple[int, ...]) -> int:
-        total = 0
-        for lv, cnt in counts.items():
-            snap = max(c for c in chosen if c <= lv)
-            total += cnt * (lv - snap)
-        return total
-
-    from itertools import combinations
-    best, best_cost = (lo,), cost((lo,))
-    for extra in combinations([p for p in present if p != lo],
-                              MAX_LEVELS - 1):
-        ch = (lo,) + extra
-        c = cost(ch)
-        if c < best_cost:
-            best, best_cost = ch, c
-    return tuple(sorted(best))
 
 
 # UV-rect padding for the touch filter: ~1000x the float64 rounding error
@@ -246,82 +160,63 @@ def _cells_touched(cells: np.ndarray, lv: int,
     return keep | (unsafe | hit).reshape(shape)
 
 
-def _edge_cells_udf(levels: tuple[int, ...]):
-    """Pandas UDF: per edge, array of (cell, own) — `own` marks the
-    9-ring at the edge's snapped level (index cells); the rest are
-    ancestors at coarser S levels (probe-only cells)."""
-    lv_arr = np.array(levels, dtype=np.int64)
+# level-0 faces: the own cells of an edge longer than a face (_edge_cells)
+_FACES = [int(c) for c in
+          ci.to_signed(ci.from_face_pos_level(np.arange(6), 0, 0))]
 
-    @F.pandas_udf(ArrayType(StructType([
-        StructField("cell", LongType()), StructField("own", BooleanType())])))
-    def edge_cells(ax: pd.Series, ay: pd.Series, az: pd.Series,
-                   bx: pd.Series, by: pd.Series, bz: pd.Series) -> pd.Series:
-        n = len(ax)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        x, y, z = (s.to_numpy(np.float64) for s in (ax, ay, az))
-        xe, ye, ze = (s.to_numpy(np.float64) for s in (bx, by, bz))
-        fit = _fit_levels(x, y, z, xe, ye, ze)
-        # snap DOWN to the finest S level <= fit; S[0] <= every fit
-        snap_idx = np.maximum(
-            np.searchsorted(lv_arr, fit, side="right") - 1, 0)
-        leaf = ci.from_point(x, y, z)
-        leaf_e = ci.from_point(xe, ye, ze)
-        out = [None] * n
-        # edges LONGER than the level-0 min cell width break the ring
-        # containment guarantee (they clip to fit 0 but can extend past
-        # the start face's Moore ring — e.g. a 160-degree edge reaches
-        # the antipodal face, which is never among the start's
-        # neighbors, silently dropping crossings on it).  Such edges
-        # index ALL six faces as own cells: complete by construction,
-        # and real corpora have vanishingly few >=54-degree edges, so
-        # the extra candidates are noise.
-        # only sound when level 0 is in S, so the other side's probe
-        # ancestors reach the faces; a too-long edge in the histogram
-        # forces the exact coarsest-level anchor to 0, so this holds, and
-        # the gate keeps the ring path should S ever lack level 0
-        dot_se = np.clip(x * xe + y * ye + z * ze, -1.0, 1.0)
-        too_long = (lv_arr[0] == 0) & (
-            np.arccos(dot_se) > 2.0 * metrics.MIN_WIDTH.deriv)
-        if too_long.any():
-            faces6 = ci.to_signed(
-                ci.from_face_pos_level(np.arange(6), 0, 0))
-            row6 = [(int(c), True) for c in faces6]
-            for oi in np.nonzero(too_long)[0]:
-                out[oi] = list(row6)
-            snap_idx = np.where(too_long, -1, snap_idx)  # skip ring path
-        for li in range(len(lv_arr)):
-            m = snap_idx == li
-            if not m.any():
-                continue
-            lv = int(lv_arr[li])
-            parents = ci.parent_for_level(leaf[m], lv)
-            nbrs, valid = ci.get_all_neighbors(parents, lv)
-            cells = np.concatenate([parents[:, None], nbrs], axis=1)
-            vmask = np.concatenate(
-                [np.ones((len(parents), 1), dtype=bool), valid], axis=1)
-            # keep only ring cells the edge actually intersects (module
-            # docstring INDEX cells): everything downstream — own cells,
-            # coarser probe ancestors — derives from the touched set
-            vmask &= _cells_touched(
-                cells, lv, x[m], y[m], z[m], xe[m], ye[m], ze[m],
-                ci.parent_for_level(leaf_e[m], lv))
-            tiers = [cells]
-            for lc in lv_arr[:li]:        # ancestors at coarser S levels
-                tiers.append(ci.parent_for_level(cells.reshape(-1),
-                                                 int(lc)).reshape(cells.shape))
-            signed = [ci.to_signed(t.reshape(-1)).reshape(t.shape)
-                      for t in tiers]
-            for r, oi in enumerate(np.nonzero(m)[0]):
-                vm = vmask[r]
-                row = {int(c): True for c in signed[0][r][vm]}
-                for t in signed[1:]:
-                    for c in t[r][vm]:
-                        row.setdefault(int(c), False)
-                out[oi] = [(c, own) for c, own in row.items()]
-        return pd.Series(out)
 
-    return edge_cells
+@F.pandas_udf(ArrayType(StructType([
+    StructField("cell", LongType()), StructField("own", BooleanType())])))
+def _edge_cells(ax: pd.Series, ay: pd.Series, az: pd.Series,
+                bx: pd.Series, by: pd.Series, bz: pd.Series) -> pd.Series:
+    """Per edge, array of (cell, own): `own` marks the touched cells of
+    the 9-ring at the edge's fit level (index cells); the rest are their
+    ancestors at every coarser level (probe-only cells)."""
+    n = len(ax)
+    if n == 0:
+        return pd.Series([], dtype=object)
+    x, y, z = (s.to_numpy(np.float64) for s in (ax, ay, az))
+    xe, ye, ze = (s.to_numpy(np.float64) for s in (bx, by, bz))
+    ang = np.arccos(np.clip(x * xe + y * ye + z * ze, -1.0, 1.0))
+    fit = _fit_levels(ang)
+    leaf = ci.from_point(x, y, z)
+    leaf_e = ci.from_point(xe, ye, ze)
+    out = [None] * n
+    # edges LONGER than the level-0 min cell width break the ring
+    # containment guarantee (they clip to fit 0 but can extend past the
+    # start face's Moore ring — e.g. a 160-degree edge reaches the
+    # antipodal face, which is never among the start's neighbors, silently
+    # dropping crossings on it).  Such edges index ALL six faces as own
+    # cells: every other edge carries its level-0 ancestor, as an own or a
+    # probe cell, so this is complete by construction, and real corpora
+    # have vanishingly few >=54-degree edges, so the extra candidates are
+    # noise.
+    too_long = ang > 2.0 * metrics.MIN_WIDTH.deriv
+    for oi in np.nonzero(too_long)[0]:
+        out[oi] = [(c, True) for c in _FACES]
+    for lv in np.unique(fit[~too_long]).tolist():
+        m = ~too_long & (fit == lv)
+        parents = ci.parent_for_level(leaf[m], lv)
+        nbrs, valid = ci.get_all_neighbors(parents, lv)
+        cells = np.concatenate([parents[:, None], nbrs], axis=1)
+        vmask = np.concatenate(
+            [np.ones((len(parents), 1), dtype=bool), valid], axis=1)
+        # keep only ring cells the edge actually intersects (module
+        # docstring INDEX cells): everything downstream — own cells,
+        # coarser probe ancestors — derives from the touched set
+        vmask &= _cells_touched(
+            cells, lv, x[m], y[m], z[m], xe[m], ye[m], ze[m],
+            ci.parent_for_level(leaf_e[m], lv))
+        own = ci.to_signed(cells)
+        # (k, lv, 9): each ring cell's ancestor at every level 0..lv-1
+        anc = ci.to_signed(ci.parent_for_level(cells[:, None, :],
+                                               np.arange(lv)[:, None]))
+        for r, oi in enumerate(np.nonzero(m)[0]):
+            vm = vmask[r]
+            out[oi] = ([(c, True) for c in np.unique(own[r][vm]).tolist()]
+                       + [(c, False)
+                          for c in np.unique(anc[r][:, vm]).tolist()])
+    return pd.Series(out)
 
 
 def _candidates(edges_a: DataFrame, edges_b: DataFrame,
@@ -329,14 +224,12 @@ def _candidates(edges_a: DataFrame, edges_b: DataFrame,
     """Distinct candidate (key_a, key_b) pairs with both edges' endpoint
     columns (a_ax..a_bz, b_ax..b_bz), BEFORE the exact refine.
 
-    Constructing this runs one small Spark job (the fit-level histogram
-    in _level_set, both sides in one job): the level set parameterizes
-    the cell UDF.  The cell explode is a LAZY localCheckpoint, so
-    explain()/plan audits on the result run nothing more."""
-    cells_udf = _edge_cells_udf(_level_set(edges_a, edges_b))
+    Constructing this runs no Spark job: each side's cells depend on
+    that side alone, and the cell explode is a LAZY localCheckpoint, so
+    explain()/plan audits on the result run nothing either."""
 
     def keyed(df: DataFrame, keys: list[str]) -> DataFrame:
-        cells = cells_udf(*[F.col(c) for c in EDGE_COLS])
+        cells = _edge_cells(*[F.col(c) for c in EDGE_COLS])
         return df.select(
             *[F.col(k) for k in keys], *[F.col(c) for c in EDGE_COLS],
             F.explode(cells).alias("c")).select(
@@ -369,7 +262,7 @@ def _candidates(edges_a: DataFrame, edges_b: DataFrame,
                  key_b, "b_")
     # probe(A) |><| index(B)  UNION  index(A) |><| ancestors(B): branch 1
     # covers every pair with level(b) <= level(a) (a probes ancestors at
-    # all coarser S levels incl. b's, and same-level own-cells meet
+    # all coarser levels incl. b's, and same-level own-cells meet
     # directly); branch 2 covers the strictly-finer-b remainder through
     # b's NON-own ancestor cells — excluding b's own cells there keeps
     # same-level pairs out of the second branch entirely, so the union
@@ -391,17 +284,16 @@ def edge_crossing_join(edges_a: DataFrame, edges_b: DataFrame,
     (RobustCrossing > 0; S2EdgeUtil.cs:85-123).
 
     Inputs carry unit-vector endpoint columns ax..bz plus a key column.
-    Each edge indexes at its own quantized fitting level (at most
-    MAX_LEVELS distinct levels — see module docstring); the candidates
-    are complete for every edge length, since edges longer than the
-    level-0 min width index all six faces outright.
+    Each edge indexes at its own fitting level and probes every coarser
+    one (see module docstring); the candidates are complete for every
+    edge length, since edges longer than the level-0 min width index all
+    six faces outright.
 
     SELF-JOIN FAST PATH: passing the SAME DataFrame object as both
     `edges_a` and `edges_b` (it must then carry BOTH key columns) runs
-    the fit-level histogram, the cell UDF, and the explode ONCE and
-    shares the checkpoint between the two sides — at sf0.1 this halves
-    the flagship self-join's heavy phase.  Construction runs one small
-    histogram job (see _candidates).
+    the cell UDF and the explode ONCE and shares the checkpoint between
+    the two sides — at sf0.1 this halves the flagship self-join's heavy
+    phase.  Construction runs no Spark job (see _candidates).
     """
     cand = _candidates(edges_a, edges_b, key_a, key_b)
 

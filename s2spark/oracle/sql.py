@@ -78,7 +78,8 @@ ij AS (SELECT uv.*,
        (face::BIGINT << 60) AS n
        FROM uv),
 {_hilbert_round_ctes()},
-encoded AS (SELECT r0.*, ((n - {1 << 62}) * 2 + 1) AS cell_id FROM r0)
+encoded AS (SELECT r0.*, CASE WHEN abs(lat) <= 90 AND abs(lng) <= 180
+             THEN ((n - {1 << 62}) * 2 + 1) END AS cell_id FROM r0)
 """
 
 

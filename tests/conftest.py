@@ -1,5 +1,6 @@
 import math
 import sys
+import uuid
 from pathlib import Path
 
 import numpy as np
@@ -31,3 +32,16 @@ def random_points(rng, n):
     theta = rng.uniform(-math.pi, math.pi, n)
     r = np.sqrt(1 - z * z)
     return r * np.cos(theta), r * np.sin(theta), z
+
+
+def jobs_during(spark, fn):
+    """Run fn() under a fresh job group; return its result and the number
+    of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

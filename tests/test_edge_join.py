@@ -11,7 +11,7 @@ import pytest
 
 from s2spark.kernel import cellid as ci
 from s2spark.kernel.loops import robust_crossing_batch
-from tests.conftest import parse_vertices
+from tests.conftest import jobs_during, parse_vertices
 
 
 @pytest.fixture(scope="module")
@@ -207,10 +207,10 @@ def test_dense_same_level_candidates_tightened(spark):
     df_a = _edges_df(spark, edges, "edge_a")
     df_b = _edges_df(spark, edges, "edge_b")
     n_cand = candidate_pairs(df_a, df_b).count()
-    # empirical (seed-pinned): touched-cell indexing admits 69,114 pairs
+    # empirical (seed-pinned): touched-cell indexing admits 69,110 pairs
     # here; ring-based indexing admits millions (the sf0.1 driver fixture
-    # measured 3,639,612 -> 473,486, a 7.7x cut).  300k keeps margin for
-    # level-set shifts while failing on any regression to ring semantics.
+    # measured 3,639,612 -> 473,486, a 7.7x cut).  300k keeps margin
+    # while failing on any regression to ring semantics.
     assert n_cand < 300_000, f"touch filter regressed: {n_cand} candidates"
 
 
@@ -306,3 +306,134 @@ def test_self_join_fast_path_matches_two_copy_path(spark):
     got = {(int(r["edge_a"]), int(r["edge_b"]))
            for r in edge_crossing_join(both, both).collect()}
     assert got == expect
+
+
+def _xyz(lat, lng) -> np.ndarray:
+    x, y, z = ci.xyz_from_latlng_deg(np.asarray(lat, dtype=np.float64),
+                                     np.asarray(lng, dtype=np.float64))
+    return np.stack([x, y, z], axis=-1)
+
+
+def _unit(v: np.ndarray) -> np.ndarray:
+    return v / np.linalg.norm(v, axis=-1, keepdims=True)
+
+
+def _matrix_edge_families(rng) -> dict:
+    """Edge families for the geometry cells the cell join must survive,
+    each an (n, 2, 3) array of unit-vector endpoints."""
+    fam = {}
+    # the south family is turned 22 degrees so that no two of its arcs
+    # share a great circle with the north family's
+    for name, pole, turn in (("north_pole_fan", 90.0, 0.0),
+                             ("south_pole_fan", -90.0, 22.0)):
+        sgn = np.sign(pole)
+        # meridians ending exactly at the pole, edges through the pole
+        # (same latitude, opposite longitudes), and a ring of chords at
+        # |lat| 87 that crosses both
+        fan_lng = np.arange(12) * 30.0 + 7.0 + turn
+        fan = np.stack([_xyz(np.full(12, 80.0 * sgn), fan_lng),
+                        _xyz(np.full(12, pole), fan_lng)], axis=1)
+        across_lng = np.array([0.0, 50.0, 100.0]) + turn
+        across = np.stack([_xyz(np.full(3, 85.0 * sgn), across_lng),
+                           _xyz(np.full(3, 85.0 * sgn), across_lng + 180.0)],
+                          axis=1)
+        ring_lng = np.arange(24) * 15.0 + 3.0 + turn
+        ring = np.stack([_xyz(np.full(24, 87.0 * sgn), ring_lng),
+                         _xyz(np.full(24, 87.0 * sgn), ring_lng + 15.0)],
+                        axis=1)
+        fam[name] = np.concatenate([fan, across, ring])
+    # antimeridian: edges from lng ~179.6 to ~-179.6 in one latitude band,
+    # plus steep edges staying on either side of +-180
+    lat0 = rng.uniform(10.0, 11.0, 16)
+    lat1 = lat0 + rng.uniform(-0.8, 0.8, 16)
+    flat = np.stack([_xyz(lat0, rng.uniform(179.3, 179.9, 16)),
+                     _xyz(lat1, rng.uniform(-179.9, -179.3, 16))], axis=1)
+    steep_lng = np.array([179.95, -179.95, 180.0, -180.0])
+    steep = np.stack([_xyz(np.full(4, 9.5), steep_lng),
+                      _xyz(np.full(4, 11.5), steep_lng[::-1])], axis=1)
+    fam["antimeridian"] = np.concatenate([flat, steep])
+    # zero length (fit level 30): random points, a pole, a point on an
+    # antimeridian edge's path and one on a ring chord
+    pts = np.concatenate([_unit(rng.normal(size=(6, 3))), _xyz([90.0], [0.0]),
+                          _unit(fam["antimeridian"][:2].sum(axis=1)),
+                          _unit(fam["north_pole_fan"][-1:].sum(axis=1))])
+    fam["zero_length"] = np.stack([pts, pts], axis=1)
+    # shared-endpoint fan: 12 spokes from one hub, crossed by chords
+    hub = _xyz(-33.0, 151.0)
+    bearings = np.radians(np.arange(12) * 30.0 + 4.0)
+    north = _unit(np.array([0.0, 0.0, 1.0]) - hub[2] * hub)
+    east = np.cross(north, hub)
+
+    def at(dist_deg, b):
+        d = math.radians(dist_deg)
+        return (math.cos(d) * hub + math.sin(d)
+                * (np.cos(b)[:, None] * north + np.sin(b)[:, None] * east))
+
+    spokes = np.stack([np.broadcast_to(hub, (12, 3)), at(1.0, bearings)],
+                      axis=1)
+    cb = bearings + math.radians(15.0)
+    chords = np.stack([at(0.5, cb[:6]), at(0.5, cb[:6] + math.radians(40.0))],
+                      axis=1)
+    fam["shared_endpoint"] = np.concatenate([spokes, chords])
+    # near-collinear: a 1e-3 rad base edge, its copy shifted 1e-12 sideways,
+    # and its copy turned 1e-12 about the midpoint (crossing at a tiny angle)
+    near = []
+    for c in _unit(rng.normal(size=(5, 3))):
+        d = _unit(np.cross(c, rng.normal(size=3)))
+        side = np.cross(c, d)
+        base = np.stack([_unit(c - 5e-4 * d), _unit(c + 5e-4 * d)])
+        near += [base,
+                 _unit(base + 1e-12 * side),
+                 np.stack([_unit(c - 5e-4 * d - 1e-12 * side),
+                           _unit(c + 5e-4 * d + 1e-12 * side)])]
+    fam["near_collinear"] = np.stack(near)
+    # longer than a face (> 54 deg): the six-face rule
+    longs = np.empty((10, 2, 3))
+    for i in range(10):
+        p = _unit(rng.normal(size=3))
+        d = _unit(np.cross(p, rng.normal(size=3)))
+        t = math.radians(rng.uniform(55.0, 175.0))
+        longs[i] = [p, math.cos(t) * p + math.sin(t) * d]
+    fam["over_54_deg"] = longs
+    return fam
+
+
+def test_geometry_matrix_edges_match_brute_force(spark):
+    """Pole fans and edges across both poles, antimeridian crossers,
+    zero-length edges, shared-endpoint fans, near-collinear pairs (1e-12
+    offsets) and edges over 54 degrees: the join equals brute force, as a
+    self-join and between two different frames."""
+    from s2spark.operators.edge_join import edge_crossing_join
+    fam = _matrix_edge_families(np.random.default_rng(4242))
+    names = [k for k, v in fam.items() for _ in range(len(v))]
+    edges = np.concatenate(list(fam.values()))
+    expect = _brute_crossings(edges, edges)
+    # every family but the zero-length one takes part in a crossing
+    crossing = {names[i] for pair in expect for i in pair}
+    assert crossing == set(fam) - {"zero_length"}, crossing
+    got = {(int(r["edge_a"]), int(r["edge_b"]))
+           for r in edge_crossing_join(_edges_df(spark, edges, "edge_a"),
+                                       _edges_df(spark, edges, "edge_b")).collect()}
+    assert got == expect
+    half = len(edges) // 2
+    left, right = edges[:half], edges[half:]
+    got = {(int(r["edge_a"]), int(r["edge_b"]))
+           for r in edge_crossing_join(_edges_df(spark, left, "edge_a"),
+                                       _edges_df(spark, right, "edge_b")).collect()}
+    assert got == _brute_crossings(left, right)
+
+
+def test_edge_join_construction_launches_no_job(spark):
+    """Each side's cells depend on that side alone, so building the join
+    (self-join, two frames, or the bare candidates) runs nothing."""
+    from pyspark.sql import functions as F
+    from s2spark.operators.edge_join import candidate_pairs, edge_crossing_join
+    rng = np.random.default_rng(5)
+    a = _edges_df(spark, _hemisphere_plus_short(rng, 40), "edge_a")
+    b = _edges_df(spark, _random_cap_edges(rng, 40, 1e-3, 0.3), "edge_b")
+    both = a.withColumn("edge_b", F.col("edge_a"))
+    for build in (lambda: edge_crossing_join(both, both),
+                  lambda: edge_crossing_join(a, b),
+                  lambda: candidate_pairs(a, b)):
+        _, jobs = jobs_during(spark, build)
+        assert jobs == 0

@@ -492,3 +492,46 @@ def test_region_operators_accept_no_regions(spark):
         assert key in df.columns
         if dist:
             assert dict(df.dtypes)["distance_rad"] == "double", key
+
+
+def test_invalid_coordinates_get_no_cell(spark):
+    """A null, NaN or infinite coordinate, or one off the globe (|lat| > 90
+    or |lng| > 180), has no leaf cell (S2LatLng.IsValid): its cell_id is
+    null, pip, cap and rect return no row for it, and tile_counts puts it
+    under the null tile.  Each region holds (35.26, 45), where the face-2
+    leaf 0x4000000000000001 lies, and the valid point at that spot."""
+    from s2spark.operators.cap_query import cap_query
+    from s2spark.operators.rect_query import rect_query
+    from s2spark.operators.tiling import tile_counts
+
+    nan, inf = float("nan"), float("inf")
+    bad = [(None, 45.0), (nan, 45.0), (inf, 45.0), (-inf, 45.0),
+           (35.26, None), (35.26, nan), (35.26, inf), (35.26, -inf),
+           (91.0, 45.0), (-91.0, 45.0), (35.26, 181.0), (35.26, -181.0),
+           (None, None), (nan, nan)]
+    good = [(35.26, 45.0), (90.0, 180.0), (-90.0, -180.0), (0.0, 0.0)]
+    rows = [(i, lat, lng) for i, (lat, lng) in enumerate(good + bad)]
+    bad_ids = set(range(len(good), len(rows)))
+    raw = spark.createDataFrame(rows, "doc_id long, lat double, lng double")
+    assert raw.where(F.isnan("lat")).count() == 2   # NaN stays NaN, not null
+
+    for pts in (C.with_cell_id(raw, "lat", "lng"), points_with_cells(raw)):
+        cells = {r["doc_id"]: r["cell_id"] for r in pts.collect()}
+        assert {i for i, c in cells.items() if c is None} == bad_ids
+
+    pts = points_with_cells(raw)
+    ring = ", ".join(f"{35.26 + 3 * np.sin(t):.4f}:{45 + 3 * np.cos(t):.4f}"
+                     for t in np.linspace(0, 2 * np.pi, 8, endpoint=False))
+    found = {
+        "pip": spatial_join(spark, pts.select("doc_id", "cell_id", "x", "y",
+                                              "z"), {1: make_polygon(ring)}),
+        "cap": cap_query(spark, pts, {1: (35.26, 45.0, 0.05)}),
+        "rect": rect_query(spark, pts, {1: (30.0, 40.0, 40.0, 50.0)}),
+    }
+    for kind, df in found.items():
+        assert {r["doc_id"] for r in df.select("doc_id").collect()} == {0}, kind
+
+    tiles = {r["tile_id"]: r["n_pages"]
+             for r in tile_counts(pts, 6).collect()}
+    assert tiles.pop(None) == len(bad_ids)
+    assert sum(tiles.values()) == len(good)

@@ -3,10 +3,11 @@
 import json
 import os
 import shutil
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
+
+from tests.conftest import jobs_during
 
 
 @pytest.fixture(scope="module")
@@ -238,33 +239,20 @@ def test_snapshot_time_travel_and_rollback(spark, tmp_path):
 COLD_PIPELINE_JOBS = 15
 
 
-def _jobs_during(spark, fn):
-    """Run fn() under a fresh job group; return its result and the number
-    of Spark jobs it launched."""
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_snapshot_commit_and_read_job_budget(spark, tmp_path):
     """A commit is one write job (no read-back count, no schema inference)
     and a snapshot read launches no job."""
     from s2spark.plans.checkpoint import SnapshotStore
 
     store = SnapshotStore(str(tmp_path / "snaps"))
-    out, jobs = _jobs_during(spark, lambda: store.resume_or_compute(
+    out, jobs = jobs_during(spark, lambda: store.resume_or_compute(
         spark, "s", lambda: spark.range(100).withColumn("sq", F.col("id") ** 2)))
     assert jobs == 1
     assert store.snapshots("s")[0]["n_rows"] == 100
     for read in (lambda: store.read_snapshot(spark, "s"),
                  lambda: store.read_snapshot(spark, "s", snapshot_id=1),
                  lambda: store.resume_or_compute(spark, "s", None)):
-        schema, jobs = _jobs_during(spark, lambda: read().schema)
+        schema, jobs = jobs_during(spark, lambda: read().schema)
         assert jobs == 0
         assert schema == out.schema
 
@@ -287,9 +275,9 @@ def test_audited_commit_job_budget(spark, tmp_path):
             append_audit(partition_metrics(df, name), str(tmp_path / "audit"))
             return df
 
-        _, bare_jobs = _jobs_during(spark, lambda: store.resume_or_compute(
+        _, bare_jobs = jobs_during(spark, lambda: store.resume_or_compute(
             spark, "bare", build))
-        _, audited_jobs = _jobs_during(spark, lambda: store.resume_or_compute(
+        _, audited_jobs = jobs_during(spark, lambda: store.resume_or_compute(
             spark, "audited", audited))
         assert bare_jobs == audited_jobs == budget, name
         assert set(jsc.getPersistentRDDs().keySet()) <= cached_before
@@ -308,7 +296,7 @@ def test_footer_audit_matches_recount(spark, tmp_path):
     from s2spark.plans.checkpoint import SnapshotStore
 
     work = str(tmp_path / "run")
-    _, jobs = _jobs_during(spark, lambda: run(spark, 5000, work))
+    _, jobs = jobs_during(spark, lambda: run(spark, 5000, work))
     assert jobs == COLD_PIPELINE_JOBS
     store = SnapshotStore(os.path.join(work, "snapshots"))
     audit = spark.read.parquet(os.path.join(work, "audit"))
