@@ -109,14 +109,11 @@ class RegionCoverer:
             cont[t] = may[t] and region.contains_cell(cell)
         return may, cont
 
-    def _new_candidate(self, region, cid: int, level: int, interior: bool,
-                       may: bool | None = None, cont: bool | None = None):
+    def _new_candidate(self, cid: int, level: int, interior: bool,
+                       may: bool, cont: bool):
         """Admission: MayIntersect filter; terminal if Contains or level cap
-        (S2RegionCoverer.cs:302-340).  (may, cont) can arrive precomputed
-        from a batched relate call."""
-        if may is None:
-            m, c = self._relate(region, np.array([cid], dtype=np.uint64))
-            may, cont = bool(m[0]), bool(c[0])
+        (S2RegionCoverer.cs:302-340), from a batched relate call's
+        (may, cont)."""
         if not may:
             return None
         is_terminal = False
@@ -131,77 +128,87 @@ class RegionCoverer:
                     is_terminal = True
         return _Candidate(cid, level, is_terminal)
 
-    def _expand_children(self, region, candidate: _Candidate, cid: int,
-                         level: int, num_levels: int, interior: bool) -> int:
-        num_levels -= 1
-        level += 1
-        child_ids = ci.children(np.array([cid], dtype=np.uint64))[0]
-        may, cont = self._relate(region, child_ids)
-        num_terminals = 0
-        for t, child_id in enumerate(child_ids.tolist()):
-            if num_levels > 0:
-                if may[t]:
-                    num_terminals += self._expand_children(
-                        region, candidate, child_id, level, num_levels,
-                        interior)
-                continue
-            child = self._new_candidate(region, child_id, level, interior,
-                                        bool(may[t]), bool(cont[t]))
-            if child is not None:
-                candidate.children.append(child)
-                if child.is_terminal:
-                    num_terminals += 1
+    def _expand_children(self, region, parents: list, interior: bool) -> list[int]:
+        """Give every parent its admitted descendants num_levels below it
+        (S2RegionCoverer.cs:302-340) and return each parent's count of
+        terminal ones.  One batched relate call per level covers all the
+        parents; relate_cells is elementwise and the frontier keeps each
+        parent's cells together and in order, so the cells tested and each
+        parent's children are those of one depth-first expansion per
+        parent."""
+        depth = np.array([1 if p.level < self.min_level else self.level_mod
+                          for p in parents], dtype=np.int64)
+        num_terminals = [0] * len(parents)
+        ids = np.array([p.id for p in parents], dtype=np.uint64)
+        owner = np.arange(len(parents))
+        below = 0
+        while len(ids):
+            below += 1
+            ids = ci.children(ids).reshape(-1)
+            owner = np.repeat(owner, 4)
+            may, cont = self._relate(region, ids)
+            last = depth[owner] == below
+            for t in np.flatnonzero(last).tolist():
+                parent = parents[owner[t]]
+                child = self._new_candidate(int(ids[t]), parent.level + below,
+                                            interior, bool(may[t]),
+                                            bool(cont[t]))
+                if child is not None:
+                    parent.children.append(child)
+                    num_terminals[owner[t]] += child.is_terminal
+            keep = may & ~last
+            ids, owner = ids[keep], owner[keep]
         return num_terminals
 
-    def _add_candidate(self, region, candidate, result, pq, counter, interior: bool):
-        """Add to result, or expand + enqueue (S2RegionCoverer.cs:349-397)."""
-        if candidate is None:
-            return
-        if candidate.is_terminal:
-            result.append(candidate.id)
-            return
-        num_levels = 1 if candidate.level < self.min_level else self.level_mod
-        num_terminals = self._expand_children(region, candidate, candidate.id,
-                                              candidate.level, num_levels,
-                                              interior)
-        n_children = len(candidate.children)
+    def _add_candidates(self, region, candidates: list, result, pq, counter,
+                        interior: bool):
+        """Add each candidate to the result, or expand and enqueue it, in
+        order (S2RegionCoverer.cs:349-397).  All of their children are
+        related at once (_expand_children)."""
+        num_terminals = iter(self._expand_children(
+            region, [c for c in candidates if not c.is_terminal], interior))
         shift = self._max_children_shift
-        if n_children == 0:
-            return
-        if (not interior and num_terminals == (1 << shift)
-                and candidate.level >= self.min_level):
-            # absorb-parent: all children terminal -> add the parent instead
-            candidate.is_terminal = True
-            self._add_candidate(region, candidate, result, pq, counter, interior)
-            return
-        # The reference enqueues -(((level << s) + children) << s + terminals)
-        # into a MAX-heap so the largest, least-intersecting cells refine
-        # first (S2RegionCoverer.cs:385-397).  heapq is a MIN-heap, so we
-        # push the positive key to get the same order.
-        priority = (((candidate.level << shift) + n_children) << shift) + num_terminals
-        heapq.heappush(pq, (priority, next(counter), candidate))
+        for candidate in candidates:
+            if candidate.is_terminal:
+                result.append(candidate.id)
+                continue
+            terminals = next(num_terminals)
+            n_children = len(candidate.children)
+            if n_children == 0:
+                continue
+            if (not interior and terminals == (1 << shift)
+                    and candidate.level >= self.min_level):
+                # absorb-parent: all children terminal -> add the parent instead
+                result.append(candidate.id)
+                continue
+            # The reference enqueues -(((level << s) + children) << s + terminals)
+            # into a MAX-heap so the largest, least-intersecting cells refine
+            # first (S2RegionCoverer.cs:385-397).  heapq is a MIN-heap, so we
+            # push the positive key to get the same order.
+            priority = (((candidate.level << shift) + n_children) << shift) + terminals
+            heapq.heappush(pq, (priority, next(counter), candidate))
 
     def _initial_candidates(self, region, result, pq, counter, interior: bool):
         """Seed with 4 vertex neighbors at the cap-fitting level, else the 6
         faces (S2RegionCoverer.cs:440-478)."""
+        ids, level = np.array(_FACE_CELL_IDS, dtype=np.uint64), 0
         if self.max_cells >= 4:
             cap = region.cap_bound()
-            level = min(metrics.MIN_WIDTH.get_max_level(2 * cap.angle_radians),
-                        min(self.max_level, ci.MAX_LEVEL - 1))
-            if self.level_mod > 1 and level > self.min_level:
-                level -= (level - self.min_level) % self.level_mod
-            if level > 0:
+            fit = min(metrics.MIN_WIDTH.get_max_level(2 * cap.angle_radians),
+                      min(self.max_level, ci.MAX_LEVEL - 1))
+            if self.level_mod > 1 and fit > self.min_level:
+                fit -= (fit - self.min_level) % self.level_mod
+            if fit > 0:
                 leaf = ci.from_point(np.float64(cap.axis[0]), np.float64(cap.axis[1]),
                                      np.float64(cap.axis[2]))
                 nbrs, valid = ci.get_vertex_neighbors(
-                    np.atleast_1d(leaf), np.array([level], dtype=np.int64))
-                for cid in nbrs[0][valid[0]].tolist():
-                    self._add_candidate(region, self._new_candidate(region, cid, level, interior),
-                                        result, pq, counter, interior)
-                return
-        for fid in _FACE_CELL_IDS:
-            self._add_candidate(region, self._new_candidate(region, fid, 0, interior),
-                                result, pq, counter, interior)
+                    np.atleast_1d(leaf), np.array([fit], dtype=np.int64))
+                ids, level = nbrs[0][valid[0]], fit
+        may, cont = self._relate(region, ids)
+        seeds = [self._new_candidate(cid, level, interior, m, c)
+                 for cid, m, c in zip(ids.tolist(), may.tolist(), cont.tolist())]
+        self._add_candidates(region, [c for c in seeds if c is not None],
+                             result, pq, counter, interior)
 
     def _covering_internal(self, region, interior: bool) -> np.ndarray:
         """Main best-first loop (S2RegionCoverer.cs:482-533)."""
@@ -219,13 +226,10 @@ class RegionCoverer:
                     or len(candidate.children) == 1
                     or len(result) + (0 if interior else len(pq)) + len(candidate.children)
                     <= self.max_cells):
-                for child in candidate.children:
-                    self._add_candidate(region, child, result, pq, counter, interior)
-            elif interior:
-                pass
-            else:
-                candidate.is_terminal = True
-                self._add_candidate(region, candidate, result, pq, counter, interior)
+                self._add_candidates(region, candidate.children, result, pq,
+                                     counter, interior)
+            elif not interior:
+                result.append(candidate.id)
         if interior:
             # a budget exhaustion is a PERFORMANCE cliff, not a
             # correctness one: fewer interior cells -> more skin rows ->

@@ -224,9 +224,14 @@ def _candidates(edges_a: DataFrame, edges_b: DataFrame,
     """Distinct candidate (key_a, key_b) pairs with both edges' endpoint
     columns (a_ax..a_bz, b_ax..b_bz), BEFORE the exact refine.
 
-    Constructing this runs no Spark job: each side's cells depend on
-    that side alone, and the cell explode is a LAZY localCheckpoint, so
-    explain()/plan audits on the result run nothing either."""
+    Each side's cells depend on that side alone, and the cell explode is
+    a LAZY localCheckpoint, so on shuffle-free input (a local or parquet
+    frame) constructing this, or explain()/plan audits on the result, runs
+    no Spark job.  A side whose plan holds a shuffle is the exception:
+    under AQE the lazy checkpoint still runs that shuffle at build time,
+    one job per checkpointed side.  Building `s2_edge_crossing_join` at
+    sf0.1 so runs 2 jobs: the parquet schema read, and the `repartition`
+    under its one shared checkpoint."""
 
     def keyed(df: DataFrame, keys: list[str]) -> DataFrame:
         cells = _edge_cells(*[F.col(c) for c in EDGE_COLS])
@@ -244,7 +249,8 @@ def _candidates(edges_a: DataFrame, edges_b: DataFrame,
     # each keyed side feeds BOTH join branches (as probe in one, index in
     # the other): checkpoint once instead of re-running the cell UDF +
     # explode per branch.  LAZY so plan-only consumers (explain, audits)
-    # trigger no jobs; it materializes with the caller's first action and
+    # trigger no jobs beyond an input shuffle (see the docstring); it
+    # materializes with the caller's first action and
     # both branches then read the stored blocks.  Tradeoff: localCheckpoint
     # discards lineage, so losing an executor mid-job (spot nodes, dynamic
     # deallocation) cannot recompute the lost blocks — on such clusters
@@ -293,7 +299,8 @@ def edge_crossing_join(edges_a: DataFrame, edges_b: DataFrame,
     `edges_a` and `edges_b` (it must then carry BOTH key columns) runs
     the cell UDF and the explode ONCE and shares the checkpoint between
     the two sides — at sf0.1 this halves the flagship self-join's heavy
-    phase.  Construction runs no Spark job (see _candidates).
+    phase.  Construction runs no Spark job on shuffle-free input (see
+    _candidates for the shuffled case).
     """
     cand = _candidates(edges_a, edges_b, key_a, key_b)
 

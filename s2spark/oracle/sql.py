@@ -46,6 +46,12 @@ def _hilbert_round_ctes() -> str:
     return ", ".join(parts)
 
 
+# S2LatLng.IsValid, as the engine's encode applies it.  Only valid rows
+# reach the trig (DuckDB raises OutOfRangeException on sin/cos of an
+# infinite value); an invalid row carries nulls through the BIGINT casts
+# and gets a null cell_id, as in the engine.
+_VALID = "abs(lat) <= 90 AND abs(lng) <= 180"
+
 # A reusable CTE chain. Usage:
 #   WITH src AS (<anything producing ... , lat DOUBLE, lng DOUBLE>),
 #   {CELL_ID_FROM_LATLNG_CTES}
@@ -53,9 +59,9 @@ def _hilbert_round_ctes() -> str:
 CELL_ID_FROM_LATLNG_CTES = f"""
 lut AS (SELECT {_LUT_SQL} AS l),
 xyz AS (SELECT src.*,
-        cos(radians(lng)) * cos(radians(lat)) AS px,
-        sin(radians(lng)) * cos(radians(lat)) AS py,
-        sin(radians(lat)) AS pz
+        CASE WHEN {_VALID} THEN cos(radians(lng)) * cos(radians(lat)) END AS px,
+        CASE WHEN {_VALID} THEN sin(radians(lng)) * cos(radians(lat)) END AS py,
+        CASE WHEN {_VALID} THEN sin(radians(lat)) END AS pz
         FROM src),
 fc AS (SELECT xyz.*,
        CASE WHEN abs(px) > abs(py) AND abs(px) > abs(pz) THEN 0
@@ -78,7 +84,7 @@ ij AS (SELECT uv.*,
        (face::BIGINT << 60) AS n
        FROM uv),
 {_hilbert_round_ctes()},
-encoded AS (SELECT r0.*, CASE WHEN abs(lat) <= 90 AND abs(lng) <= 180
+encoded AS (SELECT r0.*, CASE WHEN {_VALID}
              THEN ((n - {1 << 62}) * 2 + 1) END AS cell_id FROM r0)
 """
 

@@ -364,3 +364,30 @@ def test_random_rects_covering_completeness():
                 ok_lng = (plng >= lng_lo - tol) | (plng <= lng_hi + tol)
             assert (ok_lat & ok_lng).all(), (
                 f"trial {trial}: interior-covering cell leaks outside rect")
+
+
+def test_tile_polygon_coverings_batch_their_cell_tests(monkeypatch):
+    """Building the tile pipeline's skin coverings relates each popped
+    candidate's children (and the start cells) in one call, not one call
+    per expanded candidate: 161 relate_cells calls for the three
+    `jobs/spatial_pipeline` polygons, where a per-candidate coverer makes
+    299.  The rows are pinned to the per-candidate coverer's."""
+    import hashlib
+
+    from jobs.spatial_pipeline import QUERY_POLYGONS
+    from s2spark.kernel.loops import Polygon
+    from s2spark.operators.spatial_join import build_coverings
+    from s2spark.plans import covercache
+    from s2spark.sources.fixtures import make_polygon
+
+    calls = []
+    relate = Polygon.relate_cells
+    monkeypatch.setattr(Polygon, "relate_cells",
+                        lambda self, ids: calls.append(len(ids)) or relate(self, ids))
+    monkeypatch.setattr(covercache, "_MEMO", {})
+    polys = {pid: make_polygon(s) for pid, s in QUERY_POLYGONS.items()}
+    rows = build_coverings(polys)
+    assert len(calls) < 200
+    assert hashlib.sha256(repr(sorted(rows.itertuples(
+        index=False, name=None))).encode()).hexdigest() == (
+        "d794fcde7b4bdc5e30e2cdd9184c2515c9b6ce95bf40070af0dbdbac48d2cda6")

@@ -425,7 +425,10 @@ def test_geometry_matrix_edges_match_brute_force(spark):
 
 def test_edge_join_construction_launches_no_job(spark):
     """Each side's cells depend on that side alone, so building the join
-    (self-join, two frames, or the bare candidates) runs nothing."""
+    (self-join, two frames, or the bare candidates) on shuffle-free input
+    runs nothing.  A shuffled input is the exception: under AQE the lazy
+    localCheckpoint of a side still runs that side's shuffle at build
+    time, one job per checkpointed side."""
     from pyspark.sql import functions as F
     from s2spark.operators.edge_join import candidate_pairs, edge_crossing_join
     rng = np.random.default_rng(5)
@@ -437,3 +440,10 @@ def test_edge_join_construction_launches_no_job(spark):
                   lambda: candidate_pairs(a, b)):
         _, jobs = jobs_during(spark, build)
         assert jobs == 0
+    a4, b4 = a.repartition(4), b.repartition(4)
+    both4 = a4.withColumn("edge_b", F.col("edge_a"))
+    for build, n_jobs in ((lambda: edge_crossing_join(both4, both4), 1),
+                          (lambda: edge_crossing_join(a4, b4), 2),
+                          (lambda: candidate_pairs(a4, b4), 2)):
+        _, jobs = jobs_during(spark, build)
+        assert jobs == n_jobs

@@ -535,3 +535,28 @@ def test_invalid_coordinates_get_no_cell(spark):
              for r in tile_counts(pts, 6).collect()}
     assert tiles.pop(None) == len(bad_ids)
     assert sum(tiles.values()) == len(good)
+
+
+def test_oracle_encode_of_invalid_coordinates_agrees(spark):
+    """The DuckDB oracle encode gives a null cell_id for NaN and ±inf in
+    either coordinate, as the engine does, instead of raising on the trig
+    of an infinite value; valid rows get the engine's ids."""
+    import duckdb
+    from s2spark.oracle.sql import encode_query
+
+    nan, inf = float("nan"), float("inf")
+    bad = [(nan, 45.0), (inf, 45.0), (-inf, 45.0),
+           (35.26, nan), (35.26, inf), (35.26, -inf), (inf, -inf)]
+    good = [(35.26, 45.0), (90.0, 180.0), (-90.0, -180.0), (48.8566, 2.3522)]
+    rows = [(i, lat, lng) for i, (lat, lng) in enumerate(good + bad)]
+    values = ", ".join(f"({i}, '{lat!r}'::DOUBLE, '{lng!r}'::DOUBLE)"
+                       for i, lat, lng in rows)
+    oracle = dict(duckdb.sql(encode_query(
+        f"SELECT * FROM (VALUES {values}) t(doc_id, lat, lng)",
+        "SELECT doc_id, cell_id FROM encoded")).fetchall())
+    engine = {r["doc_id"]: r["cell_id"] for r in C.with_cell_id(
+        spark.createDataFrame(rows, "doc_id long, lat double, lng double"),
+        "lat", "lng").collect()}
+    assert {i for i, c in oracle.items() if c is None} == set(
+        range(len(good), len(rows)))
+    assert oracle == engine

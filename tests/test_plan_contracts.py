@@ -145,3 +145,14 @@ def test_edge_crossing_join_plan_shape(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_miner_computes_page_text_and_regex_once(spark):
+    """The coordinate miner runs the page synthesis (one sha2) and the
+    coordinate regex (one regexp_extract) once per row: no predicate is
+    pushed below the projection with those expressions substituted in."""
+    from s2spark.sources.pages import mine_coordinates, synthesize_pages
+    plan = plan_of(mine_coordinates(
+        synthesize_pages(spark, 6000).select("url", "text")))
+    assert plan.count("sha2(") == 1
+    assert plan.count("regexp_extract(") == 1

@@ -87,6 +87,30 @@ def test_text_byte_identity(spark):
     assert joined.count() == 0
 
 
+def test_miner_semantics_on_crafted_text(spark):
+    """The first "lat, lng" pair of a text wins; a text without a pair and
+    an off-globe pair are dropped; the globe's edge is kept; the output
+    columns are the input's plus lat, lng."""
+    texts = [
+        ("u1", "at 12.5000, -3.2500 then 40.0000, 50.0000"),  # first wins
+        ("u2", "no coordinates at all"),
+        ("u3", "at 91.0000, 10.0000"),                        # off the globe
+        ("u4", "at 10.0000, 180.0001"),                       # off the globe
+        ("u5", "edge 90.0000, -180.0000 here"),
+        ("u6", "short 1.25, 2.5000 and -0.0001, 0.0000"),     # 4 decimals only
+    ]
+    mined = mine_coordinates(
+        spark.createDataFrame(texts, "url string, text string"))
+    assert mined.columns == ["url", "text", "lat", "lng"]
+    assert dict(mined.dtypes)["lat"] == dict(mined.dtypes)["lng"] == "double"
+    got = {r["url"]: (r["text"], r["lat"], r["lng"]) for r in mined.collect()}
+    assert got == {
+        "u1": (texts[0][1], 12.5, -3.25),
+        "u5": (texts[4][1], 90.0, -180.0),
+        "u6": (texts[5][1], -0.0001, 0.0),
+    }
+
+
 def test_raster_vector_roundtrip(spark, polygons):
     """vector->raster at level L then raster->vector must normalize back to
     a covering of the same area (supersets collapse to parents)."""

@@ -8,6 +8,11 @@ Checks per query:
   * parquet scans reading all columns when the query projects few
     (ReadSchema with > MAX_SCAN_COLS fields)                   -> FLAG
   * number of Exchanges (shuffles) reported per query
+  * expensive calls (regexp_*, sha2, md5, format_number, split) whose text
+    appears more than once in the executed plan -> REPORTED, never flagged:
+    copies in different operators each run per row, but copies in one
+    projection may share one evaluation, and a second branch may
+    legitimately repeat a call
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """
@@ -16,6 +21,7 @@ from __future__ import annotations
 
 import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, ".")
 
@@ -32,6 +38,21 @@ ALLOW_NESTED = {
     "s2_polyline_length",           # 1 literal polyline
 }
 MAX_SCAN_COLS = 6
+EXPENSIVE_CALL = re.compile(r"\b(?:regexp_\w+|sha2|md5|format_number|split)\(")
+
+
+def repeated_calls(plan: str) -> dict[str, int]:
+    """Each expensive call text (through its closing parenthesis) that
+    appears more than once in `plan`, with its count."""
+    counts = Counter()
+    for m in EXPENSIVE_CALL.finditer(plan):
+        depth = 0
+        for end in range(m.end() - 1, len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        counts[plan[m.start():end + 1]] += 1
+    return {c: n for c, n in counts.items() if n > 1}
 
 
 def audit(sf_dir: str, names=None) -> int:
@@ -58,8 +79,11 @@ def audit(sf_dir: str, names=None) -> int:
         plan = getattr(df, "_s2spark_stream_plan", None)
         streaming = plan is not None
         if plan is None:
+            executed = df._jdf.queryExecution().executedPlan().toString()
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
+        else:
+            executed = plan
         flags = []
         if "BatchEvalPython" in plan:
             flags.append("row-Python UDF (BatchEvalPython)")
@@ -81,6 +105,9 @@ def audit(sf_dir: str, names=None) -> int:
             f"{status:5} {name}: exchanges={n_exchange} arrow_stages={arrow}"
             + (" (streaming plan)" if streaming else "")
             + (f"  [{'; '.join(flags)}]" if flags else ""))
+        for call, n in sorted(repeated_calls(executed).items(),
+                              key=lambda kv: (-kv[1], kv[0])):
+            lines.append(f"      repeated {n}x: {call[:100]}")
     spark.stop()
     sys.stdout.write("\n".join(lines) + "\n")
     sys.stdout.flush()
