@@ -885,9 +885,12 @@ def _q_events_retention(spark, sf_dir):
 
 
 def _q_knn(spark, sf_dir):
-    """Neighbor-ring kNN join: 16 query docs -> 3 nearest other docs."""
+    """Neighbor-ring kNN join: 14 query docs -> 3 nearest other docs."""
     from s2spark.operators.knn import knn_join
-    # cache: the ring-widening loop re-reads both sides once per round
+    # cache: only the data side is re-read per round, but uncached each
+    # round re-evaluates the JVM encode inside its dedup aggregate, whose
+    # generated code then exceeds 64 KB and runs interpreted (sf0.1 on 4
+    # cores, min of 5: 146 s uncached against 0.89 s cached)
     pts = C.with_cell_id(_docs_geo(spark, sf_dir), "lat", "lng").cache()
     # deterministic query subset (a LIMIT would pick arbitrary rows)
     queries_df = (pts.where((F.col("doc_id") % 37 == 0) & (F.col("doc_id") < 500))

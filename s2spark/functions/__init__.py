@@ -1,4 +1,4 @@
-"""Spark-facing S2 functions: pure Column expressions and Arrow-batched UDFs."""
+"""Spark-facing S2 functions: pure JVM Column expressions."""
 
 from .columns import (  # noqa: F401
     cell_contains,

@@ -5,8 +5,10 @@ predicates, kernel/cap.py), broadcast-hash-join points on ancestor keys
 (spatial_join.covering_probe_join), then a pure-JVM haversine residual
 whose cap centres and radii are literals in one CASE chain over cap_id —
 one broadcast table, one join.  Contrast with knn.radius_join, which
-buckets BOTH sides at a fixed level for query-table x data-table joins;
-this operator is for a small literal set of query caps.
+gives every query the same radius: it buckets the data side at the one
+level that radius fixes and probes it with each query's <=4 vertex-
+neighbour cells there, with no covering; this operator covers each cap
+at its own levels, so caps of any radii share one join.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""kNN / fixed-radius neighbor joins via cell-bucket + neighbor-ring expansion.
+"""kNN / fixed-radius neighbor joins via cell buckets and radius doubling.
 
 Reimplements the reference's PointIndex pattern (fixed-radius near-point
 join: hash points to cells at the level where the query disc fits in one
@@ -6,145 +6,135 @@ cell, probe the 4 vertex-neighbor buckets, exact-filter by angle —
 S2PolygonBuilder.cs:593-675) as relational joins:
 
 * level selection: MIN_WIDTH.get_max_level(2r) (S2PolygonBuilder.cs:600-611)
-* probe keys: vertex neighbors of the query's cell at that level (<=4), so
-  every data point within r shares a bucket with the query -> one hash
+* probe keys: vertex neighbors of the query's cell at that level (<=4,
+  ``kernel.cellid.get_vertex_neighbors``, S2CellId.cs:751-803), so every
+  data point within r shares a bucket with the query -> one hash
   equi-join on bucket id
 * exact residual: haversine <= r
 
-kNN runs radius search with ring widening: if a query has < k matches at
-radius r, double r (ring expansion via get_all_neighbors) and retry — here
-expressed as a small driver loop over remaining queries.  Each round is one
-broadcast join plus its eager jobs (two localCheckpoints and an isEmpty
-probe), and those jobs set the cost; perfbench's traced geo_queries kNN
-(seed 1) takes 2 rounds per query.
+The query side is driver-sized, like the regions of every other region
+operator: at most MAX_QUERIES rows, collected once by a bounded collect
+(no job on a LocalRelation; on a distributed frame Spark scans one
+partition, then more: 2 jobs on 4 partitions).  Each
+round computes the probe keys on the driver and ships them as one
+LocalRelation, which the data side joins on its ancestor at the round's
+level; the data side stays distributed.  kNN doubles the radius for the
+queries still short of k and keeps their round state in Python, so a
+round is one broadcast join plus the rank window: 4 Spark jobs under AQE
+(the broadcast, the dedup and rank shuffles, the collect), 3 when nothing
+matches.  Nothing is materialized: the result is a LocalRelation, and
+collecting it runs no job.
 """
 
 from __future__ import annotations
 
 import math
+from collections import defaultdict
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (DoubleType, IntegerType, LongType, StructField,
+                               StructType)
 from pyspark.sql.window import Window
 
 from ..functions import columns as C
-from ..functions.udfs import vertex_neighbors_udf
+from ..kernel import cellid as ci
 from ..kernel import metrics
+from ..plans.frames import local_frame
+
+QUERY_KEY = "query_id"
+DATA_KEY = "data_id"
+# At most 6 probe rows of ~40 B per query: 10^4 queries keep the probe
+# table near 2.4 MB, far under the 10 MB autoBroadcastJoinThreshold.
+MAX_QUERIES = 10_000
+_FACES = tuple(int(c) for c in
+               ci.to_signed(ci.from_face_pos_level(np.arange(6), 0, 0)))
 
 
-def radius_join(queries: DataFrame, data: DataFrame, radius_rad: float,
-                query_key: str = "query_id", data_key: str = "data_id") -> DataFrame:
+def radius_join(queries: DataFrame, data: DataFrame, radius_rad: float) -> DataFrame:
     """All (query, data) pairs within radius_rad (great-circle).
 
-    Both inputs need lat/lng (degrees) + leaf cell_id columns.  Distance is
-    computed as a JVM haversine expression; the join is an equi-join on
-    bucket cells, broadcastable when queries are small.
+    Both inputs need lat/lng (degrees) + leaf cell_id columns; the query
+    side is collected (a LocalRelation's collect runs no job).  A query or
+    data row with a null cell_id (invalid coordinates) matches nothing.
     """
     # Clamp to MaxLevel-1 = 29 (not 30): the vertex-neighbor guarantee needs
     # a level coarser than the leaf, and get_vertex_neighbors at level 30
     # would compute a negative shift (S2PolygonBuilder PointIndex mirrors
     # this with Math.Min(..., S2CellId.MaxLevel - 1)).
     level = min(metrics.MIN_WIDTH.get_max_level(2 * radius_rad), 29)
-    # data side: one bucket per row (its ancestor at `level`)
-    d = data.select(
-        F.col(data_key), F.col("lat").alias("d_lat"), F.col("lng").alias("d_lng"),
-        C.parent_for_level(F.col("cell_id"), level).alias("bucket"))
+    qs = [r for r in queries.select(QUERY_KEY, "lat", "lng", "cell_id").collect()
+          if r["cell_id"] is not None]
     if 2 * radius_rad > metrics.MIN_WIDTH.get_value(0):
         # Planet-scale radius: get_max_level clamps to 0 but no cell at ANY
         # level is wide enough to contain the query disc, so the 4-vertex-
         # neighbor guarantee is void (a disc of radius > ~27 deg can reach
-        # faces that never touch the query's nearest cube vertex — matches
-        # on them were silently dropped).  Probe all six faces: correct by
-        # construction, and the exact haversine filter does the work — the
-        # honest cost of a disc covering a large fraction of the sphere.
-        import numpy as np
-
-        from ..kernel import cellid as ci
-        faces6 = [int(c) for c in
-                  ci.to_signed(ci.from_face_pos_level(np.arange(6), 0, 0))]
-        q = queries.select(
-            F.col(query_key), F.col("lat").alias("q_lat"),
-            F.col("lng").alias("q_lng"),
-            F.explode(F.array(*[F.lit(c) for c in faces6])).alias("bucket"))
+        # faces that never touch the query's nearest cube vertex).  Probe
+        # all six faces: the exact haversine filter does the work.
+        buckets = [_FACES] * len(qs)
     else:
-        # query side: <=4 vertex-neighbor buckets at `level`
-        q = queries.select(
-            F.col(query_key), F.col("lat").alias("q_lat"), F.col("lng").alias("q_lng"),
-            F.explode(vertex_neighbors_udf(F.col("cell_id"), F.lit(level))).alias("bucket"))
+        nbrs, valid = ci.get_vertex_neighbors(
+            ci.to_unsigned(np.array([r["cell_id"] for r in qs], np.int64)), level)
+        buckets = [dict.fromkeys(row[m].tolist())
+                   for row, m in zip(ci.to_signed(nbrs), valid)]
+    s = queries.schema
+    probe = local_frame(
+        queries.sparkSession,
+        [(r[0], r[1], r[2], b) for r, bs in zip(qs, buckets) for b in bs],
+        StructType([StructField(QUERY_KEY, s[QUERY_KEY].dataType),
+                    StructField("q_lat", s["lat"].dataType),
+                    StructField("q_lng", s["lng"].dataType),
+                    StructField("bucket", LongType())]))
+    d = data.select(
+        F.col(DATA_KEY), F.col("lat").alias("d_lat"), F.col("lng").alias("d_lng"),
+        C.parent_for_level(F.col("cell_id"), level).alias("bucket"))
     dist = C.haversine(F.radians(F.col("q_lat")), F.radians(F.col("q_lng")),
                        F.radians(F.col("d_lat")), F.radians(F.col("d_lng")))
-    return (q.join(d, "bucket")
+    return (probe.join(d, "bucket")
             .withColumn("distance_rad", dist)
             .where(F.col("distance_rad") <= radius_rad)
-            .dropDuplicates([query_key, data_key])
+            .dropDuplicates([QUERY_KEY, DATA_KEY])
             .drop("bucket"))
 
 
 def knn_join(queries: DataFrame, data: DataFrame, k: int,
-             initial_radius_rad: float = 0.0025,
-             max_rounds: int | None = None,
-             query_key: str = "query_id", data_key: str = "data_id") -> DataFrame:
-    """k nearest data points per query.
+             initial_radius_rad: float = 0.0025) -> DataFrame:
+    """k nearest data points per query, ranked by (distance_rad, data_id).
 
     Round-doubling radius search: radius r finds all true k-NN whose k-th
-    neighbor is within r; queries with < k matches retry at 2r.  Each round
-    is one bucket join; rows found in earlier rounds are final (a correct
-    k-NN at radius r stays correct at 2r).
-
-    COMPLETENESS: by default the doubling runs until the radius reaches pi
-    (the all-pairs planetary regime), so every query returns min(k, |data|)
-    rows no matter how far its k-th neighbor is — rounds are
-    ceil(log2(pi / initial_radius)) + 1 worst-case, but the loop exits as
-    soon as every query is satisfied (dense data: 2-4 rounds).  A former
-    fixed 6-round default silently returned < k rows for queries whose
-    k-th neighbor sat beyond initial_radius * 32 (caught by the
-    operator-fuzz suite's brute-force oracle).  Pass `max_rounds` to bound
-    the rounds explicitly; queries still short of k then return partial
-    lists, exactly as when data itself has fewer than k points.
+    neighbor is within r; queries with < k matches retry at 2r.  Rows found
+    in earlier rounds are final (a correct k-NN at radius r stays correct
+    at 2r).  The doubling runs until the radius reaches pi, so every query
+    returns min(k, |data|) rows however far its k-th neighbor is; the loop
+    exits as soon as every query has k rows (dense data: 2-4 rounds).  A
+    query with a null cell_id returns no rows.  Raises ValueError above
+    MAX_QUERIES queries.
     """
-    if max_rounds is None:
-        max_rounds = max(1, math.ceil(math.log2(
-            math.pi / max(initial_radius_rad, 1e-12))) + 1)
-    # Round-to-round state stays DISTRIBUTED: the "done" set is a DataFrame
-    # (queries whose max rank reached k), removed from `remaining` by a
-    # broadcast anti-join — no collect() of per-query state on the driver,
-    # so 10^6 query points don't bottleneck there.  Each round's `ranked` is
-    # localCheckpoint'ed so the per-round anti-join lineage stays flat.  The
-    # DATA side — the 100 TB side — stays fully distributed throughout.
-    remaining = queries.localCheckpoint()
-    results = None
-    last_partial = None
+    spark = queries.sparkSession
+    qdf = queries.select(QUERY_KEY, "lat", "lng", "cell_id")
+    qs = qdf.limit(MAX_QUERIES + 1).collect()
+    if len(qs) > MAX_QUERIES:
+        raise ValueError(f"knn_join takes at most {MAX_QUERIES} queries")
+    remaining = [r for r in qs if r["cell_id"] is not None]
+    w = Window.partitionBy(QUERY_KEY).orderBy(F.col("distance_rad").asc(),
+                                              F.col(DATA_KEY).asc())
+    found = []
     radius = initial_radius_rad
-    for _ in range(max_rounds):
-        matched = radius_join(remaining, data, radius, query_key, data_key)
-        w = Window.partitionBy(query_key).orderBy(F.col("distance_rad").asc(),
-                                                  F.col(data_key).asc())
-        ranked = (matched.withColumn("rank", F.row_number().over(w))
+    while remaining:
+        ranked = defaultdict(list)
+        for r in (radius_join(local_frame(spark, remaining, qdf.schema), data, radius)
+                  .withColumn("rank", F.row_number().over(w))
                   .where(F.col("rank") <= k)
-                  .select(query_key, data_key, "distance_rad", "rank")
-                  .localCheckpoint())
-        done_q = (ranked.groupBy(query_key).agg(F.max("rank").alias("n_found"))
-                  .where(F.col("n_found") >= k).select(query_key))
-        done = ranked.join(F.broadcast(done_q), query_key, "semi")
-        results = done if results is None else results.unionByName(done)
-        # partial top-k for queries not yet done (kept in case rounds run out)
-        last_partial = ranked.join(F.broadcast(done_q), query_key, "left_anti")
-        remaining = (remaining.join(F.broadcast(done_q), query_key, "left_anti")
-                     .localCheckpoint())
-        if remaining.limit(1).isEmpty():
-            last_partial = None
-            break
+                  .select(QUERY_KEY, DATA_KEY, "distance_rad", "rank").collect()):
+            ranked[r[0]].append(tuple(r))
+        last = radius >= math.pi
+        found += [row for rows in ranked.values() if last or len(rows) >= k
+                  for row in rows]
+        remaining = [] if last else [q for q in remaining if len(ranked[q[0]]) < k]
         radius *= 2
-    if results is None:
-        results = queries.limit(0).select(F.col(query_key)).withColumns(
-            {data_key: F.lit(None).cast("long"),
-             "distance_rad": F.lit(None).cast("double"),
-             "rank": F.lit(None).cast("int")})
-    if last_partial is not None:
-        # Queries still short of k after max_rounds: return their partial
-        # neighbor lists (matching exact kNN, which returns partial top-k
-        # rows when fewer than k points exist in range) instead of silently
-        # dropping them.
-        results = results.unionByName(
-            last_partial.select(query_key, data_key, "distance_rad", "rank"))
-    return results.select(query_key, data_key, "distance_rad", "rank")
+    return local_frame(spark, found, StructType([
+        StructField(QUERY_KEY, qdf.schema[QUERY_KEY].dataType),
+        StructField(DATA_KEY, data.schema[DATA_KEY].dataType),
+        StructField("distance_rad", DoubleType()),
+        StructField("rank", IntegerType())]))

@@ -537,6 +537,91 @@ def test_invalid_coordinates_get_no_cell(spark):
     assert sum(tiles.values()) == len(good)
 
 
+def _haversine_rows(lat, lng, q_lat, q_lng) -> np.ndarray:
+    """Plain numpy haversine (radians) from one query to every point."""
+    lat_r, lng_r = np.radians(lat), np.radians(lng)
+    qa, qn = np.radians(q_lat), np.radians(q_lng)
+    return 2 * np.arcsin(np.sqrt(np.minimum(1.0, (
+        np.sin((lat_r - qa) / 2) ** 2
+        + np.cos(lat_r) * np.cos(qa) * np.sin((lng_r - qn) / 2) ** 2))))
+
+
+def test_invalid_coordinates_get_no_knn_or_radius_rows(spark):
+    """A query or data point whose coordinates are NaN, infinite or off
+    the globe has a null cell_id and takes part in no kNN or radius pair,
+    also at 3.0 rad, where radius_join probes all six faces instead of the
+    vertex neighbours; the valid points still match brute force."""
+    nan, inf = float("nan"), float("inf")
+    bad = [(nan, 45.0), (inf, 45.0), (-inf, 45.0), (35.26, nan),
+           (35.26, inf), (35.26, -inf), (95.0, 45.0), (-91.0, 45.0),
+           (35.26, 181.0), (35.26, -181.0), (nan, nan)]
+    good = [(35.26, 45.0), (35.3, 45.1), (90.0, 180.0), (-90.0, -180.0),
+            (0.0, 0.0), (10.0, 20.0)]
+    lat, lng = np.array(good + bad).T
+    pts = C.with_cell_id(spark.createDataFrame(pd.DataFrame(
+        {"id": np.arange(len(lat)), "lat": lat, "lng": lng})), "lat", "lng")
+    queries = pts.withColumnRenamed("id", "query_id")
+    data = pts.withColumnRenamed("id", "data_id")
+    g = np.array(good)
+    d = np.array([_haversine_rows(g[:, 0], g[:, 1], a, b) for a, b in good])
+
+    for radius in (0.05, 3.0):
+        got = {(r["query_id"], r["data_id"]) for r in
+               radius_join(queries, data, radius).collect()}
+        expect = {(i, j) for i in range(len(good)) for j in range(len(good))
+                  if d[i, j] <= radius}
+        assert got == expect, f"radius {radius}"
+
+    got = knn_join(queries, data, k=2, initial_radius_rad=0.1).toPandas()
+    assert set(got["query_id"]) == set(range(len(good)))
+    for i in range(len(good)):
+        expect = np.lexsort((np.arange(len(good)), d[i]))[:2].tolist()
+        sub = got[got.query_id == i].sort_values("rank")
+        assert sub["data_id"].tolist() == expect, f"query {i}"
+
+
+def test_knn_poles_antimeridian_cube_corner_matches_bruteforce(spark):
+    """The kNN cells of the geometry matrix: queries exactly at both
+    poles, at lng +-179.99 with data on both sides of the antimeridian,
+    and at the cube corner (35.2643896828, 45), whose closest vertex has 3
+    neighbours (not 4) at every level.  Each query's k nearest, in rank
+    order, equal brute-force haversine with data_id breaking ties."""
+    rng = np.random.default_rng(31)
+    corner = (float(np.degrees(np.arcsin(1 / np.sqrt(3)))), 45.0)
+    east = rng.random(150) < 0.5
+    lat = np.concatenate([rng.uniform(80, 89.99, 150),
+                          rng.uniform(-89.99, -80, 150),
+                          rng.uniform(-5, 5, 150),
+                          corner[0] + rng.uniform(-3, 3, 150),
+                          rng.uniform(-70, 70, 200)])
+    lng = np.concatenate([rng.uniform(-180, 180, 150),
+                          rng.uniform(-180, 180, 150),
+                          np.where(east, rng.uniform(179, 180, 150),
+                                   rng.uniform(-180, -179, 150)),
+                          corner[1] + rng.uniform(-3, 3, 150),
+                          rng.uniform(-180, 180, 200)])
+    ids = np.arange(len(lat))
+    data = C.with_cell_id(spark.createDataFrame(pd.DataFrame(
+        {"data_id": ids, "lat": lat, "lng": lng})), "lat", "lng")
+    qs = [(90.0, 0.0), (-90.0, 0.0), (0.0, 179.99), (0.0, -179.99),
+          (3.0, 179.99), (-3.0, -179.99), corner]
+    queries = C.with_cell_id(spark.createDataFrame(pd.DataFrame(
+        {"query_id": np.arange(len(qs)), "lat": [a for a, _ in qs],
+         "lng": [b for _, b in qs]})), "lat", "lng")
+    leaf = ci.from_latlng_deg(np.array([corner[0]]), np.array([corner[1]]))
+    assert all(ci.get_vertex_neighbors(leaf, lv)[1].sum() == 3
+               for lv in range(30))
+
+    got = knn_join(queries, data, k=5, initial_radius_rad=0.0025).toPandas()
+    for qi, (q_lat, q_lng) in enumerate(qs):
+        d = _haversine_rows(lat, lng, q_lat, q_lng)
+        expect = np.lexsort((ids, d))[:5]
+        sub = got[got.query_id == qi].sort_values("rank")
+        assert sub["data_id"].tolist() == expect.tolist(), f"query {qs[qi]}"
+        assert np.allclose(sub["distance_rad"].to_numpy(), d[expect],
+                           atol=1e-12)
+
+
 def test_oracle_encode_of_invalid_coordinates_agrees(spark):
     """The DuckDB oracle encode gives a null cell_id for NaN and ±inf in
     either coordinate, as the engine does, instead of raising on the trig

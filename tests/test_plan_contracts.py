@@ -156,3 +156,56 @@ def test_miner_computes_page_text_and_regex_once(spark):
         synthesize_pages(spark, 6000).select("url", "text")))
     assert plan.count("sha2(") == 1
     assert plan.count("regexp_extract(") == 1
+
+
+def test_knn_job_budget_and_no_python_boundary(spark, monkeypatch):
+    """A kNN query as the geo benchmark issues it (20k clustered points, 8
+    query points near the clusters, k=5): every round is one broadcast
+    probe join plus the rank window, 4 jobs under AQE (the broadcast, the
+    dedup and rank shuffles, the collect), and collecting the 8-row query
+    side from a 4-partition frame costs 2 (one partition, then the rest).
+    The result is a LocalRelation: collecting it runs no job.  No round
+    crosses the Python boundary."""
+    import numpy as np
+    import pandas as pd
+    from s2spark.functions import columns as C
+    from s2spark.operators import knn
+    from s2spark.plans.frames import local_frame
+    from tests.conftest import jobs_during
+
+    rng = np.random.default_rng(14)
+    centers = np.column_stack([rng.uniform(-55, 55, 6),
+                               rng.uniform(-170, 170, 6)])
+    which = rng.integers(0, 6, 20000)
+    data = C.with_cell_id(spark.createDataFrame(pd.DataFrame({
+        "data_id": np.arange(20000),
+        "lat": np.clip(centers[which, 0] + rng.normal(0, 2.5, 20000), -89, 89),
+        "lng": (centers[which, 1] + rng.normal(0, 2.5, 20000) + 180) % 360
+        - 180})), "lat", "lng").localCheckpoint()
+    q = centers[rng.integers(0, 6, 8)] + rng.normal(0, 0.3, (8, 2))
+    rows = [(i, float(a), float(b)) for i, (a, b) in enumerate(q)]
+    schema = "query_id long, lat double, lng double"
+
+    rounds = []
+    radius_join = knn.radius_join
+
+    def counted(*args):
+        rounds.append(args[2])
+        return radius_join(*args)
+
+    monkeypatch.setattr(knn, "radius_join", counted)
+    for qdf, query_jobs in (
+            (spark.createDataFrame(rows, schema), 2),
+            (local_frame(spark, rows, schema), 0)):
+        rounds.clear()
+        qdf = C.with_cell_id(qdf, "lat", "lng")
+        df, jobs = jobs_during(spark, lambda: knn.knn_join(qdf, data, 5))
+        assert len(rounds) >= 2
+        assert jobs == query_jobs + 4 * len(rounds)
+        got, jobs = jobs_during(spark, df.collect)
+        assert jobs == 0 and len(got) == 8 * 5
+
+    plan = plan_of(knn.radius_join(qdf, data, 0.01))
+    assert "BroadcastHashJoin" in plan
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan

@@ -291,8 +291,7 @@ def test_knn_join_partial_results(spark):
     df = C.with_cell_id(spark.createDataFrame(pdf), "lat", "lng")
     queries = (df.where(F.col("data_id") == 0)
                .select(F.col("data_id").alias("query_id"), "lat", "lng", "cell_id"))
-    got = knn_join(queries, df, k=5, initial_radius_rad=0.01,
-                   max_rounds=3).toPandas()
+    got = knn_join(queries, df, k=5, initial_radius_rad=0.01).toPandas()
     assert set(got["data_id"].tolist()) == {0, 1, 2}
     assert sorted(got["rank"].tolist()) == [1, 2, 3]
 
@@ -387,8 +386,7 @@ def test_knn_doubling_crosses_planet_radius_regime(spark):
         {"data_id": np.arange(6), "lat": lats, "lng": lngs})), "lat", "lng")
     # initial 0.1 rad; rounds: 0.1 0.2 0.4 0.8 1.6 3.2 — crosses the
     # 2r > MIN_WIDTH(0) threshold mid-search and ends covering the sphere
-    got = knn_join(qdf, ddf, k=5, initial_radius_rad=0.1,
-                   max_rounds=6).toPandas()
+    got = knn_join(qdf, ddf, k=5, initial_radius_rad=0.1).toPandas()
     lat_r, lng_r = np.radians(lats), np.radians(lngs)
     for qid, (qlat, qlng) in enumerate(((0.0, 0.0), (5.0, 5.0))):
         qla, qln = math.radians(qlat), math.radians(qlng)

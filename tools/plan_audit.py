@@ -8,6 +8,9 @@ Checks per query:
   * parquet scans reading all columns when the query projects few
     (ReadSchema with > MAX_SCAN_COLS fields)                   -> FLAG
   * number of Exchanges (shuffles) reported per query
+  * Python-boundary nodes of the executed plan (ArrowEvalPython,
+    BatchEvalPython, FlatMapGroupsInPandas, FlatMapCoGroupsInPandas,
+    MapInPandas), with counts -> REPORTED, never flagged
   * expensive calls (regexp_*, sha2, md5, format_number, split) whose text
     appears more than once in the executed plan -> REPORTED, never flagged:
     copies in different operators each run per row, but copies in one
@@ -39,6 +42,8 @@ ALLOW_NESTED = {
 }
 MAX_SCAN_COLS = 6
 EXPENSIVE_CALL = re.compile(r"\b(?:regexp_\w+|sha2|md5|format_number|split)\(")
+PYTHON_NODE = re.compile(r"\b(ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas|"
+                         r"FlatMapCoGroupsInPandas|MapInPandas)\b")
 
 
 def repeated_calls(plan: str) -> dict[str, int]:
@@ -96,13 +101,14 @@ def audit(sf_dir: str, names=None) -> int:
                       if m.count(",") + 1 > MAX_SCAN_COLS]
         if wide_scans:
             flags.append(f"wide scan ({wide_scans[0].count(',') + 1} cols)")
-        arrow = plan.count("ArrowEvalPython") + plan.count("FlatMapGroupsInPandas") \
-            + plan.count("MapInPandas") + plan.count("FlatMapCoGroupsInPandas")
+        python = Counter(PYTHON_NODE.findall(executed))
         status = "FLAG" if flags else "ok"
         if flags:
             bad += 1
         lines.append(
-            f"{status:5} {name}: exchanges={n_exchange} arrow_stages={arrow}"
+            f"{status:5} {name}: exchanges={n_exchange} python=["
+            + ", ".join(f"{node}x{n}" for node, n in sorted(python.items()))
+            + "]"
             + (" (streaming plan)" if streaming else "")
             + (f"  [{'; '.join(flags)}]" if flags else ""))
         for call, n in sorted(repeated_calls(executed).items(),
