@@ -3,16 +3,19 @@
 Everything here compiles into Catalyst expression trees (whole-stage
 codegen, no Python, no Arrow transfer):
 
-* :func:`s2_cell_id` — the FULL lat/lng -> leaf-cell-id Hilbert encode as a
-  Column expression.  The 1024-entry Hilbert lookup table is embedded as an
-  array literal and probed with ``element_at`` (8 unrolled rounds); trig and
-  the quadratic projection are built-in SQL functions.  This keeps the
-  hottest kernel of the whole engine inside Tungsten codegen — measured
-  several times faster than an Arrow pandas UDF at scale, and it lets
-  Catalyst push/prune around it.
+* :func:`with_cell_id` — the FULL lat/lng -> leaf-cell-id Hilbert encode as
+  one SQL query of nested subqueries, one projection per stage (built and
+  analysed in a single spark.sql call).  The 1024-entry Hilbert lookup
+  table is embedded as an array literal and probed with ``element_at`` (8
+  unrolled rounds); trig and the quadratic projection are built-in SQL
+  functions.  This keeps the hottest kernel of the whole engine inside
+  Tungsten codegen — measured several times faster than an Arrow pandas
+  UDF at scale, and it lets Catalyst push/prune around it.
 * parent/range/level/contains — plain bit arithmetic on the biased int64
   representation (see kernel.cellid): sibling-safe because the bias only
-  flips bit 63, which every mask preserves.
+  flips bit 63, which every mask preserves.  :func:`with_probe_cells`
+  takes the ancestors at a whole level set from one exploded literal level
+  array, so its code does not depend on the levels.
 
 Semantics mirror /root/reference/S2Geometry/S2CellId.cs:412-419,875-924
 (encode), :140-260 (topology) — reimplemented, not translated: the
@@ -21,7 +24,7 @@ reference is a per-row C# object walk; this is a relational expression DAG.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel.hilbert import LOOKUP_POS
@@ -46,34 +49,40 @@ _LUT = [int(v) for v in LOOKUP_POS]
 _LUT_SQL = ("CAST(split('" + ",".join(str(v) for v in _LUT)
             + "', ',') AS ARRAY<BIGINT>)")
 _ENCODE_SQL_CACHE: dict[tuple, str] = {}
+# prefix of the temporary columns the expressions here add and drop
+_P = "__s2tmp_"
 
 
 def _encode_sql(lat_col: str, lng_col: str, out: str, keep_xyz: bool) -> str:
     """Full Hilbert-encode as ONE SQL query over a `{src}` placeholder.
 
-    Semantics identical to the previous per-round withColumns chain (same
-    expressions, same evaluation order — verified bit-identical), but the
-    whole encode is a single spark.sql() call: one eager analysis instead of
-    ~25 incremental ones, cutting ~1s of per-query driver fixed cost that
-    doesn't parallelize (it was the measured scaling-efficiency tail).  The
-    per-round CTEs keep the projection barriers that prevent Catalyst's
-    3^8 expression-tree blowup; whole-stage codegen fuses them at runtime.
+    The whole encode is a single spark.sql() call, so it costs one JVM
+    round trip and one analysis instead of ~25 incremental ones.  Each
+    stage is a subquery nested in the FROM of the next, one per projection
+    of the optimized plan (12).  Spark analyses this 2-3x faster than
+    the same projections written as a WITH clause of per-step CTEs, whose
+    substitution and re-analysis dominated, and the optimized plan is the
+    same.  The projections are the barriers that prevent Catalyst's 3^8
+    expression-tree blowup; whole-stage codegen fuses them at runtime.
     """
     key = (lat_col, lng_col, out, keep_xyz)
     if key in _ENCODE_SQL_CACHE:
         return _ENCODE_SQL_CACHE[key]
-    P = "__s2tmp_"
+    P = _P
     lat = f"CAST(`{lat_col}` AS DOUBLE)"
     lng = f"CAST(`{lng_col}` AS DOUBLE)"
-    ctes = [
-        f"{P}s0 AS (SELECT *, cos(radians({lng}))*cos(radians({lat})) AS {P}x, "
-        f"sin(radians({lng}))*cos(radians({lat})) AS {P}y, "
-        f"sin(radians({lat})) AS {P}z FROM {{src}})"]
+
+    def stage(select: str, body: str) -> str:
+        return f"SELECT {select} FROM ({body})"
+
+    sql = (f"SELECT *, cos(radians({lng}))*cos(radians({lat})) AS {P}x, "
+           f"sin(radians({lng}))*cos(radians({lat})) AS {P}y, "
+           f"sin(radians({lat})) AS {P}z FROM {{src}}")
     face = (f"CASE WHEN abs({P}x) > abs({P}y) AND abs({P}x) > abs({P}z) "
             f"THEN (CASE WHEN {P}x < 0 THEN 3 ELSE 0 END) "
             f"WHEN abs({P}y) > abs({P}z) THEN (CASE WHEN {P}y < 0 THEN 4 ELSE 1 END) "
             f"ELSE (CASE WHEN {P}z < 0 THEN 5 ELSE 2 END) END")
-    ctes.append(f"{P}s1 AS (SELECT *, {face} AS {P}face FROM {P}s0)")
+    sql = stage(f"*, {face} AS {P}face", sql)
     u = (f"CASE {P}face WHEN 0 THEN {P}y/{P}x WHEN 1 THEN -{P}x/{P}y "
          f"WHEN 2 THEN -{P}x/{P}z WHEN 3 THEN {P}z/{P}x WHEN 4 THEN {P}z/{P}y "
          f"ELSE -{P}y/{P}z END")
@@ -91,34 +100,40 @@ def _encode_sql(lat_col: str, lng_col: str, out: str, keep_xyz: bool) -> str:
         return (f"least(CAST({2 * m - 1} AS BIGINT), greatest(CAST(0 AS BIGINT), "
                 f"CAST(bround({float(m)!r}D * {e} + {m - 0.5!r}D) AS BIGINT)))")
 
-    ctes.append(
-        f"{P}s2 AS (SELECT *, {st_to_ij(uv_to_st(P + 'u'))} AS {P}i, "
-        f"{st_to_ij(uv_to_st(P + 'v'))} AS {P}j FROM "
-        f"(SELECT *, {u} AS {P}u, {v} AS {P}v FROM {P}s1))")
-    ctes.append(
-        f"{P}s3 AS (SELECT *, CAST({P}face AS BIGINT) & 1 AS {P}bits, "
-        f"shiftleft(CAST({P}face AS BIGINT), 60) AS {P}n FROM {P}s2)")
-    prev = f"{P}s3"
-    for idx, k in enumerate(range(7, -1, -1)):
-        bits_in = (f"({P}bits + shiftleft(shiftright({P}i, {4 * k}) & 15, 6) "
-                   f"+ shiftleft(shiftright({P}j, {4 * k}) & 15, 2))")
-        ctes.append(
-            f"{P}l{idx} AS (SELECT *, CAST(element_at({_LUT_SQL}, "
-            f"CAST({bits_in} + 1 AS INT)) AS BIGINT) AS {P}lut{idx} FROM {prev})")
-        ctes.append(
-            f"{P}r{idx} AS (SELECT * EXCEPT({P}n, {P}bits, {P}lut{idx}), "
-            f"{P}n | shiftleft(shiftright({P}lut{idx}, 2), {8 * k}) AS {P}n, "
-            f"{P}lut{idx} & 3 AS {P}bits FROM {P}l{idx})")
-        prev = f"{P}r{idx}"
+    sql = stage(f"*, {u} AS {P}u, {v} AS {P}v", sql)
+    sql = stage(f"*, {st_to_ij(uv_to_st(P + 'u'))} AS {P}i, "
+                f"{st_to_ij(uv_to_st(P + 'v'))} AS {P}j, "
+                f"CAST({P}face AS BIGINT) & 1 AS {P}bits, "
+                f"shiftleft(CAST({P}face AS BIGINT), 60) AS {P}n", sql)
+
+    def lut(k: int, bits: str) -> str:
+        # Hilbert position (high 8 bits) and orientation (low 2) of round k
+        return (f"CAST(element_at({_LUT_SQL}, CAST(({bits} "
+                f"+ shiftleft(shiftright({P}i, {4 * k}) & 15, 6) "
+                f"+ shiftleft(shiftright({P}j, {4 * k}) & 15, 2)) + 1 AS INT)) "
+                f"AS BIGINT)")
+
+    # 8 LUT rounds, k = 7..0.  Each stage ORs the previous round's position
+    # into n and looks its own round up from the previous orientation; the
+    # output folds in the last two rounds.  These are the projections the
+    # optimizer keeps (CollapseProject leaves exactly these 12), so the
+    # analyser resolves 12 nested levels, not one per round step
+    sql = stage(f"*, {lut(7, P + 'bits')} AS {P}lut0", sql)
+    for idx in range(1, 7):
+        k = 7 - idx
+        sql = stage(f"* EXCEPT({P}n, {P}lut{idx - 1}), "
+                    f"{P}n | shiftleft(shiftright({P}lut{idx - 1}, 2), {8 * (k + 1)}) "
+                    f"AS {P}n, {lut(k, f'({P}lut{idx - 1} & 3)')} AS {P}lut{idx}", sql)
+    n = (f"{P}n | shiftleft(shiftright({P}lut6, 2), 8) "
+         f"| shiftleft(shiftright({lut(0, f'({P}lut6 & 3)')}, 2), 0)")
     keep = (f", {P}x AS x, {P}y AS y, {P}z AS z" if keep_xyz else "")
     # S2LatLng.IsValid: a null, NaN, infinite or off-globe coordinate has
     # no leaf (NaN compares above every number, so it fails both bounds)
-    final = (f"SELECT * EXCEPT({P}x, {P}y, {P}z, {P}face, {P}u, {P}v, "
-             f"{P}i, {P}j, {P}n, {P}bits), "
-             f"CASE WHEN abs({lat}) <= 90 AND abs({lng}) <= 180 "
-             f"THEN ({P}n - CAST({1 << 62} AS BIGINT)) * 2 + 1 END "
-             f"AS `{out}`{keep} FROM {prev}")
-    sql = "WITH " + ",\n".join(ctes) + "\n" + final
+    sql = stage(f"* EXCEPT({P}x, {P}y, {P}z, {P}face, {P}u, {P}v, "
+                f"{P}i, {P}j, {P}n, {P}bits, {P}lut6), "
+                f"CASE WHEN abs({lat}) <= 90 AND abs({lng}) <= 180 "
+                f"THEN (({n}) - CAST({1 << 62} AS BIGINT)) * 2 + 1 END "
+                f"AS `{out}`{keep}", sql)
     _ENCODE_SQL_CACHE[key] = sql
     return sql
 
@@ -161,6 +176,23 @@ def parent_for_level(cell_id: Column, level: int) -> Column:
             .bitwiseOR(F.lit(lsb).cast("long")))
 
 
+def with_probe_cells(df: DataFrame, levels) -> DataFrame:
+    """One row per (row of `df`, level in `levels`) with `probe_cell` the
+    ancestor of the row's leaf `cell_id` at that level (parent_for_level,
+    bias-safe).
+
+    The levels ride as one literal array that is exploded to a column, and
+    each key is derived from that column, so the expression — and the
+    generated code — is the same for every level set, and building it
+    costs a fixed number of JVM calls however many levels there are."""
+    lv = f"{_P}probe_level"
+    lsb = f"shiftleft(1L, {2 * MAX_LEVEL} - 2 * {lv})"
+    levels = ", ".join(str(int(v)) for v in sorted(set(levels)))
+    return (df.selectExpr("*", f"explode(CAST(array({levels}) AS ARRAY<INT>)) AS {lv}")
+            .selectExpr("*", f"(cell_id & -{lsb}) | {lsb} AS probe_cell")
+            .drop(lv))
+
+
 def range_min(cell_id: Column) -> Column:
     return cell_id - (lowest_on_bit(cell_id) - 1)
 
@@ -195,9 +227,12 @@ def cell_level(cell_id: Column) -> Column:
 def cell_token(cell_id: Column) -> Column:
     """Biased id -> reference hex token (<=16 chars, trailing zeros stripped;
     S2CellId.cs:656-679).  unbias via XOR with 2^63 (= flip the sign bit)."""
-    raw_hex = F.lpad(F.hex(cell_id.bitwiseXOR(F.lit(-(1 << 63)).cast("long"))), 16, "0")
+    sentinel = F.lit(-(1 << 63)).cast("long")
+    raw_hex = F.lpad(F.hex(cell_id.bitwiseXOR(sentinel)), 16, "0")
     stripped = F.regexp_replace(F.lower(raw_hex), "0+$", "")
-    return F.when(stripped == "", F.lit("X")).otherwise(stripped)
+    # the unbiased id is 0 (token "X") exactly when the id is Long.MIN_VALUE:
+    # testing the number keeps the regex to one call site
+    return F.when(cell_id == sentinel, F.lit("X")).otherwise(stripped)
 
 
 def haversine(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Column:

@@ -198,28 +198,30 @@ class Cell:
         return a1 + a2
 
 
-def cells_vertices(ids: np.ndarray) -> np.ndarray:
-    """Vectorized cell corners: (n, 4, 3) normalized vertices in CCW order
-    SW, SE, NE, NW (S2Cell.GetVertex batched)."""
+def cells_uv_bounds(ids: np.ndarray) -> tuple[np.ndarray, ...]:
+    """(face, u_lo, u_hi, v_lo, v_hi) of each cell id: one id decode that
+    cells_vertices and cells_contain_points share."""
     ids = np.asarray(ids, dtype=np.uint64)
     face, i, j = ci.to_face_ij_orientation(ids)
     level = ci.level_of(ids)
     size = np.int64(1) << (ci.MAX_LEVEL - level)
-    out = np.empty((len(ids), 4, 3), dtype=np.float64)
-    ij_lo_i = (i & -size) * 2 - MAX_CELL_SIZE
-    ij_lo_j = (j & -size) * 2 - MAX_CELL_SIZE
-    u_lo = _st_to_uv_vec(ij_lo_i / MAX_CELL_SIZE)
-    u_hi = _st_to_uv_vec((ij_lo_i + size * 2) / MAX_CELL_SIZE)
-    v_lo = _st_to_uv_vec(ij_lo_j / MAX_CELL_SIZE)
-    v_hi = _st_to_uv_vec((ij_lo_j + size * 2) / MAX_CELL_SIZE)
-    corners = ((u_lo, v_lo), (u_hi, v_lo), (u_hi, v_hi), (u_lo, v_hi))
-    for k, (u, v) in enumerate(corners):
-        x, y, z = ci.face_uv_to_xyz(face, u, v)
-        n = np.sqrt(x * x + y * y + z * z)
-        out[:, k, 0] = x / n
-        out[:, k, 1] = y / n
-        out[:, k, 2] = z / n
-    return out
+    lo = np.stack(((i & -size) * 2, (j & -size) * 2)) - MAX_CELL_SIZE
+    u_lo, v_lo, u_hi, v_hi = _st_to_uv_vec(
+        np.concatenate((lo, lo + size * 2)) / MAX_CELL_SIZE)
+    return face, u_lo, u_hi, v_lo, v_hi
+
+
+def cells_vertices(ids: np.ndarray, bounds=None) -> np.ndarray:
+    """Vectorized cell corners: (n, 4, 3) normalized vertices in CCW order
+    SW, SE, NE, NW (S2Cell.GetVertex batched).  All four corners go through
+    one (n, 4) projection; `bounds` is cells_uv_bounds(ids) if the caller
+    already has it."""
+    face, u_lo, u_hi, v_lo, v_hi = bounds or cells_uv_bounds(ids)
+    u = np.stack((u_lo, u_hi, u_hi, u_lo), axis=1)
+    v = np.stack((v_lo, v_lo, v_hi, v_hi), axis=1)
+    x, y, z = ci.face_uv_to_xyz(face[:, None], u, v)
+    n = np.sqrt(x * x + y * y + z * z)
+    return np.stack((x / n, y / n, z / n), axis=2)
 
 
 def _st_to_uv_vec(s: np.ndarray) -> np.ndarray:
@@ -227,24 +229,19 @@ def _st_to_uv_vec(s: np.ndarray) -> np.ndarray:
                     (1 / 3.0) * (1 - (1 - s) * (1 - s)))
 
 
-def cells_contain_point(ids: np.ndarray, px: float, py: float, pz: float) -> np.ndarray:
-    """Vectorized S2Cell.Contains(point) over cell-id array (uv-bound test,
-    S2Cell.cs:444-456)."""
-    ids = np.asarray(ids, dtype=np.uint64)
-    face, i, j = ci.to_face_ij_orientation(ids)
-    level = ci.level_of(ids)
-    size = np.int64(1) << (ci.MAX_LEVEL - level)
+def cells_contain_points(ids: np.ndarray, px, py, pz, bounds=None) -> np.ndarray:
+    """Vectorized S2Cell.Contains(point) (uv-bound test, S2Cell.cs:444-456):
+    an (n, m) matrix for n cell ids and m points given as coordinate
+    arrays.  `bounds` is cells_uv_bounds(ids) if the caller already has it."""
+    face, u_lo, u_hi, v_lo, v_hi = bounds or cells_uv_bounds(ids)
+    face = face[:, None]
+    px, py, pz = (np.asarray(c, dtype=np.float64)[None, :] for c in (px, py, pz))
     comp = np.choose(face % 3, [px, py, pz])
     right_side = np.where(face < 3, comp > 0, comp < 0)
     with np.errstate(divide="ignore", invalid="ignore"):
-        u, v = ci.valid_face_xyz_to_uv(face, np.float64(px), np.float64(py), np.float64(pz))
-    ij_lo_i = (i & -size) * 2 - MAX_CELL_SIZE
-    ij_lo_j = (j & -size) * 2 - MAX_CELL_SIZE
-    u_lo = _st_to_uv_vec(ij_lo_i / MAX_CELL_SIZE)
-    u_hi = _st_to_uv_vec((ij_lo_i + size * 2) / MAX_CELL_SIZE)
-    v_lo = _st_to_uv_vec(ij_lo_j / MAX_CELL_SIZE)
-    v_hi = _st_to_uv_vec((ij_lo_j + size * 2) / MAX_CELL_SIZE)
-    return right_side & (u >= u_lo) & (u <= u_hi) & (v >= v_lo) & (v <= v_hi)
+        u, v = ci.valid_face_xyz_to_uv(face, px, py, pz)
+    return (right_side & (u >= u_lo[:, None]) & (u <= u_hi[:, None])
+            & (v >= v_lo[:, None]) & (v <= v_hi[:, None]))
 
 
 def _get_u_norm(face: int, u: float) -> tuple[float, float, float]:

@@ -91,18 +91,15 @@ def xyz_to_face(x, y, z):
 
 
 def valid_face_xyz_to_uv(face, x, y, z):
-    """(face,xyz) -> (u,v), assumes p on the +face side. S2Projections.cs:296-329."""
+    """(face,xyz) -> (u,v), assumes p on the +face side. S2Projections.cs:296-329.
+
+    Every face's formula is evaluated and np.choose picks per element (one
+    C call; mode="clip" sends an invalid face 6/7 to face 5's formula)."""
     with np.errstate(divide="ignore", invalid="ignore"):
-        u = np.select(
-            [face == 0, face == 1, face == 2, face == 3, face == 4],
-            [y / x, -x / y, -x / z, z / x, z / y],
-            default=-y / z,
-        )
-        v = np.select(
-            [face == 0, face == 1, face == 2, face == 3, face == 4],
-            [z / x, z / y, -y / z, y / x, -x / y],
-            default=-x / z,
-        )
+        u = np.choose(face, [y / x, -x / y, -x / z, z / x, z / y, -y / z],
+                      mode="clip")
+        v = np.choose(face, [z / x, z / y, -y / z, y / x, -x / y, -x / z],
+                      mode="clip")
     return u, v
 
 
@@ -111,12 +108,9 @@ def face_uv_to_xyz(face, u, v):
     u = np.asarray(u, dtype=np.float64)
     v = np.asarray(v, dtype=np.float64)
     one = np.ones_like(u)
-    x = np.select([face == 0, face == 1, face == 2, face == 3, face == 4],
-                  [one, -u, -u, -one, v], default=v)
-    y = np.select([face == 0, face == 1, face == 2, face == 3, face == 4],
-                  [u, one, -v, -v, -one], default=u)
-    z = np.select([face == 0, face == 1, face == 2, face == 3, face == 4],
-                  [v, v, one, -u, -u], default=-one)
+    x = np.choose(face, [one, -u, -u, -one, v, v], mode="clip")
+    y = np.choose(face, [u, one, -v, -v, -one, u], mode="clip")
+    z = np.choose(face, [v, v, one, -u, -u, -one], mode="clip")
     return x, y, z
 
 
@@ -148,21 +142,28 @@ def from_face_ij(face, i, j):
     return n * _U(2) + _ONE
 
 
+# the 8 decode rounds, most significant first: where each round's 8 (first
+# round: 4) position bits sit in the id, and where its 4 (2) bits of i, j go
+_IJ_SHIFT = np.array([k * 8 + 1 for k in range(7, -1, -1)], dtype=np.uint64)
+_IJ_MASK = np.array([(1 << 4) - 1] + [(1 << 8) - 1] * 7, dtype=np.uint64)
+_IJ_PLACE = np.array([k * 4 for k in range(7, -1, -1)], dtype=np.int64)
+
+
 def to_face_ij_orientation(ids, want_orientation: bool = False):
-    """id -> (face, i, j[, orientation]) of the leaf cell nearest the center."""
+    """id -> (face, i, j[, orientation]) of the leaf cell nearest the center.
+
+    Only the lookup chain is sequential: every round's position bits are
+    cut out at once, and i and j are assembled from all rounds at the end."""
     ids = np.asarray(ids, dtype=np.uint64)
     face = (ids >> _U(POS_BITS)).astype(np.int64)
+    chunks = ((ids[..., None] >> _IJ_SHIFT) & _IJ_MASK).astype(np.int64) << 2
+    rounds = np.empty(chunks.shape, dtype=np.int64)
     bits = face & SWAP_MASK
-    i = np.zeros(ids.shape, dtype=np.int64)
-    j = np.zeros(ids.shape, dtype=np.int64)
-    for k in range(7, -1, -1):
-        nbits = MAX_LEVEL - 7 * 4 if k == 7 else 4  # 2 on the first round
-        chunk = ((ids >> _U(k * 8 + 1)) & _U((1 << (2 * nbits)) - 1)).astype(np.int64)
-        bits = bits + (chunk << 2)
-        bits = LOOKUP_IJ[bits]
-        i = i + ((bits >> 6) << (k * 4))
-        j = j + (((bits >> 2) & 15) << (k * 4))
-        bits = bits & (SWAP_MASK | INVERT_MASK)
+    for r in range(8):
+        rounds[..., r] = LOOKUP_IJ[bits + chunks[..., r]]
+        bits = rounds[..., r] & (SWAP_MASK | INVERT_MASK)
+    i = ((rounds >> 6) << _IJ_PLACE).sum(axis=-1)
+    j = (((rounds >> 2) & 15) << _IJ_PLACE).sum(axis=-1)
     if not want_orientation:
         return face, i, j
     # suffix "00" repetitions flip the swap bit (S2CellId.cs:985-1005)

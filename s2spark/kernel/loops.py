@@ -74,6 +74,43 @@ def robust_crossing_batch(ax, ay, az, bx, by, bz, cx, cy, cz, dx, dy, dz):
     return out
 
 
+def edges_cross_cells(a0: np.ndarray, a1: np.ndarray, cv: np.ndarray) -> np.ndarray:
+    """For each cell with corners `cv` ((n, 4, 3), cells_vertices), whether
+    any edge a0[e] -> a1[e] ((m, 3) each) crosses a cell edge or touches it
+    (RobustCrossing >= 0): every edge meets every cell edge in one
+    broadcast (m, 4n) crossing test."""
+    n = len(cv)
+    b0 = cv.reshape(n * 4, 3).T[:, None, :]                 # (3,1,4n)
+    b1 = cv[:, [1, 2, 3, 0], :].reshape(n * 4, 3).T[:, None, :]
+    rc = robust_crossing_batch(*a0.T[:, :, None], *a1.T[:, :, None], *b0, *b1)
+    return (rc.reshape(len(a0), n, 4) >= 0).any(axis=(0, 2))
+
+
+def relate_cells(ids: np.ndarray, loops: list, contains_points
+                 ) -> tuple[np.ndarray, np.ndarray]:
+    """Batched (may_intersect, contains) of the cells `ids` against the
+    region bounded by `loops`, whose point test is `contains_points`.
+
+    A cell may intersect the region if an edge of any loop crosses a cell
+    edge, a cell corner is inside, or a loop's first vertex is in the
+    cell; it is contained if no edge crosses, every corner is inside and
+    no first vertex is in the cell.  The ids are decoded once."""
+    from .cell import cells_contain_points, cells_uv_bounds, cells_vertices
+    ids = np.asarray(ids, dtype=np.uint64)
+    bounds = cells_uv_bounds(ids)
+    cv = cells_vertices(ids, bounds)                        # (n,4,3)
+    a0, a1 = zip(*(lp._edges() for lp in loops))
+    crossing_any = edges_cross_cells(np.concatenate(a0), np.concatenate(a1), cv)
+    corners = cv.reshape(-1, 3)
+    inside = contains_points(corners[:, 0], corners[:, 1],
+                             corners[:, 2]).reshape(len(ids), 4)
+    first = np.array([lp.vertices[0] for lp in loops])
+    v0_in_cell = cells_contain_points(ids, *first.T, bounds=bounds).any(axis=1)
+    may = crossing_any | inside.any(axis=1) | v0_in_cell
+    contains = ~crossing_any & inside.all(axis=1) & ~v0_in_cell
+    return may, contains
+
+
 def _occw(a, b, c, o) -> bool:
     return bool(sphere.ordered_ccw(
         np.float64(a[0]), np.float64(a[1]), np.float64(a[2]),
@@ -431,29 +468,7 @@ class Loop:
         """Batched (may_intersect, contains) for an array of cell ids — one
         vectorized pass instead of per-cell Cell construction (the coverer's
         hot path; same conservative semantics as the scalar predicates)."""
-        from .cell import cells_contain_point, cells_vertices
-        ids = np.asarray(ids, dtype=np.uint64)
-        n = len(ids)
-        cv = cells_vertices(ids)                      # (n,4,3)
-        ce0 = cv.reshape(n * 4, 3)
-        ce1 = cv[:, [1, 2, 3, 0], :].reshape(n * 4, 3)
-        a0, a1 = self._edges()                        # (m,3) each
-        m = len(a0)
-        A0 = np.repeat(a0, n * 4, axis=0)
-        A1 = np.repeat(a1, n * 4, axis=0)
-        B0 = np.tile(ce0, (m, 1))
-        B1 = np.tile(ce1, (m, 1))
-        rc = robust_crossing_batch(
-            A0[:, 0], A0[:, 1], A0[:, 2], A1[:, 0], A1[:, 1], A1[:, 2],
-            B0[:, 0], B0[:, 1], B0[:, 2], B1[:, 0], B1[:, 1], B1[:, 2])
-        crossing_any = (rc.reshape(m, n, 4) >= 0).any(axis=(0, 2))
-        flat = cv.reshape(n * 4, 3)
-        inside = self.contains_points(flat[:, 0], flat[:, 1], flat[:, 2]).reshape(n, 4)
-        v0 = self.vertex(0)
-        v0_in_cell = cells_contain_point(ids, *v0)
-        may = crossing_any | inside.any(axis=1) | v0_in_cell
-        contains = ~crossing_any & inside.all(axis=1) & ~v0_in_cell
-        return may, contains
+        return relate_cells(ids, [self], self.contains_points)
 
     def cap_bound(self):
         from .cap import Cap
@@ -658,31 +673,7 @@ class Polygon:
 
     def relate_cells(self, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Batched (may_intersect, contains) across all loops."""
-        from .cell import cells_contain_point, cells_vertices
-        ids = np.asarray(ids, dtype=np.uint64)
-        n = len(ids)
-        cv = cells_vertices(ids)
-        flat = cv.reshape(n * 4, 3)
-        inside = self.contains_points(flat[:, 0], flat[:, 1], flat[:, 2]).reshape(n, 4)
-        crossing_any = np.zeros(n, dtype=bool)
-        v0_in_cell = np.zeros(n, dtype=bool)
-        ce0 = cv.reshape(n * 4, 3)
-        ce1 = cv[:, [1, 2, 3, 0], :].reshape(n * 4, 3)
-        for lp in self.loops:
-            a0, a1 = lp._edges()
-            m = len(a0)
-            A0 = np.repeat(a0, n * 4, axis=0)
-            A1 = np.repeat(a1, n * 4, axis=0)
-            B0 = np.tile(ce0, (m, 1))
-            B1 = np.tile(ce1, (m, 1))
-            rc = robust_crossing_batch(
-                A0[:, 0], A0[:, 1], A0[:, 2], A1[:, 0], A1[:, 1], A1[:, 2],
-                B0[:, 0], B0[:, 1], B0[:, 2], B1[:, 0], B1[:, 1], B1[:, 2])
-            crossing_any |= (rc.reshape(m, n, 4) >= 0).any(axis=(0, 2))
-            v0_in_cell |= cells_contain_point(ids, *lp.vertex(0))
-        may = crossing_any | inside.any(axis=1) | v0_in_cell
-        contains = ~crossing_any & inside.all(axis=1) & ~v0_in_cell
-        return may, contains
+        return relate_cells(ids, self.loops, self.contains_points)
 
     def cap_bound(self):
         from .cap import Cap

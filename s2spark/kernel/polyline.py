@@ -12,9 +12,9 @@ from __future__ import annotations
 import numpy as np
 
 from . import sphere
-from .cell import Cell, cells_contain_point, cells_vertices
+from .cell import Cell, cells_contain_points, cells_uv_bounds, cells_vertices
 from .intervals import LatLngRect, RectBounder
-from .loops import robust_crossing_batch
+from .loops import edges_cross_cells
 
 
 class Polyline:
@@ -137,21 +137,17 @@ class Polyline:
         return False
 
     def may_intersect_cell(self, cell: Cell) -> bool:
-        """Vertex-in-cell or edge-crosses-cell-edge (S2Polyline.cs:125-161)."""
-        ids = np.array([cell.id], dtype=np.uint64)
-        for p in self.vertices:
-            if bool(cells_contain_point(ids, float(p[0]), float(p[1]), float(p[2]))[0]):
-                return True
-        cv = cells_vertices(ids)[0]
-        cv1 = cv[[1, 2, 3, 0]]
-        a0 = self.vertices[:-1]
-        a1 = self.vertices[1:]
-        m = len(a0)
-        A0 = np.repeat(a0, 4, axis=0)
-        A1 = np.repeat(a1, 4, axis=0)
-        B0 = np.tile(cv, (m, 1))
-        B1 = np.tile(cv1, (m, 1))
-        rc = robust_crossing_batch(
-            A0[:, 0], A0[:, 1], A0[:, 2], A1[:, 0], A1[:, 1], A1[:, 2],
-            B0[:, 0], B0[:, 1], B0[:, 2], B1[:, 0], B1[:, 1], B1[:, 2])
-        return bool(np.any(rc >= 0))
+        """Vertex-in-cell or edge-crosses-cell-edge (S2Polyline.cs:125-161);
+        delegates to the batched predicate."""
+        return bool(self.relate_cells(np.array([cell.id], dtype=np.uint64))[0][0])
+
+    def relate_cells(self, ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Batched (may_intersect, contains) for an array of cell ids: a cell
+        may intersect if a vertex lies in it or an edge crosses one of its
+        edges; no cell is contained."""
+        ids = np.asarray(ids, dtype=np.uint64)
+        bounds = cells_uv_bounds(ids)
+        v = self.vertices
+        may = (cells_contain_points(ids, *v.T, bounds=bounds).any(axis=1)
+               | edges_cross_cells(v[:-1], v[1:], cells_vertices(ids, bounds)))
+        return may, np.zeros(len(ids), dtype=bool)

@@ -10,12 +10,13 @@ S2EdgeIndex.cs:327-603, as relational operators):
    Coverings are small (a MAX_CELLS coverer budget, refined
    SKIN_REFINE_LEVELS deep) -> always broadcastable.
 
-2. PROBE (distributed, one pass): points carry a leaf cell_id.  For the
-   small set of distinct covering levels L1..Lk, generate each point's
-   ancestors at those levels (pure bit ops) and explode -> equi-join
-   ancestor == covering.cell_id.  This is a broadcast HASH join (never a
-   nested-loop range join), so the probe scales linearly and Catalyst can
-   still prune scans.
+2. PROBE (distributed, one pass): points carry a leaf cell_id.  The
+   distinct covering levels L1..Lk ride as one literal array; each point
+   explodes to one row per level, and its ancestor at that level is bit
+   ops on the level column (the same code for every level set) ->
+   equi-join ancestor == covering.cell_id.  This is a broadcast HASH join
+   (never a nested-loop range join), so the probe scales linearly and
+   Catalyst can still prune scans.
 
 3. REFINE: matches on interior cells are accepted outright; matches on
    exterior cells run the exact crossing-parity kernel (Arrow-batched,
@@ -120,16 +121,15 @@ def covering_probe_join(spark: SparkSession, points: DataFrame, rows,
     covering rows `rows` of `schema`, which names the covering cell
     `cov_cell_id` and its level `cov_level`.  The rows become a
     LocalRelation; each point explodes to its ancestor at every distinct
-    covering level (pure bit ops, <= ~10 keys), and ancestor ==
-    cov_cell_id matches (range containment by a level-L cell is ancestor
+    covering level (functions.columns.with_probe_cells: one literal level
+    array, bit ops on the level column), and ancestor == cov_cell_id
+    matches (range containment by a level-L cell is ancestor
     equality, so no nested-loop range join).  The probe key, cov_cell_id
     and cov_level are dropped; the caller applies its own residual."""
     rows = [tuple(r) for r in rows]
     cov = local_frame(spark, rows, schema)
     at = cov.columns.index("cov_level")
-    keys = F.array(*[C.parent_for_level(F.col("cell_id"), int(lv))
-                     for lv in sorted({r[at] for r in rows})])
-    probed = points.withColumn("probe_cell", F.explode(keys))
+    probed = C.with_probe_cells(points, {r[at] for r in rows})
     return (probed.join(F.broadcast(cov), probed["probe_cell"] == cov["cov_cell_id"])
             .drop("probe_cell", "cov_cell_id", "cov_level"))
 

@@ -149,16 +149,15 @@ def spatial_join_shuffle(spark: SparkSession, points: DataFrame,
         levels = [r[0] for r in coverings.select("cov_level").distinct()
                   .orderBy("cov_level").collect()]
 
-    probe_keys = F.array(*[C.parent_for_level(F.col("cell_id"), int(lv)) for lv in levels])
-    probed = points.withColumn("probe_cell", F.explode(probe_keys))
+    probed = C.with_probe_cells(points, levels)
 
     # hot-cell detection: probe hits per covering cell (semi-joined so we
     # only count cells that exist on the build side).  Sample BEFORE the
     # encode/explode so unsampled rows never compute probe keys.
     cov_cells = coverings.select(F.col("cov_cell_id").alias("probe_cell")).distinct()
     if hot_sample_fraction < 1.0:
-        detect_src = (points.sample(hot_sample_fraction, seed=42)
-                      .withColumn("probe_cell", F.explode(probe_keys)))
+        detect_src = C.with_probe_cells(
+            points.sample(hot_sample_fraction, seed=42), levels)
         sampled_threshold = max(1.0, hot_threshold * hot_sample_fraction)
     else:
         detect_src = probed

@@ -1,5 +1,6 @@
 import math
 import sys
+import threading
 import uuid
 from pathlib import Path
 
@@ -45,3 +46,27 @@ def jobs_during(spark, fn):
     finally:
         sc._jsc.clearJobGroup()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jvm_calls_during(spark, fn):
+    """Run fn(); return its result and the number of commands it sent to
+    the JVM over the py4j gateway (every Column, every Dataset method,
+    every attribute read is at least one).  Commands other threads send
+    meanwhile, such as a finished session's listener threads, are not
+    counted."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    calls = 0
+
+    def counting(*args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == caller
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = fn()
+    finally:
+        del client.send_command
+    return out, calls

@@ -241,3 +241,26 @@ def test_containing_cell_lca(rng):
             if w != SENT:
                 w = brute(w, other)
         assert int(g4[i]) == w, i
+
+
+def test_face_ij_orientation_matches_position_descent(rng):
+    """to_face_ij_orientation on cells of every level (and in a 2-d shape):
+    the (i, j) leaf re-encodes into the cell, and the orientation equals a
+    walk down the cell's traversal positions from its face (S2.cs:47-48,
+    POS_TO_ORIENTATION)."""
+    from s2spark.kernel.hilbert import POS_TO_ORIENTATION, SWAP_MASK
+    x, y, z = random_points(rng, 31 * 40)
+    leaves = ci.from_point(x, y, z)
+    levels = np.repeat(np.arange(31), 40)
+    ids = np.array([ci.parent_for_level(leaves[k:k + 1], int(lv))[0]
+                    for k, lv in enumerate(levels)], dtype=U).reshape(-1, 31)
+    face, i, j, orientation = ci.to_face_ij_orientation(ids, want_orientation=True)
+    assert face.shape == i.shape == j.shape == orientation.shape == ids.shape
+    flat = ids.reshape(-1)
+    back = ci.from_face_ij(face.reshape(-1), i.reshape(-1), j.reshape(-1))
+    for cid, leaf, lv, o in zip(flat, back, levels, orientation.reshape(-1)):
+        assert ci.parent_for_level(np.array([leaf]), int(lv))[0] == cid
+        walk = int(cid) >> 61 & SWAP_MASK
+        for k in range(1, int(lv) + 1):
+            walk ^= POS_TO_ORIENTATION[int(cid) >> (2 * (30 - k) + 1) & 3]
+        assert o == walk, (hex(int(cid)), int(lv))

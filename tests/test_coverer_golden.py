@@ -12,6 +12,7 @@ from s2spark.kernel import cellid as ci
 from s2spark.kernel.cap import Cap
 from s2spark.kernel.coverer import RegionCoverer
 from s2spark.kernel.loops import Loop, Polygon
+from s2spark.kernel.polyline import Polyline
 from s2spark.kernel.rect_region import RectRegion
 
 
@@ -88,3 +89,37 @@ _REGIONS = {"cap": _caps, "rect": _rects, "polygon": _convex_polygons}
 def test_covering_golden(kind, seed, max_cells, interior):
     got = _coverings(_REGIONS[kind](seed), max_cells, interior)
     assert got == GOLDEN[(kind, seed, max_cells, interior)]
+
+
+def _tracks(seed: int, n: int = 20):
+    """Corridor tracks shaped like the geo benchmark's: 4 vertices, each
+    1.5 degrees from the last along a random bearing."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for _ in range(n):
+        lat, lng = [math.radians(rng.uniform(-70, 70))], [math.radians(rng.uniform(-180, 180))]
+        for _ in range(3):
+            b, r = rng.uniform(0, 2 * math.pi), math.radians(1.5)
+            p = math.asin(math.sin(lat[-1]) * math.cos(r)
+                          + math.cos(lat[-1]) * math.sin(r) * math.cos(b))
+            lng.append(lng[-1] + math.atan2(
+                math.sin(b) * math.sin(r) * math.cos(lat[-1]),
+                math.cos(r) - math.sin(lat[-1]) * math.sin(p)))
+            lat.append(p)
+        x, y, z = ci.xyz_from_latlng_deg(np.degrees(lat), np.degrees(lng))
+        out.append(Polyline(np.stack([x, y, z], axis=1)))
+    return out
+
+
+def test_corridor_track_coverings_golden():
+    """Coverings of 20 seeded corridor tracks, and the corridor rows they
+    expand to (a 0.2 degree radius), as pinned before Polyline had a
+    batched relate_cells: batching the cell tests changes no cell."""
+    from s2spark.operators.distance_ops import COVERER_MAX_CELLS, _expanded_covering
+    tracks = _tracks(1515)
+    cov = RegionCoverer(max_cells=COVERER_MAX_CELLS)
+    got = hashlib.sha256("|".join(
+        _digest(cov.get_covering(t)) for t in tracks).encode()).hexdigest()[:16]
+    rows = hashlib.sha256(repr([_expanded_covering(t, math.radians(0.2))
+                                for t in tracks]).encode()).hexdigest()[:16]
+    assert (got, rows) == ("67655f8495514c95", "183804b51df67342")

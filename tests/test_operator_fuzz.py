@@ -645,3 +645,81 @@ def test_oracle_encode_of_invalid_coordinates_agrees(spark):
     assert {i for i, c in oracle.items() if c is None} == set(
         range(len(good), len(rows)))
     assert oracle == engine
+
+
+def _sign_bit_ids():
+    """Raw cell ids on all six faces: the face cells, a random leaf and its
+    level-13 parent per face, and the face-3/4 ids on both sides of the
+    biased 0 (raw 2^63, where the signed representation wraps)."""
+    rng = np.random.default_rng(1515)
+    faces = ci.from_face_pos_level(np.arange(6), np.zeros(6), 0)
+    leaves = ci.from_face_pos_level(
+        np.arange(6), rng.integers(0, 1 << 61, 6, dtype=np.uint64), 30)
+    edge = np.array([(1 << 63) - 1, (1 << 63) + 1,         # last face-3 leaf, first face-4 leaf
+                     (1 << 63) - (1 << 20), (1 << 63) + (1 << 20),
+                     (1 << 63) - (1 << 60), (1 << 63) + (1 << 60)],
+                    dtype=np.uint64)
+    return np.concatenate([faces, leaves, ci.parent_for_level(leaves, 13), edge])
+
+
+def test_probe_cells_match_kernel_parent_across_sign_bit(spark):
+    """The probe keys (functions.columns.with_probe_cells, bit ops on an
+    exploded level column) equal kernel.cellid.parent_for_level at every
+    level 0..30, for ids on all six faces including the face-3/4 ids on
+    both sides of the biased 0; a null cell_id gives null keys."""
+    from s2spark.plans.frames import local_frame
+
+    raw = _sign_bit_ids()
+    rows = [(k, int(s)) for k, s in enumerate(ci.to_signed(raw))] + [(len(raw), None)]
+    df = local_frame(spark, rows, "k long, cell_id long").repartition(2)
+    got = {}
+    for r in C.with_probe_cells(df, range(31)).collect():
+        got.setdefault(r["k"], []).append(r["probe_cell"])
+    for k, cid in enumerate(raw):
+        expect = sorted(int(ci.to_signed(ci.parent_for_level(np.array([cid]), lv))[0])
+                        for lv in range(31))
+        assert sorted(got[k]) == expect, hex(int(cid))
+    assert got[len(raw)] == [None] * 31
+
+
+def test_encode_matches_kernel_at_poles_antimeridian_cube_corner(spark):
+    """with_cell_id equals the kernel encode on seeded points, both poles,
+    lng ±180 and the cube corner; null, NaN and off-globe input give a
+    null cell_id.  The encode's executed plan holds its 12 projections:
+    the barriers that keep Catalyst from inlining one stage into the next
+    (a 3^8 expression blowup)."""
+    from s2spark.plans.frames import local_frame
+
+    rng = np.random.default_rng(1516)
+    pts = [(float(a), float(b)) for a, b in zip(rng.uniform(-90, 90, 300),
+                                                 rng.uniform(-180, 180, 300))]
+    pts += [(90.0, 0.0), (-90.0, 0.0), (90.0, 180.0), (-90.0, -180.0),
+            (0.0, 180.0), (0.0, -180.0), (45.0, 180.0), (-45.0, -180.0),
+            (35.2643896828, 45.0), (-35.2643896828, -135.0)]
+    bad = [(None, 0.0), (0.0, None), (float("nan"), 0.0), (0.0, float("nan")),
+           (90.5, 0.0), (0.0, -180.5), (float("inf"), 0.0)]
+    rows = [(k, a, b) for k, (a, b) in enumerate(pts + bad)]
+    df = C.with_cell_id(local_frame(spark, rows, "k long, lat double, lng double")
+                        .repartition(2), "lat", "lng")
+    assert df._jdf.queryExecution().executedPlan().toString().count("Project [") == 12
+    got = {r["k"]: r["cell_id"] for r in df.collect()}
+    lat, lng = np.array(pts).T
+    expect = ci.to_signed(ci.from_latlng_deg(lat, lng))
+    assert [got[k] for k in range(len(pts))] == expect.tolist()
+    assert [got[len(pts) + k] for k in range(len(bad))] == [None] * len(bad)
+
+
+def test_cell_token_sentinel_faces_leaves_null(spark):
+    """cell_token matches kernel.cellid.to_token on face cells, leaves and
+    the raw id 0 (the signed -2^63 sentinel, token "X"), gives null for a
+    null id, and runs its regex at one call site."""
+    from s2spark.plans.frames import local_frame
+
+    raw = np.concatenate([_sign_bit_ids(), np.array([0], dtype=np.uint64)])
+    rows = [(k, int(s)) for k, s in enumerate(ci.to_signed(raw))] + [(len(raw), None)]
+    df = (local_frame(spark, rows, "k long, cell_id long").repartition(2)
+          .select("k", C.cell_token(F.col("cell_id")).alias("token")))
+    assert df._jdf.queryExecution().executedPlan().toString().count("regexp_replace(") == 1
+    got = {r["k"]: r["token"] for r in df.collect()}
+    assert [got[k] for k in range(len(raw))] == ci.to_token(raw).tolist()
+    assert got[len(raw) - 1] == "X" and got[len(raw)] is None

@@ -209,3 +209,61 @@ def test_knn_job_budget_and_no_python_boundary(spark, monkeypatch):
     assert "BroadcastHashJoin" in plan
     assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_probe_join_construction_calls_do_not_depend_on_levels(spark):
+    """Building a covering probe join costs a fixed number of JVM calls:
+    two coverings with the same number of rows, over 2 and over 19
+    distinct levels, cost the same.  The probe keys come from one literal
+    level array exploded to a column, not from a Column per level (which
+    cost about 65 py4j round trips per level)."""
+    import gc
+    from s2spark.operators import spatial_join as sj
+    from s2spark.plans.frames import local_frame
+    from tests.conftest import jvm_calls_during
+
+    pts = local_frame(spark, [(1, 5, 0.0, 0.0, 1.0)],
+                      "id long, cell_id long, x double, y double, z double")
+
+    def build(levels):
+        rows = [(1, (2 * k + 1) << 10, levels[k % len(levels)], k % 2 == 0)
+                for k in range(400)]
+        gc.collect()
+        gc.disable()            # no proxy deletes from an earlier cycle
+        try:
+            return jvm_calls_during(spark, lambda: sj.covering_probe_join(
+                spark, pts, rows, sj.COVERING_SCHEMA))[1]
+        finally:
+            gc.enable()
+
+    build([3, 4])                                   # warm-up
+    assert build([3, 4]) == build(list(range(3, 22)))
+
+
+def test_fresh_pip_region_compiles_nothing(spark):
+    """After a warm-up query, a pip query over a fresh polygon with a new
+    set of covering levels compiles no whole-stage code (CodegenMetrics):
+    neither the probe keys nor the levels are literals in generated code."""
+    import numpy as np
+    from s2spark.operators import spatial_join as sj
+    from s2spark.sources.fixtures import make_polygon
+
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    pts = sj.points_with_cells(spark.range(4000).selectExpr(
+        "id", "(id % 97) * 0.2 - 10 AS lat",
+        "floor(id / 97) * 0.5 - 10 AS lng").repartition(2)).localCheckpoint()
+
+    def pip(lat, lng, r):
+        t = np.linspace(0, 2 * np.pi, 7)[:-1]
+        poly = make_polygon(", ".join(
+            f"{lat + r * np.sin(a):.6f}:{lng + r * np.cos(a):.6f}" for a in t))
+        levels = set(sj.build_coverings({1: poly})["cov_level"])
+        before = metric.getCount()
+        n = len(sj.spatial_join(spark, pts, {1: poly}).collect())
+        return levels, n, metric.getCount() - before
+
+    warm_levels, _, _ = pip(0.0, 0.0, 3.0)
+    levels, n, compiles = pip(-2.0, 3.0, 1.0)
+    assert levels != warm_levels and n > 0
+    assert compiles == 0

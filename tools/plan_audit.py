@@ -16,6 +16,9 @@ Checks per query:
     copies in different operators each run per row, but copies in one
     projection may share one evaluation, and a second branch may
     legitimately repeat a call
+  * driver construction: the seconds the query's callable takes to return
+    its DataFrame and the JVM calls it sends over py4j meanwhile
+    (tests/conftest.jvm_calls_during) -> REPORTED, never flagged
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """
@@ -24,6 +27,7 @@ from __future__ import annotations
 
 import re
 import sys
+import time
 from collections import Counter
 
 sys.path.insert(0, ".")
@@ -62,6 +66,7 @@ def repeated_calls(plan: str) -> dict[str, int]:
 
 def audit(sf_dir: str, names=None) -> int:
     from s2spark.plans.session import build_session
+    from tests.conftest import jvm_calls_during
     import __spark_entry__ as entry
 
     # console progress bar writes \r-terminated frames that overwrite the
@@ -77,7 +82,9 @@ def audit(sf_dir: str, names=None) -> int:
     for name, fn in qs.items():
         if names and name not in names:
             continue
-        df = fn(spark, sf_dir)
+        t0 = time.perf_counter()
+        df, calls = jvm_calls_during(spark, lambda: fn(spark, sf_dir))
+        construct_s = time.perf_counter() - t0
         # streaming queries attach the last micro-batch's physical plan
         # (the memory-sink table the callable returns is just a local
         # scan; the attached plan is the stream-static join we must audit)
@@ -106,7 +113,8 @@ def audit(sf_dir: str, names=None) -> int:
         if flags:
             bad += 1
         lines.append(
-            f"{status:5} {name}: exchanges={n_exchange} python=["
+            f"{status:5} {name}: construct={construct_s:.3f}s jvm_calls={calls} "
+            f"exchanges={n_exchange} python=["
             + ", ".join(f"{node}x{n}" for node, n in sorted(python.items()))
             + "]"
             + (" (streaming plan)" if streaming else "")
