@@ -179,17 +179,22 @@ def parent_for_level(cell_id: Column, level: int) -> Column:
 def with_probe_cells(df: DataFrame, levels) -> DataFrame:
     """One row per (row of `df`, level in `levels`) with `probe_cell` the
     ancestor of the row's leaf `cell_id` at that level (parent_for_level,
-    bias-safe).
+    bias-safe), or 0 where `cell_id` is null: biased 0 is no cell (its
+    unbiased id 2^63 has no level), so such a row matches no covering.
 
     The levels ride as one literal array that is exploded to a column, and
     each key is derived from that column, so the expression — and the
     generated code — is the same for every level set, and building it
-    costs a fixed number of JVM calls however many levels there are."""
+    costs a fixed number of JVM calls however many levels there are.  The
+    key is not nullable, so a join on it infers no isnotnull(probe_cell),
+    which the optimizer would push below this projection as a filter that
+    computes every key a second time; nor is a filter on `cell_id` added,
+    which would be pushed into an unmaterialized encode."""
     lv = f"{_P}probe_level"
     lsb = f"shiftleft(1L, {2 * MAX_LEVEL} - 2 * {lv})"
     levels = ", ".join(str(int(v)) for v in sorted(set(levels)))
-    return (df.selectExpr("*", f"explode(CAST(array({levels}) AS ARRAY<INT>)) AS {lv}")
-            .selectExpr("*", f"(cell_id & -{lsb}) | {lsb} AS probe_cell")
+    return (df.selectExpr("*", f"explode(array({levels})) AS {lv}")
+            .selectExpr("*", f"coalesce((cell_id & -{lsb}) | {lsb}, 0L) AS probe_cell")
             .drop(lv))
 
 

@@ -200,7 +200,7 @@ class Cell:
 
 def cells_uv_bounds(ids: np.ndarray) -> tuple[np.ndarray, ...]:
     """(face, u_lo, u_hi, v_lo, v_hi) of each cell id: one id decode that
-    cells_vertices and cells_contain_points share."""
+    bounds_vertices and cells_contain_points share."""
     ids = np.asarray(ids, dtype=np.uint64)
     face, i, j = ci.to_face_ij_orientation(ids)
     level = ci.level_of(ids)
@@ -211,12 +211,16 @@ def cells_uv_bounds(ids: np.ndarray) -> tuple[np.ndarray, ...]:
     return face, u_lo, u_hi, v_lo, v_hi
 
 
-def cells_vertices(ids: np.ndarray, bounds=None) -> np.ndarray:
+def cells_vertices(ids: np.ndarray) -> np.ndarray:
     """Vectorized cell corners: (n, 4, 3) normalized vertices in CCW order
-    SW, SE, NE, NW (S2Cell.GetVertex batched).  All four corners go through
-    one (n, 4) projection; `bounds` is cells_uv_bounds(ids) if the caller
-    already has it."""
-    face, u_lo, u_hi, v_lo, v_hi = bounds or cells_uv_bounds(ids)
+    SW, SE, NE, NW (S2Cell.GetVertex batched)."""
+    return bounds_vertices(cells_uv_bounds(ids))
+
+
+def bounds_vertices(bounds: tuple[np.ndarray, ...]) -> np.ndarray:
+    """cells_vertices from the cells' cells_uv_bounds: all four corners go
+    through one (n, 4) projection."""
+    face, u_lo, u_hi, v_lo, v_hi = bounds
     u = np.stack((u_lo, u_hi, u_hi, u_lo), axis=1)
     v = np.stack((v_lo, v_lo, v_hi, v_hi), axis=1)
     x, y, z = ci.face_uv_to_xyz(face[:, None], u, v)
@@ -229,11 +233,11 @@ def _st_to_uv_vec(s: np.ndarray) -> np.ndarray:
                     (1 / 3.0) * (1 - (1 - s) * (1 - s)))
 
 
-def cells_contain_points(ids: np.ndarray, px, py, pz, bounds=None) -> np.ndarray:
+def cells_contain_points(bounds: tuple[np.ndarray, ...], px, py, pz) -> np.ndarray:
     """Vectorized S2Cell.Contains(point) (uv-bound test, S2Cell.cs:444-456):
-    an (n, m) matrix for n cell ids and m points given as coordinate
-    arrays.  `bounds` is cells_uv_bounds(ids) if the caller already has it."""
-    face, u_lo, u_hi, v_lo, v_hi = bounds or cells_uv_bounds(ids)
+    an (n, m) matrix for the n cells whose cells_uv_bounds are `bounds` and
+    m points given as coordinate arrays."""
+    face, u_lo, u_hi, v_lo, v_hi = bounds
     face = face[:, None]
     px, py, pz = (np.asarray(c, dtype=np.float64)[None, :] for c in (px, py, pz))
     comp = np.choose(face % 3, [px, py, pz])

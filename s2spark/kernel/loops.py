@@ -94,18 +94,22 @@ def relate_cells(ids: np.ndarray, loops: list, contains_points
     A cell may intersect the region if an edge of any loop crosses a cell
     edge, a cell corner is inside, or a loop's first vertex is in the
     cell; it is contained if no edge crosses, every corner is inside and
-    no first vertex is in the cell.  The ids are decoded once."""
-    from .cell import cells_contain_points, cells_uv_bounds, cells_vertices
+    no first vertex is in the cell.  The ids are decoded once.  With no
+    loops (an empty polygon) no cell is related."""
+    from .cell import bounds_vertices, cells_contain_points, cells_uv_bounds
     ids = np.asarray(ids, dtype=np.uint64)
+    if not loops:
+        none = np.zeros(len(ids), dtype=bool)
+        return none, none.copy()
     bounds = cells_uv_bounds(ids)
-    cv = cells_vertices(ids, bounds)                        # (n,4,3)
+    cv = bounds_vertices(bounds)                            # (n,4,3)
     a0, a1 = zip(*(lp._edges() for lp in loops))
     crossing_any = edges_cross_cells(np.concatenate(a0), np.concatenate(a1), cv)
     corners = cv.reshape(-1, 3)
     inside = contains_points(corners[:, 0], corners[:, 1],
                              corners[:, 2]).reshape(len(ids), 4)
     first = np.array([lp.vertices[0] for lp in loops])
-    v0_in_cell = cells_contain_points(ids, *first.T, bounds=bounds).any(axis=1)
+    v0_in_cell = cells_contain_points(bounds, *first.T).any(axis=1)
     may = crossing_any | inside.any(axis=1) | v0_in_cell
     contains = ~crossing_any & inside.all(axis=1) & ~v0_in_cell
     return may, contains

@@ -12,7 +12,7 @@ from __future__ import annotations
 import numpy as np
 
 from . import sphere
-from .cell import Cell, cells_contain_points, cells_uv_bounds, cells_vertices
+from .cell import Cell, bounds_vertices, cells_contain_points, cells_uv_bounds
 from .intervals import LatLngRect, RectBounder
 from .loops import edges_cross_cells
 
@@ -148,6 +148,6 @@ class Polyline:
         ids = np.asarray(ids, dtype=np.uint64)
         bounds = cells_uv_bounds(ids)
         v = self.vertices
-        may = (cells_contain_points(ids, *v.T, bounds=bounds).any(axis=1)
-               | edges_cross_cells(v[:-1], v[1:], cells_vertices(ids, bounds)))
+        may = (cells_contain_points(bounds, *v.T).any(axis=1)
+               | edges_cross_cells(v[:-1], v[1:], bounds_vertices(bounds)))
         return may, np.zeros(len(ids), dtype=bool)

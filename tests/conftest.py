@@ -1,7 +1,5 @@
 import math
 import sys
-import threading
-import uuid
 from pathlib import Path
 
 import numpy as np
@@ -10,6 +8,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from s2spark.kernel import cellid as ci  # noqa: E402
+from s2spark.plans.driver_cost import jobs_during, jvm_calls_during  # noqa: E402,F401
 
 
 def parse_vertices(s: str) -> np.ndarray:
@@ -33,40 +32,3 @@ def random_points(rng, n):
     theta = rng.uniform(-math.pi, math.pi, n)
     r = np.sqrt(1 - z * z)
     return r * np.cos(theta), r * np.sin(theta), z
-
-
-def jobs_during(spark, fn):
-    """Run fn() under a fresh job group; return its result and the number
-    of Spark jobs it launched."""
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def jvm_calls_during(spark, fn):
-    """Run fn(); return its result and the number of commands it sent to
-    the JVM over the py4j gateway (every Column, every Dataset method,
-    every attribute read is at least one).  Commands other threads send
-    meanwhile, such as a finished session's listener threads, are not
-    counted."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    caller = threading.get_ident()
-    calls = 0
-
-    def counting(*args, **kwargs):
-        nonlocal calls
-        calls += threading.get_ident() == caller
-        return send(*args, **kwargs)
-
-    client.send_command = counting
-    try:
-        out = fn()
-    finally:
-        del client.send_command
-    return out, calls

@@ -391,3 +391,20 @@ def test_tile_polygon_coverings_batch_their_cell_tests(monkeypatch):
     assert hashlib.sha256(repr(sorted(rows.itertuples(
         index=False, name=None))).encode()).hexdigest() == (
         "d794fcde7b4bdc5e30e2cdd9184c2515c9b6ce95bf40070af0dbdbac48d2cda6")
+
+
+def test_empty_polygon_covers_nothing():
+    """A boolean result can be the empty polygon (intersection of disjoint
+    polygons): it relates no cell, so its covering and interior covering
+    are empty rather than an error."""
+    from s2spark.kernel import booleans
+    from s2spark.sources.fixtures import make_polygon
+
+    empty = booleans.intersection(make_polygon("0:0, 0:1, 1:1, 1:0;"),
+                                  make_polygon("10:10, 10:11, 11:11, 11:10;"))
+    assert empty.loops == []
+    may, contains = empty.relate_cells(ci.from_face_pos_level(
+        np.arange(6), np.zeros(6), 0))
+    assert not may.any() and not contains.any()
+    assert len(RegionCoverer(max_cells=8).get_covering(empty)) == 0
+    assert len(RegionCoverer(max_cells=8).get_interior_covering(empty)) == 0

@@ -666,7 +666,10 @@ def test_probe_cells_match_kernel_parent_across_sign_bit(spark):
     """The probe keys (functions.columns.with_probe_cells, bit ops on an
     exploded level column) equal kernel.cellid.parent_for_level at every
     level 0..30, for ids on all six faces including the face-3/4 ids on
-    both sides of the biased 0; a null cell_id gives null keys."""
+    both sides of the biased 0; a null cell_id gives the key 0, which is
+    no cell and joins nothing.  The probe join computes each key once: no
+    isnotnull(probe_cell) filter recomputes it below the key's projection."""
+    from s2spark.operators import spatial_join as sj
     from s2spark.plans.frames import local_frame
 
     raw = _sign_bit_ids()
@@ -679,7 +682,16 @@ def test_probe_cells_match_kernel_parent_across_sign_bit(spark):
         expect = sorted(int(ci.to_signed(ci.parent_for_level(np.array([cid]), lv))[0])
                         for lv in range(31))
         assert sorted(got[k]) == expect, hex(int(cid))
-    assert got[len(raw)] == [None] * 31
+    assert got[len(raw)] == [0] * 31
+
+    at13 = [int(p) for p in ci.to_signed(ci.parent_for_level(raw, 13))]
+    cov = [(1, at13[k], 13, False) for k in (9, 10)]   # face-3 and face-4 leaves
+    joined = sj.covering_probe_join(spark, df, cov, sj.COVERING_SCHEMA)
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "isnotnull(probe_cell" not in plan
+    assert plan.count("shiftleft(1, (60 - ") == 2           # mask and lsb of one key
+    assert sorted(r["k"] for r in joined.collect()) == [
+        k for k, p in enumerate(at13) if p in (at13[9], at13[10])]
 
 
 def test_encode_matches_kernel_at_poles_antimeridian_cube_corner(spark):

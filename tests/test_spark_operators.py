@@ -61,6 +61,19 @@ def test_spatial_join_matches_bruteforce(spark, polygons, pts):
         assert int(res.get(pid, 0)) == expect
 
 
+def test_spatial_join_over_empty_polygon_returns_no_rows(spark, polygons, pts):
+    """An empty boolean result (intersection of disjoint polygons) joins
+    no point, alone or beside a non-empty polygon."""
+    from s2spark.kernel import booleans
+
+    empty = booleans.intersection(polygons[1], polygons[2])
+    assert empty.loops == []
+    assert spatial_join(spark, pts, {3: empty}).count() == 0
+    both = spatial_join(spark, pts, {1: polygons[1], 3: empty})
+    assert both.subtract(spatial_join(spark, pts, {1: polygons[1]})).count() == 0
+    assert both.where("polygon_id = 3").count() == 0
+
+
 def test_shuffle_join_equals_broadcast(spark, polygons, pts):
     a = spatial_join(spark, pts, polygons).select("url", "polygon_id")
     # default: small polygon side takes the broadcast-refine fast path

@@ -18,7 +18,7 @@ Checks per query:
     legitimately repeat a call
   * driver construction: the seconds the query's callable takes to return
     its DataFrame and the JVM calls it sends over py4j meanwhile
-    (tests/conftest.jvm_calls_during) -> REPORTED, never flagged
+    (s2spark.plans.driver_cost.jvm_calls_during) -> REPORTED, never flagged
 
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """
@@ -66,7 +66,7 @@ def repeated_calls(plan: str) -> dict[str, int]:
 
 def audit(sf_dir: str, names=None) -> int:
     from s2spark.plans.session import build_session
-    from tests.conftest import jvm_calls_during
+    from s2spark.plans.driver_cost import jvm_calls_during
     import __spark_entry__ as entry
 
     # console progress bar writes \r-terminated frames that overwrite the
