@@ -454,11 +454,14 @@ def _q_polyline_length(spark, sf_dir):
     Column fold (no UDF)."""
     from s2spark.operators.polyline_ops import polyline_arc_length, polyline_num_edges
     g = _docs_geo(spark, sf_dir)
+    # lat and lng are DECIMAL here; in double the waypoints are the ones
+    # the oracle divides out, not the decimal(30,8) cuts of the common type
+    lat, lng = F.col("lat").cast("double"), F.col("lng").cast("double")
     # waypoints: (lat,lng), (lat/2, lng/2+10), (-lat/3, lng-20)
     track = F.array(
-        F.struct(F.col("lat").alias("lat"), F.col("lng").alias("lng")),
-        F.struct((F.col("lat") / 2).alias("lat"), (F.col("lng") / 2 + 10).alias("lng")),
-        F.struct((-F.col("lat") / 3).alias("lat"), (F.col("lng") - 20).alias("lng")))
+        F.struct(lat.alias("lat"), lng.alias("lng")),
+        F.struct((lat / 2).alias("lat"), (lng / 2 + 10).alias("lng")),
+        F.struct((-lat / 3).alias("lat"), (lng - 20).alias("lng")))
     return g.select(
         "doc_id",
         F.round(polyline_arc_length(track), 6).alias("arc_length_rad"),

@@ -26,7 +26,7 @@ from collections import Counter, defaultdict
 import numpy as np
 
 from . import sphere
-from .loops import Loop, Polygon, _occw, _vertex_crossing, robust_crossing_batch
+from .loops import Loop, Polygon, _occw, edge_or_vertex_crossing
 
 DEFAULT_INTERSECTION_TOLERANCE = 1.5e-15  # S2EdgeUtil.cs:30
 
@@ -34,25 +34,16 @@ Point = tuple[float, float, float]
 
 
 def _norm(p) -> Point:
-    n = math.sqrt(p[0] * p[0] + p[1] * p[1] + p[2] * p[2])
-    return (p[0] / n, p[1] / n, p[2] / n)
-
-
-def _robust_cross(a: Point, b: Point) -> Point:
-    sx, sy, sz = a[0] + b[0], a[1] + b[1], a[2] + b[2]
-    dx, dy, dz = b[0] - a[0], b[1] - a[1], b[2] - a[2]
-    c = (sy * dz - sz * dy, sz * dx - sx * dz, sx * dy - sy * dx)
-    if c == (0.0, 0.0, 0.0):
-        ox, oy, oz = sphere.ortho(np.float64(a[0]), np.float64(a[1]), np.float64(a[2]))
-        return (float(ox[0]), float(oy[0]), float(oz[0]))
-    return c
+    x, y, z = map(float, p)
+    n = math.sqrt(x * x + y * y + z * z)
+    return (x / n, y / n, z / n)
 
 
 def get_intersection(a0: Point, a1: Point, b0: Point, b1: Point) -> Point:
     """Intersection point of two properly-crossing edges (S2EdgeUtil.cs:218-273)."""
-    a_norm = _norm(_robust_cross(a0, a1))
-    b_norm = _norm(_robust_cross(b0, b1))
-    x = _norm(_robust_cross(a_norm, b_norm))
+    a_norm = _norm(sphere.robust_cross_prod(*a0, *a1))
+    b_norm = _norm(sphere.robust_cross_prod(*b0, *b1))
+    x = _norm(sphere.robust_cross_prod(*a_norm, *b_norm))
     s = (a0[0] + a1[0] + b0[0] + b1[0], a0[1] + a1[1] + b0[1] + b1[1],
          a0[2] + a1[2] + b0[2] + b1[2])
     if x[0] * s[0] + x[1] * s[1] + x[2] * s[2] < 0:
@@ -211,7 +202,8 @@ class PolygonBuilder:
                 path.append(v2)
             else:
                 path = path[index[v2]:]
-                if self.validate and not _is_valid_loop(path):
+                loop = Loop(np.array(path))
+                if self.validate and not loop.is_valid():
                     # self-crossing loop: bad input — reject the whole loop
                     # (S2PolygonBuilder.cs:393-401 RejectLoop)
                     n = len(path)
@@ -219,7 +211,7 @@ class PolygonBuilder:
                         unused.append((path[i], path[(i + 1) % n]))
                         self._erase_edge(path[i], path[(i + 1) % n])
                     return None
-                return Loop(np.array(path))
+                return loop
         return None
 
     def _erase_loop(self, loop: Loop) -> None:
@@ -276,34 +268,6 @@ class PolygonBuilder:
         return self.assemble_polygon_with_unused()[0]
 
 
-def _is_valid_loop(path: list[Point]) -> bool:
-    """S2Loop.IsValid (S2Loop.cs:202-280): >= 3 distinct vertices, no
-    duplicates, no proper crossing between non-adjacent edges."""
-    n = len(path)
-    if n < 3 or len(set(path)) != n:
-        return False
-    pairs_a = []
-    pairs_b = []
-    for i in range(n):
-        for j in range(i + 1, n):
-            # skip edges sharing a vertex (adjacent incl. wraparound)
-            if j == i + 1 or (i == 0 and j == n - 1):
-                continue
-            pairs_a.append(i)
-            pairs_b.append(j)
-    if not pairs_a:
-        return True
-    v = np.array(path, dtype=np.float64)
-    a0 = v[pairs_a]
-    a1 = v[[(i + 1) % n for i in pairs_a]]
-    b0 = v[pairs_b]
-    b1 = v[[(j + 1) % n for j in pairs_b]]
-    rc = robust_crossing_batch(
-        a0[:, 0], a0[:, 1], a0[:, 2], a1[:, 0], a1[:, 1], a1[:, 2],
-        b0[:, 0], b0[:, 1], b0[:, 2], b1[:, 0], b1[:, 1], b1[:, 2])
-    return not bool(np.any(rc > 0))
-
-
 def _is_valid_polygon(loops: list[Loop]) -> bool:
     """S2Polygon.IsValidPolygon (S2Polygon.cs:347-395): no shared undirected
     edges across loops, every loop normalized, no two loops cross."""
@@ -354,17 +318,11 @@ def _clip_boundary(a: Polygon, reverse_a: bool, b: Polygon, reverse_b: bool,
             j += direction
             intersections = []
             for b0, b1 in b_edges:
-                rc = int(robust_crossing_batch(
-                    np.float64(a0[0]), np.float64(a0[1]), np.float64(a0[2]),
-                    np.float64(a1[0]), np.float64(a1[1]), np.float64(a1[2]),
-                    np.float64(b0[0]), np.float64(b0[1]), np.float64(b0[2]),
-                    np.float64(b1[0]), np.float64(b1[1]), np.float64(b1[2]))[0])
-                if rc < 0:
-                    continue
+                rc = edge_or_vertex_crossing(a0, a1, b0, b1)
                 if rc > 0:
                     x = get_intersection(a0, a1, b0, b1)
                     intersections.append((_distance_fraction(x, a0, a1), x))
-                elif _vertex_crossing(a0, a1, b0, b1):
+                elif rc == 0:
                     t = 0.0 if (a0 == b0 or a0 == b1) else 1.0
                     if not add_shared_edges and a1 == b1:
                         t = 1.0

@@ -14,6 +14,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from . import sphere
+
 PI = math.pi
 
 
@@ -446,11 +448,10 @@ class LatLngRect:
         # else lng.lo (S2LatLngRect.cs:391-398)
         interval = S1Interval.from_point_pair(a.lng.hi, a.lng.complement.center)
         a_lng = a.lng.hi if interval.contains(lng) else a.lng.lo
-        from . import sphere
-        lo = _latlng_to_xyz(a.lat.lo, a_lng)
-        hi = _latlng_to_xyz(a.lat.hi, a_lng)
-        n = _latlng_to_xyz(0.0, a_lng - PI / 2)  # loCrossHi
-        p = _latlng_to_xyz(lat, lng)
+        lo = sphere.latlng_point(a.lat.lo, a_lng)
+        hi = sphere.latlng_point(a.lat.hi, a_lng)
+        n = sphere.latlng_point(0.0, a_lng - PI / 2)  # loCrossHi
+        p = sphere.latlng_point(lat, lng)
         return float(sphere.point_edge_distance_with_normal(
             np.float64(p[0]), np.float64(p[1]), np.float64(p[2]),
             np.float64(lo[0]), np.float64(lo[1]), np.float64(lo[2]),
@@ -480,13 +481,12 @@ class LatLngRect:
             a_lng, b_lng = a.lng.lo, b.lng.hi
         else:
             a_lng, b_lng = a.lng.hi, b.lng.lo
-        from . import sphere
-        a_lo = _latlng_to_xyz(a.lat.lo, a_lng)
-        a_hi = _latlng_to_xyz(a.lat.hi, a_lng)
-        a_n = _latlng_to_xyz(0.0, a_lng - PI / 2)
-        b_lo = _latlng_to_xyz(b.lat.lo, b_lng)
-        b_hi = _latlng_to_xyz(b.lat.hi, b_lng)
-        b_n = _latlng_to_xyz(0.0, b_lng - PI / 2)
+        a_lo = sphere.latlng_point(a.lat.lo, a_lng)
+        a_hi = sphere.latlng_point(a.lat.hi, a_lng)
+        a_n = sphere.latlng_point(0.0, a_lng - PI / 2)
+        b_lo = sphere.latlng_point(b.lat.lo, b_lng)
+        b_hi = sphere.latlng_point(b.lat.hi, b_lng)
+        b_n = sphere.latlng_point(0.0, b_lng - PI / 2)
 
         def edge_dist(p, lo, hi, n):
             return float(sphere.point_edge_distance_with_normal(
@@ -533,7 +533,7 @@ class RectBounder:
             alat, alng = self._a_latlng
             self.bound = self.bound.union(LatLngRect.from_point_pair(alat, alng, lat, lng))
             ax, ay, az = self._a
-            nx, ny, nz = _robust_cross_scalar(ax, ay, az, x, y, z)
+            nx, ny, nz = map(float, sphere.robust_cross_prod(ax, ay, az, x, y, z))
             dirx = ny  # cross((nx,ny,nz), (0,0,1)) = (ny, -nx, 0)
             diry = -nx
             da = dirx * ax + diry * ay
@@ -549,23 +549,3 @@ class RectBounder:
                 self.bound = LatLngRect(latint, self.bound.lng)
         self._a = (x, y, z)
         self._a_latlng = (lat, lng)
-
-
-def _latlng_to_xyz(lat: float, lng: float) -> tuple[float, float, float]:
-    """S2LatLng.ToPoint for scalar radians (S2LatLng.cs:170-178)."""
-    return (math.cos(lat) * math.cos(lng),
-            math.cos(lat) * math.sin(lng),
-            math.sin(lat))
-
-
-def _robust_cross_scalar(ax, ay, az, bx, by, bz):
-    sx, sy, sz = ax + bx, ay + by, az + bz
-    dx, dy, dz = bx - ax, by - ay, bz - az
-    cx = sy * dz - sz * dy
-    cy = sz * dx - sx * dz
-    cz = sx * dy - sy * dx
-    if cx == 0 and cy == 0 and cz == 0:
-        from .sphere import ortho
-        ox, oy, oz = ortho(np.array([ax]), np.array([ay]), np.array([az]))
-        return float(ox[0]), float(oy[0]), float(oz[0])
-    return cx, cy, cz

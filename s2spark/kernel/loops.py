@@ -29,31 +29,34 @@ ORIGIN = (0.0, 1.0, 0.0)  # S2.cs:97
 _E = math.e
 
 
+def _occw(a, b, c, o) -> bool:
+    """Scalar OrderedCcw of 3-tuples (or length-1 arrays)."""
+    return bool(sphere.ordered_ccw(*a, *b, *c, *o)[0])
+
+
 def _vertex_crossing(a, b, c, d) -> bool:
     """Parity rule at shared vertices (S2EdgeUtil.cs:150-181). a..d are 3-tuples."""
     if a == b or c == d:
         return False
-
-    def occw(x, y, z, o):
-        return bool(sphere.ordered_ccw(
-            np.float64(x[0]), np.float64(x[1]), np.float64(x[2]),
-            np.float64(y[0]), np.float64(y[1]), np.float64(y[2]),
-            np.float64(z[0]), np.float64(z[1]), np.float64(z[2]),
-            np.float64(o[0]), np.float64(o[1]), np.float64(o[2]))[0])
-
-    def ortho(p):
-        ox, oy, oz = sphere.ortho(np.float64(p[0]), np.float64(p[1]), np.float64(p[2]))
-        return (float(ox[0]), float(oy[0]), float(oz[0]))
-
     if a == d:
-        return occw(ortho(a), c, b, a)
+        return _occw(sphere.ortho(*a), c, b, a)
     if b == c:
-        return occw(ortho(b), d, a, b)
+        return _occw(sphere.ortho(*b), d, a, b)
     if a == c:
-        return occw(ortho(a), d, b, a)
+        return _occw(sphere.ortho(*a), d, b, a)
     if b == d:
-        return occw(ortho(b), c, a, b)
+        return _occw(sphere.ortho(*b), c, a, b)
     return False
+
+
+def edge_or_vertex_crossing(a, b, c, d) -> int:
+    """EdgeOrVertexCrossing of edges AB and CD (S2EdgeUtil.cs:185-203) in
+    three ways: +1 they cross at a point interior to both, 0 they share a
+    vertex that counts as a crossing, -1 neither.  a..d are 3-tuples."""
+    rc = int(robust_crossing_batch(*a, *b, *c, *d)[0])
+    if rc == 0:
+        return 0 if _vertex_crossing(a, b, c, d) else -1
+    return rc
 
 
 def robust_crossing_batch(ax, ay, az, bx, by, bz, cx, cy, cz, dx, dy, dz):
@@ -115,14 +118,6 @@ def relate_cells(ids: np.ndarray, loops: list, contains_points
     return may, contains
 
 
-def _occw(a, b, c, o) -> bool:
-    return bool(sphere.ordered_ccw(
-        np.float64(a[0]), np.float64(a[1]), np.float64(a[2]),
-        np.float64(b[0]), np.float64(b[1]), np.float64(b[2]),
-        np.float64(c[0]), np.float64(c[1]), np.float64(c[2]),
-        np.float64(o[0]), np.float64(o[1]), np.float64(o[2]))[0])
-
-
 def _wedge_contains(a0, ab1, a2, b0, b2) -> int:
     """+1 if wedge A contains wedge B (S2EdgeUtil.cs:610-625)."""
     return 1 if (_occw(a2, b2, b0, ab1) and _occw(b0, a0, a2, ab1)) else 0
@@ -169,13 +164,8 @@ class Loop:
 
     def _init_origin(self) -> None:
         """Determine whether S2.Origin is inside (S2Loop.cs:907-932)."""
-        v1 = self.vertices[1]
-        ox, oy, oz = sphere.ortho(v1[0], v1[1], v1[2])
-        v1_inside = bool(sphere.ordered_ccw(
-            ox, oy, oz,
-            np.float64(self.vertices[0][0]), np.float64(self.vertices[0][1]), np.float64(self.vertices[0][2]),
-            np.float64(self.vertices[2][0]), np.float64(self.vertices[2][1]), np.float64(self.vertices[2][2]),
-            np.float64(v1[0]), np.float64(v1[1]), np.float64(v1[2]))[0])
+        v1 = self.vertex(1)
+        v1_inside = _occw(sphere.ortho(*v1), self.vertex(0), self.vertex(2), v1)
         self.origin_inside = False
         contains_v1 = bool(self.contains_points(
             np.array([v1[0]]), np.array([v1[1]]), np.array([v1[2]]))[0])
@@ -236,17 +226,8 @@ class Loop:
         oxp[:, 0] = pz
         oxp[:, 1] = 0.0
         oxp[:, 2] = -px
-        det = oxp @ verts.T  # (k, m)
-        w = np.zeros((k, m), dtype=np.int8)
-        w[det > sphere.CCW_UNCERTAINTY] = 1
-        w[det < -sphere.CCW_UNCERTAINTY] = -1
-        uncertain = np.abs(det) <= sphere.CCW_UNCERTAINTY
-        if np.any(uncertain):
-            rows, cols = np.nonzero(uncertain)
-            for r, c in zip(rows, cols):
-                w[r, c] = sphere._expensive_ccw_scalar(
-                    ORIGIN, (px[r], py[r], pz[r]),
-                    (verts[c, 0], verts[c, 1], verts[c, 2]))
+        w = sphere.ccw_signs(oxp @ verts.T, lambda idx: (  # (k, m)
+            *ORIGIN, px[idx[0]], py[idx[0]], pz[idx[0]], *verts[idx[1]].T))
 
         w_prev = np.roll(w, 1, axis=1)  # w_{j-1} with wraparound (chain start v[m-1])
         # edge j: c = v_{j-1}, d = v_j; acb = -w_prev, bda = w
@@ -256,48 +237,25 @@ class Loop:
 
         crossings = np.zeros((k, m), dtype=bool)
         if np.any(slow):
-            # precompute per-edge c x d and dac = RobustCcw(c, d, Origin)
+            # per-edge c x d, and dac = RobustCcw(c, d, Origin)
             c_verts = np.roll(verts, 1, axis=0)
             cd = np.cross(c_verts, verts)  # (m,3)
-            dac_det = cd[:, 1]  # dot(cd, Origin)
-            dac = np.zeros(m, dtype=np.int8)
-            dac[dac_det > sphere.CCW_UNCERTAINTY] = 1
-            dac[dac_det < -sphere.CCW_UNCERTAINTY] = -1
-            dac_unc = np.nonzero(np.abs(dac_det) <= sphere.CCW_UNCERTAINTY)[0]
-            for j in dac_unc:
-                dac[j] = sphere._expensive_ccw_scalar(
-                    tuple(c_verts[j]), tuple(verts[j]), ORIGIN)
+            dac = sphere.ccw_signs(cd[:, 1], lambda idx: (  # dot(cd, Origin)
+                *c_verts[idx].T, *verts[idx].T, *ORIGIN))
             rows, cols = np.nonzero(slow)
             # cbd = -RobustCcw(c, d, p) with cCrossD precomputed
-            cbd_det = -(cd[cols, 0] * px[rows] + cd[cols, 1] * py[rows]
-                        + cd[cols, 2] * pz[rows])
-            cbd = np.zeros(len(rows), dtype=np.int8)
-            cbd[cbd_det > sphere.CCW_UNCERTAINTY] = 1
-            cbd[cbd_det < -sphere.CCW_UNCERTAINTY] = -1
-            unc = np.nonzero(np.abs(cbd_det) <= sphere.CCW_UNCERTAINTY)[0]
-            for t in unc:
-                j, r = cols[t], rows[t]
-                cbd[t] = -sphere._expensive_ccw_scalar(
-                    tuple(c_verts[j]), tuple(verts[j]), (px[r], py[r], pz[r]))
+            cbd = -sphere.ccw_signs(
+                cd[cols, 0] * px[rows] + cd[cols, 1] * py[rows]
+                + cd[cols, 2] * pz[rows],
+                lambda idx: (*c_verts[cols[idx]].T, *verts[cols[idx]].T,
+                             px[rows[idx]], py[rows[idx]], pz[rows[idx]]))
             acb = -w_prev[rows, cols]
             crossings[rows, cols] = (cbd == acb) & (dac[cols] == acb)
         if np.any(degenerate):
-            rows, cols = np.nonzero(degenerate)
-            for r, c in zip(rows, cols):
-                p = (float(px[r]), float(py[r]), float(pz[r]))
-                cv = tuple(map(float, verts[(c - 1) % m]))
-                dv = tuple(map(float, verts[c]))
-                # RobustCrossing == 0 only when two vertices coincide; otherwise
-                # re-evaluate the full predicate for this pair.
-                rc = robust_crossing_batch(
-                    np.float64(ORIGIN[0]), np.float64(ORIGIN[1]), np.float64(ORIGIN[2]),
-                    np.float64(p[0]), np.float64(p[1]), np.float64(p[2]),
-                    np.float64(cv[0]), np.float64(cv[1]), np.float64(cv[2]),
-                    np.float64(dv[0]), np.float64(dv[1]), np.float64(dv[2]))[0]
-                if rc > 0:
-                    crossings[r, c] = True
-                elif rc == 0:
-                    crossings[r, c] = _vertex_crossing(ORIGIN, p, cv, dv)
+            for r, c in zip(*np.nonzero(degenerate)):
+                crossings[r, c] = edge_or_vertex_crossing(
+                    ORIGIN, (px[r], py[r], pz[r]), tuple(verts[c - 1]),
+                    tuple(verts[c])) >= 0
         parity = np.logical_xor.reduce(crossings, axis=1)
         return parity ^ self.origin_inside
 
@@ -364,6 +322,22 @@ class Loop:
     def _edges(self) -> tuple[np.ndarray, np.ndarray]:
         n = self.num_vertices
         return self.vertices, self.vertices[(np.arange(n) + 1) % n]
+
+    def is_valid(self) -> bool:
+        """S2Loop.IsValid (S2Loop.cs:202-280): no vertex repeats and no two
+        edges that share no vertex cross.  A loop that fails it has no
+        well-defined interior (a zero-area spike, a bowtie): its point
+        test and its covering are meaningless."""
+        n = self.num_vertices
+        if len({self.vertex(i) for i in range(n)}) != n:
+            return False
+        # edge pairs (i, j), i < j, that share no vertex
+        i, j = np.triu_indices(n, 2)
+        keep = ~((i == 0) & (j == n - 1))
+        i, j = i[keep], j[keep]
+        a0, a1 = self._edges()
+        rc = robust_crossing_batch(*a0[i].T, *a1[i].T, *a0[j].T, *a1[j].T)
+        return not bool(np.any(rc > 0))
 
     def contains_cell(self, cell: Cell) -> bool:
         """True only if the loop definitely contains the cell (conservative
@@ -579,6 +553,14 @@ class Polygon:
         while j < len(self.loops) and self.loops[j].depth > depth:
             j += 1
         return j - 1
+
+    def check_valid(self) -> None:
+        """Raise ValueError if a loop is not valid (Loop.is_valid)."""
+        for k, lp in enumerate(self.loops):
+            if not lp.is_valid():
+                raise ValueError(
+                    f"loop {k} is not valid: a vertex repeats or two edges "
+                    "cross (S2Loop.IsValid)")
 
     def contains_points(self, px, py, pz) -> np.ndarray:
         px = np.asarray(px, dtype=np.float64)

@@ -12,9 +12,10 @@ from __future__ import annotations
 
 import math
 
+from . import sphere
 from .cap import Cap
 from .cell import Cell
-from .intervals import PI, LatLngRect, S1Interval, _robust_cross_scalar
+from .intervals import PI, LatLngRect, S1Interval
 
 
 def _simple_crossing(a, b, c, d) -> bool:
@@ -38,24 +39,19 @@ def _simple_crossing(a, b, c, d) -> bool:
     return (acb * cbd > 0) and (acb * dac > 0)
 
 
-def _latlng_point(lat: float, lng: float) -> tuple[float, float, float]:
-    return (math.cos(lat) * math.cos(lng), math.cos(lat) * math.sin(lng),
-            math.sin(lat))
-
-
 def _intersects_lng_edge(a, b, lat_lo, lat_hi, lng) -> bool:
-    return _simple_crossing(a, b, _latlng_point(lat_lo, lng),
-                            _latlng_point(lat_hi, lng))
+    return _simple_crossing(a, b, sphere.latlng_point(lat_lo, lng),
+                            sphere.latlng_point(lat_hi, lng))
 
 
 def _intersects_lat_edge(a, b, lat, lng: S1Interval) -> bool:
     """Great circle AB vs constant-latitude circle (S2LatLngRect.cs:796-857)."""
-    zx, zy, zz = _robust_cross_scalar(a[0], a[1], a[2], b[0], b[1], b[2])
+    zx, zy, zz = map(float, sphere.robust_cross_prod(*a, *b))
     n = math.sqrt(zx * zx + zy * zy + zz * zz)
     zx, zy, zz = zx / n, zy / n, zz / n
     if zz < 0:
         zx, zy, zz = -zx, -zy, -zz
-    yx, yy, yz = _robust_cross_scalar(zx, zy, zz, 0.0, 0.0, 1.0)
+    yx, yy, yz = map(float, sphere.robust_cross_prod(zx, zy, zz, 0.0, 0.0, 1.0))
     n = math.sqrt(yx * yx + yy * yy + yz * yz)
     yx, yy, yz = yx / n, yy / n, yz / n
     xx = yy * zz - yz * zy
@@ -109,11 +105,11 @@ class RectRegion:
         pole_cap = Cap.from_axis_angle((0.0, 0.0, pole_z), pole_angle)
         if r.lng.hi - r.lng.lo < 2 * PI:  # not full lng
             mid_cap = Cap.from_axis_angle(
-                _latlng_point(r.lat.center, r.lng.center), 0.0)
+                sphere.latlng_point(r.lat.center, r.lng.center), 0.0)
             for k in range(4):
                 lat = r.lat.lo if k < 2 else r.lat.hi
                 lng = r.lng.lo if k % 2 == 0 else r.lng.hi
-                mid_cap = mid_cap.add_point(*_latlng_point(lat, lng))
+                mid_cap = mid_cap.add_point(*sphere.latlng_point(lat, lng))
             if mid_cap.height < pole_cap.height:
                 return mid_cap
         return pole_cap
@@ -141,7 +137,7 @@ class RectRegion:
             return True
         lat_c = r.lat.center
         lng_c = r.lng.center
-        if cell.contains_point(*_latlng_point(lat_c, lng_c)):
+        if cell.contains_point(*sphere.latlng_point(lat_c, lng_c)):
             return True
         if not r.intersects_rect(cell.rect_bound()):
             return False

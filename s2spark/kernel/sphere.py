@@ -4,8 +4,12 @@ Points are represented as parallel (x, y, z) float64 arrays (flat columns
 are faster than (n,3) for Arrow-batched kernels; helpers accept either).
 
 Conformance targets (reference /root/reference/S2Geometry/*):
-* RobustCcw: fast determinant with 1.6e-15 uncertainty gate, stable
-  recompute, symbolic-perturbation fallback (S2.cs:479-641).
+* RobustCcw: fast determinant with 1.6e-15 uncertainty gate; inside the
+  gate the exact sign of the determinant of the float inputs (integer
+  arithmetic, so no BLAS or summation order can change it), and only on
+  an exact 0 the symbolic perturbation (S2.cs:479-641).  This module is
+  the only place that decides an orientation sign: `ccw_signs` triages a
+  batch of determinants for every caller.
 * RobustCrossing / VertexCrossing / EdgeOrVertexCrossing — the unit of
   point-in-polygon parity counting (S2EdgeUtil.cs:85-203).
 * Area: l'Huilier with Girard fallback for skinny triangles (S2.cs:255-345).
@@ -15,6 +19,8 @@ Conformance targets (reference /root/reference/S2Geometry/*):
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
@@ -70,6 +76,14 @@ def turn_angle(ax, ay, az, bx, by, bz, cx, cy, cz):
     out = angle(ux, uy, uz, vx, vy, vz)
     ccw = robust_ccw(ax, ay, az, bx, by, bz, cx, cy, cz)
     return np.where(ccw > 0, out, -out)
+
+
+def latlng_point(lat: float, lng: float) -> tuple[float, float, float]:
+    """S2LatLng.ToPoint for scalar radians (S2LatLng.cs:170-178), in
+    `math` so that driver-side constants round as they always have."""
+    return (math.cos(lat) * math.cos(lng),
+            math.cos(lat) * math.sin(lng),
+            math.sin(lat))
 
 
 def robust_cross_prod(ax, ay, az, bx, by, bz):
@@ -131,35 +145,30 @@ def _planar_ordered_ccw(ax, ay, bx, by, cx, cy) -> int:
     return 1 if s > 0 else (-1 if s < 0 else 0)
 
 
-def _expensive_ccw_scalar(a, b, c) -> int:
-    """Stable recompute + symbolic perturbation for near-degenerate triples
-    (S2.cs:530-641).  a,b,c are 3-tuples of floats."""
+def _exact_det_sign(a, b, c) -> int:
+    """Sign of the determinant |a b c| = (a x b) . c in exact arithmetic.
+    Every double is an integer over a power of two, so over the nine
+    coordinates' largest denominator they are all integers, and the
+    determinant of those integers (Python ints, no rounding) has the
+    sign of the true one."""
+    ratios = [float(v).as_integer_ratio() for v in (*a, *b, *c)]
+    den = max(d for _, d in ratios)
+    ax, ay, az, bx, by, bz, cx, cy, cz = (n * (den // d) for n, d in ratios)
+    det = (ax * (by * cz - bz * cy) + ay * (bz * cx - bx * cz)
+           + az * (bx * cy - by * cx))
+    return (det > 0) - (det < 0)
+
+
+def _expensive_ccw(a, b, c) -> int:
+    """ExpensiveCcw for a near-degenerate triple (S2.cs:530-641): the exact
+    sign of the determinant of the float inputs, and only where that is
+    exactly 0 the reference's symbolic perturbation.  a,b,c are 3-tuples
+    of floats."""
     if a == b or b == c or c == a:
         return 0
-    an = np.array(a); bn = np.array(b); cn = np.array(c)
-    sab = -1.0 if float(an @ bn) > 0 else 1.0
-    sbc = -1.0 if float(bn @ cn) > 0 else 1.0
-    sca = -1.0 if float(cn @ an) > 0 else 1.0
-    vab = an + sab * bn
-    vbc = bn + sbc * cn
-    vca = cn + sca * an
-    dab = float(vab @ vab)
-    dbc = float(vbc @ vbc)
-    dca = float(vca @ vca)
-    if dca < dbc or (dca == dbc and a < b):
-        if dab < dbc or (dab == dbc and a < c):
-            sign = float(np.cross(vab, vca) @ an) * sab  # BC longest
-        else:
-            sign = float(np.cross(vca, vbc) @ cn) * sca  # AB longest
-    else:
-        if dab < dca or (dab == dca and b < c):
-            sign = float(np.cross(vbc, vab) @ bn) * sbc  # CA longest
-        else:
-            sign = float(np.cross(vca, vbc) @ cn) * sca  # AB longest
-    if sign > 0:
-        return 1
-    if sign < 0:
-        return -1
+    sign = _exact_det_sign(a, b, c)
+    if sign:
+        return sign
     # symbolic perturbation: CCW around origin in YZ, then ZX, then XY planes
     ccw = _planar_ordered_ccw(a[1], a[2], b[1], b[2], c[1], c[2])
     if ccw == 0:
@@ -169,33 +178,38 @@ def _expensive_ccw_scalar(a, b, c) -> int:
     return ccw
 
 
+def ccw_signs(det, coords) -> np.ndarray:
+    """RobustCcw signs {-1, 0, +1} (int8) from the float determinants
+    `det` (an array) of triples (a, b, c): the sign of `det` beyond
+    CCW_UNCERTAINTY, else _expensive_ccw.  `coords(idx)` gives the nine
+    coordinates ax, ay, az, bx, ..., cz (arrays or scalars that broadcast)
+    of the uncertain entries `idx` (an np.nonzero tuple), so the caller
+    gathers its inputs only for those."""
+    out = np.zeros(det.shape, dtype=np.int8)
+    out[det > CCW_UNCERTAINTY] = 1
+    out[det < -CCW_UNCERTAINTY] = -1
+    uncertain = np.abs(det) <= CCW_UNCERTAINTY
+    if uncertain.any():
+        idx = np.nonzero(uncertain)
+        n = len(idx[0])
+        rows = zip(*(np.broadcast_to(np.asarray(v, dtype=np.float64), n).tolist()
+                     for v in coords(idx)))
+        out[idx] = [_expensive_ccw(r[0:3], r[3:6], r[6:9]) for r in rows]
+    return out
+
+
 def robust_ccw(ax, ay, az, bx, by, bz, cx, cy, cz, abx=None, aby=None, abz=None):
-    """Vectorized RobustCcw: fast determinant path + masked scalar slow path.
+    """Vectorized RobustCcw: the float determinant where its sign is
+    certain, the exact one (ccw_signs) elsewhere.
 
     Inputs broadcast; returns int8 array of {-1, 0, +1} (S2.cs:479-523).
     """
     if abx is None:
         abx, aby, abz = cross(ax, ay, az, bx, by, bz)
-    det = dot(abx, aby, abz, cx, cy, cz)
-    det = np.atleast_1d(np.asarray(det, dtype=np.float64))
-    out = np.zeros(det.shape, dtype=np.int8)
-    out[det > CCW_UNCERTAINTY] = 1
-    out[det < -CCW_UNCERTAINTY] = -1
-    uncertain = np.abs(det) <= CCW_UNCERTAINTY
-    if np.any(uncertain):
-        shape = det.shape
-        AX, AY, AZ = (np.broadcast_to(np.asarray(v, dtype=np.float64), shape)
-                      for v in (ax, ay, az))
-        BX, BY, BZ = (np.broadcast_to(np.asarray(v, dtype=np.float64), shape)
-                      for v in (bx, by, bz))
-        CX, CY, CZ = (np.broadcast_to(np.asarray(v, dtype=np.float64), shape)
-                      for v in (cx, cy, cz))
-        idxs = np.argwhere(uncertain)
-        for idx in idxs:
-            t = tuple(idx)
-            out[t] = _expensive_ccw_scalar(
-                (AX[t], AY[t], AZ[t]), (BX[t], BY[t], BZ[t]), (CX[t], CY[t], CZ[t]))
-    return out
+    det = np.atleast_1d(np.asarray(dot(abx, aby, abz, cx, cy, cz), dtype=np.float64))
+    return ccw_signs(det, lambda idx: [
+        np.broadcast_to(np.asarray(v, dtype=np.float64), det.shape)[idx]
+        for v in (ax, ay, az, bx, by, bz, cx, cy, cz)])
 
 
 def ordered_ccw(ax, ay, az, bx, by, bz, cx, cy, cz, ox, oy, oz):

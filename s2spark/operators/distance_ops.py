@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions import columns as C
 from ..kernel import cellunion as cuk
+from ..kernel import sphere
 from ..kernel.coverer import RegionCoverer
 from ..kernel.intervals import LatLngRect, R1Interval, S1Interval
 from ..kernel.polyline import Polyline
@@ -46,24 +47,6 @@ COVERER_MAX_CELLS = 16   # region covering before CellUnion.Expand
 MAX_LEVEL_DIFF = 4       # Expand's maxLevelDiff (S2CellUnion.cs:618-650)
 
 
-def _xyz(lat: float, lng: float) -> tuple[float, float, float]:
-    return (math.cos(lat) * math.cos(lng),
-            math.cos(lat) * math.sin(lng),
-            math.sin(lat))
-
-
-def _cross(a, b):
-    return (a[1] * b[2] - a[2] * b[1],
-            a[2] * b[0] - a[0] * b[2],
-            a[0] * b[1] - a[1] * b[0])
-
-
-def _robust_cross(a, b):
-    s = (a[0] + b[0], a[1] + b[1], a[2] + b[2])
-    d = (b[0] - a[0], b[1] - a[1], b[2] - a[2])
-    return _cross(s, d)
-
-
 def _dot_sql(v) -> str:
     """p . v for constant v with free columns px, py, pz."""
     return f"(px*({v[0]!r}) + py*({v[1]!r}) + pz*({v[2]!r}))"
@@ -72,10 +55,10 @@ def _dot_sql(v) -> str:
 def point_edge_distance_sql(a, b) -> str:
     """SQL text: angle from (px,py,pz) to the geodesic edge a-b (constant
     unit endpoints).  Mirrors S2EdgeUtil.GetDistance(x, a, b, aCrossB)."""
-    n = _robust_cross(a, b)
+    n = tuple(map(float, sphere.robust_cross_prod(*a, *b)))  # repr'd into SQL
     nn = math.sqrt(n[0] ** 2 + n[1] ** 2 + n[2] ** 2)
-    c1 = _cross(n, a)   # SimpleCcw(n, a, p)  ==  p . (n x a) > 0
-    c2 = _cross(b, n)   # SimpleCcw(p, b, n)  ==  p . (b x n) > 0
+    c1 = sphere.cross(*n, *a)   # SimpleCcw(n, a, p)  ==  p . (n x a) > 0
+    c2 = sphere.cross(*b, *n)   # SimpleCcw(p, b, n)  ==  p . (b x n) > 0
     in_wedge = f"({_dot_sql(c1)} > 0 AND {_dot_sql(c2)} > 0)"
     d_int = f"asin(least(1.0, abs({_dot_sql(n)}) / ({nn!r})))"
     da2 = (f"((px-({a[0]!r}))*(px-({a[0]!r})) + (py-({a[1]!r}))*(py-({a[1]!r}))"
@@ -90,10 +73,10 @@ def closest_point_on_edge_sql(a, b) -> tuple[str, str, str]:
     """SQL text triple (qx, qy, qz): closest point on constant edge a-b to
     (px,py,pz), unnormalized interior candidate handled with explicit
     normalization.  Mirrors S2EdgeUtil.GetClosestPoint."""
-    n = _robust_cross(a, b)
+    n = tuple(map(float, sphere.robust_cross_prod(*a, *b)))  # repr'd into SQL
     n2 = n[0] ** 2 + n[1] ** 2 + n[2] ** 2
-    c1 = _cross(n, a)
-    c2 = _cross(b, n)
+    c1 = sphere.cross(*n, *a)
+    c2 = sphere.cross(*b, *n)
     on_edge = f"({_dot_sql(c1)} > 0 AND {_dot_sql(c2)} > 0)"
     t = f"({_dot_sql(n)} / ({n2!r}))"
     raw = [f"(p{c} - {t}*({n[i]!r}))" for i, c in enumerate("xyz")]
@@ -131,8 +114,8 @@ def rect_distance_sql(rect_deg: tuple[float, float, float, float]) -> str:
                   f"({lat_lo_r!r}) - radians(lat))")
     edges = []
     for L in (lng_lo_r, lng_hi_r):
-        a = _xyz(lat_lo_r, L)
-        b = _xyz(lat_hi_r, L)
+        a = sphere.latlng_point(lat_lo_r, L)
+        b = sphere.latlng_point(lat_hi_r, L)
         edges.append(point_edge_distance_sql(a, b))
     return (f"(CASE WHEN {lng_in} THEN {lat_branch} "
             f"ELSE least({edges[0]}, {edges[1]}) END)")
@@ -187,7 +170,8 @@ def polyline_project_exprs(latlngs_deg: list[tuple[float, float]]
     """SQL text columns for projecting (px,py,pz) onto a fixed polyline:
     {edge_idx, distance_rad, qx, qy, qz}.  Argmin keeps the lowest edge
     index on ties (reference strict-< scan order)."""
-    verts = [_xyz(math.radians(la), math.radians(ln)) for la, ln in latlngs_deg]
+    verts = [sphere.latlng_point(math.radians(la), math.radians(ln))
+             for la, ln in latlngs_deg]
     m = len(verts) - 1
     dists = [point_edge_distance_sql(verts[i], verts[i + 1]) for i in range(m)]
     d_cols = {f"d{i}": dists[i] for i in range(m)}
@@ -237,7 +221,7 @@ def convex_polygon_distance_sql(poly) -> str:
     edge_dists = []
     for i in range(n):
         a, b = verts[i], verts[(i + 1) % n]
-        c = _cross(a, b)
+        c = sphere.cross(*a, *b)
         inside_terms.append(f"({_dot_sql(c)} > 0)")
         edge_dists.append(point_edge_distance_sql(a, b))
     inside = "(" + " AND ".join(inside_terms) + ")"
@@ -254,11 +238,16 @@ def buffered_polygon_join(spark, pts: DataFrame, polys: dict,
     (S2CellUnion.cs:618-650) -> broadcast equi-join on ancestor-at-level
     keys (the buffered union is normalized/disjoint, so each point matches
     at most one cell -> no dedupe) -> exact codegen distance residual.
-    At 100 TB: one map-side broadcast join + arithmetic, no shuffle."""
+    At 100 TB: one map-side broadcast join + arithmetic, no shuffle.
+    Raises ValueError on an invalid loop (Polygon.check_valid)."""
+    def compute(poly):
+        poly.check_valid()
+        return _expanded_covering(poly, radius_rad)
+
     rows = [(pid, cell, lvl) for pid, poly in polys.items()
             for cell, lvl in covercache.cached_rows(
                 ("buffered", *polygon_key(poly), float(radius_rad)),
-                lambda: _expanded_covering(poly, radius_rad))]
+                lambda: compute(poly))]
     return _within(spark, pts, rows, "polygon_id", radius_rad,
                    {pid: convex_polygon_distance_sql(poly)
                     for pid, poly in polys.items()})
@@ -314,7 +303,8 @@ FROM q
 def polyline_distance_sql(latlngs_deg: list[tuple[float, float]]) -> str:
     """SQL text: min geodesic distance (radians) from (px,py,pz) to a fixed
     polyline (min over edge distances — S2Polyline + S2EdgeUtil.GetDistance)."""
-    verts = [_xyz(math.radians(la), math.radians(ln)) for la, ln in latlngs_deg]
+    verts = [sphere.latlng_point(math.radians(la), math.radians(ln))
+             for la, ln in latlngs_deg]
     dists = [point_edge_distance_sql(verts[i], verts[i + 1])
              for i in range(len(verts) - 1)]
     return "least(" + ", ".join(dists) + ")" if len(dists) > 1 else dists[0]
@@ -332,7 +322,7 @@ def corridor_join(spark, pts: DataFrame,
     min-edge-distance residual.  At 100 TB: one map-side broadcast join +
     arithmetic, no shuffle of the points."""
     def compute(latlngs):
-        verts = np.array([_xyz(math.radians(la), math.radians(ln))
+        verts = np.array([sphere.latlng_point(math.radians(la), math.radians(ln))
                           for la, ln in latlngs], dtype=np.float64)
         return _expanded_covering(Polyline(verts), radius_rad)
 
@@ -379,10 +369,11 @@ def polyline_interpolate_sql(latlngs_deg: list[tuple[float, float]],
 
     The same text runs as a Spark Column (F.expr) and as the DuckDB oracle;
     callers round outputs (libm sin/cos may differ in the last ulp)."""
-    verts = [_xyz(math.radians(la), math.radians(ln)) for la, ln in latlngs_deg]
+    verts = [sphere.latlng_point(math.radians(la), math.radians(ln))
+             for la, ln in latlngs_deg]
 
     def _ang(a, b):
-        c = _cross(a, b)
+        c = sphere.cross(*a, *b)
         return math.atan2(math.sqrt(c[0] * c[0] + c[1] * c[1] + c[2] * c[2]),
                           a[0] * b[0] + a[1] * b[1] + a[2] * b[2])
 

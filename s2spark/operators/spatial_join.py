@@ -79,8 +79,10 @@ def skin_covering(poly: Polygon) -> list:
     the interior covering I (accept fast, mirroring the coverer's interior
     fast-accept, S2RegionCoverer.cs:312-329) plus the skin E \\ I
     (exact-test cells), where E is the exterior covering.  Cached in
-    plans.covercache."""
+    plans.covercache.  Raises ValueError on an invalid loop
+    (Polygon.check_valid), whose covering would be silently wrong."""
     def compute():
+        poly.check_valid()
         # Level-synchronous refinement: classify the whole frontier with
         # ONE batched relate call per level (numpy amortizes), then split
         # only the straddlers.  The final straddler set is the skin.

@@ -97,6 +97,23 @@ def test_robust_ccw_near_degenerate():
     assert int(r[0]) != 0
 
 
+# Loops with no well-defined interior (S2Loop.IsValid fails): a zero-area
+# spike (A, B, A), a doubled-back chain (A, B, C, B), a bowtie, and a
+# triangle with a repeated vertex.  Unchecked, the first two cover the six
+# face cells and contain every point, and the last collapses a covering.
+INVALID_LOOPS = ("0:0, 0:10, 0:0", "0:0, 0:10, 10:10, 0:10",
+                 "0:0, 0:10, 10:0, 10:10", "0:0, 0:0, 0:10, 10:10")
+
+
+def test_loop_is_valid():
+    """S2Loop.IsValid: a repeated vertex or two crossing edges make a loop
+    invalid; a triangle and a square are valid."""
+    for shape in INVALID_LOOPS:
+        assert not Loop(parse_vertices(shape)).is_valid(), shape
+    for shape in ("0:0, 0:10, 10:10", "-4:-4, -4:4, 4:4, 4:-4"):
+        assert Loop(parse_vertices(shape)).is_valid(), shape
+
+
 def test_loop_distance_goldens():
     # S2LoopTest.cs:461-498 — each loop is exactly 1 degree from (0:0)
     for s in ("0:1, 1:1, 1:2, 0:2", "-1:1, 1:1, 1:2, -1:2", "1:0, 2:1, 3:0, 2:-1"):

@@ -49,3 +49,21 @@ def test_query_matches_oracle(spark, oracle, name):
         release_session_state(spark)
     exp = oracle.execute(ORACLES[name]).fetchdf()
     assert compare(got, exp) == []
+
+
+def test_polyline_length_row_2668_at_sf0_1(spark):
+    """At sf0.1 the `doc_id` 2668 track length lies 5e-11 from a rounding
+    boundary.  Built from decimal(30,8) waypoints the engine rounded it to
+    1.188951; in double, as the oracle computes it, it is 1.188952."""
+    sf = "/root/testdata/sf0.1"
+    try:
+        got = (QUERIES["s2_polyline_length"](spark, sf)
+               .where("doc_id = 2668").toPandas())
+    finally:
+        release_session_state(spark)
+    con = open_oracle(sf)
+    exp = con.execute(f"SELECT * FROM ({ORACLES['s2_polyline_length']}) "
+                      "WHERE doc_id = 2668").fetchdf()
+    con.close()
+    assert got["arc_length_rad"].tolist() == [1.188952]
+    assert compare(got, exp) == []

@@ -15,6 +15,7 @@ from s2spark.operators.spatial_join_shuffle import (polygons_to_df,
 from s2spark.operators.tiling import raster_to_vector, tile_counts, vector_to_raster
 from s2spark.sources.fixtures import make_polygon
 from s2spark.sources.pages import mine_coordinates, synthesize_pages
+from tests.test_loops import INVALID_LOOPS
 
 
 @pytest.fixture(scope="module")
@@ -72,6 +73,22 @@ def test_spatial_join_over_empty_polygon_returns_no_rows(spark, polygons, pts):
     both = spatial_join(spark, pts, {1: polygons[1], 3: empty})
     assert both.subtract(spatial_join(spark, pts, {1: polygons[1]})).count() == 0
     assert both.where("polygon_id = 3").count() == 0
+
+
+@pytest.mark.parametrize("shape", INVALID_LOOPS)
+def test_invalid_loop_raises_at_covering_time(spark, pts, shape):
+    from s2spark.operators.distance_ops import buffered_polygon_join
+    from s2spark.plans import covercache
+
+    poly = make_polygon(shape)
+    xyz = pts.select("url", "cell_id", "x", "y", "z")
+    lat_lng = pts.select("url", "cell_id", F.lit(0.0).alias("lat"),
+                         F.lit(0.0).alias("lng"))
+    covercache._MEMO.clear()
+    with pytest.raises(ValueError, match="not valid"):
+        spatial_join(spark, xyz, {1: poly})
+    with pytest.raises(ValueError, match="not valid"):
+        buffered_polygon_join(spark, lat_lng, {1: poly}, 0.01)
 
 
 def test_shuffle_join_equals_broadcast(spark, polygons, pts):
