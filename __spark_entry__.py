@@ -429,7 +429,7 @@ def _q_polyline_interpolate(spark, sf_dir):
     """S2Polyline.Interpolate at a per-doc fraction along the fixed track:
     constant-folded slerp CASE chain, map-only (no shuffle, no Python)."""
     from s2spark.operators.distance_ops import polyline_interpolate_sql
-    lat_sql, lng_sql = polyline_interpolate_sql(_PROJECT_TRACK, "frac")
+    lat_sql, lng_sql = polyline_interpolate_sql(_PROJECT_TRACK)
     docs = _read(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_FRAC_SQL).alias("frac"))
     return docs.select("doc_id",
@@ -511,7 +511,7 @@ def _q_minhash(spark, sf_dir):
 
 
 def _q_simhash(spark, sf_dir):
-    return dedup.simhash(_docs_par(spark, sf_dir), bits=16)
+    return dedup.simhash(_docs_par(spark, sf_dir))
 
 
 def _q_jaccard(spark, sf_dir):
@@ -531,8 +531,8 @@ def _q_verified_pairs(spark, sf_dir):
 def _q_lsh_pairs(spark, sf_dir):
     """MinHash-LSH candidate pairs: the banded bucket join that replaces
     all-pairs comparison at scale."""
-    return dedup.minhash_candidate_pairs(
-        _docs_par(spark, sf_dir), n=5, num_hashes=8, bands=4)
+    return dedup.minhash_candidate_pairs(_docs_par(spark, sf_dir),
+                                         num_hashes=8)
 
 
 def _q_tile_quantiles(spark, sf_dir):
@@ -553,7 +553,7 @@ def _q_chunk_dedup(spark, sf_dir):
     """C4/RefinedWeb-style span dedup: 20-word chunks, first corpus
     occurrence wins, surviving text reassembled per doc (map-only chunking,
     one min-struct agg on chunk digest — no self-join)."""
-    return dedup.chunk_dedup(_docs_par(spark, sf_dir), chunk_words=20)
+    return dedup.chunk_dedup(_docs_par(spark, sf_dir))
 
 
 def _q_corpus_filter(spark, sf_dir):
@@ -594,9 +594,9 @@ def _q_line_dedup(spark, sf_dir):
     """C4-style corpus line dedup over deterministically constructed
     multi-line pages (the synthetic corpus is single-line): every page gets
     a newsletter line, pages %2 a copyright footer, pages %3 a nav bar —
-    all three exceed min_count=3 and must vanish, while body lines survive
-    unless the body itself repeats >=3x (the corpus has exact dups, so
-    some do).  The SQL oracle builds the identical pages."""
+    all three reach dedup.MIN_LINE_COUNT (3) and must vanish, while body
+    lines survive unless the body itself repeats >=3x (the corpus has
+    exact dups, so some do).  The SQL oracle builds the identical pages."""
     docs = _docs_par(spark, sf_dir)
     t2 = F.concat(
         F.col("text"),
@@ -605,7 +605,7 @@ def _q_line_dedup(spark, sf_dir):
                F.lit("\ncopyright 2024 example corp")).otherwise(F.lit("")),
         F.when(F.col("doc_id") % 3 == 0,
                F.lit("\nhome | about | contact")).otherwise(F.lit("")))
-    return dedup.line_dedup(docs.withColumn("text", t2), min_count=3)
+    return dedup.line_dedup(docs.withColumn("text", t2))
 
 
 def _corpus_filter_oracle_sql(num_hashes: int = 16, bands: int = 4,
@@ -727,17 +727,15 @@ def _q_token_count(spark, sf_dir):
 
 
 def _q_pack_sequences(spark, sf_dir):
-    return textstats.pack_sequences(_read(spark, sf_dir, "documents"),
-                                    budget_tokens=2048)
+    return textstats.pack_sequences(_read(spark, sf_dir, "documents"))
 
 
 def _q_tfidf_topk(spark, sf_dir):
-    return textstats.tfidf_topk(_read(spark, sf_dir, "documents"), k=5)
+    return textstats.tfidf_topk(_read(spark, sf_dir, "documents"))
 
 
 def _q_ngram_topk(spark, sf_dir):
-    return textstats.ngram_topk(_read(spark, sf_dir, "documents"),
-                                n=2, k=50)
+    return textstats.ngram_topk(_read(spark, sf_dir, "documents"))
 
 
 def _q_unigram_logprob(spark, sf_dir):
@@ -754,13 +752,13 @@ def _q_decontamination(spark, sf_dir):
     docs = _docs_par(spark, sf_dir)   # gram explode is map-heavy: fan out
     bench = docs.where(F.col("doc_id") % 13 == 0)
     corpus = docs.where(F.col("doc_id") % 13 != 0)
-    return textstats.decontaminate(corpus, bench, n_words=3, threshold=0.05)
+    return textstats.decontaminate(corpus, bench)
 
 
 def _q_repetition(spark, sf_dir):
     # _docs_par: gram building is map-heavy; the single-file test table
     # would otherwise run it on one scan task
-    return textstats.repetition_stats(_docs_par(spark, sf_dir), n_words=3)
+    return textstats.repetition_stats(_docs_par(spark, sf_dir))
 
 
 def _q_entropy(spark, sf_dir):
@@ -798,13 +796,12 @@ def _q_sim_ivf(spark, sf_dir):
     emb = _read(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    return similarity.ivf_topk(emb, queries_df, k=5,
-                               centroid_stride=31, nprobe=4)
+    return similarity.ivf_topk(emb, queries_df, k=5)
 
 
 def _q_near_dup(spark, sf_dir):
     emb = _read(spark, sf_dir, "embeddings")
-    return similarity.cosine_near_dup_pairs(emb, threshold=0.2, dim=64, bits=10)
+    return similarity.cosine_near_dup_pairs(emb, threshold=0.2, bits=10)
 
 
 def _q_sim_recall(spark, sf_dir):
@@ -833,7 +830,7 @@ def _q_semdedup(spark, sf_dir):
     # threshold 0.35 exercises real multi-member clusters on the synthetic
     # embeddings (their within-cluster cosines top out ~0.5-0.6); a
     # production text-embedding corpus would use the paper's ~0.95
-    return similarity.semdedup(emb, threshold=0.35, centroid_stride=31)
+    return similarity.semdedup(emb, threshold=0.35)
 
 
 def _q_embedding_stats(spark, sf_dir):
@@ -1446,7 +1443,7 @@ def _nearest_track_oracle_sql() -> str:
 
 def _polyline_interpolate_oracle_sql() -> str:
     from s2spark.operators.distance_ops import polyline_interpolate_sql
-    lat_sql, lng_sql = polyline_interpolate_sql(_PROJECT_TRACK, "frac")
+    lat_sql, lng_sql = polyline_interpolate_sql(_PROJECT_TRACK)
     return (f"WITH f AS (SELECT doc_id, {_FRAC_SQL} AS frac FROM documents) "
             f"SELECT doc_id, round({lat_sql}, 6) AS ip_lat, "
             f"round({lng_sql}, 6) AS ip_lng FROM f")

@@ -74,7 +74,7 @@ def run(spark, sf_dir: str, workdir: str,
     def stage_lines():
         # corpus-level boilerplate strip: substitute each doc's text with
         # its line-deduplicated form; docs reduced to nothing are dropped
-        ld = dedup.line_dedup(uniq, min_count=3)
+        ld = dedup.line_dedup(uniq)
         df = (uniq.join(ld, "doc_id")
               .where(F.col("n_kept") > 0)
               .withColumn("text", F.col("text_clean"))

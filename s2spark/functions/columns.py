@@ -53,7 +53,7 @@ _ENCODE_SQL_CACHE: dict[tuple, str] = {}
 _P = "__s2tmp_"
 
 
-def _encode_sql(lat_col: str, lng_col: str, out: str, keep_xyz: bool) -> str:
+def _encode_sql(lat_col: str, lng_col: str, keep_xyz: bool) -> str:
     """Full Hilbert-encode as ONE SQL query over a `{src}` placeholder.
 
     The whole encode is a single spark.sql() call, so it costs one JVM
@@ -65,7 +65,7 @@ def _encode_sql(lat_col: str, lng_col: str, out: str, keep_xyz: bool) -> str:
     same.  The projections are the barriers that prevent Catalyst's 3^8
     expression-tree blowup; whole-stage codegen fuses them at runtime.
     """
-    key = (lat_col, lng_col, out, keep_xyz)
+    key = (lat_col, lng_col, keep_xyz)
     if key in _ENCODE_SQL_CACHE:
         return _ENCODE_SQL_CACHE[key]
     P = _P
@@ -133,13 +133,12 @@ def _encode_sql(lat_col: str, lng_col: str, out: str, keep_xyz: bool) -> str:
                 f"{P}i, {P}j, {P}n, {P}bits, {P}lut6), "
                 f"CASE WHEN abs({lat}) <= 90 AND abs({lng}) <= 180 "
                 f"THEN (({n}) - CAST({1 << 62} AS BIGINT)) * 2 + 1 END "
-                f"AS `{out}`{keep}", sql)
+                f"AS `cell_id`{keep}", sql)
     _ENCODE_SQL_CACHE[key] = sql
     return sql
 
 
-def with_cell_id(df, lat_col: str, lng_col: str, out: str = "cell_id",
-                 keep_xyz: bool = False):
+def with_cell_id(df, lat_col: str, lng_col: str, keep_xyz: bool = False):
     """Append the leaf S2 cell id (biased signed long) of (lat,lng) degree
     columns — entirely as JVM expressions (whole-stage codegen, no Python).
 
@@ -152,11 +151,12 @@ def with_cell_id(df, lat_col: str, lng_col: str, out: str = "cell_id",
     keep_xyz=True also exposes the unit-vector x/y/z columns computed inside
     the encode (the exact-refine kernels need them) without recomputation.
 
-    Returns the DataFrame with `out` appended and no temp columns.
+    Returns the DataFrame with `cell_id` appended (replacing any column of
+    that name) and no temp columns.
     """
-    if out in df.columns:
-        df = df.drop(out)
-    return df.sparkSession.sql(_encode_sql(lat_col, lng_col, out, keep_xyz),
+    if "cell_id" in df.columns:
+        df = df.drop("cell_id")
+    return df.sparkSession.sql(_encode_sql(lat_col, lng_col, keep_xyz),
                                src=df)
 
 

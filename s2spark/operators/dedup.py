@@ -19,27 +19,48 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.frames import local_frame
+from .textstats import normalized
+
+# Every operator reads documents as (doc_id, text): doc_id a unique key,
+# text the body.  The MinHash family's shingle width, signature length and
+# LSH bands, and the near-dup Jaccard threshold:
+SHINGLE_N = 5
+NUM_HASHES = 16
+BANDS = 4
+THRESHOLD = 0.8
+SIMHASH_BITS = 16
+CHUNK_WORDS = 20        # chunk_dedup span length
+MIN_LINE_COUNT = 3      # line_dedup: a line this frequent is boilerplate
+# connected_components: star-round cap, and the largest edge set the
+# driver union-find takes (collected Rows cost ~100-150 B each)
+MAX_ROUNDS = 16
+DRIVER_THRESHOLD = 1_000_000
 
 
-def exact_dedup(documents: DataFrame, text_col: str = "text",
-                key_col: str = "doc_id") -> DataFrame:
+def exact_dedup(documents: DataFrame) -> DataFrame:
     """Keep the lowest key per identical text (digest groupBy)."""
     return (documents
-            .withColumn("digest", F.md5(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")))
+            .withColumn("digest", F.md5(normalized(F.col("text"))))
             .groupBy("digest")
-            .agg(F.min(key_col).alias("keep_id"),
+            .agg(F.min("doc_id").alias("keep_id"),
                  F.count(F.lit(1)).alias("n_copies")))
 
 
-def _exploded_shingles(documents: DataFrame, text_col: str, key_col: str,
-                       n: int) -> DataFrame:
-    """(key, shingle) rows — distinct n-grams via sequence+transform (JVM)."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    df = documents.select(F.col(key_col), norm.alias("__norm"))
-    grams = F.array_distinct(F.expr(
-        f"transform(sequence(1, greatest(length(__norm) - {n - 1}, 1)), "
-        f"i -> substr(__norm, i, {n}))"))
-    return df.select(key_col, F.explode(grams).alias("shingle"))
+def _distinct_grams(norm_col: str, n: int) -> Column:
+    """The distinct character n-grams of the normalized text in column
+    `norm_col` (one gram for a text shorter than n), as JVM sequence +
+    transform."""
+    return F.array_distinct(F.expr(
+        f"transform(sequence(1, greatest(length({norm_col}) - {n - 1}, 1)), "
+        f"i -> substr({norm_col}, i, {n}))"))
+
+
+def _exploded_shingles(documents: DataFrame, n: int) -> DataFrame:
+    """(doc_id, shingle) rows — distinct n-grams via sequence+transform."""
+    df = documents.select(F.col("doc_id"),
+                          normalized(F.col("text")).alias("__norm"))
+    return df.select("doc_id",
+                     F.explode(_distinct_grams("__norm", n)).alias("shingle"))
 
 
 def perm_hash(col: Column, i: int) -> Column:
@@ -58,7 +79,8 @@ def perm_hash(col: Column, i: int) -> Column:
 
 
 def with_minhash_signatures(documents: DataFrame, text_col: str = "text",
-                            num_hashes: int = 16, n: int = 5) -> DataFrame:
+                            num_hashes: int = NUM_HASHES,
+                            n: int = SHINGLE_N) -> DataFrame:
     """Append mh0..mh{k-1} MinHash signature columns to `documents`
     (all other columns preserved).
 
@@ -68,14 +90,10 @@ def with_minhash_signatures(documents: DataFrame, text_col: str = "text",
     shuffled |corpus shingles| rows to recombine what was already
     row-local).  Being stateless per row, the same expression also runs
     unchanged on a structured stream (see streaming.neardup_stream)."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    grams = F.array_distinct(F.expr(
-        f"transform(sequence(1, greatest(length(__mh_norm) - {n - 1}, 1)), "
-        f"i -> substr(__mh_norm, i, {n}))"))
     # projection barriers: bind norm then the grams array to columns so the
     # per-hash transforms share one evaluation instead of re-deriving them
-    df = (documents.withColumn("__mh_norm", norm)
-          .withColumn("__grams", grams))
+    df = (documents.withColumn("__mh_norm", normalized(F.col(text_col)))
+          .withColumn("__grams", _distinct_grams("__mh_norm", n)))
 
     def _mh(i):
         # single-arg closure: a 2-arg lambda would make F.transform pass the
@@ -88,24 +106,23 @@ def with_minhash_signatures(documents: DataFrame, text_col: str = "text",
     return df.drop("__mh_norm", "__grams")
 
 
-def minhash_signatures(documents: DataFrame, text_col: str = "text",
-                       key_col: str = "doc_id", n: int = 5,
-                       num_hashes: int = 16) -> DataFrame:
+def minhash_signatures(documents: DataFrame, n: int = SHINGLE_N,
+                       num_hashes: int = NUM_HASHES) -> DataFrame:
     """Per-doc MinHash signature: min over shingles of k independent
     salted-md5 hashes (true permutation family; see perm_hash).
     Map-only — see with_minhash_signatures.
 
-    PRECONDITION: `key_col` must be unique (one row per key).  The
+    PRECONDITION: `doc_id` must be unique (one row per key).  The
     map-only form emits one signature row per INPUT ROW; duplicate keys
     would pass through as duplicate signature rows and inflate downstream
     band-bucket / pair cardinality (the earlier groupBy form silently
     coalesced them).  Callers with non-unique keys must
-    dropDuplicates(key_col) first — not done here, because the dedup
+    dropDuplicates("doc_id") first — not done here, because the dedup
     tables' primary keys are unique by construction and the extra shuffle
     would erase the map-only property this operator exists for."""
     return with_minhash_signatures(
-        documents.select(F.col(key_col), F.col(text_col)),
-        text_col, num_hashes, n).drop(text_col)
+        documents.select(F.col("doc_id"), F.col("text")),
+        "text", num_hashes, n).drop("text")
 
 
 def band_buckets(num_hashes: int, bands: int) -> Column:
@@ -121,28 +138,25 @@ def band_buckets(num_hashes: int, bands: int) -> Column:
         for b in range(bands)])
 
 
-def minhash_lsh_buckets(documents: DataFrame, text_col: str = "text",
-                        key_col: str = "doc_id", n: int = 5,
-                        num_hashes: int = 16, bands: int = 4,
+def minhash_lsh_buckets(documents: DataFrame, n: int = SHINGLE_N,
+                        num_hashes: int = NUM_HASHES, bands: int = BANDS,
                         signatures: DataFrame | None = None) -> DataFrame:
-    """(band, bucket_digest, key) rows: docs sharing a bucket in any band are
-    near-duplicate candidates.  Pass precomputed `signatures` to avoid
-    re-deriving them (at production scale signatures are a materialized
-    index artifact, computed once per corpus snapshot)."""
+    """(doc_id, band, bucket_digest) rows: docs sharing a bucket in any
+    band are near-duplicate candidates.  Pass precomputed `signatures` to
+    avoid re-deriving them (at production scale signatures are a
+    materialized index artifact, computed once per corpus snapshot)."""
     sig = signatures if signatures is not None else \
-        minhash_signatures(documents, text_col, key_col, n, num_hashes)
+        minhash_signatures(documents, n, num_hashes)
     # single explode pass, NOT a per-band union: with map-only signatures
     # there is no exchange for Spark to reuse, so a 4-way union would
     # re-evaluate every signature md5 once per band
     return (sig.withColumn("p", F.explode(band_buckets(num_hashes, bands)))
-            .select(F.col(key_col), F.col("p.band").alias("band"),
+            .select(F.col("doc_id"), F.col("p.band").alias("band"),
                     F.col("p.bucket").alias("bucket")))
 
 
-def minhash_candidate_pairs(documents: DataFrame, text_col: str = "text",
-                            key_col: str = "doc_id", n: int = 5,
-                            num_hashes: int = 16, bands: int = 4,
-                            signatures: DataFrame | None = None) -> DataFrame:
+def minhash_candidate_pairs(documents: DataFrame,
+                            num_hashes: int = NUM_HASHES) -> DataFrame:
     """Candidate near-dup pairs = same bucket in >= 1 band (deduped).
 
     The bucket table is localCheckpoint'ed (lazily — no job until the
@@ -150,38 +164,35 @@ def minhash_candidate_pairs(documents: DataFrame, text_col: str = "text",
     without the checkpoint the planner broadcasts one side, the Exchange
     is not shared, and the full signature md5 pass runs twice (measured
     r6: the signature pass is ~40% of this operator's execution)."""
-    b = minhash_lsh_buckets(documents, text_col, key_col, n, num_hashes,
-                            bands, signatures=signatures) \
+    b = minhash_lsh_buckets(documents, num_hashes=num_hashes) \
         .localCheckpoint(eager=False)
-    l = b.select(F.col("band"), F.col("bucket"), F.col(key_col).alias("id_a"))
-    r = b.select(F.col("band"), F.col("bucket"), F.col(key_col).alias("id_b"))
+    l = b.select(F.col("band"), F.col("bucket"), F.col("doc_id").alias("id_a"))
+    r = b.select(F.col("band"), F.col("bucket"), F.col("doc_id").alias("id_b"))
     return (l.join(r, ["band", "bucket"])
             .where(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b").distinct())
 
 
-def simhash(documents: DataFrame, text_col: str = "text",
-            key_col: str = "doc_id", bits: int = 16) -> DataFrame:
-    """Per-doc SimHash over tokens: bit b set iff the sum over tokens of
-    (+1 if bit b of token-hash set else -1) is positive."""
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-    ex = documents.select(F.col(key_col), F.explode(toks).alias("tok"))
+def simhash(documents: DataFrame) -> DataFrame:
+    """Per-doc SIMHASH_BITS-bit SimHash over tokens: bit b set iff the sum
+    over tokens of (+1 if bit b of token-hash set else -1) is positive."""
+    toks = F.split(normalized(F.col("text")), " ")
+    ex = documents.select(F.col("doc_id"), F.explode(toks).alias("tok"))
     h = F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
     ex = ex.withColumn("h", h)
     bit_sums = [
         F.sum(F.when(F.shiftrightunsigned(F.col("h"), b).bitwiseAND(F.lit(1).cast("long")) == 1,
                      1).otherwise(-1)).alias(f"s{b}")
-        for b in range(bits)]
-    agg = ex.groupBy(key_col).agg(*bit_sums)
+        for b in range(SIMHASH_BITS)]
+    agg = ex.groupBy("doc_id").agg(*bit_sums)
     sh = None
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
         sh = term if sh is None else sh + term
-    return agg.select(key_col, sh.alias("simhash"))
+    return agg.select("doc_id", sh.alias("simhash"))
 
 
-def ngram_jaccard_pairs(documents: DataFrame, text_col: str = "text",
-                        key_col: str = "doc_id", n: int = 5,
+def ngram_jaccard_pairs(documents: DataFrame, n: int = SHINGLE_N,
                         threshold: float = 0.5,
                         df_cap: int | None = 100_000) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs sharing >= 1 shingle
@@ -205,20 +216,19 @@ def ngram_jaccard_pairs(documents: DataFrame, text_col: str = "text",
     # and at 100 TB this is the classic materialize-the-inverted-index
     # step (the exploded relation is the smallest common ancestor of all
     # five consumers).
-    ex = _exploded_shingles(documents, text_col, key_col, n) \
-        .localCheckpoint()
-    sizes = ex.groupBy(key_col).agg(F.count(F.lit(1)).alias("sz"))
+    ex = _exploded_shingles(documents, n).localCheckpoint()
+    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     exj = ex
     if df_cap is not None:
         keep = (ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
                 .where(F.col("df") <= df_cap).select("shingle"))
         exj = ex.join(keep, "shingle", "semi")
-    l = exj.select(F.col("shingle"), F.col(key_col).alias("id_a"))
-    r = exj.select(F.col("shingle"), F.col(key_col).alias("id_b"))
+    l = exj.select(F.col("shingle"), F.col("doc_id").alias("id_a"))
+    r = exj.select(F.col("shingle"), F.col("doc_id").alias("id_b"))
     inter = (l.join(r, "shingle").where(F.col("id_a") < F.col("id_b"))
              .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_inter")))
-    sz_a = sizes.select(F.col(key_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col(key_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    sz_a = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
+    sz_b = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
     # auto-broadcast only: the per-doc size table has one row per corpus doc
     # and cannot be force-broadcast at 10^12-doc scale
     return (inter.join(sz_a, "id_a").join(sz_b, "id_b")
@@ -228,10 +238,9 @@ def ngram_jaccard_pairs(documents: DataFrame, text_col: str = "text",
             .select("id_a", "id_b", "jaccard"))
 
 
-def chunk_dedup(documents: DataFrame, text_col: str = "text",
-                key_col: str = "doc_id", chunk_words: int = 20) -> DataFrame:
+def chunk_dedup(documents: DataFrame) -> DataFrame:
     """C4/RefinedWeb-style span deduplication: split each document into
-    consecutive `chunk_words`-word chunks, drop every chunk whose exact text
+    consecutive `CHUNK_WORDS`-word chunks, drop every chunk whose exact text
     already occurred earlier in the corpus (order = (doc_id, chunk_idx)),
     and reassemble the surviving text per document.
 
@@ -245,18 +254,18 @@ def chunk_dedup(documents: DataFrame, text_col: str = "text",
     groupBy.  First-occurrence selection is one min(struct) aggregate, so a
     chunk shared by 10^6 docs costs one combine tree, never a self-join.
 
-    Output: (key, dedup_text, n_chunks_kept, n_chunks_total).
+    Output: (doc_id, dedup_text, n_chunks_kept, n_chunks_total).
     """
-    w = chunk_words
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    df = documents.select(F.col(key_col), norm.alias("__norm"))
+    w = CHUNK_WORDS
+    df = documents.select(F.col("doc_id"),
+                          normalized(F.col("text")).alias("__norm"))
     words = F.split(F.col("__norm"), " ")
     n_chunks = F.greatest(F.ceil(F.size(words) / F.lit(float(w))).cast("int"),
                           F.lit(1))
     chunks = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.array_join(F.slice(words, i * w + 1, w), " "))
-    ex = (df.select(key_col, F.posexplode(chunks).alias("chunk_idx", "chunk"))
+    ex = (df.select("doc_id", F.posexplode(chunks).alias("chunk_idx", "chunk"))
           # group/join on the 16-byte digest, not the ~100+-byte raw
           # 20-word chunk: the digest is the shuffle key AND payload of
           # the dedup stages (md5, not a 64-bit hash — at 100 TB the
@@ -272,12 +281,12 @@ def chunk_dedup(documents: DataFrame, text_col: str = "text",
     # first occurrence of each distinct chunk across the corpus: one
     # min(struct) agg — (doc_id, chunk_idx) lexicographic order
     firsts = (ex.groupBy("__digest")
-              .agg(F.min(F.struct(F.col(key_col).alias("k"),
+              .agg(F.min(F.struct(F.col("doc_id").alias("k"),
                                   F.col("chunk_idx").alias("i"))).alias("f")))
     kept = (ex.join(firsts, "__digest")
-            .where((F.col(key_col) == F.col("f.k"))
+            .where((F.col("doc_id") == F.col("f.k"))
                    & (F.col("chunk_idx") == F.col("f.i"))))
-    assembled = (kept.groupBy(key_col)
+    assembled = (kept.groupBy("doc_id")
                  .agg(F.array_join(
                           F.transform(
                               F.array_sort(F.collect_list(
@@ -290,18 +299,16 @@ def chunk_dedup(documents: DataFrame, text_col: str = "text",
     # Totals come from the materialized exploded relation (one row per
     # chunk, >= 1 per doc since n_chunks is floored at 1) instead of a
     # third pass over the documents.
-    base = (ex.groupBy(key_col)
+    base = (ex.groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("int").alias("n_chunks_total")))
-    return (base.join(assembled, [key_col], "left")
-            .select(key_col,
+    return (base.join(assembled, ["doc_id"], "left")
+            .select("doc_id",
                     F.coalesce("dedup_text", F.lit("")).alias("dedup_text"),
                     F.coalesce("n_chunks_kept", F.lit(0)).alias("n_chunks_kept"),
                     "n_chunks_total"))
 
 
-def build_corpus_index(corpus: DataFrame, text_col: str = "text",
-                       key_col: str = "doc_id", n: int = 5,
-                       num_hashes: int = 16, bands: int = 4) -> DataFrame:
+def build_corpus_index(corpus: DataFrame) -> DataFrame:
     """Static near-dup index over an accepted corpus: one row per (band,
     bucket) a corpus doc occupies, carrying the doc's full signature array.
 
@@ -313,20 +320,21 @@ def build_corpus_index(corpus: DataFrame, text_col: str = "text",
     # (the r5 shape ran the full signature md5 pass twice — once under the
     # bucket explode, once under sig_arr — plus a join that exists only to
     # reunite two projections of the same row).  Bit-identical output.
-    sig = minhash_signatures(corpus, text_col, key_col, n, num_hashes)
+    sig = minhash_signatures(corpus)
     return (sig
             .withColumn("corpus_sig",
-                        F.array(*[F.col(f"mh{i}") for i in range(num_hashes)]))
-            .withColumn("p", F.explode(band_buckets(num_hashes, bands)))
+                        F.array(*[F.col(f"mh{i}") for i in range(NUM_HASHES)]))
+            .withColumn("p", F.explode(band_buckets(NUM_HASHES, BANDS)))
             .select(F.col("p.band").alias("band"),
                     F.col("p.bucket").alias("bucket"),
-                    F.col(key_col).alias("corpus_id"), "corpus_sig"))
+                    F.col("doc_id").alias("corpus_id"), "corpus_sig"))
 
 
 def filter_near_dups_of_corpus(new_docs: DataFrame, corpus_index: DataFrame,
                                text_col: str = "text", key_col: str = "doc_id",
-                               n: int = 5, num_hashes: int = 16,
-                               bands: int = 4,
+                               n: int = SHINGLE_N,
+                               num_hashes: int = NUM_HASHES,
+                               bands: int = BANDS,
                                est_gate: float = 0.5) -> DataFrame:
     """Drop every `new_docs` row that is a probable near-duplicate of a doc
     already in the corpus: its signature shares a band bucket with a corpus
@@ -363,12 +371,10 @@ def _edge_checksum(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b",
-                         max_rounds: int = 16,
-                         driver_threshold: int = 1_000_000) -> DataFrame:
-    """(node, component) for every node in the pair graph, where component
-    is the MINIMUM node id in the node's connected component.
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(node, component) for every node in the (id_a, id_b) pair graph,
+    where component is the MINIMUM node id in the node's connected
+    component.
 
     Algorithm: alternating large-star / small-star (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14) — converges in
@@ -391,7 +397,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     across regimes is what makes the two-regime plan transparent.
 
     Two-regime plan (same pattern as the join's broadcast-vs-shuffle cost
-    model): an edge set small enough to collect (<= driver_threshold
+    model): an edge set small enough to collect (<= DRIVER_THRESHOLD
     pairs) runs a driver-side union-find instead, trading ~6 distributed
     rounds x 4 stages of fixed job overhead for one collect.  The gate and
     the data come from ONE `limit(threshold+1).collect()` — no separate
@@ -399,11 +405,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     lineage twice, and for an over-threshold graph the scan stops after
     threshold+1 rows instead of counting everything.  Memory: collected
     Rows cost ~100-150 B each on the driver (object headers dominate the
-    16 raw bytes), so the 1M default holds ~150 MB transiently before
+    16 raw bytes), so the 1M threshold holds ~150 MB transiently before
     being condensed into int dicts.  A near-dup graph is usually tiny
     relative to its corpus even at 100 TB; the iterative O(log n) path
-    remains for the ones that aren't.  Pass driver_threshold=0 to force
-    the distributed loop.
+    remains for the ones that aren't.
     """
     # node ids must be integral: the star rounds and the driver union-find
     # both key on longs, and casting a non-numeric id would silently turn
@@ -413,7 +418,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     # accepted too (r5's strictness fix over-rejected them).
     import re as _re
     dtypes = dict(pairs.dtypes)
-    for col in (id_a, id_b):
+    for col in ("id_a", "id_b"):
         dt = dtypes.get(col)
         m = _re.fullmatch(r"decimal\((\d+),0\)", dt or "")
         if dt not in ("tinyint", "smallint", "int", "bigint") and not (
@@ -422,17 +427,12 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                 f"connected_components needs integral node ids; {col!r} is "
                 f"{dt} — map keys to longs (e.g. a dimension "
                 f"table with monotonically_increasing_id) before clustering")
-    pairs = (pairs.select(F.col(id_a).cast("long").alias(id_a),
-                          F.col(id_b).cast("long").alias(id_b))
-             .where(F.col(id_a).isNotNull() & F.col(id_b).isNotNull()))
-    if driver_threshold > 0:
-        rows = (pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-                .limit(driver_threshold + 1).collect())
-        if len(rows) > driver_threshold:
-            rows = None                # over budget: distributed loop below
-    else:
-        rows = None
-    if rows is not None:
+    pairs = (pairs.select(F.col("id_a").cast("long").alias("id_a"),
+                          F.col("id_b").cast("long").alias("id_b"))
+             .where(F.col("id_a").isNotNull() & F.col("id_b").isNotNull()))
+    rows = (pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+            .limit(DRIVER_THRESHOLD + 1).collect())
+    if len(rows) <= DRIVER_THRESHOLD:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -452,15 +452,16 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         return local_frame(pairs.sparkSession, comp,
                            "node long, component long")
 
-    edges = (pairs.select(F.col(id_a).cast("long").alias("u"),
-                          F.col(id_b).cast("long").alias("v"))
+    # over budget: distributed loop
+    edges = (pairs.select(F.col("id_a").cast("long").alias("u"),
+                          F.col("id_b").cast("long").alias("v"))
              .where(F.col("u") != F.col("v")).distinct())
-    nodes = (pairs.select(F.col(id_a).cast("long").alias("node"))
-             .unionByName(pairs.select(F.col(id_b).cast("long").alias("node")))
+    nodes = (pairs.select(F.col("id_a").cast("long").alias("node"))
+             .unionByName(pairs.select(F.col("id_b").cast("long").alias("node")))
              .distinct())
 
     prev = None
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         # large-star over the symmetric neighborhood
         sym = edges.unionByName(
             edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -490,10 +491,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                     F.coalesce("component", F.col("node")).alias("component")))
 
 
-def dedup_clusters(documents: DataFrame, text_col: str = "text",
-                   key_col: str = "doc_id", n: int = 5,
-                   num_hashes: int = 16, bands: int = 4,
-                   threshold: float = 0.8) -> DataFrame:
+def dedup_clusters(documents: DataFrame, n: int = SHINGLE_N,
+                   num_hashes: int = NUM_HASHES, bands: int = BANDS,
+                   threshold: float = THRESHOLD) -> DataFrame:
     """End-to-end near-dup clustering: LSH-verified pairs -> connected
     components -> one canonical (min-id) doc per cluster.
 
@@ -513,21 +513,19 @@ def dedup_clusters(documents: DataFrame, text_col: str = "text",
     # nodes, dynamic-allocation decommission) cannot recompute its blocks
     # and the job fails — on preemptible clusters prefer persist() with an
     # unpersist hook, or reliable checkpointing to shared storage.
-    pairs = verified_near_dup_pairs(documents, text_col, key_col, n,
-                                    num_hashes, bands,
+    pairs = verified_near_dup_pairs(documents, n, num_hashes, bands,
                                     threshold).localCheckpoint()
-    comp = connected_components(pairs, "id_a", "id_b")
-    return (documents.select(F.col(key_col))
-            .join(comp.withColumnRenamed("node", key_col), key_col, "left")
-            .select(key_col,
-                    F.coalesce("component", F.col(key_col)).alias("cluster_id"))
-            .withColumn("is_kept", F.col("cluster_id") == F.col(key_col)))
+    comp = connected_components(pairs)
+    return (documents.select(F.col("doc_id"))
+            .join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
+            .select("doc_id",
+                    F.coalesce("component", F.col("doc_id")).alias("cluster_id"))
+            .withColumn("is_kept", F.col("cluster_id") == F.col("doc_id")))
 
 
-def verified_near_dup_pairs(documents: DataFrame, text_col: str = "text",
-                            key_col: str = "doc_id", n: int = 5,
-                            num_hashes: int = 16, bands: int = 4,
-                            threshold: float = 0.8) -> DataFrame:
+def verified_near_dup_pairs(documents: DataFrame, n: int = SHINGLE_N,
+                            num_hashes: int = NUM_HASHES, bands: int = BANDS,
+                            threshold: float = THRESHOLD) -> DataFrame:
     """MinHash-LSH candidates verified by EXACT n-gram Jaccard — the
     production near-dup shape: the LSH band join bounds candidate
     generation (never all-pairs), then the exact similarity is computed
@@ -551,26 +549,24 @@ def verified_near_dup_pairs(documents: DataFrame, text_col: str = "text",
     # cleaned up with the result's lifetime): the band join, the estimate
     # gate, and (at scale) repeated runs all read the same tiny
     # (#docs x num_hashes longs) table -- the materialized-index pattern.
-    sig = minhash_signatures(documents, text_col, key_col, n, num_hashes) \
-        .localCheckpoint()
+    sig = minhash_signatures(documents, n, num_hashes).localCheckpoint()
     sig_arr = sig.select(
-        key_col, F.array(*[F.col(f"mh{i}") for i in range(num_hashes)]).alias("sig"))
+        "doc_id", F.array(*[F.col(f"mh{i}") for i in range(num_hashes)]).alias("sig"))
     # Raw band collisions WITHOUT the dedupe: on template corpora the band
     # join emits millions of duplicate-laden rows, and the gate (a pure
     # per-pair predicate) is cheaper than a distinct — the sig joins are
     # broadcast/map-side and the gate runs before the only shuffle, so the
     # distinct sees ~10x fewer rows than gating after it would.
-    b = minhash_lsh_buckets(documents, text_col, key_col, n, num_hashes,
-                            bands, signatures=sig)
-    raw = (b.select("band", "bucket", F.col(key_col).alias("id_a"))
-           .join(b.select("band", "bucket", F.col(key_col).alias("id_b")),
+    b = minhash_lsh_buckets(documents, n, num_hashes, bands, signatures=sig)
+    raw = (b.select("band", "bucket", F.col("doc_id").alias("id_a"))
+           .join(b.select("band", "bucket", F.col("doc_id").alias("id_b")),
                  ["band", "bucket"])
            .where(F.col("id_a") < F.col("id_b"))
            .select("id_a", "id_b"))
     raw = (raw
-           .join(sig_arr.select(F.col(key_col).alias("id_a"),
+           .join(sig_arr.select(F.col("doc_id").alias("id_a"),
                                 F.col("sig").alias("sa")), "id_a")
-           .join(sig_arr.select(F.col(key_col).alias("id_b"),
+           .join(sig_arr.select(F.col("doc_id").alias("id_b"),
                                 F.col("sig").alias("sb")), "id_b"))
     est = F.aggregate(F.zip_with("sa", "sb", lambda x, y: (x == y).cast("int")),
                       F.lit(0), lambda acc, v: acc + v) / float(num_hashes)
@@ -585,10 +581,10 @@ def verified_near_dup_pairs(documents: DataFrame, text_col: str = "text",
     # verify stage's shuffle from O(corpus shingles) into O(candidate
     # shingles); output is identical (non-candidate docs never reach the
     # intersection join anyway).
-    cand_ids = (pairs.select(F.col("id_a").alias(key_col))
-                .unionByName(pairs.select(F.col("id_b").alias(key_col)))
+    cand_ids = (pairs.select(F.col("id_a").alias("doc_id"))
+                .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
                 .distinct())
-    docs_cand = documents.join(cand_ids, key_col, "semi")
+    docs_cand = documents.join(cand_ids, "doc_id", "semi")
     # Exact verify as a per-pair array intersection: each candidate doc's
     # distinct-gram ARRAY (map-only expression) joins to its pairs, and
     # n_inter = size(array_intersect(ga, gb)) — identical to counting
@@ -597,10 +593,6 @@ def verified_near_dup_pairs(documents: DataFrame, text_col: str = "text",
     # size(g)).  Shuffle volume is pairs x gram-array payload; on template
     # corpora (dense candidates) this beats the inverted-index join, and
     # with rare candidates both are small.
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    grams = F.array_distinct(F.expr(
-        f"transform(sequence(1, greatest(length(__norm) - {n - 1}, 1)), "
-        f"i -> substr(__norm, i, {n}))"))
     # ship 60-bit md5 gram hashes, not gram strings: the pair join below
     # duplicates each doc's gram payload once per pair it appears in, so
     # payload width drives the dominant shuffle (8B/gram vs ~25B/gram).
@@ -610,14 +602,15 @@ def verified_near_dup_pairs(documents: DataFrame, text_col: str = "text",
     # join branches read the same small table instead of re-deriving it,
     # and the blocks die with the result instead of pinning the cache.
     ghashed = F.transform(
-        grams,
+        _distinct_grams("__norm", n),
         lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"))
-    gdf = (docs_cand.select(F.col(key_col), norm.alias("__norm"))
-           .select(F.col(key_col), ghashed.alias("g")).localCheckpoint())
+    gdf = (docs_cand.select(F.col("doc_id"),
+                            normalized(F.col("text")).alias("__norm"))
+           .select(F.col("doc_id"), ghashed.alias("g")).localCheckpoint())
     scored = (pairs
-              .join(gdf.select(F.col(key_col).alias("id_a"),
+              .join(gdf.select(F.col("doc_id").alias("id_a"),
                                F.col("g").alias("ga")), "id_a")
-              .join(gdf.select(F.col(key_col).alias("id_b"),
+              .join(gdf.select(F.col("doc_id").alias("id_b"),
                                F.col("g").alias("gb")), "id_b")
               .select("id_a", "id_b",
                       F.size(F.array_intersect("ga", "gb")).alias("n_inter"),
@@ -629,10 +622,9 @@ def verified_near_dup_pairs(documents: DataFrame, text_col: str = "text",
             .select("id_a", "id_b", "jaccard"))
 
 
-def dedup_resolve(documents: DataFrame, text_col: str = "text",
-                  key_col: str = "doc_id", n: int = 5,
-                  num_hashes: int = 16, bands: int = 4,
-                  threshold: float = 0.8) -> DataFrame:
+def dedup_resolve(documents: DataFrame, n: int = SHINGLE_N,
+                  num_hashes: int = NUM_HASHES, bands: int = BANDS,
+                  threshold: float = THRESHOLD) -> DataFrame:
     """Near-dup RESOLUTION: cluster, then keep the LONGEST document per
     cluster (ties broken by smallest id).  `dedup_clusters` keeps the
     min-id doc — an arbitrary representative; production pipelines
@@ -652,15 +644,14 @@ def dedup_resolve(documents: DataFrame, text_col: str = "text",
     join back keyed on cluster_id (AQE skew-join splits any pathological
     mega-cluster).
     """
-    clusters = dedup_clusters(documents, text_col, key_col, n,
-                              num_hashes, bands, threshold) \
-        .select(key_col, "cluster_id")
+    clusters = dedup_clusters(documents, n, num_hashes, bands, threshold) \
+        .select("doc_id", "cluster_id")
     # scored is consumed twice (the per-cluster argmax and the final
     # annotate join); materialize the tiny (key, cluster, len) table once
     # (lazy) so the cluster-map join lineage doesn't run per consumer
     scored = clusters.join(
-        documents.select(F.col(key_col),
-                         F.length(text_col).alias("__len")), key_col) \
+        documents.select(F.col("doc_id"),
+                         F.length("text").alias("__len")), "doc_id") \
         .localCheckpoint()
     # argmax(len, then min id) as a plain min over (-len, id): partial
     # aggregation applies, unlike a row_number window which must co-sort
@@ -668,17 +659,16 @@ def dedup_resolve(documents: DataFrame, text_col: str = "text",
     # numeric) instead of the key keeps string/any-orderable keys working.
     best = (scored.groupBy("cluster_id")
             .agg(F.min(F.struct((-F.col("__len")).alias("neg_len"),
-                                F.col(key_col).alias("k"))).alias("b"))
+                                F.col("doc_id").alias("k"))).alias("b"))
             .select("cluster_id", F.col("b.k").alias("kept_doc_id")))
     return (scored.join(best, "cluster_id")
-            .select(key_col, "cluster_id", "kept_doc_id",
-                    (F.col(key_col) == F.col("kept_doc_id")).alias("is_kept")))
+            .select("doc_id", "cluster_id", "kept_doc_id",
+                    (F.col("doc_id") == F.col("kept_doc_id")).alias("is_kept")))
 
 
-def line_dedup(documents: DataFrame, text_col: str = "text",
-               key_col: str = "doc_id", min_count: int = 3) -> DataFrame:
+def line_dedup(documents: DataFrame) -> DataFrame:
     """Corpus-level LINE deduplication (the C4 / Dolma boilerplate rule):
-    drop every line whose trimmed form occurs at least `min_count` times
+    drop every line whose trimmed form occurs at least `MIN_LINE_COUNT` times
     across the corpus — navigation chrome, cookie banners, copyright
     footers — and reassemble each document from its surviving lines in
     original order.  Whitespace-only lines are removed outright.
@@ -690,7 +680,7 @@ def line_dedup(documents: DataFrame, text_col: str = "text",
     Scale shape: the line-frequency count is a hash aggregate with
     map-side combine, so a line occurring a billion times still arrives
     at the reducer as one partial count per mapper (no hot-key shuffle).
-    The banned set (count >= min_count) is tiny relative to distinct
+    The banned set (count >= MIN_LINE_COUNT) is tiny relative to distinct
     lines and joins back as a left_anti keyed on the line — AQE picks a
     broadcast when it fits and splits skewed probe partitions when it
     does not.  Reassembly shuffles once keyed on doc_id (never skewed:
@@ -715,28 +705,28 @@ def line_dedup(documents: DataFrame, text_col: str = "text",
     # than storing blocks of roughly corpus size that die with the
     # result — the same trade every shuffle of this relation makes.
     lines = (documents
-             .select(F.col(key_col),
-                     F.posexplode(F.split(F.col(text_col), "\n"))
+             .select(F.col("doc_id"),
+                     F.posexplode(F.split(F.col("text"), "\n"))
                      .alias("idx", "line"))
              .withColumn("line", ws_trim(F.col("line")))
              .where(F.length("line") > 0)
              .localCheckpoint(eager=False))
     banned = (lines.groupBy("line")
               .agg(F.count(F.lit(1)).alias("__n"))
-              .where(F.col("__n") >= min_count)
+              .where(F.col("__n") >= MIN_LINE_COUNT)
               .select("line"))
     kept = lines.join(banned, "line", "left_anti")
-    sizes = lines.groupBy(key_col).agg(F.count(F.lit(1)).alias("n_lines"))
-    assembled = (kept.groupBy(key_col)
+    sizes = lines.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_lines"))
+    assembled = (kept.groupBy("doc_id")
                  .agg(F.count(F.lit(1)).alias("n_kept"),
                       F.concat_ws("\n", F.transform(
                           F.array_sort(F.collect_list(
                               F.struct("idx", "line"))),
                           lambda s: s["line"])).alias("text_clean")))
-    return (documents.select(key_col)
-            .join(sizes, key_col, "left")
-            .join(assembled, key_col, "left")
-            .select(key_col,
+    return (documents.select("doc_id")
+            .join(sizes, "doc_id", "left")
+            .join(assembled, "doc_id", "left")
+            .select("doc_id",
                     F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
                     F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
                     F.coalesce("text_clean", F.lit("")).alias("text_clean")))

@@ -136,10 +136,9 @@ def with_xyz(df: DataFrame) -> DataFrame:
 
 
 def rect_distance(df: DataFrame,
-                  rects: dict[int, tuple[float, float, float, float]],
-                  max_distance_rad: float | None = None) -> DataFrame:
-    """Distance from every point to every query rect; optionally keep only
-    points within max_distance_rad (radius pre-filter for buffered joins).
+                  rects: dict[int, tuple[float, float, float, float]]
+                  ) -> DataFrame:
+    """Distance from every point to every query rect.
 
     One row per (point, rect).  Pure codegen arithmetic — at 100 TB this is
     a map-only scan, no shuffle, filters pushed to the parquet scan."""
@@ -147,10 +146,8 @@ def rect_distance(df: DataFrame,
     base = with_xyz(df)
     for rid, rect in rects.items():
         d = F.expr(rect_distance_sql(rect))
-        r = base.withColumn("distance_rad", d).withColumn("rect_id", F.lit(rid))
-        if max_distance_rad is not None:
-            r = r.where(F.col("distance_rad") <= max_distance_rad)
-        out.append(r)
+        out.append(base.withColumn("distance_rad", d)
+                   .withColumn("rect_id", F.lit(rid)))
     res = out[0]
     for r in out[1:]:
         res = res.unionByName(r)
@@ -277,23 +274,23 @@ def _within(spark, pts: DataFrame, rows: list, key: str, radius_rad: float,
 
 
 def polyline_project_oracle_sql(src_sql: str,
-                                latlngs_deg: list[tuple[float, float]],
-                                id_col: str = "doc_id") -> str:
-    """DuckDB query mirroring polyline_project stage-for-stage."""
+                                latlngs_deg: list[tuple[float, float]]) -> str:
+    """DuckDB query mirroring polyline_project stage-for-stage, over a
+    `src_sql` of (doc_id, lat, lng)."""
     e = polyline_project_exprs(latlngs_deg)
     d_sel = ", ".join(f"{v} AS {k}" for k, v in e["d_cols"].items())
     return f"""
 WITH src AS ({src_sql}),
-p AS (SELECT {id_col}, lat, lng,
+p AS (SELECT doc_id, lat, lng,
       {XYZ_COLS_SQL['px']} AS px, {XYZ_COLS_SQL['py']} AS py,
       {XYZ_COLS_SQL['pz']} AS pz FROM src),
-d AS (SELECT {id_col}, px, py, pz, {d_sel} FROM p),
-sel AS (SELECT {id_col}, px, py, pz, {e['idx_sql']} AS edge_idx,
+d AS (SELECT doc_id, px, py, pz, {d_sel} FROM p),
+sel AS (SELECT doc_id, px, py, pz, {e['idx_sql']} AS edge_idx,
         {e['dist_sql']} AS distance_rad FROM d),
-q AS (SELECT {id_col}, edge_idx, distance_rad,
+q AS (SELECT doc_id, edge_idx, distance_rad,
       {e['q_cols']['qx']} AS qx, {e['q_cols']['qy']} AS qy,
       {e['q_cols']['qz']} AS qz FROM sel)
-SELECT {id_col}, edge_idx, round(distance_rad, 9) AS dist_r,
+SELECT doc_id, edge_idx, round(distance_rad, 9) AS dist_r,
        round(degrees(atan2(qz, sqrt(qx*qx + qy*qy))), 6) AS proj_lat,
        round(degrees(atan2(qy, qx)), 6) AS proj_lng
 FROM q
@@ -338,8 +335,7 @@ def corridor_join(spark, pts: DataFrame,
 
 def nearest_track_join(spark, pts: DataFrame,
                        tracks: dict[int, list[tuple[float, float]]],
-                       radius_rad: float,
-                       point_key: str = "doc_id") -> DataFrame:
+                       radius_rad: float) -> DataFrame:
     """Map-matching assignment: each point within radius_rad of at least
     one track is assigned its NEAREST track (the distributed form of
     S2Polyline.GetNearestEdgeIndex across a track SET — "which road is this
@@ -347,22 +343,22 @@ def nearest_track_join(spark, pts: DataFrame,
 
     Plan: corridor_join candidates (broadcast covering equi-join — the
     points never shuffle) -> per-point argmin window (ONE shuffle on the
-    point key).  Ties break to the lowest track id; the ordering uses the
-    distance rounded to 1e-9 rad (~6 µm) so the argmin is stable across
-    FP summation orders (and reproducible in the SQL oracle)."""
+    point key `doc_id`).  Ties break to the lowest track id; the ordering
+    uses the distance rounded to 1e-9 rad (~6 µm) so the argmin is stable
+    across FP summation orders (and reproducible in the SQL oracle)."""
     from pyspark.sql.window import Window
 
     cand = corridor_join(spark, pts, tracks, radius_rad)
-    w = Window.partitionBy(point_key).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.round(F.col("distance_rad"), 9).asc(), F.col("track_id").asc())
     return (cand.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1).drop("__rn"))
 
 
-def polyline_interpolate_sql(latlngs_deg: list[tuple[float, float]],
-                             frac_col: str = "frac") -> tuple[str, str]:
+def polyline_interpolate_sql(latlngs_deg: list[tuple[float, float]]
+                             ) -> tuple[str, str]:
     """SQL text pair (lat_expr, lng_expr): S2Polyline.Interpolate over a
-    CONSTANT polyline with a per-row `frac_col` column — edge lengths and
+    CONSTANT polyline with a per-row `frac` column — edge lengths and
     cumulative offsets constant-fold at plan build, so the runtime work is
     one CASE chain of slerps (S2Polyline.cs:246-266: walk edges until the
     target arc length lands inside one, then sin-weighted slerp).
@@ -379,7 +375,7 @@ def polyline_interpolate_sql(latlngs_deg: list[tuple[float, float]],
 
     lengths = [_ang(verts[i], verts[i + 1]) for i in range(len(verts) - 1)]
     total = sum(lengths)
-    t = f"(({frac_col}) * {total!r})"
+    t = f"((frac) * {total!r})"
     comps = {0: [], 1: [], 2: []}  # per-coordinate CASE branches
     cum = 0.0
     for i, ln in enumerate(lengths):
@@ -394,7 +390,7 @@ def polyline_interpolate_sql(latlngs_deg: list[tuple[float, float]],
     last = verts[-1]
     raw = {}
     for k in range(3):
-        first = f"WHEN ({frac_col}) <= 0 THEN {verts[0][k]!r}"
+        first = f"WHEN (frac) <= 0 THEN {verts[0][k]!r}"
         raw[k] = ("(CASE " + first + " " + " ".join(comps[k])
                   + f" ELSE {last[k]!r} END)")
     # lat/lng via atan2 — scale-invariant, so no normalization needed

@@ -4,9 +4,9 @@ Media ride as opaque `binary` columns with typed metadata structs; decode
 and per-media pixel stats (`media_stats`) run as an Arrow-batched
 ``mapInPandas`` over the binary payloads.  The decode step itself is
 STUBBED (no image or audio codec library is a dependency): `_decode_image`
-raises NotImplementedError unless `deterministic_fake=True`, in which case
-a seeded, content-derived fake decode keeps the whole distributed pipeline
-(schema, batching, partitioning, UDF signatures) real and testable.
+is a seeded, content-derived fake decode, which keeps the whole
+distributed pipeline (schema, batching, partitioning, UDF signatures) real
+and testable.
 
 Scale notes: binary payloads dominate row size -> keep
 `spark.sql.files.maxPartitionBytes` small for these tables, select the
@@ -44,16 +44,13 @@ def synthesize_media(spark, n_rows: int) -> DataFrame:
     )
 
 
-def _decode_image(payload: bytes, deterministic_fake: bool) -> np.ndarray:
-    """STUB: real decode needs an image codec (PIL/cv2 not in container).
+def _decode_image(payload: bytes) -> np.ndarray:
+    """STUB: real decode needs an image codec library, which is not a
+    dependency.
 
     The deterministic fake derives an 8x8x3 "image" from an md5 chain over
     the payload — pure hash arithmetic, so any engine (incl. the DuckDB
     oracle) reproduces the exact pixel bytes."""
-    if not deterministic_fake:
-        raise NotImplementedError(
-            "image decode requires a codec library; pass deterministic_fake=True "
-            "for the seeded fake decode used in tests/benchmarks")
     raw = b"".join(hashlib.md5(payload + b"_" + str(i).encode()).digest()
                    for i in range(12))
     return np.frombuffer(raw, dtype=np.uint8).reshape(8, 8, 3).copy()
@@ -66,23 +63,22 @@ MEDIA_STATS_SCHEMA = StructType(
     + [StructField(f"h{b}", LongType()) for b in range(6)])
 
 
-def media_stats(media: DataFrame, key_col: str = "media_id",
-                payload_col: str = "payload",
-                deterministic_fake: bool = True) -> DataFrame:
-    """Per-media decoded-pixel stats: channel means/stds (rounded to 6) and
-    a 6-bin histogram of integer pixel-channel sums (exact ints) — the
-    oracle-checkable face of the decode -> feature pipeline.
+def media_stats(media: DataFrame) -> DataFrame:
+    """Per-media decoded-pixel stats of a (media_id, payload) table:
+    channel means/stds (rounded to 6) and a 6-bin histogram of integer
+    pixel-channel sums (exact ints) — the oracle-checkable face of the
+    decode -> feature pipeline.
 
     The histogram bins on the INTEGER sum of the 3 channel bytes
     (bin = sum3 // 128, sum3 in [0, 765] -> bins 0..5) so binning is exact
     arithmetic in every engine, immune to FP boundary flips."""
-    src = media.select(key_col, payload_col)
+    src = media.select("media_id", "payload")
 
     def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for mid, payload in zip(pdf[key_col], pdf[payload_col]):
-                img = _decode_image(bytes(payload), deterministic_fake)
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
+                img = _decode_image(bytes(payload))
                 px = img.reshape(-1, 3).astype(np.float64)
                 scaled = px / 255.0
                 mean = np.round(scaled.mean(axis=0), 6)
@@ -95,10 +91,10 @@ def media_stats(media: DataFrame, key_col: str = "media_id",
     return src.mapInPandas(stats, schema=MEDIA_STATS_SCHEMA)
 
 
-def media_stats_oracle_sql(src_sql: str, key_col: str = "media_id",
-                           payload_col: str = "p") -> str:
-    """DuckDB query reproducing media_stats for a source that yields the
-    payload as a STRING column (md5 chain is computed on its UTF-8 text)."""
+def media_stats_oracle_sql(src_sql: str) -> str:
+    """DuckDB query reproducing media_stats for a source of (media_id, p)
+    that yields the payload `p` as a STRING column (md5 chain is computed
+    on its UTF-8 text)."""
     mean_cols = ", ".join(
         f"max(CASE WHEN ch = {i} THEN m END) AS mean_{c}"
         for i, c in enumerate("rgb"))
@@ -110,18 +106,18 @@ def media_stats_oracle_sql(src_sql: str, key_col: str = "media_id",
         for b in range(6))
     return f"""
 WITH src AS ({src_sql}),
-chains AS (SELECT {key_col}, i, md5({payload_col} || '_' || CAST(i AS VARCHAR)) AS h
+chains AS (SELECT media_id, i, md5(p || '_' || CAST(i AS VARCHAR)) AS h
            FROM src CROSS JOIN range(12) t(i)),
-bytes AS (SELECT {key_col}, (i*16 + j) AS bi,
+bytes AS (SELECT media_id, (i*16 + j) AS bi,
           ('0x' || substr(h, CAST(j*2 + 1 AS INT), 2))::BIGINT AS b
           FROM chains CROSS JOIN range(16) s(j)),
-px AS (SELECT {key_col}, bi // 3 AS pix, bi % 3 AS ch, b FROM bytes),
-chan AS (SELECT {key_col}, ch, round(avg(b/255.0), 6) AS m,
+px AS (SELECT media_id, bi // 3 AS pix, bi % 3 AS ch, b FROM bytes),
+chan AS (SELECT media_id, ch, round(avg(b/255.0), 6) AS m,
          round(stddev_pop(b/255.0), 6) AS s FROM px GROUP BY 1, 2),
-pixsum AS (SELECT {key_col}, pix, sum(b) AS s3 FROM px GROUP BY 1, 2),
-hist AS (SELECT {key_col}, least(s3 // 128, 5) AS bin, count(*) AS c
+pixsum AS (SELECT media_id, pix, sum(b) AS s3 FROM px GROUP BY 1, 2),
+hist AS (SELECT media_id, least(s3 // 128, 5) AS bin, count(*) AS c
          FROM pixsum GROUP BY 1, 2),
-chan_p AS (SELECT {key_col}, {mean_cols}, {std_cols} FROM chan GROUP BY 1),
-hist_p AS (SELECT {key_col}, {hist_cols} FROM hist GROUP BY 1)
-SELECT * FROM chan_p JOIN hist_p USING ({key_col})
+chan_p AS (SELECT media_id, {mean_cols}, {std_cols} FROM chan GROUP BY 1),
+hist_p AS (SELECT media_id, {hist_cols} FROM hist GROUP BY 1)
+SELECT * FROM chan_p JOIN hist_p USING (media_id)
 """

@@ -22,41 +22,24 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product of two array columns.
-
-    With `dim` passed, the sum is UNROLLED into flat element_at
-    arithmetic with the aggregate's exact FP fold order
-    (((0.0 + a1*b1) + a2*b2) + ...) — bit-identical results.  Measured
-    r6 tradeoff: over a materialized array column inside one
-    whole-stage-codegen stage the unrolled form executes ~1.5x faster
-    than the interpreted higher-order aggregate (codegen + CSE), but
-    each unrolled site adds ~0.5-1 s of one-time janino/JIT compile and,
-    in stages that fall back to interpreted projection (no CSE), the
-    64 element_at references re-evaluate a transform-produced input per
-    element — a 2-3x regression.  The driver bench runs every query
-    once at sf0.1, where compile time dominates, so the DEFAULT here is
-    the HOF form; only `lsh_topk` and `cosine_near_dup_pairs`, which
-    take the width for their sketches anyway, pass `dim`.
-    """
-    if dim is None:
-        return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                           F.lit(0.0), lambda acc, v: acc + v)
-    acc = F.lit(0.0)
-    for i in range(1, dim + 1):
-        acc = acc + F.element_at(a, i) * F.element_at(b, i)
-    return acc
+# ivf_topk / semdedup coarse quantizer: every CENTROID_STRIDE-th vector (by
+# key) is a centroid; ivf_topk probes the NPROBE closest lists per query
+CENTROID_STRIDE = 31
+NPROBE = 4
+# width of the embedding vectors cosine_near_dup_pairs sketches
+NEAR_DUP_DIM = 64
 
 
-def _norm(a: Column, dim: int | None = None) -> Column:
-    """sqrt(sum of squares); same unrolling contract as _dot."""
-    if dim is None:
-        return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    acc = F.lit(0.0)
-    for i in range(1, dim + 1):
-        e = F.element_at(a, i)
-        acc = acc + e * e
-    return F.sqrt(acc)
+def _dot(a: Column, b: Column) -> Column:
+    """Dot product of two array columns: one higher-order aggregate, whose
+    FP fold order is (((0.0 + a1*b1) + a2*b2) + ...)."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                       F.lit(0.0), lambda acc, v: acc + v)
+
+
+def _norm(a: Column) -> Column:
+    """sqrt(sum of squares), one higher-order aggregate like _dot."""
+    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
 def as_double_array(col: Column) -> Column:
@@ -67,8 +50,7 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _cosine_pre(a: Column, b: Column, na: Column, nb: Column,
-                dim: int | None = None) -> Column:
+def _cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """`cosine` with the per-side norms precomputed as columns.
 
     Bit-identical to `cosine` (same _dot(a,b) / (na * nb) double
@@ -80,28 +62,35 @@ def _cosine_pre(a: Column, b: Column, na: Column, nb: Column,
     one (the dot): at 10^9 vectors x sqrt(N) centroids the two hoisted
     norms are the difference between 3x and 1x full-corpus-dim passes
     per candidate."""
-    return _dot(a, b, dim) / (na * nb)
+    return _dot(a, b) / (na * nb)
 
 
-def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int,
-                     vec_col: str = "embedding", key_col: str = "vec_id",
-                     query_key: str = "query_id") -> DataFrame:
-    """Exact cosine top-k per query (queries broadcast; data side streamed).
+def brute_force_topk(embeddings: DataFrame, queries: DataFrame,
+                     k: int) -> DataFrame:
+    """Exact cosine top-k per query (queries broadcast; data side streamed)
+    of (vec_id, embedding) data against (query_id, embedding) queries.
 
     Output: (query_id, vec_id, cos_sim, rank)."""
-    d = (embeddings.select(F.col(key_col),
-                           as_double_array(F.col(vec_col)).alias("v"))
+    d = (embeddings.select(F.col("vec_id"),
+                           as_double_array(F.col("embedding")).alias("v"))
          .withColumn("nv", _norm(F.col("v"))))
-    q = (queries.select(F.col(query_key),
-                        as_double_array(F.col(vec_col)).alias("qv"))
+    q = (queries.select(F.col("query_id"),
+                        as_double_array(F.col("embedding")).alias("qv"))
          .withColumn("nq", _norm(F.col("qv"))))
     scored = (d.crossJoin(F.broadcast(q))
               .withColumn("cos_sim", F.round(_cosine_pre(
                   F.col("qv"), F.col("v"), F.col("nq"), F.col("nv")), 4)))
-    w = Window.partitionBy(query_key).orderBy(F.desc("cos_sim"), F.col(key_col))
+    return _rank_topk(scored, k)
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The k best `cos_sim` per query, ties to the lowest vec_id:
+    (query_id, vec_id, cos_sim, rank)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"),
+                                               F.col("vec_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
-            .select(query_key, key_col, "cos_sim", "rank"))
+            .select("query_id", "vec_id", "cos_sim", "rank"))
 
 
 def _projection_vectors(dim: int, bits: int) -> list[list[float]]:
@@ -126,27 +115,32 @@ def srp_sketch(vec: Column, dim: int, bits: int = 16) -> Column:
     sign: the raw sign of an FP sum is sensitive to summation order across
     engines (a dot near 0 can flip), while a rounded value only differs if
     two engines straddle a 1e-6 boundary — which makes the sketch portable
-    enough for a DuckDB oracle."""
+    enough for a DuckDB oracle.
+
+    Each projection is ONE array literal of D-suffixed doubles (a bare
+    0.123 would parse as DECIMAL), not F.lit(list), which builds the array
+    one JVM call per element."""
     projections = _projection_vectors(dim, bits)
     sketch = F.lit(0).cast("long")
     for b, proj in enumerate(projections):
-        d = F.round(_dot(vec, F.lit(proj)), 6)
+        lit = F.expr("array(" + ", ".join(f"{c!r}D" for c in proj) + ")")
+        d = F.round(_dot(vec, lit), 6)
         sketch = sketch + F.when(d >= 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
     return sketch
 
 
 def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int, dim: int,
-             bits: int = 12, vec_col: str = "embedding",
-             key_col: str = "vec_id", query_key: str = "query_id") -> DataFrame:
+             bits: int = 12) -> DataFrame:
     """Approximate cosine top-k: candidates = data vectors whose SRP sketch
-    is within Hamming distance 1 of the query's sketch (multi-probe)."""
-    d = (embeddings.select(F.col(key_col),
-                           as_double_array(F.col(vec_col)).alias("v"))
-         .withColumn("nv", _norm(F.col("v"), dim)))
+    is within Hamming distance 1 of the query's sketch (multi-probe).
+    Inputs and output as brute_force_topk."""
+    d = (embeddings.select(F.col("vec_id"),
+                           as_double_array(F.col("embedding")).alias("v"))
+         .withColumn("nv", _norm(F.col("v"))))
     d = d.withColumn("bucket", srp_sketch(F.col("v"), dim, bits))
-    q = (queries.select(F.col(query_key),
-                        as_double_array(F.col(vec_col)).alias("qv"))
-         .withColumn("nq", _norm(F.col("qv"), dim)))
+    q = (queries.select(F.col("query_id"),
+                        as_double_array(F.col("embedding")).alias("qv"))
+         .withColumn("nq", _norm(F.col("qv"))))
     q = q.withColumn("sketch", srp_sketch(F.col("qv"), dim, bits))
     probes = F.array(F.col("sketch"),
                      *[F.col("sketch").bitwiseXOR(F.lit(1 << b).cast("long"))
@@ -155,56 +149,35 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int, dim: int,
     # dedupe candidates BEFORE ranking: a data vector reachable through
     # several probe buckets must hold one rank, not occupy several
     cand = (d.join(F.broadcast(q), "bucket")
-            .dropDuplicates([query_key, key_col])
+            .dropDuplicates(["query_id", "vec_id"])
             .withColumn("cos_sim", F.round(_cosine_pre(
-                F.col("qv"), F.col("v"), F.col("nq"), F.col("nv"), dim), 4)))
-    w = Window.partitionBy(query_key).orderBy(F.desc("cos_sim"), F.col(key_col))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(query_key, key_col, "cos_sim", "rank"))
+                F.col("qv"), F.col("v"), F.col("nq"), F.col("nv")), 4)))
+    return _rank_topk(cand, k)
 
 
 def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
-                          vec_col: str = "embedding", key_col: str = "vec_id",
-                          dim: int = 64, bits: int = 12,
-                          bucket_cap: int | None = None) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via SRP bucket self-join.
-
-    bucket_cap bounds the self-join blowup from a skewed bucket: a bucket
-    holding b vectors emits b^2/2 pairs, so one degenerate bucket (e.g. a
-    corpus with millions of zero-ish embeddings sharing a sketch) can
-    detonate a reducer at 100 TB.  Buckets with more members than
-    bucket_cap are dropped from pair generation (documented recall
-    tradeoff: vectors inside an over-full bucket are almost certainly
-    exact duplicates better handled by exact dedup first).  None (the
-    default) disables the cap — exact with respect to the SRP candidate
-    semantics, and safe while buckets stay near-uniform."""
-    d = (embeddings.select(F.col(key_col),
-                           as_double_array(F.col(vec_col)).alias("v"))
-         .withColumn("nv", _norm(F.col("v"), dim)))
-    d = d.withColumn("bucket", srp_sketch(F.col("v"), dim, bits))
-    if bucket_cap is not None:
-        keep = (d.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-                .where(F.col("n") <= bucket_cap).select("bucket"))
-        d = d.join(keep, "bucket", "left_semi")
-    l = d.select(F.col("bucket"), F.col(key_col).alias("id_a"),
+                          bits: int = 12) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs of a (vec_id, embedding)
+    table via SRP bucket self-join: (id_a, id_b, cos_sim)."""
+    d = (embeddings.select(F.col("vec_id"),
+                           as_double_array(F.col("embedding")).alias("v"))
+         .withColumn("nv", _norm(F.col("v"))))
+    d = d.withColumn("bucket", srp_sketch(F.col("v"), NEAR_DUP_DIM, bits))
+    l = d.select(F.col("bucket"), F.col("vec_id").alias("id_a"),
                  F.col("v").alias("va"), F.col("nv").alias("na"))
-    r = d.select(F.col("bucket"), F.col(key_col).alias("id_b"),
+    r = d.select(F.col("bucket"), F.col("vec_id").alias("id_b"),
                  F.col("v").alias("vb"), F.col("nv").alias("nb"))
     return (l.join(r, "bucket").where(F.col("id_a") < F.col("id_b"))
             .withColumn("cos_sim", F.round(_cosine_pre(
-                F.col("va"), F.col("vb"), F.col("na"), F.col("nb"), dim), 4))
+                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")), 4))
             .where(F.col("cos_sim") >= threshold)
             .select("id_a", "id_b", "cos_sim").distinct())
 
 
-def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
-             centroid_stride: int = 31, nprobe: int = 4,
-             vec_col: str = "embedding", key_col: str = "vec_id",
-             query_key: str = "query_id") -> DataFrame:
+def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """IVF-flat approximate top-k: the partition-pruned ANN scale path.
 
-    Coarse quantizer: every `centroid_stride`-th vector (by key) is a
+    Coarse quantizer: every `CENTROID_STRIDE`-th vector (by key) is a
     centroid — a deterministic seeding (no Lloyd iterations) so the index
     is a pure function of the data and reproducible in the SQL oracle.
     With stride ~ sqrt(N) this is the classic IVF shape: ~sqrt(N)
@@ -218,9 +191,9 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
       * the data shuffles ONCE on centroid_id (building the inverted
         lists — in a persisted index this is the write-time layout, cf.
         sources.bucketed bucketing by tile);
-      * each query probes its `nprobe` closest centroids -> candidates
+      * each query probes its `NPROBE` closest centroids -> candidates
         arrive through an equi-join on centroid_id, never a cross join:
-        the scan is pruned to nprobe/num_centroids of the data.
+        the scan is pruned to NPROBE/num_centroids of the data.
 
     Similarities are rounded to 4 dp before ranking (ties broken by key)
     so ranks are stable across FP summation orders — same contract as
@@ -229,11 +202,11 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
     Output: (query_id, vec_id, cos_sim, rank) — schema-identical to
     brute_force_topk so callers can swap exact for approximate.
     """
-    d = (embeddings.select(F.col(key_col),
-                           as_double_array(F.col(vec_col)).alias("v"))
+    d = (embeddings.select(F.col("vec_id"),
+                           as_double_array(F.col("embedding")).alias("v"))
          .withColumn("nv", _norm(F.col("v"))))
-    cent = (d.where(F.col(key_col) % centroid_stride == 0)
-            .select(F.col(key_col).alias("centroid_id"),
+    cent = (d.where(F.col("vec_id") % CENTROID_STRIDE == 0)
+            .select(F.col("vec_id").alias("centroid_id"),
                     F.col("v").alias("cv"), F.col("nv").alias("ncv")))
 
     # assignment: argmax rounded-cosine over broadcast centroids via
@@ -250,42 +223,37 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int,
                               F.col("nv"), F.col("ncv")), 4)
     assigned = (d.crossJoin(F.broadcast(cent))
                 .withColumn("sim", sim)
-                .groupBy(key_col)
+                .groupBy("vec_id")
                 .agg(F.max_by(
                     F.struct(F.col("centroid_id"), F.col("v"), F.col("nv")),
                     F.struct(F.col("sim"),
                              (-F.col("centroid_id")).alias("nc"))).alias("a"))
-                .select(key_col, F.col("a.v").alias("v"),
+                .select("vec_id", F.col("a.v").alias("v"),
                         F.col("a.nv").alias("nv"),
                         F.col("a.centroid_id").alias("centroid_id")))
 
-    # query side: nprobe nearest centroids each (same broadcast, tiny)
-    q = (queries.select(F.col(query_key),
-                        as_double_array(F.col(vec_col)).alias("qv"))
+    # query side: NPROBE nearest centroids each (same broadcast, tiny)
+    q = (queries.select(F.col("query_id"),
+                        as_double_array(F.col("embedding")).alias("qv"))
          .withColumn("nq", _norm(F.col("qv"))))
     qsim = F.round(_cosine_pre(F.col("qv"), F.col("cv"),
                                F.col("nq"), F.col("ncv")), 4)
-    qw = Window.partitionBy(query_key).orderBy(F.desc("qsim"), F.col("centroid_id"))
+    qw = Window.partitionBy("query_id").orderBy(F.desc("qsim"), F.col("centroid_id"))
     probes = (q.crossJoin(F.broadcast(cent))
               .withColumn("qsim", qsim)
               .withColumn("rn", F.row_number().over(qw))
-              .where(F.col("rn") <= nprobe)
-              .select(query_key, "qv", "nq", "centroid_id"))
+              .where(F.col("rn") <= NPROBE)
+              .select("query_id", "qv", "nq", "centroid_id"))
 
     # candidate generation: equi-join on centroid_id (inverted-list probe)
     cand = assigned.join(F.broadcast(probes), "centroid_id")
     scored = cand.withColumn(
         "cos_sim", F.round(_cosine_pre(F.col("qv"), F.col("v"),
                                        F.col("nq"), F.col("nv")), 4))
-    w = Window.partitionBy(query_key).orderBy(F.desc("cos_sim"), F.col(key_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(query_key, key_col, "cos_sim", "rank"))
+    return _rank_topk(scored, k)
 
 
-def semdedup(embeddings: DataFrame, threshold: float = 0.95,
-             centroid_stride: int = 31,
-             vec_col: str = "embedding", key_col: str = "vec_id") -> DataFrame:
+def semdedup(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
     """SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication", 2023): remove documents
     whose EMBEDDINGS are near-duplicates, catching paraphrases and
@@ -295,7 +263,7 @@ def semdedup(embeddings: DataFrame, threshold: float = 0.95,
     cosine similarity only WITHIN each cluster, threshold, and keep one
     canonical member per connected component of the resulting graph.
     The quantizer here is the same deterministic stride seeding as
-    `ivf_topk` (every `centroid_stride`-th vector by key) so the whole
+    `ivf_topk` (every `CENTROID_STRIDE`-th vector by key) so the whole
     pipeline is a pure function of the data and reproducible in the SQL
     oracle; a production run would swap in k-means centroids — every
     downstream stage is unchanged by that substitution.
@@ -313,18 +281,18 @@ def semdedup(embeddings: DataFrame, threshold: float = 0.95,
       * components via the O(log n) large/small-star loop
         (`dedup.connected_components`), min-id canonicalization.
 
-    Output: (key, cluster_id, is_kept) for EVERY input row — singletons
+    Output: (vec_id, cluster_id, is_kept) for EVERY input row — singletons
     cluster with themselves; filtering on is_kept yields the
     semantically-deduplicated corpus.  Schema mirrors `dedup_clusters`
     so lexical and semantic dedup are drop-in interchangeable stages.
     """
     from .dedup import connected_components
 
-    d = (embeddings.select(F.col(key_col),
-                           as_double_array(F.col(vec_col)).alias("v"))
+    d = (embeddings.select(F.col("vec_id"),
+                           as_double_array(F.col("embedding")).alias("v"))
          .withColumn("nv", _norm(F.col("v"))))
-    cent = (d.where(F.col(key_col) % centroid_stride == 0)
-            .select(F.col(key_col).alias("centroid_id"),
+    cent = (d.where(F.col("vec_id") % CENTROID_STRIDE == 0)
+            .select(F.col("vec_id").alias("centroid_id"),
                     F.col("v").alias("cv"), F.col("nv").alias("ncv")))
 
     # nearest-centroid assignment: identical contract to ivf_topk
@@ -336,20 +304,20 @@ def semdedup(embeddings: DataFrame, threshold: float = 0.95,
                               F.col("nv"), F.col("ncv")), 4)
     assigned = (d.crossJoin(F.broadcast(cent))
                 .withColumn("sim", sim)
-                .groupBy(key_col)
+                .groupBy("vec_id")
                 .agg(F.max_by(
                     F.struct(F.col("centroid_id"), F.col("v"), F.col("nv")),
                     F.struct(F.col("sim"),
                              (-F.col("centroid_id")).alias("nc"))).alias("a"))
-                .select(F.col(key_col),
+                .select(F.col("vec_id"),
                         F.col("a.v").alias("v"),
                         F.col("a.nv").alias("nv"),
                         F.col("a.centroid_id").alias("centroid_id")))
 
     # within-cluster pairs only: equi-join on centroid_id
-    lhs = assigned.select("centroid_id", F.col(key_col).alias("id_a"),
+    lhs = assigned.select("centroid_id", F.col("vec_id").alias("id_a"),
                           F.col("v").alias("va"), F.col("nv").alias("na"))
-    rhs = assigned.select("centroid_id", F.col(key_col).alias("id_b"),
+    rhs = assigned.select("centroid_id", F.col("vec_id").alias("id_b"),
                           F.col("v").alias("vb"), F.col("nv").alias("nb"))
     pairs = (lhs.join(rhs, "centroid_id")
              .where(F.col("id_a") < F.col("id_b"))
@@ -362,16 +330,15 @@ def semdedup(embeddings: DataFrame, threshold: float = 0.95,
              # dedup.dedup_clusters)
              .localCheckpoint())
 
-    comp = connected_components(pairs, "id_a", "id_b")
-    return (embeddings.select(F.col(key_col))
-            .join(comp.withColumnRenamed("node", key_col), key_col, "left")
-            .select(F.col(key_col),
-                    F.coalesce("component", F.col(key_col)).alias("cluster_id"))
-            .withColumn("is_kept", F.col("cluster_id") == F.col(key_col)))
+    comp = connected_components(pairs)
+    return (embeddings.select(F.col("vec_id"))
+            .join(comp.withColumnRenamed("node", "vec_id"), "vec_id", "left")
+            .select(F.col("vec_id"),
+                    F.coalesce("component", F.col("vec_id")).alias("cluster_id"))
+            .withColumn("is_kept", F.col("cluster_id") == F.col("vec_id")))
 
 
-def quantize_int8(embeddings: DataFrame, vec_col: str = "embedding",
-                  key_col: str = "vec_id") -> DataFrame:
+def quantize_int8(embeddings: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization of an embedding column —
     the standard 4x storage/bandwidth cut before ANN indexing or
     shipping vectors through a shuffle: q_i = round_even(v_i/s * 127),
@@ -384,24 +351,22 @@ def quantize_int8(embeddings: DataFrame, vec_col: str = "embedding",
     as the S2 StToIj encode).  Zero vectors quantize to all-zero codes
     via the epsilon-guarded scale.
 
-    Output: (key, dim, scale [6 dp], q [comma-joined int8 codes —
-    a string so the value hash is engine-portable]).
+    Output: (vec_id, dim, scale [6 dp], q [comma-joined int8 codes of
+    `embedding` — a string so the value hash is engine-portable]).
     """
-    v = as_double_array(F.col(vec_col))
+    v = as_double_array(F.col("embedding"))
     s = F.array_max(F.transform(v, F.abs))
     safe = F.greatest(s, F.lit(1e-30))
     q = F.transform(v, lambda x: F.bround(x / safe * 127, 0).cast("int"))
     return embeddings.select(
-        F.col(key_col),
+        F.col("vec_id"),
         F.size(v).alias("dim"),
         F.round(s, 6).alias("scale"),
         F.concat_ws(",", F.transform(q, lambda x: x.cast("string")))
         .alias("q"))
 
 
-def recall_at_k(truth: DataFrame, retrieved: DataFrame,
-                query_col: str = "query_id",
-                item_col: str = "vec_id") -> DataFrame:
+def recall_at_k(truth: DataFrame, retrieved: DataFrame) -> DataFrame:
     """Retrieval-quality evaluation: per-query recall of an approximate
     top-k result against the exact one — the measure-don't-guess gate
     every ANN deployment needs before trading exactness for speed.
@@ -415,23 +380,23 @@ def recall_at_k(truth: DataFrame, retrieved: DataFrame,
     every stage — two partial-aggregatable counts and one inner join on
     (query, item) — is bounded by k x #queries, never by corpus size.
 
-    PRECONDITION: (query, item) pairs must be UNIQUE within each input
+    PRECONDITION: (query_id, vec_id) pairs must be UNIQUE within each input
     (true of every top-k producer in this module).  Duplicate rows would
     multiply-count through the hit join and can report recall > 1.0;
     deduplicating here would add two shuffles every call pays for a
     malformed input, so — like minhash_signatures' key-uniqueness
     precondition — it is the caller's contract.
     """
-    t = truth.select(query_col, item_col)
-    r = retrieved.select(query_col, item_col)
-    n_true = t.groupBy(query_col).agg(F.count(F.lit(1)).alias("n_true"))
-    n_ret = r.groupBy(query_col).agg(
+    t = truth.select("query_id", "vec_id")
+    r = retrieved.select("query_id", "vec_id")
+    n_true = t.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_true"))
+    n_ret = r.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n_retrieved"))
-    n_hit = (t.join(r, [query_col, item_col])
-             .groupBy(query_col).agg(F.count(F.lit(1)).alias("n_hit")))
-    return (n_true.join(n_ret, query_col, "left")
-            .join(n_hit, query_col, "left")
-            .select(query_col, "n_true",
+    n_hit = (t.join(r, ["query_id", "vec_id"])
+             .groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hit")))
+    return (n_true.join(n_ret, "query_id", "left")
+            .join(n_hit, "query_id", "left")
+            .select("query_id", "n_true",
                     F.coalesce("n_retrieved", F.lit(0)).alias("n_retrieved"),
                     F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
                     F.round(F.coalesce("n_hit", F.lit(0)) / F.col("n_true"),

@@ -202,11 +202,9 @@ def spatial_join(spark: SparkSession, points: DataFrame,
     return refine_skin(spark, joined, polygons)
 
 
-def points_with_cells(pages_geo: DataFrame, lat_col: str = "lat",
-                      lng_col: str = "lng") -> DataFrame:
+def points_with_cells(pages_geo: DataFrame) -> DataFrame:
     """Attach leaf cell_id (JVM expression) + unit-vector columns (needed by
-    the exact refine kernel) to a mined geo table."""
+    the exact refine kernel) to a mined geo table of `lat`, `lng`."""
     # keep_xyz reuses the unit vectors computed inside the encode — same
     # expressions (bit-identical), no recomputation, no extra plan nodes
-    return C.with_cell_id(pages_geo, lat_col, lng_col, out="cell_id",
-                          keep_xyz=True)
+    return C.with_cell_id(pages_geo, "lat", "lng", keep_xyz=True)

@@ -39,7 +39,9 @@ from ..plans.frames import local_frame
 from .spatial_join import COVERING_SCHEMA, build_coverings, refine_skin
 
 REFINE_SALT = 16        # cogroup refine: ways one polygon's matches split
-# broadcast-refine vertex budget (~24 B raw per vertex: 1M ~ 25 MB)
+# broadcast-refine budget: loop rows, and vertices (~24 B raw per vertex:
+# 1M ~ 25 MB)
+REFINE_BROADCAST_LOOPS = 10_000
 REFINE_BROADCAST_VERTICES = 1_000_000
 
 POLYGON_SCHEMA = StructType([
@@ -89,7 +91,6 @@ def spatial_join_shuffle(spark: SparkSession, points: DataFrame,
                          hot_threshold: int = 2_000_000,
                          point_key: str = "url",
                          hot_sample_fraction: float = 0.001,
-                         refine_broadcast_loops: int = 10_000,
                          return_candidates: bool = False) -> DataFrame:
     """points (leaf cell_id + x,y,z) x polygons table -> (point rows,
     polygon_id) via shuffle hash join on covering cells with hot-cell
@@ -105,18 +106,17 @@ def spatial_join_shuffle(spark: SparkSession, points: DataFrame,
     reliable, and borderline flips only change load balance, never results.
     Pass 1.0 for the exact full-pass count.
 
-    refine_broadcast_loops: when the polygon side has at most this many
-    loop rows AND at most REFINE_BROADCAST_VERTICES total vertices, the
-    exact refine runs as the broadcast-vertices pandas UDF
-    (same masked single-pass kernel as the broadcast join) instead of the
-    cogrouped refine — the shuffle plan exists for the non-broadcastable
+    Broadcast refine: when the polygon side has at most
+    REFINE_BROADCAST_LOOPS loop rows AND at most REFINE_BROADCAST_VERTICES
+    total vertices, the exact refine runs as the broadcast-vertices pandas
+    UDF (same masked single-pass kernel as the broadcast join) instead of
+    the cogrouped refine — the shuffle plan exists for the non-broadcastable
     COVERING side, but a polygon set whose raw vertices fit in a
     broadcast shouldn't pay the cogroup's two exchanges + group funnel.
     The VERTEX budget is what actually bounds broadcast bytes: loop count
     alone would admit 10k detailed admin boundaries whose vertex payload
     is GBs and OOM the driver.  Both gates come from one cheap aggregate
-    over the loop table.  Set refine_broadcast_loops=0 to force the
-    distributed covering and the cogroup refine.
+    over the loop table.
     """
     # Broadcast-budget gate FIRST (one tiny aggregate over the loop table):
     # it decides BOTH the refine strategy (below) and the covering build
@@ -132,7 +132,7 @@ def spatial_join_shuffle(spark: SparkSession, points: DataFrame,
         F.coalesce(F.sum(F.size("vertices")), F.lit(0)).alias("n_verts"),
     ).collect()[0]
     n_loops, n_verts = int(stats["n_loops"]), int(stats["n_verts"])
-    small_side = (0 < n_loops <= refine_broadcast_loops
+    small_side = (0 < n_loops <= REFINE_BROADCAST_LOOPS
                   and 0 < n_verts <= REFINE_BROADCAST_VERTICES)
     if small_side:
         by_pid: dict[int, list] = {}

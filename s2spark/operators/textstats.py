@@ -14,6 +14,17 @@ from pyspark.sql import functions as F
 
 from ..plans.frames import local_frame
 
+# Every operator reads documents as (doc_id, text) (plus `lang` and
+# `source` where it groups by them).  The word n-gram width of decontaminate
+# and repetition_stats, decontaminate's contamination threshold, the
+# pack_sequences sequence length, and the top-k cuts:
+WORD_GRAM_N = 3
+CONTAMINATED_FRAC = 0.05
+BUDGET_TOKENS = 2048
+TFIDF_K = 5
+NGRAM_TOPK_N = 2
+NGRAM_TOPK_K = 50
+
 # tiny per-language stopword marker sets for the n-gram/stopword language
 # heuristic; chosen to be disjoint-ish and ASCII-stable
 LANG_MARKERS = {
@@ -22,6 +33,12 @@ LANG_MARKERS = {
     "fr": ["le", "et", "les"],
     "pt": ["de", "que", "em"],
 }
+
+
+def normalized(col: Column) -> Column:
+    """Lowercased, trimmed text with every whitespace run made one space:
+    the form every dedup digest, shingle and word split reads."""
+    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
 def tokens(col: Column) -> Column:
@@ -45,11 +62,11 @@ def bpe_token_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(BPE_TOKEN_PATTERN))
 
 
-def token_counts(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(documents: DataFrame) -> DataFrame:
     """Per-document token accounting for training-data budgeting:
     whitespace tokens, BPE-ish tokens, and bytes-per-BPE-token (the
     compression-rate proxy used for corpus mixing)."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_bpe = bpe_token_count(t)
     return documents.select(
         "doc_id",
@@ -60,9 +77,9 @@ def token_counts(documents: DataFrame, text_col: str = "text") -> DataFrame:
         .alias("bytes_per_token"))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality features (pure exprs)."""
-    t = F.col(text_col)
+    t = F.col("text")
     toks = tokens(t)
     n_chars = F.length(t)
     n_alpha = F.length(F.regexp_replace(t, r"[^A-Za-z]", ""))
@@ -81,10 +98,11 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     })
 
 
-def lang_id(df: DataFrame, text_col: str = "text", out: str = "lang_pred") -> DataFrame:
-    """Marker-stopword language heuristic: argmax over per-language
-    distinct-marker hits (deterministic tie-break by language code)."""
-    toks = tokens(F.col(text_col))
+def lang_id(df: DataFrame) -> DataFrame:
+    """Marker-stopword language heuristic as `lang_pred`: argmax over
+    per-language distinct-marker hits (deterministic tie-break by language
+    code)."""
+    toks = tokens(F.col("text"))
     scores = [
         F.struct(F.size(F.array_intersect(toks, F.lit(words))).alias("score"),
                  F.lit(lang).alias("lang"))
@@ -92,14 +110,14 @@ def lang_id(df: DataFrame, text_col: str = "text", out: str = "lang_pred") -> Da
     ]
     best = F.greatest(*scores)
     return df.withColumn(
-        out, F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und")))
+        "lang_pred",
+        F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und")))
 
 
 def fingerprint(col: Column) -> Column:
     """64-bit document fingerprint: md5 of whitespace-normalized lowercase
     text, top 16 hex digits as a signed long (portable across engines)."""
-    norm = F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-    hex16 = F.substring(F.md5(norm), 1, 16)
+    hex16 = F.substring(F.md5(normalized(col)), 1, 16)
     # conv returns the two's-complement string for values >= 2^63 when cast
     # via unsigned parse; map into signed range with the same bias trick
     return F.conv(hex16, 16, -10).cast("long")
@@ -130,8 +148,7 @@ def word_ngrams(col: Column, n: int) -> Column:
     array as a lambda variable turns that into one attribute lookup, and
     dropping slice() removes an n-element array allocation per gram.
     (split() never yields nulls, so concat == concat_ws here.)"""
-    norm = F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-    toks = F.split(norm, " ")
+    toks = F.split(normalized(col), " ")
 
     def grams_of(t: Column) -> Column:
         def gram(i: Column) -> Column:
@@ -151,12 +168,10 @@ def word_ngrams(col: Column, n: int) -> Column:
     return F.element_at(F.transform(F.array(toks), grams_of), 1)
 
 
-def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                  text_col: str = "text", key_col: str = "doc_id",
-                  n_words: int = 3, threshold: float = 0.05) -> DataFrame:
+def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing word
-    n-grams with an evaluation set (the standard pre-training hygiene step
-    — e.g. GPT-3 appendix C / PaLM use 8-13-gram overlap).
+    WORD_GRAM_N-grams with an evaluation set (the standard pre-training
+    hygiene step — e.g. GPT-3 appendix C / PaLM use 8-13-gram overlap).
 
     Scale shape: the benchmark gram set is tiny relative to the corpus
     (eval suites are ~10^5 docs vs 10^9+), so its DISTINCT grams are
@@ -165,12 +180,13 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
     skew (each doc contributes at most its own gram count).
 
     Output per corpus doc: n_grams (distinct), n_overlap, overlap_frac,
-    contaminated (overlap_frac >= threshold).  Docs with zero overlap are
-    kept with n_overlap=0 so the output is a full corpus annotation.
+    contaminated (overlap_frac >= CONTAMINATED_FRAC).  Docs with zero
+    overlap are kept with n_overlap=0 so the output is a full corpus
+    annotation.
     """
     bench_grams = (benchmark
                    .select(F.explode(F.array_distinct(
-                       word_ngrams(F.col(text_col), n_words))).alias("gram"))
+                       word_ngrams(F.col("text"), WORD_GRAM_N))).alias("gram"))
                    .distinct())
     # ONE corpus pass (r6): the r5 shape built the per-doc distinct-gram
     # array twice (a sizes branch and a hits branch — the gram transform
@@ -182,42 +198,41 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame,
     # NULL placeholder, count(__hit) counts only matched grams.  Output
     # is row- and column-identical.
     ex = corpus.select(
-        F.col(key_col),
+        F.col("doc_id"),
         F.explode_outer(F.array_distinct(
-            word_ngrams(F.col(text_col), n_words))).alias("gram"))
+            word_ngrams(F.col("text"), WORD_GRAM_N))).alias("gram"))
     hit = bench_grams.withColumn("__hit", F.lit(1))
     out = (ex.join(F.broadcast(hit), "gram", "left")
-           .groupBy(key_col)
+           .groupBy("doc_id")
            .agg(F.count("gram").cast("int").alias("n_grams"),      # int, as size() was
                 F.count("__hit").alias("n_overlap"))
            .withColumn("overlap_frac", F.round(
                F.col("n_overlap") / F.greatest("n_grams", F.lit(1)), 6)))
-    return out.withColumn("contaminated", F.col("overlap_frac") >= threshold)
+    return out.withColumn("contaminated",
+                          F.col("overlap_frac") >= CONTAMINATED_FRAC)
 
 
-def repetition_stats(documents: DataFrame, text_col: str = "text",
-                     key_col: str = "doc_id", n_words: int = 3) -> DataFrame:
+def repetition_stats(documents: DataFrame) -> DataFrame:
     """Intra-document repetition (Gopher/C4-style quality rule): fraction
-    of duplicated word n-grams within each doc.  Map-only — array exprs,
-    no explode, no shuffle."""
-    grams = word_ngrams(F.col(text_col), n_words)
+    of duplicated word WORD_GRAM_N-grams within each doc.  Map-only —
+    array exprs, no explode, no shuffle."""
+    grams = word_ngrams(F.col("text"), WORD_GRAM_N)
     n_total = F.size(grams)
     n_distinct = F.size(F.array_distinct(grams))
     return documents.select(
-        F.col(key_col),
+        F.col("doc_id"),
         n_total.alias("n_grams"),
         n_distinct.alias("n_distinct"),
         F.round((n_total - n_distinct).cast("double")
                 / F.greatest(n_total, F.lit(1)), 6).alias("dup_frac"))
 
 
-def domain_stats(documents: DataFrame, domain_col: str = "source",
-                 text_col: str = "text") -> DataFrame:
+def domain_stats(documents: DataFrame) -> DataFrame:
     """Per-domain corpus accounting (doc counts, language spread, size,
     token budget) — the source-mixing table of a training-data pipeline.
-    One partial-aggregated groupBy on the domain key."""
-    t = F.col(text_col)
-    return (documents.groupBy(F.col(domain_col).alias("domain"))
+    One partial-aggregated groupBy on the domain key `source`."""
+    t = F.col("text")
+    return (documents.groupBy(F.col("source").alias("domain"))
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.countDistinct("lang").alias("n_langs"),
                  F.sum(F.length(t)).alias("total_chars"),
@@ -226,57 +241,59 @@ def domain_stats(documents: DataFrame, domain_col: str = "source",
 
 
 def stratified_sample(documents: DataFrame, rates: dict[str, int],
-                      default_pct: int = 10, strat_col: str = "lang",
-                      key_col: str = "doc_id") -> DataFrame:
+                      default_pct: int = 10) -> DataFrame:
     """Deterministic hash-based stratified sampling: keep a doc iff
-    md5(key) mod 100 < pct(stratum).  Unlike df.sample(), the decision is
+    md5(doc_id) mod 100 < pct(lang).  Unlike df.sample(), the decision is
     a pure function of the key — reproducible across runs, engines
     (DuckDB oracle), cluster sizes, and partitionings, which is what a
     training-data pipeline needs for auditable corpus freezes.  Map-only.
 
-    `rates` maps stratum value -> keep percentage (0-100)."""
-    bucket = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8),
+    `rates` maps a `lang` value -> keep percentage (0-100).
+
+    The md5 runs once per row, in a projection.  A kept row leaves through
+    a generator (one row when kept, none otherwise), so no filter exists
+    that the optimizer could push below the projection with the md5
+    substituted into it."""
+    bucket = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
                     16, 10).cast("long") % 100
     pct = F.lit(default_pct)
     for value, p in sorted(rates.items()):
-        pct = F.when(F.col(strat_col) == value, F.lit(p)).otherwise(pct)
+        pct = F.when(F.col("lang") == value, F.lit(p)).otherwise(pct)
+    row = F.struct("doc_id", "lang", "sample_bucket")
     return (documents
-            .withColumn("sample_bucket", bucket)
-            .where(F.col("sample_bucket") < pct)
-            .select(key_col, strat_col, "sample_bucket"))
+            .select("doc_id", "lang", bucket.alias("sample_bucket"))
+            .select(F.inline(F.when(F.col("sample_bucket") < pct,
+                                    F.array(row)))))
 
 
-def word_entropy(documents: DataFrame, text_col: str = "text",
-                 key_col: str = "doc_id") -> DataFrame:
+def word_entropy(documents: DataFrame) -> DataFrame:
     """Shannon entropy (bits) of each document's word distribution — the
     classic repetition/quality signal: template spam and keyword-stuffed
     pages score low, natural prose scores near log2(vocab).
 
     Plan: token explode -> (doc, word) count -> per-doc
     -sum(p*log2(p)) — two partial-aggregated shuffles keyed on doc id,
-    all JVM expressions.  Output: (key, n_words, n_distinct, entropy_bits).
+    all JVM expressions.  Output: (doc_id, n_words, n_distinct,
+    entropy_bits).
     """
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))),
-                                    r"\s+", " "), " ")
-    ex = documents.select(F.col(key_col), F.explode(toks).alias("w"))
-    wc = ex.groupBy(key_col, "w").agg(F.count(F.lit(1)).alias("c"))
-    per_doc = wc.groupBy(key_col).agg(
+    toks = F.split(normalized(F.col("text")), " ")
+    ex = documents.select(F.col("doc_id"), F.explode(toks).alias("w"))
+    wc = ex.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
+    per_doc = wc.groupBy("doc_id").agg(
         F.sum("c").alias("n_words"),
         F.count(F.lit(1)).alias("n_distinct"),
         F.sum(F.col("c") * F.log2(F.col("c").cast("double"))).alias("__clogc"))
     # H = log2(N) - (1/N) * sum(c * log2 c)
     return per_doc.select(
-        key_col, "n_words", "n_distinct",
+        "doc_id", "n_words", "n_distinct",
         F.round(F.log2(F.col("n_words").cast("double"))
                 - F.col("__clogc") / F.col("n_words"), 6).alias("entropy_bits"))
 
 
-def pack_sequences(documents: DataFrame, budget_tokens: int = 2048,
-                   text_col: str = "text",
-                   key_col: str = "doc_id") -> DataFrame:
-    """Concatenate-and-chop sequence packing: lay the corpus out in key
+def pack_sequences(documents: DataFrame) -> DataFrame:
+    """Concatenate-and-chop sequence packing: lay the corpus out in doc_id
     order as one virtual token stream and chop it into fixed
-    `budget_tokens` training sequences (the GPT-2/LLaMA pretraining data
+    `BUDGET_TOKENS` training sequences (the GPT-2/LLaMA pretraining data
     layout — documents may straddle pack boundaries; the pack id and the
     in-pack offset are what the tensorizer needs to place each doc).
 
@@ -300,13 +317,13 @@ def pack_sequences(documents: DataFrame, budget_tokens: int = 2048,
     localCheckpointed so the partition ids seen by step 3 and step 4 are
     the same materialization (2 longs/doc; freed with the result).
 
-    Output: (key, n_tokens, pack_id, pack_offset) with
+    Output: (doc_id, n_tokens, pack_id, pack_offset) with
     pack_id = cum_before // budget, pack_offset = cum_before % budget.
     """
-    t = documents.select(F.col(key_col),
-                         bpe_token_count(F.col(text_col))
+    t = documents.select(F.col("doc_id"),
+                         bpe_token_count(F.col("text"))
                          .cast("long").alias("n_tokens"))
-    ranged = (t.repartitionByRange(F.col(key_col))
+    ranged = (t.repartitionByRange(F.col("doc_id"))
               .withColumn("__pid", F.spark_partition_id())
               .localCheckpoint())
 
@@ -321,21 +338,20 @@ def pack_sequences(documents: DataFrame, budget_tokens: int = 2048,
     off_df = local_frame(documents.sparkSession, offs, "__pid int, __off long")
 
     from pyspark.sql.window import Window
-    w = (Window.partitionBy("__pid").orderBy(key_col)
+    w = (Window.partitionBy("__pid").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     cum_before = (F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
                   + F.col("__off"))
     return (ranged.join(F.broadcast(off_df), "__pid")
-            .select(F.col(key_col), F.col("n_tokens"),
-                    F.floor(cum_before / budget_tokens).cast("long").alias("pack_id"),
-                    (cum_before % budget_tokens).cast("long").alias("pack_offset")))
+            .select(F.col("doc_id"), F.col("n_tokens"),
+                    F.floor(cum_before / BUDGET_TOKENS).cast("long").alias("pack_id"),
+                    (cum_before % BUDGET_TOKENS).cast("long").alias("pack_offset")))
 
-def tfidf_topk(documents: DataFrame, k: int = 5,
-               text_col: str = "text",
-               key_col: str = "doc_id") -> DataFrame:
-    """Per-document top-k TF-IDF terms — the classic keyword-extraction /
-    corpus-indexing signal for training-data curation (what is this page
-    ABOUT, which pages over-index on boilerplate terms).
+
+def tfidf_topk(documents: DataFrame) -> DataFrame:
+    """Per-document top-TFIDF_K TF-IDF terms — the classic
+    keyword-extraction / corpus-indexing signal for training-data curation
+    (what is this page ABOUT, which pages over-index on boilerplate terms).
 
     Plan (all JVM expressions, partial-aggregated):
       1. normalize + whitespace-split + explode (map-only);
@@ -343,7 +359,7 @@ def tfidf_topk(documents: DataFrame, k: int = 5,
       3. term document-frequency from the tf frame (each (doc, term) row
          is distinct by construction)            [shuffle on term];
       4. tf |><| df on term, idf from the corpus count N;
-      5. per-doc row_number window, keep rank <= k [shuffle on doc].
+      5. per-doc row_number window, keep rank <= TFIDF_K [shuffle on doc].
 
     Construction cost note: N is ONE bounded count() job at construction
     (a scalar, never O(data) rows on the driver) — folding it into the
@@ -358,37 +374,36 @@ def tfidf_topk(documents: DataFrame, k: int = 5,
     pre-dropped with a min-df filter before the join if the vocabulary
     itself needs bounding (not done here — it changes idf semantics).
 
-    Output: (key, term, tf, df, tfidf, rank), tfidf = tf * ln(N / df)
+    Output: (doc_id, term, tf, df, tfidf, rank), tfidf = tf * ln(N / df)
     rounded to 6 dp.
     """
     from pyspark.sql.window import Window
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    ex = documents.select(F.col(key_col),
-                          F.explode(F.split(norm, " ")).alias("term"))
+    ex = documents.select(F.col("doc_id"),
+                          F.explode(F.split(normalized(F.col("text")), " "))
+                          .alias("term"))
     # tf feeds both the document-frequency agg and the scoring join:
     # materialize once (lazy) instead of re-running explode+aggregate
-    tf = (ex.groupBy(key_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = (ex.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
           .localCheckpoint(eager=False))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = float(documents.count())
     scored = (tf.join(dfreq, "term")
               .withColumn("__s", F.col("tf")
                           * F.log(F.lit(n_docs) / F.col("df"))))
-    w = Window.partitionBy(key_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.round(F.col("__s"), 9).desc(), F.col("term").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(key_col, "term", "tf", "df",
+            .where(F.col("rank") <= TFIDF_K)
+            .select("doc_id", "term", "tf", "df",
                     F.round("__s", 6).alias("tfidf"), "rank"))
 
 
-def ngram_topk(documents: DataFrame, n: int = 2, k: int = 50,
-               text_col: str = "text",
-               key_col: str = "doc_id") -> DataFrame:
-    """Corpus-level top-k word n-grams — the boilerplate detector: the
-    most frequent bigrams in a web crawl are navigation chrome and
-    license banners, and their document frequency tells you whether a
-    gram is corpus-wide furniture or one hot document repeating itself.
+def ngram_topk(documents: DataFrame) -> DataFrame:
+    """Corpus-level top-NGRAM_TOPK_K word NGRAM_TOPK_N-grams — the
+    boilerplate detector: the most frequent bigrams in a web crawl are
+    navigation chrome and license banners, and their document frequency
+    tells you whether a gram is corpus-wide furniture or one hot document
+    repeating itself.
 
     Plan: map-only n-gram explode -> ONE hash aggregation keyed on the
     gram (count + distinct-doc count, both partially aggregated) ->
@@ -401,17 +416,16 @@ def ngram_topk(documents: DataFrame, n: int = 2, k: int = 50,
     Output: (ngram, n_occurrences, n_docs), count-descending.
     """
     ex = documents.select(
-        F.col(key_col),
-        F.explode(word_ngrams(F.col(text_col), n)).alias("ngram"))
+        F.col("doc_id"),
+        F.explode(word_ngrams(F.col("text"), NGRAM_TOPK_N)).alias("ngram"))
     agg = ex.groupBy("ngram").agg(
         F.count(F.lit(1)).alias("n_occurrences"),
-        F.count_distinct(F.col(key_col)).alias("n_docs"))
+        F.count_distinct(F.col("doc_id")).alias("n_docs"))
     return (agg.orderBy(F.col("n_occurrences").desc(), F.col("ngram").asc())
-            .limit(k))
+            .limit(NGRAM_TOPK_K))
 
 
-def unigram_logprob(documents: DataFrame, text_col: str = "text",
-                    key_col: str = "doc_id") -> DataFrame:
+def unigram_logprob(documents: DataFrame) -> DataFrame:
     """Per-document unigram cross-entropy (bits/token) under the corpus's
     OWN unigram distribution — the cheap, model-free stand-in for the
     CCNet-style LM-perplexity quality filter: pages full of rare junk
@@ -430,22 +444,21 @@ def unigram_logprob(documents: DataFrame, text_col: str = "text",
     expressions.  N is ONE bounded scalar agg at construction (same
     pattern as tfidf_topk's corpus count).
 
-    Output: (key, n_tokens, cross_entropy_bits) rounded to 6 dp.
+    Output: (doc_id, n_tokens, cross_entropy_bits) rounded to 6 dp.
     """
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    toks = F.split(norm, " ")
+    toks = F.split(normalized(F.col("text")), " ")
     n_total = documents.agg(
         F.sum(F.size(toks)).cast("double").alias("n")).collect()[0]["n"]
-    ex = documents.select(F.col(key_col), F.explode(toks).alias("w"))
+    ex = documents.select(F.col("doc_id"), F.explode(toks).alias("w"))
     corpus = ex.groupBy("w").agg(F.count(F.lit(1)).alias("cw"))
-    dtc = ex.groupBy(key_col, "w").agg(F.count(F.lit(1)).alias("c"))
+    dtc = ex.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
     per_doc = (dtc.join(corpus, "w")
-               .groupBy(key_col)
+               .groupBy("doc_id")
                .agg(F.sum("c").alias("n_tokens"),
                     F.sum(F.col("c") * F.log2(F.col("cw").cast("double")))
                     .alias("__clogcw")))
     return per_doc.select(
-        key_col, "n_tokens",
+        "doc_id", "n_tokens",
         F.round(F.lit(math.log2(n_total))
                 - F.col("__clogcw") / F.col("n_tokens"), 6)
         .alias("cross_entropy_bits"))
@@ -463,8 +476,7 @@ PII_PATTERNS = {
 }
 
 
-def pii_stats(documents: DataFrame, text_col: str = "text",
-              key_col: str = "doc_id") -> DataFrame:
+def pii_stats(documents: DataFrame) -> DataFrame:
     """Per-document PII-pattern accounting — the scrub/redact audit signal
     of a web-text pipeline (emails, URLs, phone-shaped numbers, IPv4s).
 
@@ -472,12 +484,12 @@ def pii_stats(documents: DataFrame, text_col: str = "text",
     codegen, zero shuffle — at 100 TB this is a pure scan-side pass that
     pushes only (key, text) through the reader.
 
-    Output: (key, n_emails, n_urls, n_phones, n_ipv4, has_pii).
+    Output: (doc_id, n_emails, n_urls, n_phones, n_ipv4, has_pii).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     counts = [F.regexp_count(t, F.lit(pat)).alias(name)
               for name, pat in PII_PATTERNS.items()]
-    out = documents.select(F.col(key_col), *counts)
+    out = documents.select(F.col("doc_id"), *counts)
     total = sum(F.col(n) for n in PII_PATTERNS)
     return out.withColumn("has_pii", total > 0)
 

@@ -17,16 +17,16 @@ from pyspark.sql import functions as F
 from ..functions import columns as C
 
 
-def assign_tiles(geo: DataFrame, level: int, cell_col: str = "cell_id",
-                 out: str = "tile_id") -> DataFrame:
-    """Add the level-L tile id — a single bit-op expression (no shuffle)."""
-    return geo.withColumn(out, C.parent_for_level(F.col(cell_col), level))
+def assign_tiles(geo: DataFrame, level: int) -> DataFrame:
+    """Add the level-L `tile_id` of `cell_id` — a single bit-op expression
+    (no shuffle)."""
+    return geo.withColumn("tile_id", C.parent_for_level(F.col("cell_id"), level))
 
 
-def tile_counts(geo: DataFrame, level: int, cell_col: str = "cell_id") -> DataFrame:
+def tile_counts(geo: DataFrame, level: int) -> DataFrame:
     """Pages per level-L tile.  Partial aggregation (map-side combine) makes
     the shuffle O(#tiles), not O(#rows)."""
-    return (assign_tiles(geo, level, cell_col)
+    return (assign_tiles(geo, level)
             .groupBy("tile_id")
             .agg(F.count(F.lit(1)).alias("n_pages")))
 

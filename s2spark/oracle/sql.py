@@ -145,9 +145,9 @@ def round_d(expr: str, nd: int = 6) -> str:
     return f"round({expr}, {nd})"
 
 
-def ratio(num: str, den: str, nd: int = 6) -> str:
-    """round(num / max(den,1), nd) — zero-safe ratio, rounded (class 2)."""
-    return f"round(({num}) / greatest({den}, 1), {nd})"
+def ratio(num: str, den: str) -> str:
+    """round(num / max(den,1), 6) — zero-safe ratio, rounded (class 2)."""
+    return f"round(({num}) / greatest({den}, 1), 6)"
 
 
 def md5_long(expr: str, hex_digits: int = 15) -> str:

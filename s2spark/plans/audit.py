@@ -23,7 +23,7 @@ snapshot, and the resume recomputes the stage and appends them again.
 Stage audit schema: `stage` string; `partition_id` int, the write task's
 index from the part-file name (`part-NNNNN-...`; files that share an index
 are summed); `n_rows` long, the footers' `num_rows`; `min_tile`/`max_tile`
-long, the level-`tile_level` parents of the least and greatest `cell_col`
+long, the level-`TILE_LEVEL` parents of the least and greatest `cell_col`
 over the row groups (null without a cell column; `parent_for_level` is
 monotone on the biased id); `audit_ts_ms` long.  A part file with no rows
 adds no row.  `min_tile` replaced an approximate distinct-tile count
@@ -48,6 +48,9 @@ from pyspark.sql import DataFrame
 from ..kernel import cellid
 from .frames import local_frame
 
+# level of the `min_tile`/`max_tile` parents (6: ~24k tiles per face)
+TILE_LEVEL = 6
+
 _STAGE_AUDIT_SCHEMA = pa.schema([
     ("stage", pa.string()), ("partition_id", pa.int32()),
     ("n_rows", pa.int64()), ("min_tile", pa.int64()),
@@ -60,7 +63,6 @@ class PendingAudit:
     df: DataFrame
     stage: str
     cell_col: str | None
-    tile_level: int
 
 
 # Per thread, one list per stage being computed (innermost last): the
@@ -68,13 +70,13 @@ class PendingAudit:
 _computing = threading.local()
 
 
-def partition_metrics(df: DataFrame, stage: str, cell_col: str | None = None,
-                      tile_level: int = 6) -> PendingAudit:
+def partition_metrics(df: DataFrame, stage: str,
+                      cell_col: str | None = None) -> PendingAudit:
     """One row per written partition: row count, plus the least and
-    greatest level-`tile_level` tile when `cell_col` is given — the skew
+    greatest level-`TILE_LEVEL` tile when `cell_col` is given — the skew
     fingerprint of the stage.  Runs and persists nothing: the rows come
     from the footers of the files `df`'s snapshot write produces."""
-    return PendingAudit(df, stage, cell_col, tile_level)
+    return PendingAudit(df, stage, cell_col)
 
 
 @contextlib.contextmanager
@@ -112,10 +114,9 @@ def write_footer_rows(pending: PendingAudit, audit_dir: str,
                 acc[1] = stats.min if acc[1] is None else min(acc[1], stats.min)
                 acc[2] = stats.max if acc[2] is None else max(acc[2], stats.max)
     ts = int(time.time() * 1000)
-    level = pending.tile_level
     table = pa.Table.from_pylist(
         [{"stage": pending.stage, "partition_id": task, "n_rows": n,
-          "min_tile": _tile(lo, level), "max_tile": _tile(hi, level),
+          "min_tile": _tile(lo), "max_tile": _tile(hi),
           "audit_ts_ms": ts}
          for task, (n, lo, hi) in sorted(tasks.items())],
         schema=_STAGE_AUDIT_SCHEMA)
@@ -128,12 +129,12 @@ def write_footer_rows(pending: PendingAudit, audit_dir: str,
     os.replace(tmp, os.path.join(audit_dir, name))
 
 
-def _tile(cell: int | None, level: int) -> int | None:
-    """The level-`level` parent of a biased signed cell id."""
+def _tile(cell: int | None) -> int | None:
+    """The level-`TILE_LEVEL` parent of a biased signed cell id."""
     if cell is None:
         return None
     return int(cellid.parent_for_level(np.int64(cell).view(np.uint64),
-                                       level).view(np.int64))
+                                       TILE_LEVEL).view(np.int64))
 
 
 def interior_covering_metrics(spark, coverer, stage: str) -> DataFrame:

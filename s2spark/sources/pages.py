@@ -29,11 +29,10 @@ LANGS = ("en", "de", "fr", "ja", "pt")
 COORD_REGEX = r"(-?\d+\.\d{4}), (-?\d+\.\d{4})"
 
 
-def synthesize_pages(spark: SparkSession, n_rows: int, parts: int | None = None) -> DataFrame:
+def synthesize_pages(spark: SparkSession, n_rows: int) -> DataFrame:
     """Deterministic pages table of n_rows; content derives from the row id."""
-    if parts is None:
-        # use every core: sha2 + regex per row are CPU-bound
-        parts = max(2 * spark.sparkContext.defaultParallelism, n_rows // 250_000)
+    # use every core: sha2 + regex per row are CPU-bound
+    parts = max(2 * spark.sparkContext.defaultParallelism, n_rows // 250_000)
     df = spark.range(0, n_rows, 1, parts)
     i = F.col("id")
     # deterministic pseudo-random doubles in [0,1): integer LCG-ish mixers

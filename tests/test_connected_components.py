@@ -9,6 +9,7 @@ graph diameter).
 import numpy as np
 import pytest
 
+from s2spark.operators import dedup
 from s2spark.operators.dedup import connected_components, dedup_clusters
 
 
@@ -51,6 +52,15 @@ def expected_components(edges):
     return {x: comp_min[uf.find(x)] for x in uf.p}
 
 
+def _distributed(df):
+    """connected_components with the driver union-find gated off, so the
+    large/small-star loop runs."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "DRIVER_THRESHOLD", 0)
+        return {r["node"]: r["component"]
+                for r in connected_components(df).collect()}
+
+
 def _run(spark, edges):
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "id_a long, id_b long")
@@ -59,9 +69,7 @@ def _run(spark, edges):
            for r in connected_components(df).collect()}
     assert got == expected_components(edges)
     # forced distributed large/small-star loop must agree exactly
-    dist = {r["node"]: r["component"]
-            for r in connected_components(df, driver_threshold=0).collect()}
-    assert dist == got
+    assert _distributed(df) == got
     return got
 
 
@@ -90,9 +98,9 @@ def test_cc_disjoint_cliques_and_order_insensitivity(spark):
     assert got[7] == 7  # self-edge node is its own singleton component
 
 
-def test_cc_driver_threshold_boundary(spark):
+def test_cc_driver_threshold_boundary(spark, monkeypatch):
     """The two-regime gate must be output-invisible AT the boundary: the
-    same graph run just under, exactly at, and just over driver_threshold
+    same graph run just under, exactly at, and just over DRIVER_THRESHOLD
     (and with the loop forced via threshold=0) yields identical maps.
     Guards the driver union-find / distributed large-small-star
     equivalence as either path evolves."""
@@ -107,9 +115,9 @@ def test_cc_driver_threshold_boundary(spark):
                 n_pairs - 1,    # gate rejects: collect sees thr+1 rows
                 n_pairs,        # gate accepts exactly at the boundary
                 n_pairs + 50):  # comfortably under
+        monkeypatch.setattr(dedup, "DRIVER_THRESHOLD", thr)
         runs[thr] = {r["node"]: r["component"]
-                     for r in connected_components(
-                         df, driver_threshold=thr).collect()}
+                     for r in connected_components(df).collect()}
     expect = expected_components(edges)
     for thr, got in runs.items():
         assert got == expect, f"threshold={thr} diverged"
@@ -124,10 +132,8 @@ def test_cc_null_endpoints_dropped_both_regimes(spark):
     expect = expected_components([(1, 2), (2, 3), (7, 8)])
     fast = {r["node"]: r["component"]
             for r in connected_components(df).collect()}
-    dist = {r["node"]: r["component"]
-            for r in connected_components(df, driver_threshold=0).collect()}
     assert fast == expect
-    assert dist == expect
+    assert _distributed(df) == expect
 
 
 def test_dedup_clusters_end_to_end(spark):

@@ -103,7 +103,7 @@ def test_line_dedup_drops_frequent_lines(spark):
     ], "doc_id long, text string")
 
     out = {r["doc_id"]: r.asDict()
-           for r in line_dedup(docs, min_count=3).collect()}
+           for r in line_dedup(docs).collect()}
     assert len(out) == 5
     # footer count 4 >= 3 -> banned everywhere; 'dup line' count 2 -> kept
     assert (out[1]["n_lines"], out[1]["n_kept"]) == (3, 2)
@@ -144,7 +144,7 @@ def test_line_dedup_matches_python_oracle(spark):
     import random
     from collections import Counter
 
-    from s2spark.operators.dedup import line_dedup
+    from s2spark.operators.dedup import MIN_LINE_COUNT, line_dedup
 
     rng = random.Random(20260818)
     words = ["nav", "home", "article", "foo", "bar", "baz", "qux"]
@@ -157,7 +157,7 @@ def test_line_dedup_matches_python_oracle(spark):
             ls.insert(rng.randrange(len(ls) + 1), "   ")   # blank line
         docs.append((d, "\n".join(ls)))
 
-    min_count = 3
+    min_count = MIN_LINE_COUNT
     trimmed = {d: [l.strip() for l in t.split("\n")] for d, t in docs}
     nonblank = {d: [l for l in ls if l] for d, ls in trimmed.items()}
     freq = Counter(l for ls in nonblank.values() for l in ls)
@@ -168,7 +168,7 @@ def test_line_dedup_matches_python_oracle(spark):
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {r["doc_id"]: (r["n_lines"], r["n_kept"], r["text_clean"])
-           for r in line_dedup(df, min_count=min_count).collect()}
+           for r in line_dedup(df).collect()}
     assert got == expect
 
 
@@ -247,7 +247,7 @@ def test_line_dedup_trims_full_whitespace_class(spark):
         (3, "  FOOTER  \n\t\nlast"),
     ], "doc_id long, text string")
     out = {r["doc_id"]: r.asDict()
-           for r in line_dedup(docs, min_count=3).collect()}
+           for r in line_dedup(docs).collect()}
     assert out[1] == {"doc_id": 1, "n_lines": 2, "n_kept": 1,
                       "text_clean": "keep me"}
     assert out[2]["text_clean"] == "other"
@@ -268,9 +268,9 @@ def test_dedup_cluster_family_rejects_string_keys(spark):
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
     docs = spark.createDataFrame(
-        [("a", base + " t"), ("b", base + " tt")], "url string, text string")
+        [("a", base + " t"), ("b", base + " tt")], "doc_id string, text string")
     with _pytest.raises(TypeError, match="integral node ids"):
-        dedup_resolve(docs, key_col="url", threshold=0.5).collect()
+        dedup_resolve(docs, threshold=0.5).collect()
     pairs = spark.createDataFrame([("a", "b")], "id_a string, id_b string")
     with _pytest.raises(TypeError, match="integral node ids"):
         connected_components(pairs)

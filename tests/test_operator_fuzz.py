@@ -124,6 +124,128 @@ def test_spatial_join_random_convex_polygons_det_oracle(spark):
     assert checked_pairs > 20000  # the fuzz actually graded something
 
 
+def _convex_around(rng, c_lat: float, c_lng: float, r: float):
+    """A verified-convex polygon inscribed in the circle of angular radius
+    `r` degrees around (c_lat, c_lng) and holding that centre (no angular
+    gap between vertices of pi or more), as a fixture string, or None.
+    Built in the centre's tangent frame, so it can ring a pole or straddle
+    the antimeridian."""
+    (cx,), (cy,), (cz,) = ci.xyz_from_latlng_deg(np.array([c_lat]),
+                                                 np.array([c_lng]))
+    c = np.array([cx, cy, cz])
+    t1 = np.cross([0.0, 0.0, 1.0] if abs(cz) < 0.9 else [1.0, 0.0, 0.0], c)
+    t1 /= np.linalg.norm(t1)
+    t2 = np.cross(c, t1)
+    n = int(rng.integers(3, 9))
+    th = np.sort(rng.uniform(0, 2 * np.pi, n))
+    gaps = np.diff(np.concatenate([th, [th[0] + 2 * np.pi]]))
+    if gaps.min() < 0.35 or gaps.max() > 0.9 * np.pi:
+        return None
+    a = np.radians(r)
+    v = (np.cos(a) * c[None, :] + np.sin(a) * (np.cos(th)[:, None] * t1
+                                               + np.sin(th)[:, None] * t2))
+    lat = np.degrees(np.arcsin(np.clip(v[:, 2], -1, 1)))
+    lng = np.degrees(np.arctan2(v[:, 1], v[:, 0]))
+    s = ", ".join(f"{a:.6f}:{b:.6f}" for a, b in zip(lat, lng))
+    xyz = parse_vertices(s)
+    for i in range(n):
+        d = np.delete(xyz @ np.cross(xyz[i], xyz[(i + 1) % n]),
+                      [i, (i + 1) % n])
+        if np.abs(d).min() < 1e-9 or len(np.unique(np.sign(d))) != 1:
+            return None
+    return s
+
+
+def test_pip_and_tiles_at_poles_antimeridian_cube_corner(spark):
+    """The pip and tile cells of the geometry matrix.  40 verified-convex
+    polygons: ringing each pole, near a pole, straddling the antimeridian,
+    and around the cube corner (35.26, 45).  Points: exactly at lat +-90
+    at several longitudes, exactly at lng +-180, around every polygon and
+    uniform.  `spatial_join` must match the determinant-sign oracle (points
+    within 1e-9 of an edge plane excluded), and `tile_counts` a kernel
+    recount of the same points at several levels."""
+    from s2spark.operators.tiling import tile_counts
+
+    rng = np.random.default_rng(20261020)
+    corner = float(np.degrees(np.arcsin(1 / np.sqrt(3))))
+    centres = ([(90.0, 0.0, "ring")] * 6 + [(-90.0, 0.0, "ring")] * 6
+               + [(float(rng.choice([-1, 1]) * rng.uniform(80, 88)),
+                   float(rng.uniform(-180, 180)), "near")
+                  for _ in range(8)]
+               + [(float(rng.uniform(-60, 60)), float(rng.choice(
+                   [180.0, -180.0, 179.5, -179.5])), "seam")
+                  for _ in range(12)]
+               + [(corner, 45.0, "corner")] * 4
+               + [(corner + float(rng.uniform(-2, 2)),
+                   45.0 + float(rng.uniform(-2, 2)), "corner")
+                  for _ in range(4)])
+    polygons, metas = {}, {}
+    for c_lat, c_lng, _kind in centres:
+        s = None
+        while s is None:
+            r = float(rng.uniform(1.0, 15.0))
+            s = _convex_around(rng, c_lat, c_lng, r)
+        pid = len(polygons) + 1
+        polygons[pid] = make_polygon(s + ";")
+        metas[pid] = (parse_vertices(s), c_lat, c_lng, r)
+
+    pole_lng = [0.0, 45.0, 90.0, -90.0, 135.0, -135.0, 180.0, -180.0]
+    seam_lat = [-89.0, -60.0, -35.26, 0.0, 0.5, 35.26, 60.0, 89.0]
+    lats = [np.array([90.0] * 8 + [-90.0] * 8 + seam_lat * 2),
+            np.degrees(np.arcsin(rng.uniform(-1, 1, 2000)))]
+    lngs = [np.array(pole_lng * 2 + [180.0] * 8 + [-180.0] * 8),
+            rng.uniform(-180, 180, 2000)]
+    for poly_xyz, c_lat, c_lng, r in metas.values():
+        c = poly_xyz.mean(axis=0)
+        c /= np.linalg.norm(c)
+        t1 = np.cross([0.0, 0.0, 1.0] if abs(c[2]) < 0.9 else [1.0, 0.0, 0.0], c)
+        t1 /= np.linalg.norm(t1)
+        t2 = np.cross(c, t1)
+        th = rng.uniform(0, 2 * np.pi, 250)
+        a = np.radians(r * rng.uniform(0.0, 1.5, 250))  # straddles the edges
+        v = (np.cos(a)[:, None] * c[None, :]
+             + np.sin(a)[:, None] * (np.cos(th)[:, None] * t1
+                                     + np.sin(th)[:, None] * t2))
+        lats.append(np.degrees(np.arcsin(np.clip(v[:, 2], -1, 1))))
+        lngs.append(np.degrees(np.arctan2(v[:, 1], v[:, 0])))
+    lat = np.concatenate(lats)
+    lng = np.concatenate(lngs)
+    pdf = pd.DataFrame({"point_id": np.arange(len(lat)),
+                        "lat": lat, "lng": lng})
+    pts = points_with_cells(spark.createDataFrame(pdf)).cache()
+
+    got = (spatial_join(spark, pts, polygons)
+           .select("point_id", "polygon_id").toPandas())
+    x, y, z = ci.xyz_from_latlng_deg(lat, lng)
+    xyz_pts = np.stack([x, y, z], axis=1)
+    checked = 0
+    for pid, (poly_xyz, c_lat, c_lng, _r) in metas.items():
+        inside, near = _inside_convex(xyz_pts, poly_xyz)
+        engine = np.zeros(len(lat), dtype=bool)
+        engine[got.loc[got.polygon_id == pid, "point_id"].to_numpy()] = True
+        bad = np.nonzero(~near & (engine != inside))[0]
+        assert len(bad) == 0, (
+            f"polygon {pid} around ({c_lat:.4f}, {c_lng:.4f}): "
+            + ", ".join(f"({lat[i]}, {lng[i]}) oracle={inside[i]}"
+                        for i in bad[:5]))
+        checked += int((~near).sum())
+    assert checked > 400_000
+    # every pole-ringing polygon holds the 8 exact pole points of its pole
+    for pid, (_, c_lat, _, _) in metas.items():
+        if abs(c_lat) == 90.0:
+            ids = set(got.loc[got.polygon_id == pid, "point_id"])
+            assert set(range(0, 8) if c_lat > 0 else range(8, 16)) <= ids
+
+    leaves = ci.from_latlng_deg(lat, lng)
+    for level in (0, 4, 9, 15):
+        want = pd.Series(ci.to_signed(ci.parent_for_level(leaves, level)))\
+            .value_counts().to_dict()
+        have = {r["tile_id"]: r["n_pages"]
+                for r in tile_counts(pts, level).collect()}
+        assert have == want, f"level {level}"
+    pts.unpersist()
+
+
 def test_knn_join_polar_and_clustered_matches_bruteforce(spark):
     """kNN over a polar cap + a dense cluster + uniform background, with
     queries at the pole edge and inside the cluster: ring widening must

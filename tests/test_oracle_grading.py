@@ -1,11 +1,13 @@
 """Every declared driver query against its independent DuckDB oracle.
 
-One test case per name in ``__spark_entry__.queries()``, graded by
-``tools.check_correctness.compare`` (row count, sorted column names, value
-hash) — the same grade the command-line tool prints — on the sf0.001
-tables.  A failure names the query.  Each query runs from clean session
-state: a `.cache()` one query leaves would otherwise feed every later
-query that builds the same frame, so a graded plan would depend on order.
+One test case per name in ``__spark_entry__.queries()`` and scale, graded
+by ``tools.check_correctness.compare`` (row count, sorted column names,
+value hash) — the same grade the command-line tool prints — on the
+sf0.001, sf0.01 and sf0.1 tables.  A failure names the query and scale.
+Each query runs from clean session state: a `.cache()` one query leaves
+would otherwise feed every later query that builds the same frame, so a
+graded plan would depend on order.  One Spark session serves the module,
+and one DuckDB connection each scale.
 """
 
 import os
@@ -19,6 +21,9 @@ from tools.check_correctness import compare, open_oracle
 
 QUERIES = entry.queries()
 ORACLES = entry.oracle_sql()
+# the larger scales, graded after every sf0.001 case (module-scoped, so
+# pytest runs each scale's cases together)
+LARGER_SCALES = ["sf0.01", "sf0.1"]
 
 
 @pytest.fixture(scope="module")
@@ -37,18 +42,36 @@ def oracle():
     con.close()
 
 
+@pytest.fixture(scope="module", params=LARGER_SCALES)
+def scale(request):
+    """(tables dir, DuckDB connection) of one larger scale."""
+    sf = os.path.join(os.path.dirname(SF_DIR), request.param)
+    con = open_oracle(sf)
+    yield sf, con
+    con.close()
+
+
+def _grade(spark, sf, con, name):
+    try:
+        got = QUERIES[name](spark, sf).toPandas()
+    finally:
+        release_session_state(spark)
+    exp = con.execute(ORACLES[name]).fetchdf()
+    assert compare(got, exp) == []
+
+
 def test_every_query_has_an_oracle():
     assert sorted(QUERIES) == sorted(ORACLES)
 
 
 @pytest.mark.parametrize("name", list(QUERIES))
 def test_query_matches_oracle(spark, oracle, name):
-    try:
-        got = QUERIES[name](spark, SF_DIR).toPandas()
-    finally:
-        release_session_state(spark)
-    exp = oracle.execute(ORACLES[name]).fetchdf()
-    assert compare(got, exp) == []
+    _grade(spark, SF_DIR, oracle, name)
+
+
+@pytest.mark.parametrize("name", list(QUERIES))
+def test_query_matches_oracle_at_scale(spark, scale, name):
+    _grade(spark, *scale, name)
 
 
 def test_polyline_length_row_2668_at_sf0_1(spark):

@@ -158,6 +158,17 @@ def test_miner_computes_page_text_and_regex_once(spark):
     assert plan.count("regexp_extract(") == 1
 
 
+def test_stratified_sample_hashes_each_doc_once(spark):
+    """corpus_sample_stratified computes md5(doc_id) once per row, in the
+    projection: kept rows leave through a generator, so no filter is
+    pushed below it with the md5 substituted in (nor into the scan)."""
+    import __spark_entry__ as entry
+    plan = plan_of(entry.queries()["corpus_sample_stratified"](spark, SF))
+    assert plan.count("md5(") == 1
+    assert "DataFilters: []" in plan
+    assert "Filter (" not in plan and "Filter [" not in plan
+
+
 def test_knn_job_budget_and_no_python_boundary(spark, monkeypatch):
     """A kNN query as the geo benchmark issues it (20k clustered points, 8
     query points near the clusters, k=5): every round is one broadcast

@@ -163,7 +163,7 @@ def test_interpolate_sql_matches_kernel():
     verts = np.stack([np.array(ci.xyz_from_latlng_deg(
         np.array([la]), np.array([ln]))).reshape(3) for la, ln in track])
     pl = Polyline(verts)
-    lat_sql, lng_sql = polyline_interpolate_sql(track, "frac")
+    lat_sql, lng_sql = polyline_interpolate_sql(track)
     con = duckdb.connect()
     for frac in [0.0, 0.001, 0.17, 0.5, 0.62, 0.99, 1.0]:
         got_lat, got_lng = con.execute(

@@ -92,7 +92,7 @@ def test_decontaminate_matches_legacy_two_pass(spark):
         return out.withColumn("contaminated",
                               F.col("overlap_frac") >= threshold)
 
-    new = decontaminate(corpus, benchmark, n_words=3, threshold=0.05)
+    new = decontaminate(corpus, benchmark)
     old = legacy(corpus, benchmark)
     assert new.columns == old.columns
     assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
@@ -102,18 +102,18 @@ def test_decontaminate_matches_legacy_two_pass(spark):
 def test_build_corpus_index_matches_legacy_join_form(spark):
     """r6 single-pass index (signature array carried through the band
     explode) == r5 buckets-join-signatures form."""
-    from s2spark.operators.dedup import (build_corpus_index,
+    from s2spark.operators.dedup import (BANDS, NUM_HASHES, SHINGLE_N,
+                                         build_corpus_index,
                                          minhash_lsh_buckets,
                                          minhash_signatures)
 
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(TEXTS) if t.strip()],
         "doc_id int, text string")
-    num_hashes, bands, n = 16, 4, 5
+    num_hashes, bands, n = NUM_HASHES, BANDS, SHINGLE_N
 
-    sig = minhash_signatures(docs, "text", "doc_id", n, num_hashes)
-    buckets = minhash_lsh_buckets(docs, "text", "doc_id", n, num_hashes,
-                                  bands, signatures=sig)
+    sig = minhash_signatures(docs, n, num_hashes)
+    buckets = minhash_lsh_buckets(docs, n, num_hashes, bands, signatures=sig)
     sig_arr = sig.select(
         "doc_id",
         F.array(*[F.col(f"mh{i}") for i in range(num_hashes)]).alias("corpus_sig"))
@@ -121,16 +121,17 @@ def test_build_corpus_index_matches_legacy_join_form(spark):
               .select("band", "bucket", F.col("doc_id").alias("corpus_id"),
                       "corpus_sig"))
 
-    new = build_corpus_index(docs, "text", "doc_id", n, num_hashes, bands)
+    new = build_corpus_index(docs)
     assert new.columns == legacy.columns
     assert sorted(map(tuple, new.collect())) == \
         sorted(map(tuple, legacy.collect()))
 
 
-def test_chunk_dedup_totals_from_exploded_relation(spark):
+def test_chunk_dedup_totals_from_exploded_relation(spark, monkeypatch):
     """r6 derives n_chunks_total from the exploded relation; it must equal
     ceil(words / chunk_words) floored at 1, including whitespace-only and
     fully-deduplicated documents."""
+    from s2spark.operators import dedup
     from s2spark.operators.dedup import chunk_dedup
 
     docs = spark.createDataFrame(
@@ -139,8 +140,8 @@ def test_chunk_dedup_totals_from_exploded_relation(spark):
          (3, "  "),                                    # whitespace-only
          (4, "a b c")],
         "doc_id int, text string")
-    out = {r["doc_id"]: r for r in
-           chunk_dedup(docs, chunk_words=3).collect()}
+    monkeypatch.setattr(dedup, "CHUNK_WORDS", 3)
+    out = {r["doc_id"]: r for r in chunk_dedup(docs).collect()}
     assert out[1]["n_chunks_total"] == 3 and out[1]["n_chunks_kept"] == 3
     # doc 2: every chunk first occurred in doc 1 -> empty text survives
     assert out[2]["n_chunks_total"] == 3 and out[2]["n_chunks_kept"] == 0

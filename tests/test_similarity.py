@@ -29,7 +29,7 @@ def queries(emb):
 
 def test_ivf_schema_swappable_with_exact(emb, queries):
     exact = similarity.brute_force_topk(emb, queries, k=5)
-    ivf = similarity.ivf_topk(emb, queries, k=5, centroid_stride=31, nprobe=4)
+    ivf = similarity.ivf_topk(emb, queries, k=5)
     assert exact.schema == ivf.schema
     assert ivf.groupBy("query_id").count().agg(F.max("count")).collect()[0][0] <= 5
 
@@ -40,7 +40,7 @@ def test_ivf_recall_vs_exact(emb, queries):
     true cosine (cross-checked against the exact score for that pair)."""
     exact = similarity.brute_force_topk(emb, queries, k=1) \
         .select("query_id", F.col("vec_id").alias("true_top1"))
-    ivf = similarity.ivf_topk(emb, queries, k=1, centroid_stride=31, nprobe=4) \
+    ivf = similarity.ivf_topk(emb, queries, k=1) \
         .select("query_id", F.col("vec_id").alias("ivf_top1"))
     hits = exact.join(ivf, "query_id") \
         .select(F.avg((F.col("true_top1") == F.col("ivf_top1")).cast("double"))) \
@@ -51,7 +51,7 @@ def test_ivf_recall_vs_exact(emb, queries):
 
 
 def test_ivf_scores_are_exact_cosines(emb, queries):
-    ivf = similarity.ivf_topk(emb, queries, k=5, centroid_stride=31, nprobe=4)
+    ivf = similarity.ivf_topk(emb, queries, k=5)
     exact = similarity.brute_force_topk(emb, queries, k=500)
     joined = ivf.select("query_id", "vec_id", F.col("cos_sim").alias("a")) \
         .join(exact.select("query_id", "vec_id", F.col("cos_sim").alias("b")),
@@ -67,32 +67,13 @@ def test_ivf_deterministic(emb, queries):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_near_dup_bucket_cap(emb):
-    from pyspark.sql import functions as F
-    uncapped = similarity.cosine_near_dup_pairs(emb, threshold=0.2, bits=10)
-    # cap >= max observed bucket size -> identical output
-    d = emb.select(similarity.as_double_array(F.col("embedding")).alias("v"))
-    sizes = (d.withColumn("b", similarity.srp_sketch(F.col("v"), 64, 10))
-             .groupBy("b").count().agg(F.max("count")).collect()[0][0])
-    capped_loose = similarity.cosine_near_dup_pairs(
-        emb, threshold=0.2, bits=10, bucket_cap=int(sizes))
-    a = {(r["id_a"], r["id_b"]) for r in uncapped.collect()}
-    b = {(r["id_a"], r["id_b"]) for r in capped_loose.collect()}
-    assert a == b
-    # a tight cap only removes pairs, never invents them
-    capped_tight = similarity.cosine_near_dup_pairs(
-        emb, threshold=0.2, bits=10, bucket_cap=2)
-    c = {(r["id_a"], r["id_b"]) for r in capped_tight.collect()}
-    assert c <= a
-
-
 def test_ivf_assignment_shuffles_O_N_not_NxC(emb, queries):
     """Scale-plan contract: centroid assignment must never shuffle the
     N*C candidate set.  The executed plan must reduce candidates with a
     partial max_by aggregate (map-side, pre-exchange) and must contain no
     Window partitioned by the data-side key (a row_number there would
     exchange all N*C rows)."""
-    ivf = similarity.ivf_topk(emb, queries, k=5, centroid_stride=31, nprobe=4)
+    ivf = similarity.ivf_topk(emb, queries, k=5)
     plan = ivf._jdf.queryExecution().executedPlan().toString()
     # no window over the data-side key (vec_id): windows are only allowed
     # on the tiny query side (query_id)

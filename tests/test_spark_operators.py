@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from s2spark.functions import columns as C
 from s2spark.kernel import cellid as ci
 from s2spark.operators.spatial_join import points_with_cells, spatial_join
+from s2spark.operators import spatial_join_shuffle as sjs
 from s2spark.operators.spatial_join_shuffle import (polygons_to_df,
                                                     spatial_join_shuffle)
 from s2spark.operators.tiling import raster_to_vector, tile_counts, vector_to_raster
@@ -91,7 +92,7 @@ def test_invalid_loop_raises_at_covering_time(spark, pts, shape):
         buffered_polygon_join(spark, lat_lng, {1: poly}, 0.01)
 
 
-def test_shuffle_join_equals_broadcast(spark, polygons, pts):
+def test_shuffle_join_equals_broadcast(spark, polygons, pts, monkeypatch):
     a = spatial_join(spark, pts, polygons).select("url", "polygon_id")
     # default: small polygon side takes the broadcast-refine fast path
     b = spatial_join_shuffle(spark, pts, polygons_to_df(spark, polygons),
@@ -100,9 +101,9 @@ def test_shuffle_join_equals_broadcast(spark, polygons, pts):
     assert b.exceptAll(a).count() == 0
     # forced cogroup refine (the non-broadcastable-polygon path) must
     # produce the identical result
+    monkeypatch.setattr(sjs, "REFINE_BROADCAST_LOOPS", 0)
     c = spatial_join_shuffle(spark, pts, polygons_to_df(spark, polygons),
-                             hot_threshold=500, n_salt=3,
-                             refine_broadcast_loops=0).select("url", "polygon_id")
+                             hot_threshold=500, n_salt=3).select("url", "polygon_id")
     assert a.exceptAll(c).count() == 0
     assert c.exceptAll(a).count() == 0
 
@@ -355,11 +356,13 @@ def test_shuffle_join_skewed_hot_cell(spark, polygons):
     assert b.exceptAll(a).count() == 0
 
 
-def test_chunk_dedup(spark):
+def test_chunk_dedup(spark, monkeypatch):
     """Span dedup: first corpus occurrence of each chunk wins; fully-
     duplicated docs survive with empty text (C4 semantics)."""
     import pandas as pd
+    from s2spark.operators import dedup
     from s2spark.operators.dedup import chunk_dedup
+    monkeypatch.setattr(dedup, "CHUNK_WORDS", 3)
     docs = spark.createDataFrame(pd.DataFrame({
         "doc_id": [0, 1, 2, 3],
         "text": ["a b c d e f",          # chunks: "a b c", "d e f"
@@ -367,7 +370,7 @@ def test_chunk_dedup(spark):
                  "A  B c D e F",         # normalizes to doc 0 -> all dup
                  "short"]}))             # single sub-width chunk
     out = {r["doc_id"]: r for r in
-           chunk_dedup(docs, chunk_words=3).toPandas().to_dict("records")}
+           chunk_dedup(docs).toPandas().to_dict("records")}
     assert out[0]["dedup_text"] == "a b c d e f"
     assert (out[0]["n_chunks_kept"], out[0]["n_chunks_total"]) == (2, 2)
     assert out[1]["dedup_text"] == "x y z"

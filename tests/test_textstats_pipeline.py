@@ -30,15 +30,16 @@ def test_word_ngrams_short_text(spark):
     assert got[5] == ["x y z"]   # whitespace-normalized
 
 
-def test_decontaminate_flags_overlap(spark):
+def test_decontaminate_flags_overlap(spark, monkeypatch):
     bench = spark.createDataFrame(
         [(100, "the quick brown fox jumps")], "doc_id long, text string")
     corpus = spark.createDataFrame(
         [(1, "the quick brown fox sleeps well tonight"),   # shares 2 grams
          (2, "completely different words here entirely")],
         "doc_id long, text string")
+    monkeypatch.setattr(textstats, "CONTAMINATED_FRAC", 0.3)
     got = {r["doc_id"]: r for r in textstats.decontaminate(
-        corpus, bench, n_words=3, threshold=0.3).collect()}
+        corpus, bench).collect()}
     assert got[1]["n_overlap"] == 2      # "the quick brown", "quick brown fox"
     assert got[1]["contaminated"] is True
     assert got[2]["n_overlap"] == 0
@@ -51,7 +52,7 @@ def test_repetition_stats(spark):
          (2, "one two three four five")],
         "doc_id long, text string")
     got = {r["doc_id"]: r for r in
-           textstats.repetition_stats(df, n_words=3).collect()}
+           textstats.repetition_stats(df).collect()}
     assert got[1]["n_grams"] == 7 and got[1]["n_distinct"] == 3
     assert got[1]["dup_frac"] == pytest.approx(4 / 7, abs=1e-6)
     assert got[2]["dup_frac"] == 0.0
@@ -75,7 +76,7 @@ def test_pack_sequences_matches_serial_scan(spark):
     """Distributed two-phase prefix sum == the trivially-correct serial
     scan (pandas cumsum over key order)."""
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    got = (textstats.pack_sequences(docs, budget_tokens=2048)
+    got = (textstats.pack_sequences(docs)
            .toPandas().sort_values("doc_id").reset_index(drop=True))
     # serial oracle from the SAME per-doc counts (the counts themselves
     # are oracle-checked in text_token_count)
@@ -89,9 +90,10 @@ def test_pack_sequences_matches_serial_scan(spark):
     assert len(got) == docs.count()
 
 
-def test_pack_sequences_offsets_within_budget(spark):
+def test_pack_sequences_offsets_within_budget(spark, monkeypatch):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    out = textstats.pack_sequences(docs, budget_tokens=512)
+    monkeypatch.setattr(textstats, "BUDGET_TOKENS", 512)
+    out = textstats.pack_sequences(docs)
     bad = out.where((F.col("pack_offset") < 0)
                     | (F.col("pack_offset") >= 512)).count()
     assert bad == 0
@@ -106,14 +108,15 @@ def test_pack_sequences_offsets_within_budget(spark):
     assert row["max_pack"] == (row["tot"] - last["n_tokens"]) // 512
 
 
-def test_pack_sequences_deterministic(spark):
+def test_pack_sequences_deterministic(spark, monkeypatch):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    a = textstats.pack_sequences(docs, 1024).orderBy("doc_id").collect()
-    b = textstats.pack_sequences(docs, 1024).orderBy("doc_id").collect()
+    monkeypatch.setattr(textstats, "BUDGET_TOKENS", 1024)
+    a = textstats.pack_sequences(docs).orderBy("doc_id").collect()
+    b = textstats.pack_sequences(docs).orderBy("doc_id").collect()
     assert a == b
 
 
-def test_tfidf_topk_hand_computed(spark):
+def test_tfidf_topk_hand_computed(spark, monkeypatch):
     # 3 docs: "cat" appears in all (idf=ln(1)=0), "dog" in two,
     # "ferret" in one — idf separates them; repetition drives tf.
     import math
@@ -122,7 +125,8 @@ def test_tfidf_topk_hand_computed(spark):
          (2, "cat dog dog"),
          (3, "cat cat cat")],
         "doc_id long, text string")
-    rows = textstats.tfidf_topk(docs, k=2).collect()
+    monkeypatch.setattr(textstats, "TFIDF_K", 2)
+    rows = textstats.tfidf_topk(docs).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -141,33 +145,36 @@ def test_tfidf_topk_hand_computed(spark):
             == list(range(1, len(rs) + 1))
 
 
-def test_tfidf_topk_tie_breaks_on_term(spark):
+def test_tfidf_topk_tie_breaks_on_term(spark, monkeypatch):
     # two terms with identical (tf, df) in the same doc: rank by term asc
     docs = spark.createDataFrame(
         [(1, "zebra apple"), (2, "other words")],
         "doc_id long, text string")
-    d1 = sorted((r for r in textstats.tfidf_topk(docs, k=2).collect()
+    monkeypatch.setattr(textstats, "TFIDF_K", 2)
+    d1 = sorted((r for r in textstats.tfidf_topk(docs).collect()
                  if r["doc_id"] == 1), key=lambda r: r["rank"])
     assert [r["term"] for r in d1] == ["apple", "zebra"]
 
 
-def test_ngram_topk_counts_and_order(spark):
+def test_ngram_topk_counts_and_order(spark, monkeypatch):
     docs = spark.createDataFrame(
         [(1, "the cat sat"), (2, "the cat ran"), (3, "a cat sat")],
         "doc_id long, text string")
-    rows = textstats.ngram_topk(docs, n=2, k=3).collect()
+    monkeypatch.setattr(textstats, "NGRAM_TOPK_K", 3)
+    rows = textstats.ngram_topk(docs).collect()
     # "the cat" occurs twice (docs 1,2); "cat sat" twice (docs 1,3);
     # tie at count 2 breaks on the gram string: "cat sat" < "the cat"
     assert [(r["ngram"], r["n_occurrences"], r["n_docs"]) for r in rows] == [
         ("cat sat", 2, 2), ("the cat", 2, 2), ("a cat", 1, 1)]
 
 
-def test_ngram_topk_limit_is_deterministic(spark):
+def test_ngram_topk_limit_is_deterministic(spark, monkeypatch):
     docs = spark.createDataFrame(
         [(i, "alpha beta gamma delta") for i in range(20)],
         "doc_id long, text string")
-    a = textstats.ngram_topk(docs, n=2, k=2).collect()
-    b = textstats.ngram_topk(docs, n=2, k=2).collect()
+    monkeypatch.setattr(textstats, "NGRAM_TOPK_K", 2)
+    a = textstats.ngram_topk(docs).collect()
+    b = textstats.ngram_topk(docs).collect()
     assert a == b
     assert [r["ngram"] for r in a] == ["alpha beta", "beta gamma"]
 

@@ -78,7 +78,7 @@ def main() -> None:
                           2.35 + (F.col("id") % 997) * 1e-7)
                    .otherwise(((F.col("id") * 104729) % 35000 - 17500) / 100.0)
                    .alias("lng")))
-    pts = C.with_cell_id(pts, "lat", "lng", out="cell_id", keep_xyz=True) \
+    pts = C.with_cell_id(pts, "lat", "lng", keep_xyz=True) \
         .select("doc_id", "cell_id", "x", "y", "z")
 
     polygons = {
@@ -179,7 +179,7 @@ def _ring_band_candidates(spark, n_points: int):
            .select("doc_id",
                    (F.col("rho") * F.cos(F.col("phi"))).alias("lat"),
                    (F.col("rho") * F.sin(F.col("phi"))).alias("lng")))
-    pts = C.with_cell_id(pts, "lat", "lng", out="cell_id", keep_xyz=True) \
+    pts = C.with_cell_id(pts, "lat", "lng", keep_xyz=True) \
         .select("doc_id", "cell_id", "x", "y", "z")
     cand = spatial_join_shuffle(spark, pts, pdf, hot_threshold=1 << 60,
                                 point_key="doc_id", hot_sample_fraction=0.01,
